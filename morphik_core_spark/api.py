@@ -20,6 +20,18 @@ Storage: ``<root>/documents`` and ``<root>/chunks`` parquet snapshots.
 Mutations rewrite the snapshot relationally (docstore ops); at scale the
 writer targets affected partitions only — the logic is identical.
 
+Each table carries a version token, ``<root>/_<table>_version``: a tiny
+file that every rewrite of the table (``_overwrite``'s swap,
+``_merge_documents``' partition merge) replaces AFTER its data lands. A
+client keeps one resident snapshot per table — the parquet relation
+(schema inferred and files listed once, documents already cast to
+schema) plus, for documents, the row count — keyed on that file's
+``stat``.
+Every read stats the token once and rebuilds only when it moved, so a
+write is seen on the next read by this client and by any other client
+on the same root. Snapshots are never ``persist()``-ed: a read after a
+write pays one rebuild, never a cache fill.
+
 The embedder defaults to the seeded hash embedder; production embedders
 (LiteLLM dense / ColPali) plug in via the same (text→vector, UDF) pair.
 """
@@ -28,6 +40,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import uuid
 from datetime import UTC, datetime
 from typing import Any, Callable, Sequence
@@ -43,6 +56,7 @@ from morphik_core_spark.operators.metadata_filters import MetadataFilterCompiler
 from morphik_core_spark.operators.rerank import make_reranker
 from morphik_core_spark.operators.scopes import AuthContext, build_folder_scope
 from morphik_core_spark.operators.typed_metadata import merge_metadata, normalize_metadata
+from morphik_core_spark.plans.literal import values_literal_frame
 
 __all__ = ["MorphikSpark"]
 
@@ -56,6 +70,19 @@ _CHUNKS_SCHEMA = (
     "document_id string, chunk_number int, content string, embedding array<double>, "
     "app_id string, folder_path string"
 )
+
+
+class _Snapshot:
+    """One table as of one version token: its DataFrame and, for the
+    documents table, the row count, filled by the first retrieval that
+    needs it."""
+
+    __slots__ = ("token", "df", "rows")
+
+    def __init__(self, token: tuple | None, df: DataFrame) -> None:
+        self.token = token
+        self.df = df
+        self.rows: int | None = None
 
 
 class MorphikSpark:
@@ -98,30 +125,69 @@ class MorphikSpark:
         # None = text-only deployment, download_url stays null.
         self._storage = storage
         self._compiler = MetadataFilterCompiler()
+        # resident per-table snapshots (module docstring, "Storage")
+        self._snapshots: dict[str, _Snapshot] = {}
+        self._snapshot_lock = threading.Lock()
 
     # ------------------------------------------------------------- tables
 
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
-    def documents(self) -> DataFrame:
-        p = self._path("documents")
+    def _version_token(self, name: str) -> tuple | None:
+        """The table's version as one ``stat``: every bump replaces the
+        file, so its inode and mtime move together; None = never bumped."""
+        try:
+            st = os.stat(self._path(f"_{name}_version"))
+        except FileNotFoundError:
+            return None
+        return (st.st_ino, st.st_mtime_ns)
+
+    def _bump_version(self, name: str) -> None:
+        """Publish a rewrite of ``name``: called after its data landed."""
+        path = self._path(f"_{name}_version")
+        tmp = f"{path}.{uuid.uuid4().hex}"
+        open(tmp, "w").close()
+        os.replace(tmp, path)
+        with self._snapshot_lock:
+            self._snapshots.pop(name, None)
+
+    def _snapshot(self, name: str) -> _Snapshot:
+        token = self._version_token(name)
+        with self._snapshot_lock:
+            snap = self._snapshots.get(name)
+            if snap is None or snap.token != token:
+                snap = _Snapshot(token, self._read_table(name))
+                self._snapshots[name] = snap
+            return snap
+
+    def _read_table(self, name: str) -> DataFrame:
+        schema = _DOCS_SCHEMA if name == "documents" else _CHUNKS_SCHEMA
+        p = self._path(name)
         if not os.path.exists(p):
-            return self.spark.createDataFrame([], _DOCS_SCHEMA)
+            return self.spark.createDataFrame([], schema)
+        df = self.spark.read.parquet(p)
+        if name == "chunks":
+            return df
         # the table is partitioned by app_id (tenant pruning + partition-
         # granularity upserts); re-select in schema order since parquet
         # reads append partition columns at the end, and CAST each column:
         # a table whose only partition value is NULL infers the partition
         # column as VOID, which poisons later partitioned writes
-        schema = self.spark.createDataFrame([], _DOCS_SCHEMA).schema
-        df = self.spark.read.parquet(p)
-        return df.select(*[F.col(f.name).cast(f.dataType) for f in schema.fields])
+        fields = self.spark.createDataFrame([], schema).schema.fields
+        return df.select(*[F.col(f.name).cast(f.dataType) for f in fields])
+
+    def _document_rows(self, snap: _Snapshot) -> int:
+        """Row count of a documents snapshot: one job per table version."""
+        if snap.rows is None:
+            snap.rows = snap.df.count()
+        return snap.rows
+
+    def documents(self) -> DataFrame:
+        return self._snapshot("documents").df
 
     def chunks(self) -> DataFrame:
-        p = self._path("chunks")
-        if not os.path.exists(p):
-            return self.spark.createDataFrame([], _CHUNKS_SCHEMA)
-        return self.spark.read.parquet(p)
+        return self._snapshot("chunks").df
 
     def _write_documents(self, df: DataFrame) -> None:
         self._overwrite(df, "documents", _DOCS_SCHEMA, partition_by="app_id")
@@ -143,6 +209,7 @@ class MorphikSpark:
             self._write_documents(updates)
             return
         merge_upsert_partitioned(path, updates, keys=["external_id"], partition_col="app_id")
+        self._bump_version("documents")
 
     def _write_chunks(self, df: DataFrame) -> None:
         self._overwrite(df, "chunks", _CHUNKS_SCHEMA)
@@ -154,8 +221,9 @@ class MorphikSpark:
         # can't wedge on rename-to-existing; if a prior crash left the live
         # path absent, the backup IS the live data — restore it before
         # staging the new snapshot. The remaining non-atomic window is the
-        # instant between the two renames (POSIX can't exchange two
-        # directories); a table format (Delta/Iceberg) closes it for real.
+        # instant between the two renames and the version bump right after
+        # them (POSIX can't exchange two directories); a table format
+        # (Delta/Iceberg) closes it for real.
         import shutil
 
         final = self._path(name)
@@ -173,6 +241,7 @@ class MorphikSpark:
         if os.path.exists(final):
             os.rename(final, backup)
         os.rename(tmp, final)
+        self._bump_version(name)
         if os.path.exists(backup):
             shutil.rmtree(backup)
 
@@ -603,26 +672,42 @@ class MorphikSpark:
             )
         else:
             reranker = None
+        docs = self._snapshot("documents")
+        chunks = self.chunks()
+        # the documents row count bounds the authorized set: at or under
+        # the broadcast threshold it settles the gate, so no probe runs
+        n_docs = self._document_rows(docs)
         hits = retrieval.retrieve_chunks(
-            self.documents(),
-            self.chunks(),
+            docs.df,
+            chunks,
             qv,
             k=k,
             auth=auth,
             filters=filters,
             system_filters=system_filters or None,
             reranker=reranker,
+            auth_rows_hint=n_docs if n_docs <= retrieval.BROADCAST_ROWS else None,
         )
         if padding > 0:
-            matches = hits.select("document_id", "chunk_number")
-            hits = retrieval.with_padding(
-                hits.select("document_id", "chunk_number", "score"), self.chunks(), padding
+            # the scoring pass runs once: its k scored keys come back as a
+            # VALUES frame, so padding and the flag below re-read chunks by
+            # key instead of re-running the top-k plan
+            top = [tuple(r) for r in hits.select("document_id", "chunk_number", "score").collect()]
+            key_type = chunks.schema["chunk_number"].dataType.simpleString()
+            matches = values_literal_frame(
+                self.spark,
+                [("document_id", "string"), ("chunk_number", key_type), ("score", "double")],
+                top,
             )
+            # the id list is a pushed-down scan filter: row groups holding
+            # none of the matched documents are skipped
+            near = chunks.filter(F.col("document_id").isin(sorted({r[0] for r in top})))
+            hits = retrieval.with_padding(matches, near, padding)
             # is_padding = key ∉ original matches (document_service.py:715),
             # flagged relationally — score==0.0 alone is not the contract
             hits = docstore.grouped_response(hits, matches)
         # hydration join (§2.3): attach document fields to chunk results
-        doc_meta = self.documents().select(
+        doc_meta = docs.df.select(
             F.col("external_id").alias("document_id"), "filename", "metadata", "content_type"
         )
         return hits.join(F.broadcast(doc_meta), "document_id", "left")
@@ -933,24 +1018,10 @@ class MorphikSpark:
         return self._path(f"term_graph__{self._graph_scope_key(auth)}")
 
     def _tables_signature(self) -> str:
-        """Content signature of the tables the term graph derives from
-        (chunks for edges, documents for the auth scope set). Local
-        warehouse: max (mtime_ns, size) over both table trees — every
-        mutation path rewrites files, so any ingest/update/delete moves
-        it. On a table format (Delta/Iceberg) this is the snapshot id."""
-        sig = 0
-        for name in ("chunks", "documents"):
-            root = self._path(name)
-            if not os.path.exists(root):
-                continue
-            for dirpath, _dirs, files in os.walk(root):
-                for f in files:
-                    try:
-                        st = os.stat(os.path.join(dirpath, f))
-                        sig = max(sig, st.st_mtime_ns + st.st_size)
-                    except OSError:
-                        pass
-        return str(sig)
+        """Version of the tables the term graph derives from (chunks for
+        edges, documents for the auth scope set): their version tokens
+        (module docstring, "Storage"), which every rewrite moves."""
+        return json.dumps([self._version_token("chunks"), self._version_token("documents")])
 
     def build_term_graph(
         self,

@@ -8436,19 +8436,6 @@ def hl_value_grids(
     return ga, gb
 
 
-def _hl_tail(stats: DataFrame, n_a: int, n_b: int, decimals: int, with_series: bool) -> DataFrame:
-    """Shared output tail over exact (_lo, _hi) medians — one code
-    object for both paths so the midpoint double tree cannot diverge."""
-    return stats.select(
-        *([F.col("_ser").alias("series")] if with_series else []),
-        F.lit(int(n_a)).cast("bigint").alias("n_a"),
-        F.lit(int(n_b)).cast("bigint").alias("n_b"),
-        F.expr(
-            f"ROUND((CAST(_lo AS DOUBLE) + CAST(_hi AS DOUBLE)) / 2.0, {int(decimals)})"
-        ).alias("hl_shift"),
-    )
-
-
 def hodges_lehmann_shift(
     a: DataFrame,
     b: DataFrame,
@@ -8458,7 +8445,6 @@ def hodges_lehmann_shift(
     sizes: tuple[int, int, int, int] | None = None,
     grids: tuple[DataFrame, DataFrame] | None = None,
     series_grids: list[tuple[str, DataFrame, DataFrame]] | None = None,
-    collect_max_cells: int | None = None,
 ) -> DataFrame:
     """Hodges-Lehmann two-sample shift estimator — the SIZE companion
     to the rank/drift detectors (`mann_whitney_u` says the
@@ -8491,86 +8477,8 @@ def hodges_lehmann_shift(
     series — the caller asserts it). ``a``/``b``/``val_col``/``grids``
     are ignored in this mode. Output one row PER series:
     (series, n_a, n_b, hl_shift).
-
-    ``collect_max_cells`` opts the CONTRACT-BOUNDED grids into one
-    collect per grid: the weighted difference grid and both nearest-rank
-    medians replay in exact Python integers and the midpoint double
-    comes from the IDENTICAL Spark tail (`_hl_tail`) over the literals.
-    Raises when a collected grid exceeds the bound; grids carrying NULL
-    values fall back to the distributed path (whose NULL-difference
-    rows drop at the bucket join) so behaviour never changes.
     """
     from morphik_core_spark.plans.cache import scoped_persist
-
-    if collect_max_cells is not None:
-        if series_grids is not None:
-            if sizes is None:
-                raise ValueError(
-                    "hodges_lehmann_shift: series_grids requires sizes (a value "
-                    "shift preserves counts — the caller asserts one size tuple "
-                    "serves every series)"
-                )
-            series_list = [(str(tag), ga_i, gb_i) for tag, ga_i, gb_i in series_grids]
-        else:
-            ga0, gb0 = grids if grids is not None else hl_value_grids(a, b, val_col)
-            series_list = [(None, ga0, gb0)]
-        collected, clean = [], True
-        for tag, ga_i, gb_i in series_list:
-            xa = [(r["_x"], r["_ca"]) for r in ga_i.limit(int(collect_max_cells) + 1).collect()]
-            xb = [(r["_y"], r["_cb"]) for r in gb_i.limit(int(collect_max_cells) + 1).collect()]
-            if max(len(xa), len(xb)) > int(collect_max_cells):
-                raise ValueError(
-                    f"hodges_lehmann_shift: a value grid has more than "
-                    f"collect_max_cells={collect_max_cells} rows; use the "
-                    f"distributed path or raise the bound"
-                )
-            if any(x is None for x, _c in xa) or any(y is None for y, _c in xb):
-                clean = False
-                break
-            collected.append((tag, xa, xb))
-        if clean:
-            if sizes is not None:
-                n_x, n_a, n_y, n_b = (int(v) for v in sizes)
-            else:
-                _tag, xa, xb = collected[0]
-                n_x, n_a = len(xa), sum(c for _x, c in xa)
-                n_y, n_b = len(xb), sum(c for _y, c in xb)
-            if n_x * n_y > max_grid_cells:
-                raise ValueError(
-                    f"hodges_lehmann_shift difference grid would be {n_x} x {n_y} "
-                    f"= {n_x * n_y} cells (> max_grid_cells={max_grid_cells}): "
-                    f"coarsen the value grain or raise max_grid_cells explicitly."
-                )
-            total = int(n_a) * int(n_b)
-            lo_rank = (total + 1) // 2
-            hi_rank = total // 2 + 1
-            stat_rows = []
-            for tag, xa, xb in collected:
-                w: dict = {}
-                for x, ca in xa:
-                    for y, cb in xb:
-                        d = x - y
-                        w[d] = w.get(d, 0) + ca * cb
-                if not w:
-                    if tag is None:
-                        stat_rows.append((None, None))
-                    continue  # series mode: an empty series emits no row
-                lo = hi = None
-                cum = 0
-                for d in sorted(w):
-                    cum += w[d]
-                    if lo is None and cum >= lo_rank:
-                        lo = d
-                    if hi is None and cum >= hi_rank:
-                        hi = d
-                        break
-                stat_rows.append((lo, hi) if tag is None else (tag, lo, hi))
-            with_series = series_grids is not None
-            cols = ([("_ser", "string")] if with_series else []) + [
-                ("_lo", "bigint"), ("_hi", "bigint")
-            ]
-            stats = _values_literal_frame(a.sparkSession if a is not None else series_list[0][1].sparkSession, cols, stat_rows)
-            return _hl_tail(stats, n_a, n_b, decimals, with_series)
 
     if series_grids is not None:
         if sizes is None:

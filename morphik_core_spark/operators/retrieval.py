@@ -54,7 +54,11 @@ __all__ = [
     "with_padding",
     "document_results",
     "merge_colpali",
+    "BROADCAST_ROWS",
 ]
+
+# default authorized-id count up to which `scoped_chunks` broadcasts
+BROADCAST_ROWS = 1_000_000
 
 
 def authorized_documents(
@@ -86,7 +90,7 @@ def scoped_chunks(
     chunks: DataFrame,
     auth_docs: DataFrame,
     doc_col: str = "document_id",
-    broadcast_threshold: int | None = 1_000_000,
+    broadcast_threshold: int | None = BROADCAST_ROWS,
     auth_rows_hint: int | None = None,
 ) -> DataFrame:
     """Restrict the chunks fact table to authorized documents
@@ -103,9 +107,14 @@ def scoped_chunks(
     semi-join shuffles on ``doc_col`` and AQE stays free to re-plan from real
     runtime sizes. ``broadcast_threshold=None`` skips the probe and forces
     the broadcast (callers that know the set is tiny by construction).
-    ``auth_rows_hint`` (from persisted `plans/stats` manifests) answers
-    the gate without running the probe — the cluster path, where stats
-    are computed once per snapshot instead of one probe per query.
+    ``auth_rows_hint`` (the authorized-document count, from persisted
+    `plans/stats` manifests or the serving snapshot) answers the gate
+    without running the probe. `MorphikSpark` passes its snapshot's
+    documents row count, counted once per table version (api.py,
+    "Storage"), but only while it is at most `BROADCAST_ROWS`: an upper
+    bound settles the small case alone, since a selective filter on a
+    larger store may still authorize a handful of ids, which the probe
+    then finds.
     """
     if broadcast_threshold is None:
         small = True
@@ -152,14 +161,18 @@ def retrieve_chunks(
     reranker: Callable[[DataFrame], DataFrame] | None = None,
     embedding_col: str = "embedding",
     tiebreak: Sequence[str] = ("document_id", "chunk_number"),
+    auth_rows_hint: int | None = None,
 ) -> DataFrame:
     """End-to-end filtered vector top-k (the reference's /retrieve/chunks).
 
     With a reranker: oversample → rescore → cut to k, mirroring
-    document_service.py:386-466.
+    document_service.py:386-466. ``auth_rows_hint`` is handed to
+    `scoped_chunks` (an upper bound on the authorized-document count).
     """
     auth_docs = authorized_documents(documents, auth, filters, system_filters, status_filter)
-    candidates = score_chunks(scoped_chunks(chunks, auth_docs), query_vector, embedding_col)
+    candidates = score_chunks(
+        scoped_chunks(chunks, auth_docs, auth_rows_hint=auth_rows_hint), query_vector, embedding_col
+    )
     if reranker is None:
         return top_k(candidates, k, tiebreak=tiebreak)
     shortlist = top_k(candidates, rerank_oversample_size(k), tiebreak=tiebreak)
@@ -180,14 +193,10 @@ def with_padding(
     """
     if padding <= 0:
         return matches
-    wanted = (
-        matches.select(
-            F.col(doc_col),
-            F.explode(F.sequence(F.col(num_col) - padding, F.col(num_col) + padding)).alias(num_col),
-        )
-        .groupBy(doc_col, num_col)
-        .agg(F.lit(1).alias("_w"))
-        .drop("_w")
+    # duplicate wanted keys are harmless: the semi-join keeps each chunk once
+    wanted = matches.select(
+        F.col(doc_col),
+        F.explode(F.sequence(F.col(num_col) - padding, F.col(num_col) + padding)).alias(num_col),
     )
     scores = matches.select(doc_col, num_col, "score")
     return (

@@ -507,11 +507,13 @@ def kmv_overlap(
     """
     if collect_max_rows is not None:
         key_t = sketches.schema[key_col].dataType.simpleString()
-        rows = sketches.select(F.col(key_col), F.col("v")).collect()
+        # bounded BEFORE the pull: at most collect_max_rows + 1 rows leave
+        # the executors, whatever the sketch's real size
+        rows = sketches.select(F.col(key_col), F.col("v")).limit(int(collect_max_rows) + 1).collect()
         if len(rows) > collect_max_rows:
             raise ValueError(
-                f"kmv_overlap: sketch has {len(rows)} rows > "
-                f"collect_max_rows={collect_max_rows}; use the distributed path"
+                f"kmv_overlap: sketch has more than "
+                f"collect_max_rows={collect_max_rows} rows; use the distributed path"
             )
         by_key: dict = {}
         for kk, v in rows:

@@ -86,6 +86,86 @@ def test_delete_and_folder_move(client):
     assert hits
 
 
+def _jobs_submitted(spark) -> int:
+    """Job-id counter of the DAG scheduler: its delta is the number of
+    Spark jobs a call ran (no listener lag, no retained-jobs cap)."""
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def test_warm_requests_run_few_spark_jobs(spark, client):
+    _seed(client)
+    q = dict(k=2, auth=AUTH, filters={"topic": "engine"})
+    client.retrieve_chunks("spark shuffles data", **q)  # builds the snapshots
+    before = _jobs_submitted(spark)
+    assert client.retrieve_chunks("spark shuffles data", **q)
+    assert _jobs_submitted(spark) - before <= 3
+    before = _jobs_submitted(spark)
+    assert len(client.list_documents(filters={"topic": "engine"}, auth=AUTH)) == 2
+    assert _jobs_submitted(spark) - before == 1
+
+
+def test_writes_seen_by_this_and_a_second_client(spark, client):
+    ids = _seed(client)
+    other = MorphikSpark(spark, client.root, chunk_size=120, chunk_overlap=12)
+
+    def read_both():
+        # every read runs on snapshots the previous write replaced: a
+        # stale file listing would raise FileNotFoundException here
+        return [
+            (
+                c.get_document(ids[2]),
+                c.retrieve_chunks("catalyst optimizes logical plans", k=3, auth=AUTH),
+                [d["external_id"] for d in c.list_documents(filters={"reviewed": True}, auth=AUTH)],
+            )
+            for c in (client, other)
+        ]
+
+    read_both()
+    client.update_document_metadata(ids[1], {"reviewed": True})
+    assert [reviewed for _, _, reviewed in read_both()] == [[ids[1]], [ids[1]]]
+    client.update_document_text(ids[2], "zebras graze on open savanna grass " * 5)
+    for _, hits, _ in read_both():
+        assert hits and all("catalyst" not in h["content"] for h in hits)
+    assert "zebras" in other.get_document_content(ids[2])
+    client.delete_document(ids[0])
+    client.move_folder("/corp/docs", "/archive/docs")
+    for doc, hits, _ in read_both():
+        assert doc["folder_path"] == "/archive/docs"
+        assert {h["folder_path"] for h in hits} == {"/archive/docs"}
+        assert ids[0] not in {h["document_id"] for h in hits}
+    assert client.get_document(ids[0]) is None and other.get_document(ids[0]) is None
+
+
+def test_concurrent_reads_return_identical_rows(client):
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    ids = _seed(client)
+    client.retrieve_chunks("spark", k=1, auth=AUTH)  # both snapshots warm
+    client.update_document_metadata(ids[0], {"priority": 3})  # documents stale for every reader
+    builds = []
+    read_table = client._read_table
+
+    def counting_read_table(name):
+        builds.append(name)
+        return read_table(name)
+
+    def read(_):
+        return client.retrieve_chunks("spark shuffles data", k=3, auth=AUTH)
+
+    client._read_table = counting_read_table
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(6) as pool:
+            results = list(pool.map(read, range(6), timeout=600))
+    finally:
+        sys.setswitchinterval(interval)
+    assert results[0] and all(r == results[0] for r in results)
+    assert results[0] == read(None)
+    assert builds == ["documents"]  # one rebuild, however many readers raced for it
+
+
 def test_padding_and_rerank(client):
     _seed(client)
     padded = client.retrieve_chunks("spark shuffle executors", k=1, auth=AUTH, padding=1)

@@ -226,7 +226,9 @@ def test_kmv_overlap_collected_matches_distributed(spark):
     assert len(dist) == 6  # C(4,2) non-null pairs
 
 
-def test_kmv_overlap_bound_raises(spark):
+def test_kmv_overlap_bound_raises(spark, monkeypatch):
+    from pyspark.sql.classic.dataframe import DataFrame
+
     from morphik_core_spark.operators.sketches import kmv_overlap, kmv_sketch
 
     df = spark.createDataFrame(
@@ -234,8 +236,19 @@ def test_kmv_overlap_bound_raises(spark):
         "src string, tok string",
     )
     sk = kmv_sketch(df, "src", "tok", k=16)
+    pulled = []
+    collect = DataFrame.collect
+
+    def counting_collect(self):
+        rows = collect(self)
+        pulled.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(DataFrame, "collect", counting_collect)
     with pytest.raises(ValueError, match="collect_max_rows"):
         kmv_overlap(sk, "src", k=16, collect_max_rows=3)
+    # checked before the pull: the 32-row sketch never reaches the driver
+    assert pulled and max(pulled) <= 4
 
 
 def test_theil_sen_collected_matches_distributed(spark):
