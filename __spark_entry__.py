@@ -4524,8 +4524,8 @@ def _q_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = events.groupBy(
         F.expr("unix_micros(ts) div 86400000000").alias("di")
     ).agg(F.count(F.lit(1)).alias("y"))
-    # day-grain series: same 100k contract bound as the acf/MK family
-    return theil_sen_trend(daily, "di", "y", collect_max_points=100_000)
+    # day-grain series: within the operator's series bound
+    return theil_sen_trend(daily, "di", "y")
 
 
 def _q_ratio_metric_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4572,12 +4572,8 @@ def _q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lo = d0.agg(F.min("di").alias("_dmin"))
     base = d0.join(F.broadcast(lo))
-    # bounded day grid (see acf_daily): one collect replaces the pair
-    # join + grid chains per series
-    raw = mann_kendall_test(
-        base.select("di", F.col("x0").alias("y")), "di", "y",
-        collect_max_points=100_000,
-    )
+    # bounded day grid (see acf_daily): one collect per series
+    raw = mann_kendall_test(base.select("di", F.col("x0").alias("y")), "di", "y")
     uplifted = mann_kendall_test(
         base.select(
             "di",
@@ -4590,7 +4586,6 @@ def _q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "di",
         "y",
-        collect_max_points=100_000,
     )
     return raw.select(F.lit("raw").alias("series"), "*").unionByName(
         uplifted.select(F.lit("uplifted").alias("series"), "*")
@@ -4647,10 +4642,9 @@ def _q_acf_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = events.groupBy(
         F.expr("unix_micros(ts) div 86400000000").alias("di")
     ).agg(F.count(F.lit(1)).alias("x"))
-    # the day grid is contract-bounded (~decades of days << 100k): the
-    # collected path pays the grid aggregation once instead of ~13 AQE
-    # stage-jobs of persists/lag-join/agg branches per action
-    return autocorrelation(daily, "di", "x", max_lag=7, collect_max_points=100_000)
+    # the day grid is contract-bounded (~decades of days, within the
+    # operator's series bound): one collect of the grid aggregation
+    return autocorrelation(daily, "di", "x", max_lag=7)
 
 
 def _q_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5096,18 +5090,18 @@ def _q_chi_square_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     cust = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders")
-    # collected-grid fast path: categorical vocab x vocab grids (<=125
-    # cells at any scale); the bound RAISES if a contract is violated
+    # categorical vocab x vocab grids (<=125 cells at any scale); the
+    # operator's cell bound RAISES if a contract is violated
     parts = [
-        chi_square_independence(
-            docs, "lang", "source", collect_max_cells=100_000
-        ).withColumn("pair", F.lit("lang_source")),
-        chi_square_independence(
-            cust, "c_mktsegment", "c_nationkey", collect_max_cells=100_000
-        ).withColumn("pair", F.lit("segment_nation")),
-        chi_square_independence(
-            orders, "o_orderpriority", "o_orderstatus", collect_max_cells=100_000
-        ).withColumn("pair", F.lit("priority_status")),
+        chi_square_independence(docs, "lang", "source").withColumn(
+            "pair", F.lit("lang_source")
+        ),
+        chi_square_independence(cust, "c_mktsegment", "c_nationkey").withColumn(
+            "pair", F.lit("segment_nation")
+        ),
+        chi_square_independence(orders, "o_orderpriority", "o_orderstatus").withColumn(
+            "pair", F.lit("priority_status")
+        ),
     ]
     out = parts[0]
     for p in parts[1:]:
@@ -6051,10 +6045,10 @@ def _q_ljung_box_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = events.groupBy(
         F.expr("unix_micros(ts) div 86400000000").alias("di")
     ).agg(F.count(F.lit(1)).alias("x"))
-    # bounded-day-grid contract (see acf_daily): the collected ACF turns
-    # the per-lag chain into a literal frame; only the n aggregate and
-    # the 7-row term reduction stay in-plan
-    return ljung_box(daily, "di", "x", max_lag=7, collect_max_points=100_000)
+    # bounded-day-grid contract (see acf_daily): the ACF is a literal
+    # frame; only the n aggregate and the 7-row term reduction stay
+    # in-plan
+    return ljung_box(daily, "di", "x", max_lag=7)
 
 
 def _q_ipw_ate_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6582,10 +6576,8 @@ def _q_ccf_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     dy = events.filter(F.col("event_type") == "purchase").groupBy(di).agg(
         F.count(F.lit(1)).alias("y")
     )
-    # day-grain series: same 100k contract bound as the acf/MK family
-    return cross_correlation(
-        dx.join(dy, "di"), "di", "x", "y", max_lag=7, collect_max_points=100_000
-    )
+    # day-grain series: within the operator's series bound
+    return cross_correlation(dx.join(dy, "di"), "di", "x", "y", max_lag=7)
 
 
 def _q_seasonal_strength_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7282,11 +7274,9 @@ def _q_pacf_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = events.groupBy(
         F.expr("unix_micros(ts) div 86400000000").alias("di")
     ).agg(F.count(F.lit(1)).alias("x"))
-    # same bounded-day-grid contract as acf_daily: one collect replaces
-    # the distributed ACF chain feeding the driver-side recursion
-    return pacf_durbin_levinson(
-        daily, "di", "x", max_lag=7, collect_max_points=100_000
-    )
+    # same bounded-day-grid contract as acf_daily: one collect feeds the
+    # driver-side recursion
+    return pacf_durbin_levinson(daily, "di", "x", max_lag=7)
 
 
 def _q_chi_posthoc_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7520,19 +7510,18 @@ def _q_friedman_dow_types(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
         ).agg(F.count(F.lit(1)).alias("x"))
     )
-    # collected-blocked fast path: the (day, type, count) frame is
-    # contract-bounded (days x types); the bound RAISES past 200k rows.
-    raw = friedman_test(daily, "di", "event_type", "x", collect_max_rows=200_000)
+    # the (day, type, count) frame is contract-bounded (days x types);
+    # the operator's block bound RAISES past it.
+    raw = friedman_test(daily, "di", "event_type", "x")
     # injected within-block uplift (the mann_kendall precedent): +50%
     # to purchases every day — ranked within day, the test must detect
     # it while the raw uniform fixture stays null.
-    # A series_col one-chain form was BUILT (operator support + tests
-    # remain), measured NET-SLOWER at sf0.1 (median ~5.7 s vs ~2.0 s,
-    # min-of-12 3.16 vs 1.72) and reverted: the union of two one-row
-    # series executes both chains CONCURRENTLY inside one job, so
-    # merging them serializes the same stage depth on this bounded
-    # (day x type) frame — locally and at 100 TB alike — while the
-    # blocked-rank chain gains join/window keys.
+    # A series_col one-chain form was built, measured NET-SLOWER at
+    # sf0.1 (median ~5.7 s vs ~2.0 s, min-of-12 3.16 vs 1.72) and
+    # deleted: the union of two one-row series executes both chains
+    # CONCURRENTLY inside one job, so merging them serialized the same
+    # stage depth on this bounded (day x type) frame while the
+    # blocked-rank chain gained join/window keys.
     uplifted = friedman_test(
         daily.select(
             "di",
@@ -7545,7 +7534,6 @@ def _q_friedman_dow_types(spark: SparkSession, sf_dir: str) -> DataFrame:
         "di",
         "event_type",
         "x",
-        collect_max_rows=200_000,
     )
     return raw.select(F.lit("raw").alias("series"), "*").unionByName(
         uplifted.select(F.lit("uplifted").alias("series"), "*")
@@ -7585,8 +7573,7 @@ def _q_seasonal_mk_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = d0.join(F.broadcast(lo))
     # bounded day grid (see acf_daily): one collect per series
     raw = seasonal_mann_kendall(
-        base.select("di", F.col("x0").alias("y")), "di", "y", period=7,
-        collect_max_points=100_000,
+        base.select("di", F.col("x0").alias("y")), "di", "y", period=7
     )
     uplifted = seasonal_mann_kendall(
         base.select(
@@ -7601,7 +7588,6 @@ def _q_seasonal_mk_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         "di",
         "y",
         period=7,
-        collect_max_points=100_000,
     )
     return raw.select(F.lit("raw").alias("series"), "*").unionByName(
         uplifted.select(F.lit("uplifted").alias("series"), "*")
@@ -7860,13 +7846,12 @@ def _q_page_week_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
             "x",
         )
     )
-    # A series_col one-chain form was BUILT (operator support + tests
-    # remain), measured a WASH-to-slight-regression at sf0.1 (min-of-12
-    # 1.79 vs 1.50 s) and reverted — the friedman lesson: the union of
-    # two one-row series already executes both chains concurrently in
-    # one job, so merging bounded blocked-rank chains only adds keys.
-    # collected-blocked fast path: weeks x 7 dow rows, contract-bounded
-    raw = page_trend_test(daily, "wk", "dow", "x", collect_max_rows=200_000)
+    # A series_col one-chain form was built, measured a WASH-to-slight-
+    # regression at sf0.1 (min-of-12 1.79 vs 1.50 s) and deleted — the
+    # friedman lesson: the union of two one-row series already executes
+    # both chains concurrently in one job.
+    # weeks x 7 dow rows, within the operator's block bound
+    raw = page_trend_test(daily, "wk", "dow", "x")
     uplifted = page_trend_test(
         daily.select(
             "wk",
@@ -7876,7 +7861,6 @@ def _q_page_week_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
         "wk",
         "dow",
         "x",
-        collect_max_rows=200_000,
     )
     return (
         raw.select(F.lit("raw").alias("series"), "k", "n_blocks", "page_l", "z")
@@ -8036,8 +8020,8 @@ def _q_cochran_q_dow_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     flags = daily.join(F.broadcast(med), "event_type").select(
         "di", "event_type", (F.col("x") > F.col("med")).cast("int").alias("f")
     )
-    # collected-blocked fast path: days x types flags, contract-bounded
-    return cochran_q(flags, "di", "event_type", "f", collect_max_rows=200_000)
+    # days x types flags, within the operator's block bound
+    return cochran_q(flags, "di", "event_type", "f")
 
 
 def _q_lilliefors_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8155,8 +8139,8 @@ def _q_kendall_w_dow_types(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
         ).agg(F.count(F.lit(1)).alias("x"))
     )
-    # collected-blocked fast path: days x types rows, contract-bounded
-    return kendall_w(daily, "di", "event_type", "x", collect_max_rows=200_000)
+    # days x types rows, within the operator's block bound
+    return kendall_w(daily, "di", "event_type", "x")
 
 
 def _q_theta_daily(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,6 +21,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from morphik_core_spark.plans.literal import bounded_collect
 from morphik_core_spark.plans.literal import values_literal_frame as _values_literal_frame
 
 __all__ = [
@@ -99,6 +100,17 @@ __all__ = [
     "seasonal_strength",
     "holt_winters_additive",
 ]
+
+# Contract bounds of the driver-side pulls: the series, blocked and
+# categorical tests below collect their bounded input once and do exact
+# integer combinatorics at the driver. A pre-aggregated series (days,
+# hours, buckets) has at most SERIES_MAX_POINTS points, a pre-aggregated
+# block x treatment frame at most BLOCK_MAX_ROWS rows, and the vocabulary
+# x vocabulary grid of two categorical columns at most
+# CHI_SQUARE_MAX_CELLS cells; past its bound an operator raises.
+SERIES_MAX_POINTS = 100_000
+BLOCK_MAX_ROWS = 200_000
+CHI_SQUARE_MAX_CELLS = 100_000
 
 
 def funnel_counts(
@@ -858,7 +870,6 @@ def autocorrelation(
     val_col: str,
     max_lag: int = 7,
     decimals: int = 6,
-    collect_max_points: int | None = None,
 ) -> DataFrame:
     """Sample autocorrelation of an integer-indexed series at lags
     1..``max_lag`` — the seasonality/persistence screen a telemetry
@@ -867,103 +878,54 @@ def autocorrelation(
         acf(k) = Σ_d (x_d − x̄)(x_{d+k} − x̄) / Σ_d (x_d − x̄)²
 
     Exactness: with S = Σx and n = #points, each deviation is the exact
-    INTEGER n·x_d − S; products accumulate in DECIMAL(38,0) (a corpus-
-    scale day count times n² · x² passes 2⁶³ easily), and the n²
-    factors cancel in the ratio, so acf is one double division rounded
-    once. Pairs exist only where BOTH indexes are present (gaps drop
-    pairs, the denominator stays full-series — the standard convention).
+    INTEGER n·x_d − S; den and the per-lag product sums are exact Python
+    integers carried as DECIMAL(38,0) literals (a corpus-scale day count
+    times n² · x² passes 2⁶³ easily), and the n² factors cancel in the
+    ratio, so acf is one double division rounded once. Pairs exist only
+    where BOTH indexes are present (gaps drop pairs, duplicate indexes
+    multiply them, the denominator stays full-series — the standard
+    convention); a lag with no pair emits no row. SQL NULL semantics:
+    a NULL index never pairs, a NULL value's deviation is NULL, counts
+    in its pairs and drops from every sum.
 
     Scale: the series is an already-aggregated frame (days, hours,
-    buckets — dimension-sized, not fact-sized); lags fan out via a
-    ``max_lag``-row spine and one equi-join on the shifted index.
+    buckets — dimension-sized, not fact-sized), pulled to the driver
+    once; more than ``SERIES_MAX_POINTS`` points raise.
 
     Output: (lag, n_pairs, acf).
-
-    ``collect_max_points`` opts a CONTRACT-BOUNDED series (a day/hour
-    grid, never fact-sized) into ONE collect + exact Python-int sums at
-    the driver (deviations, den, per-lag num are all integers, so this
-    is exact arithmetic, not float re-derivation); the acf doubles are
-    still produced by the IDENTICAL Spark decimal→double casts, division
-    and ROUND over decimal-string literals, so results are bit-for-bit
-    the same. The distributed chain pays ~13 AQE stage-jobs per action
-    (persists, lag join, two agg branches); the collected form pays the
-    upstream grid aggregation once. Raises when the series exceeds the
-    bound rather than collecting unboundedly.
     """
-    base = series.select(
-        F.col(idx_col).cast("bigint").alias("_i"), F.col(val_col).cast("bigint").alias("_x")
+    dec = "decimal(38,0)"
+    pts = bounded_collect(
+        series.select(
+            F.col(idx_col).cast("bigint").alias("_i"), F.col(val_col).cast("bigint").alias("_x")
+        ),
+        SERIES_MAX_POINTS,
+        "autocorrelation series",
     )
-    if collect_max_points is not None:
-        pts = base.limit(int(collect_max_points) + 1).collect()
-        if len(pts) > int(collect_max_points):
-            raise ValueError(
-                f"autocorrelation collect_max_points={collect_max_points} "
-                f"exceeded: the series is larger than the caller's bound; "
-                f"drop the option (distributed path) or raise the bound."
-            )
-        n, s = len(pts), sum(int(r["_x"]) for r in pts)
-        # per-row deviations for den; per-INDEX (sum, count) for the lag
-        # join so duplicate indexes multiply pairs exactly like the join
-        den = 0
-        sd: dict[int, int] = {}
-        cnt: dict[int, int] = {}
-        for r in pts:
-            i, d = int(r["_i"]), n * int(r["_x"]) - s
-            den += d * d
-            sd[i] = sd.get(i, 0) + d
-            cnt[i] = cnt.get(i, 0) + 1
-        out = []
-        for k in range(1, int(max_lag) + 1):
-            num = 0
-            n_pairs = 0
-            for i, da in sd.items():
-                db = sd.get(i + k)
-                if db is not None:
-                    num += da * db
-                    n_pairs += cnt[i] * cnt[i + k]
-            if n_pairs:  # the distributed join emits no row for pairless lags
-                out.append((k, n_pairs, str(num)))
-        spark = series.sparkSession
-        return _values_literal_frame(
-            spark, [("lag", "int"), ("n_pairs", "bigint"), ("_num", "string")], out
-        ).select(
-            "lag",
-            "n_pairs",
-            F.round(
-                F.expr(
-                    f"CAST(CAST(_num AS DECIMAL(38,0)) AS DOUBLE) / "
-                    f"CAST(CAST('{den}' AS DECIMAL(38,0)) AS DOUBLE)"
-                ),
-                decimals,
-            ).alias("acf"),
-        )
-    from morphik_core_spark.plans.cache import scoped_persist
-
-    # series-bounded; base feeds the moments + deviations, dev feeds the
-    # denominator and both sides of the lag join — persist both so the
-    # upstream day-grid aggregation runs once
-    base = scoped_persist(base)
-    glob = base.agg(
-        F.sum("_x").alias("_s"), F.count(F.lit(1)).alias("_n")
-    )
-    dev = scoped_persist(base.join(F.broadcast(glob)).select(
-        "_i", (F.col("_n") * F.col("_x") - F.col("_s")).alias("_d")
-    ))
-    den = dev.agg(
-        F.sum(F.col("_d").cast("decimal(38,0)") * F.col("_d")).alias("_den")
-    )
-    spine = F.explode(F.array(*[F.lit(k) for k in range(1, max_lag + 1)])).alias("lag")
-    left = dev.select(spine, "_i", F.col("_d").alias("_da")).withColumn(
-        "_j", F.col("_i") + F.col("lag")
-    )
-    pairs = left.join(
-        dev.select(F.col("_i").alias("_j"), F.col("_d").alias("_db")), "_j"
-    )
-    num = pairs.groupBy("lag").agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.sum(F.col("_da").cast("decimal(38,0)") * F.col("_db")).alias("_num"),
-    )
-    return num.join(F.broadcast(den)).select(
+    n = len(pts)
+    xs = [r["_x"] for r in pts if r["_x"] is not None]
+    s = sum(xs) if xs else None
+    dev = [(r["_i"], None if r["_x"] is None or s is None else n * r["_x"] - s) for r in pts]
+    sq = [d * d for _i, d in dev if d is not None]
+    den = sum(sq) if sq else None
+    by_idx: dict[int, list] = {}
+    for i, d in dev:
+        if i is not None:
+            by_idx.setdefault(i, []).append(d)
+    out = []
+    for k in range(1, int(max_lag) + 1):
+        n_pairs, prods = 0, []
+        for i, da_all in by_idx.items():
+            db_all = by_idx.get(i + k, ())
+            n_pairs += len(da_all) * len(db_all)
+            prods += [da * db for da in da_all for db in db_all if da is not None and db is not None]
+        if n_pairs:
+            out.append((k, n_pairs, sum(prods) if prods else None, den))
+    return _values_literal_frame(
+        series.sparkSession,
+        [("lag", "int"), ("n_pairs", "bigint"), ("_num", dec), ("_den", dec)],
+        out,
+    ).select(
         "lag",
         "n_pairs",
         F.round(
@@ -977,7 +939,6 @@ def pacf_durbin_levinson(
     idx_col: str,
     val_col: str,
     max_lag: int = 7,
-    collect_max_points: int | None = None,
 ) -> DataFrame:
     """Partial autocorrelation function via the Durbin-Levinson
     recursion — the AR-order diagnostic beside `autocorrelation`'s raw
@@ -1010,12 +971,7 @@ def pacf_durbin_levinson(
         return int(_m.floor(x + 0.5)) if x >= 0 else int(_m.ceil(x - 0.5))
 
     acf_rows = autocorrelation(
-        series,
-        idx_col,
-        val_col,
-        max_lag=max_lag,
-        decimals=12,
-        collect_max_points=collect_max_points,
+        series, idx_col, val_col, max_lag=max_lag, decimals=12
     ).collect()  # max_lag-bounded
     r_u = {
         int(r["lag"]): _rha(float(r["acf"]) * 1e12)
@@ -3293,9 +3249,8 @@ def conformal_interval(
 
 
 def _theil_sen_tail(stats: DataFrame, decimals: int) -> DataFrame:
-    """Shared output tail over the exact integer stats (n_points,
-    n_pairs, _m2, _i4) — the same code object for the distributed and
-    collected paths so the two double trees cannot diverge."""
+    """Output tail of `theil_sen_trend` over its exact integer stats
+    (n_points, n_pairs, _m2, _i4): the slope/intercept double tree."""
     return stats.select(
         "n_points",
         "n_pairs",
@@ -3309,7 +3264,6 @@ def theil_sen_trend(
     idx_col: str,
     val_col: str,
     decimals: int = 6,
-    collect_max_points: int | None = None,
 ) -> DataFrame:
     """Theil–Sen robust trend estimate over an integer-indexed series:
     the MEDIAN of all pairwise slopes (y_k − y_j)/(k − j) — up to ~29%
@@ -3324,150 +3278,79 @@ def theil_sen_trend(
     intercept medians over per-point micro residuals the same way.
 
     The pairwise grid is SERIES-bounded (n(n−1)/2 on the pre-aggregated
-    series — 435 pairs for a 30-day window), the same contract as the
-    other series operators; never row-grain.
+    series — 435 pairs for a 30-day window); the series is pulled to the
+    driver once (more than ``SERIES_MAX_POINTS`` points raise) and the
+    micro-slopes, both nearest-rank medians and the residual grid are
+    exact Python integers with SQL semantics — NULL indexes never pair
+    but count in n_points, NULL values form NULL slopes that sort first
+    (asc_nulls_first) and SUM skips NULLs inside an even-median pair.
+    The slope/intercept doubles come from `_theil_sen_tail`.
 
     Output: one row (n_points, n_pairs, slope, intercept).
-
-    ``collect_max_points`` opts a CONTRACT-BOUNDED series into ONE
-    collect (the mann_kendall recipe): pairwise micro-slopes, both
-    nearest-rank medians and the residual grid run in exact Python
-    integers mirroring the distributed plan EXACTLY — NULL indexes
-    never pair but count in n_points, NULL values form NULL slopes that
-    sort first (Spark asc_nulls_first) and SQL SUM skips NULLs inside
-    an even-median pair — and the slope/intercept doubles come from the
-    IDENTICAL Spark tail over the integer literals. Raises past the
-    bound instead of collecting unboundedly.
     """
     import math as _m
 
-    if collect_max_points is not None:
-        rows = (
-            df.select(
-                F.col(idx_col).cast("bigint").alias("_i"),
-                F.col(val_col).cast("bigint").alias("_y"),
-            )
-            .limit(int(collect_max_points) + 1)
-            .collect()
-        )
-        if len(rows) > int(collect_max_points):
-            raise ValueError(
-                f"theil_sen_trend collect_max_points={collect_max_points} "
-                f"exceeded: the series is larger than the caller's bound; "
-                f"drop the option (distributed path) or raise the bound."
-            )
-        pts = [(r["_i"], r["_y"]) for r in rows]
-        n_points = len(pts)
-
-        def _rha(x: float) -> int:
-            return int(_m.floor(x + 0.5)) if x >= 0 else int(_m.ceil(x - 0.5))
-
-        idx_pts = [(i, y) for i, y in pts if i is not None]
-        slopes: list = []
-        for j in range(len(idx_pts)):
-            ia, ya = idx_pts[j]
-            for kk in range(len(idx_pts)):
-                ib, yb = idx_pts[kk]
-                if ia < ib:
-                    slopes.append(
-                        None
-                        if ya is None or yb is None
-                        else _rha(float(yb - ya) * 1e6 / float(ib - ia))
-                    )
-        np_ = len(slopes)
-
-        def _med2_sql(vals: list) -> "int | None":
-            # exact 2x nearest-rank median with SQL semantics: NULLs sort
-            # first, SUM skips NULLs, an empty selection yields NULL
-            nv = len(vals)
-            if nv == 0:
-                return None
-            ordered = sorted(vals, key=lambda v: (v is not None, v))
-            if nv % 2 == 1:
-                sel = [ordered[(nv - 1) // 2]]
-                s = sel[0]
-                return None if s is None else 2 * s
-            sel = [ordered[nv // 2 - 1], ordered[nv // 2]]
-            non_null = [v for v in sel if v is not None]
-            return sum(non_null) if non_null else None
-
-        m2 = _med2_sql(slopes)
-        n_pairs = np_ if np_ > 0 else None
-        if n_points == 0:
-            m2_f = i4 = n_pairs_f = None
-        else:
-            resids = [
-                None if (i is None or y is None or m2 is None) else y * 2_000_000 - m2 * i
-                for i, y in pts
-            ]
-            i4 = _med2_sql(resids)
-            m2_f, n_pairs_f = m2, n_pairs
-        stats = _values_literal_frame(
-            df.sparkSession,
-            [("n_points", "bigint"), ("n_pairs", "bigint"),
-             ("_m2", "bigint"), ("_i4", "bigint")],
-            [(n_points, n_pairs_f, m2_f, i4)],
-        )
-        return _theil_sen_tail(stats, decimals)
-
-    from morphik_core_spark.plans.cache import scoped_persist
-
-    # all three frames are series-bounded (n points / n(n-1)/2 pairs);
-    # each has 2-4 consumers that would otherwise re-derive the upstream
-    # aggregation per branch (11 FileScans measured before persisting)
-    base = scoped_persist(
+    rows = bounded_collect(
         df.select(
             F.col(idx_col).cast("bigint").alias("_i"),
             F.col(val_col).cast("bigint").alias("_y"),
-        )
+        ),
+        SERIES_MAX_POINTS,
+        "theil_sen_trend series",
     )
-    a = base.select(F.col("_i").alias("_ia"), F.col("_y").alias("_ya"))
-    b = base.select(F.col("_i").alias("_ib"), F.col("_y").alias("_yb"))
-    pairs = scoped_persist(
-        a.join(b, F.col("_ia") < F.col("_ib")).select(
-            F.expr(
-                "CAST(ROUND(CAST((_yb - _ya) AS DOUBLE) * 1e6 / CAST(_ib - _ia AS DOUBLE)) AS BIGINT)"
-            ).alias("_s")
-        )
+    pts = [(r["_i"], r["_y"]) for r in rows]
+    n_points = len(pts)
+
+    def _rha(x: float) -> int:
+        return int(_m.floor(x + 0.5)) if x >= 0 else int(_m.ceil(x - 0.5))
+
+    idx_pts = [(i, y) for i, y in pts if i is not None]
+    slopes: list = []
+    for j in range(len(idx_pts)):
+        ia, ya = idx_pts[j]
+        for kk in range(len(idx_pts)):
+            ib, yb = idx_pts[kk]
+            if ia < ib:
+                slopes.append(
+                    None
+                    if ya is None or yb is None
+                    else _rha(float(yb - ya) * 1e6 / float(ib - ia))
+                )
+    np_ = len(slopes)
+
+    def _med2_sql(vals: list) -> "int | None":
+        # exact 2x nearest-rank median with SQL semantics: NULLs sort
+        # first, SUM skips NULLs, an empty selection yields NULL
+        nv = len(vals)
+        if nv == 0:
+            return None
+        ordered = sorted(vals, key=lambda v: (v is not None, v))
+        if nv % 2 == 1:
+            sel = [ordered[(nv - 1) // 2]]
+            s = sel[0]
+            return None if s is None else 2 * s
+        sel = [ordered[nv // 2 - 1], ordered[nv // 2]]
+        non_null = [v for v in sel if v is not None]
+        return sum(non_null) if non_null else None
+
+    m2 = _med2_sql(slopes)
+    n_pairs = np_ if np_ > 0 else None
+    if n_points == 0:
+        m2_f = i4 = n_pairs_f = None
+    else:
+        resids = [
+            None if (i is None or y is None or m2 is None) else y * 2_000_000 - m2 * i
+            for i, y in pts
+        ]
+        i4 = _med2_sql(resids)
+        m2_f, n_pairs_f = m2, n_pairs
+    stats = _values_literal_frame(
+        df.sparkSession,
+        [("n_points", "bigint"), ("n_pairs", "bigint"),
+         ("_m2", "bigint"), ("_i4", "bigint")],
+        [(n_points, n_pairs_f, m2_f, i4)],
     )
-    # exact median carried as 2*median (the rolling-median recipe):
-    # odd n -> 2*middle; even n -> middle pair sum
-    w = Window.orderBy("_s")
-    cnt = pairs.agg(F.count(F.lit(1)).alias("_np"))
-    med2 = (
-        pairs.withColumn("_r", F.row_number().over(w))
-        .join(F.broadcast(cnt))
-        .filter(
-            ((F.col("_np") % 2 == 1) & (F.col("_r") * 2 == F.col("_np") + 1))
-            | ((F.col("_np") % 2 == 0) & ((F.col("_r") * 2 == F.col("_np")) | (F.col("_r") * 2 == F.col("_np") + 2)))
-        )
-        .agg(
-            F.when(F.max("_np") % 2 == 1, F.sum("_s") * 2).otherwise(F.sum("_s")).alias("_m2"),
-            F.max("_np").alias("n_pairs"),
-        )
-    )
-    n_points = base.agg(F.count(F.lit(1)).alias("n_points"))
-    # residual intercept: median over per-point (y*1e6*2 - slope2*i)
-    resid = scoped_persist(
-        base.join(F.broadcast(med2))
-        .select((F.col("_y") * F.lit(2000000) - F.col("_m2") * F.col("_i")).alias("_res2"), "_m2", "n_pairs")
-    )
-    wr = Window.orderBy("_res2")
-    rcnt = resid.agg(F.count(F.lit(1)).alias("_nr"))
-    imed = (
-        resid.withColumn("_r", F.row_number().over(wr))
-        .join(F.broadcast(rcnt))
-        .filter(
-            ((F.col("_nr") % 2 == 1) & (F.col("_r") * 2 == F.col("_nr") + 1))
-            | ((F.col("_nr") % 2 == 0) & ((F.col("_r") * 2 == F.col("_nr")) | (F.col("_r") * 2 == F.col("_nr") + 2)))
-        )
-        .agg(
-            F.when(F.max("_nr") % 2 == 1, F.sum("_res2") * 2).otherwise(F.sum("_res2")).alias("_i4"),
-            F.max("_m2").alias("_m2"),
-            F.max("n_pairs").alias("n_pairs"),
-        )
-    )
-    return _theil_sen_tail(n_points.join(F.broadcast(imed)), decimals)
+    return _theil_sen_tail(stats, decimals)
 
 
 def ratio_metric_ci(
@@ -3587,7 +3470,6 @@ def mann_kendall_test(
     idx_col: str,
     val_col: str,
     decimals: int = 6,
-    collect_max_points: int | None = None,
 ) -> DataFrame:
     """Mann–Kendall trend test over an integer-indexed series — the
     nonparametric significance companion to `theil_sen_trend`'s
@@ -3603,86 +3485,39 @@ def mann_kendall_test(
     Output: one row (n_points, s_stat, var_s, z, trend) — trend is
     'increasing' / 'decreasing' / 'none' at |z| ≥ 1.96.
 
-    ``collect_max_points`` opts a CONTRACT-BOUNDED series into one
-    collect: S (Fenwick inversion count), n and the tie term are exact
-    driver integers mirroring the pair join and value grid EXACTLY
-    (NULL indexes never pair but count in n/ties; NULL values form a
-    tie group and contribute NULL signs, so an all-NULL pair set keeps
-    s NULL like SQL SUM) — and the z/var/trend doubles still come from
-    the identical Spark expression tail over the integer literals.
-    Raises past the bound instead of collecting unboundedly.
+    The series is pulled to the driver once (more than
+    ``SERIES_MAX_POINTS`` points raise): S (Fenwick inversion count), n
+    and the tie term are exact driver integers with SQL semantics (NULL
+    indexes never pair but count in n/ties; NULL values form a tie group
+    and contribute NULL signs, so an all-NULL pair set keeps s NULL like
+    SQL SUM), and the z/var/trend doubles come from one Spark
+    expression tail over the integer literals.
     """
-    if collect_max_points is not None:
-        rows = (
-            df.select(
-                F.col(idx_col).cast("bigint").alias("_i"),
-                F.col(val_col).cast("bigint").alias("_y"),
-            )
-            .limit(int(collect_max_points) + 1)
-            .collect()
-        )
-        if len(rows) > int(collect_max_points):
-            raise ValueError(
-                f"mann_kendall_test collect_max_points={collect_max_points} "
-                f"exceeded: the series is larger than the caller's bound; "
-                f"drop the option (distributed path) or raise the bound."
-            )
-        s_val, _ = _mk_sign_sum(
-            [
-                (int(r["_i"]), int(r["_y"]))
-                for r in rows
-                if r["_i"] is not None and r["_y"] is not None
-            ]
-        )
-        tcnt: dict = {}
-        for r in rows:
-            tcnt[r["_y"]] = tcnt.get(r["_y"], 0) + 1
-        n_val = len(rows)
-        tie_val = sum(t * (t - 1) * (2 * t + 5) for t in tcnt.values() if t > 1)
-        joined = _values_literal_frame(
-            df.sparkSession,
-            [("s", "bigint"), ("n", "bigint"), ("tie_term", "bigint")],
-            [(s_val, n_val, tie_val)],
-        )
-    else:
-        from morphik_core_spark.plans.cache import scoped_persist
-
-        # series-bounded; four consumers (both self-join sides, n, ties)
-        # would otherwise each re-derive the upstream aggregation
-        base = scoped_persist(
-            df.select(
-                F.col(idx_col).cast("bigint").alias("_i"),
-                F.col(val_col).cast("bigint").alias("_y"),
-            )
-        )
-        a = base.select(F.col("_i").alias("_ia"), F.col("_y").alias("_ya"))
-        b = base.select(F.col("_i").alias("_ib"), F.col("_y").alias("_yb"))
-        s_stat = (
-            a.join(b, F.col("_ia") < F.col("_ib"))
-            .agg(F.sum(F.signum((F.col("_yb") - F.col("_ya")).cast("double")).cast("bigint")).alias("s"))
-        )
-        # n and the tie term come from ONE pass over the value grid
-        # (round-11: the former separate n_row chain re-scanned base and
-        # added a broadcast join): n = SUM of grid counts, and the t>1
-        # filter becomes a conditional sum — 0 on no-tie input exactly as
-        # the old COALESCE(SUM(..), 0) after the filter.
-        nt = (
-            base.groupBy("_y")
-            .agg(F.count(F.lit(1)).alias("t"))
-            .agg(
-                F.coalesce(F.sum("t"), F.lit(0)).alias("n"),
-                F.coalesce(
-                    F.sum(
-                        F.when(
-                            F.col("t") > 1,
-                            F.col("t") * (F.col("t") - 1) * (F.lit(2) * F.col("t") + 5),
-                        )
-                    ),
-                    F.lit(0),
-                ).alias("tie_term"),
-            )
-        )
-        joined = s_stat.join(F.broadcast(nt))
+    rows = bounded_collect(
+        df.select(
+            F.col(idx_col).cast("bigint").alias("_i"),
+            F.col(val_col).cast("bigint").alias("_y"),
+        ),
+        SERIES_MAX_POINTS,
+        "mann_kendall_test series",
+    )
+    s_val, _ = _mk_sign_sum(
+        [
+            (int(r["_i"]), int(r["_y"]))
+            for r in rows
+            if r["_i"] is not None and r["_y"] is not None
+        ]
+    )
+    tcnt: dict = {}
+    for r in rows:
+        tcnt[r["_y"]] = tcnt.get(r["_y"], 0) + 1
+    n_val = len(rows)
+    tie_val = sum(t * (t - 1) * (2 * t + 5) for t in tcnt.values() if t > 1)
+    joined = _values_literal_frame(
+        df.sparkSession,
+        [("s", "bigint"), ("n", "bigint"), ("tie_term", "bigint")],
+        [(s_val, n_val, tie_val)],
+    )
     var18 = (
         F.col("n") * (F.col("n") - 1) * (F.lit(2) * F.col("n") + 5) - F.col("tie_term")
     )
@@ -3710,7 +3545,6 @@ def seasonal_mann_kendall(
     val_col: str,
     period: int = 7,
     decimals: int = 6,
-    collect_max_points: int | None = None,
 ) -> DataFrame:
     """Seasonal Mann-Kendall trend test (Hirsch & Slack): S and its
     tie-corrected variance computed WITHIN each season (index mod
@@ -3726,130 +3560,58 @@ def seasonal_mann_kendall(
 
     Output ONE row: (n_points, n_seasons, s_stat, var_s, z, trend).
 
-    ``collect_max_points`` opts a CONTRACT-BOUNDED series into one
-    collect + exact per-season driver integers (the mann_kendall_test
-    mirror, per season: NULL seasons/indexes never pair but count in
-    the grid, NULL values form tie groups, s stays NULL when no valid
-    pair exists); the z/var/trend doubles come from the identical Spark
-    expression tail over the integer literals.
+    The series is pulled to the driver once (more than
+    ``SERIES_MAX_POINTS`` points raise) and every per-season term is an
+    exact driver integer with the `mann_kendall_test` semantics per
+    season (NULL seasons/indexes never pair but count in the grid, NULL
+    values form tie groups, s stays NULL when no valid pair exists); the
+    z/var/trend doubles come from one Spark expression tail over the
+    integer literals.
     """
-    if collect_max_points is not None:
-        rows = (
-            df.select(
-                F.col(idx_col).cast("bigint").alias("_i"),
-                F.col(val_col).cast("bigint").alias("_y"),
-            )
-            .limit(int(collect_max_points) + 1)
-            .collect()
-        )
-        if len(rows) > int(collect_max_points):
-            raise ValueError(
-                f"seasonal_mann_kendall collect_max_points={collect_max_points} "
-                f"exceeded: the series is larger than the caller's bound; "
-                f"drop the option (distributed path) or raise the bound."
-            )
-        p = int(period)
-        by_season: dict = {}
-        grid: dict = {}
-        for r in rows:
-            i, y = r["_i"], r["_y"]
-            m = None if i is None else int(i) % p  # pmod on bigint
-            grid.setdefault(m, {})[y] = grid.setdefault(m, {}).get(y, 0) + 1
-            if m is not None and y is not None:
-                by_season.setdefault(m, []).append((int(i), int(y)))
-        s_val: int | None = None
-        for pts in by_season.values():
-            s_m, np_m = _mk_sign_sum(pts)
-            if s_m is not None:
-                s_val = (s_val or 0) + s_m
-        n_seasons = len(grid)
-        n_points = sum(sum(c.values()) for c in grid.values()) or None
-        v18 = (
-            sum(
-                nm * (nm - 1) * (2 * nm + 5)
-                - sum(t * (t - 1) * (2 * t + 5) for t in c.values() if t > 1)
-                for c in grid.values()
-                for nm in (sum(c.values()),)
-            )
-            if grid
-            else None
-        )
-        joined = _values_literal_frame(
-            df.sparkSession,
-            [
-                ("s", "bigint"),
-                ("n_seasons", "bigint"),
-                ("n_points", "bigint"),
-                ("_v18", "bigint"),
-            ],
-            [(s_val, n_seasons, n_points, v18)],
-        )
-        var_s = F.col("_v18").cast("double") / F.lit(18.0)
-        z = (
-            F.when(F.col("s") > 0, (F.col("s") - 1).cast("double") / F.sqrt(var_s))
-            .when(F.col("s") < 0, (F.col("s") + 1).cast("double") / F.sqrt(var_s))
-            .otherwise(F.lit(0.0))
-        )
-        return joined.select(
-            F.col("n_points").cast("bigint").alias("n_points"),
-            F.col("n_seasons").cast("bigint").alias("n_seasons"),
-            F.col("s").alias("s_stat"),
-            F.round(var_s, decimals).alias("var_s"),
-            F.round(z, decimals).alias("z"),
-            F.when(F.round(z, decimals) >= 1.96, F.lit("increasing"))
-            .when(F.round(z, decimals) <= -1.96, F.lit("decreasing"))
-            .otherwise(F.lit("none"))
-            .alias("trend"),
-        )
-    from morphik_core_spark.plans.cache import scoped_persist
-
-    base = scoped_persist(
+    rows = bounded_collect(
         df.select(
             F.col(idx_col).cast("bigint").alias("_i"),
             F.col(val_col).cast("bigint").alias("_y"),
-        ).withColumn("_m", F.pmod(F.col("_i"), F.lit(int(period))))
+        ),
+        SERIES_MAX_POINTS,
+        "seasonal_mann_kendall series",
     )
-    a = base.select(F.col("_m").alias("_ma"), F.col("_i").alias("_ia"), F.col("_y").alias("_ya"))
-    b = base.select(F.col("_m").alias("_mb"), F.col("_i").alias("_ib"), F.col("_y").alias("_yb"))
-    s_stat = a.join(
-        b, (F.col("_ma") == F.col("_mb")) & (F.col("_ia") < F.col("_ib"))
-    ).agg(
-        F.sum(
-            F.signum((F.col("_yb") - F.col("_ya")).cast("double")).cast("bigint")
-        ).alias("s")
-    )
-    # per-season sizes AND tie terms come from ONE pass over the
-    # (season, value) grid (round-11: the former per_season chain
-    # re-scanned base, and ties needed a filter + left join + na.fill):
-    # _n = SUM of grid counts per season, and the t>1 filter becomes a
-    # conditional sum whose missing-group 0 is exactly the old
-    # na.fill(0) after the left join.
-    sv = (
-        base.groupBy("_m", "_y")
-        .agg(F.count(F.lit(1)).alias("t"))
-        .groupBy("_m")
-        .agg(
-            F.sum("t").alias("_n"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("t") > 1,
-                        F.col("t") * (F.col("t") - 1) * (F.lit(2) * F.col("t") + 5),
-                    )
-                ),
-                F.lit(0),
-            ).alias("tie_term"),
+    p = int(period)
+    by_season: dict = {}
+    grid: dict = {}
+    for r in rows:
+        i, y = r["_i"], r["_y"]
+        m = None if i is None else int(i) % p  # pmod on bigint
+        grid.setdefault(m, {})[y] = grid.setdefault(m, {}).get(y, 0) + 1
+        if m is not None and y is not None:
+            by_season.setdefault(m, []).append((int(i), int(y)))
+    s_val: int | None = None
+    for pts in by_season.values():
+        s_m, _ = _mk_sign_sum(pts)
+        if s_m is not None:
+            s_val = (s_val or 0) + s_m
+    n_seasons = len(grid)
+    n_points = sum(sum(c.values()) for c in grid.values()) or None
+    v18 = (
+        sum(
+            nm * (nm - 1) * (2 * nm + 5)
+            - sum(t * (t - 1) * (2 * t + 5) for t in c.values() if t > 1)
+            for c in grid.values()
+            for nm in (sum(c.values()),)
         )
+        if grid
+        else None
     )
-    var18 = sv.agg(
-        F.count(F.lit(1)).alias("n_seasons"),
-        F.sum("_n").alias("n_points"),
-        F.sum(
-            F.col("_n") * (F.col("_n") - 1) * (F.lit(2) * F.col("_n") + 5)
-            - F.col("tie_term")
-        ).alias("_v18"),
+    joined = _values_literal_frame(
+        df.sparkSession,
+        [
+            ("s", "bigint"),
+            ("n_seasons", "bigint"),
+            ("n_points", "bigint"),
+            ("_v18", "bigint"),
+        ],
+        [(s_val, n_seasons, n_points, v18)],
     )
-    joined = s_stat.join(F.broadcast(var18))
     var_s = F.col("_v18").cast("double") / F.lit(18.0)
     z = (
         F.when(F.col("s") > 0, (F.col("s") - 1).cast("double") / F.sqrt(var_s))
@@ -4025,7 +3787,6 @@ def chi_square_independence(
     x_col: str,
     y_col: str,
     decimals: int = 6,
-    collect_max_cells: int | None = None,
 ) -> DataFrame:
     """Pearson chi-square test of independence between two categorical
     columns, plus Cramér's V effect size — the significance-test
@@ -4045,85 +3806,62 @@ def chi_square_independence(
 
     Output is ONE row: (chi2, dof, cramers_v, n) — V = sqrt(chi2 /
     (N·min(|X|−1, |Y|−1))), the bias-uncorrected classical form.
+
+    The observed cell grid is pulled to the driver once (more than
+    ``CHI_SQUARE_MAX_CELLS`` cells raise); marginals and the dense
+    cross-product are exact Python integers fed back as a VALUES literal
+    frame into `_chi_square_tail`.
     """
-    from morphik_core_spark.plans.cache import scoped_persist
-
-    if collect_max_cells is not None:
-        # collected-grid fast path (the round-12 bounded-frame recipe):
-        # ONE collect of the vocab x vocab cell grid; marginals and the
-        # dense cross-product are exact Python integers fed back as a
-        # VALUES literal frame into the IDENTICAL per-cell quantized
-        # term + final aggregation, so results are bit-for-bit the same.
-        collected = (
-            df.groupBy(
-                F.col(x_col).cast("string").alias("_x"),
-                F.col(y_col).cast("string").alias("_y"),
-            )
-            .agg(F.count(F.lit(1)).alias("_nxy"))
-            .collect()
-        )
-        if len(collected) > collect_max_cells:
-            raise ValueError(
-                f"collected chi-square grid has {len(collected)} cells > "
-                f"collect_max_cells={collect_max_cells}; use the distributed path"
-            )
-        mxd: dict[str | None, int] = {}
-        myd: dict[str | None, int] = {}
-        cnt: dict[tuple, int] = {}
-        for r in collected:
-            mxd[r["_x"]] = mxd.get(r["_x"], 0) + r["_nxy"]
-            myd[r["_y"]] = myd.get(r["_y"], 0) + r["_nxy"]
-            cnt[(r["_x"], r["_y"])] = r["_nxy"]
-        n_tot = sum(mxd.values())
-        # the distributed dense grid left-joins cells on (_x, _y): a NULL
-        # level's observed count never matches (NULL != NULL in a join)
-        # and na.fill(0) zeroes it, while the level still carries its
-        # marginal — replicate exactly
-        dense = [
-            (
-                x,
-                y,
-                cnt.get((x, y), 0) if x is not None and y is not None else 0,
-                nx,
-                ny,
-                n_tot,
-            )
-            for x, nx in mxd.items()
-            for y, ny in myd.items()
-        ]
-        full_n = _values_literal_frame(
-            df.sparkSession,
-            [
-                ("_x", "string"),
-                ("_y", "string"),
-                ("_nxy", "bigint"),
-                ("_nx", "bigint"),
-                ("_ny", "bigint"),
-                ("_n", "bigint"),
-            ],
-            dense,
-        )
-        return _chi_square_tail(full_n, decimals)
-
-    # vocab x vocab cells feed both marginals, the dense cross-product,
-    # and the total — persist so the corpus contributes ONE groupBy scan
-    cells = scoped_persist(df.groupBy(
-        F.col(x_col).cast("string").alias("_x"),
-        F.col(y_col).cast("string").alias("_y"),
-    ).agg(F.count(F.lit(1)).alias("_nxy")))
-    mx = cells.groupBy("_x").agg(F.sum("_nxy").alias("_nx"))
-    my = cells.groupBy("_y").agg(F.sum("_nxy").alias("_ny"))
-    full = mx.crossJoin(F.broadcast(my)).join(cells, ["_x", "_y"], "left").na.fill(
-        {"_nxy": 0}
+    collected = bounded_collect(
+        df.groupBy(
+            F.col(x_col).cast("string").alias("_x"),
+            F.col(y_col).cast("string").alias("_y"),
+        ).agg(F.count(F.lit(1)).alias("_nxy")),
+        CHI_SQUARE_MAX_CELLS,
+        "chi_square_independence cell grid",
     )
-    tot = cells.agg(F.sum("_nxy").alias("_n"))
-    return _chi_square_tail(full.join(F.broadcast(tot)), decimals)
+    mxd: dict[str | None, int] = {}
+    myd: dict[str | None, int] = {}
+    cnt: dict[tuple, int] = {}
+    for r in collected:
+        mxd[r["_x"]] = mxd.get(r["_x"], 0) + r["_nxy"]
+        myd[r["_y"]] = myd.get(r["_y"], 0) + r["_nxy"]
+        cnt[(r["_x"], r["_y"])] = r["_nxy"]
+    n_tot = sum(mxd.values())
+    # join semantics of the dense grid: a NULL level's cell never
+    # matches its observed count (NULL != NULL), so it counts 0, while
+    # the level still carries its marginal
+    dense = [
+        (
+            x,
+            y,
+            cnt.get((x, y), 0) if x is not None and y is not None else 0,
+            nx,
+            ny,
+            n_tot,
+        )
+        for x, nx in mxd.items()
+        for y, ny in myd.items()
+    ]
+    full_n = _values_literal_frame(
+        df.sparkSession,
+        [
+            ("_x", "string"),
+            ("_y", "string"),
+            ("_nxy", "bigint"),
+            ("_nx", "bigint"),
+            ("_ny", "bigint"),
+            ("_n", "bigint"),
+        ],
+        dense,
+    )
+    return _chi_square_tail(full_n, decimals)
 
 
 def _chi_square_tail(full_n: DataFrame, decimals: int) -> DataFrame:
-    """Shared quantized-term aggregation + chi2/V select over the dense
-    (cell, marginals, N) grid — identical expression tree for the
-    distributed and collected-grid paths of `chi_square_independence`."""
+    """Quantized-term aggregation + chi2/V select over the dense (cell,
+    marginals, N) literal grid of `chi_square_independence` — the one
+    double tree of its result."""
     term = (
         "CAST(ROUND(("
         "(CAST(_nxy AS DOUBLE) * CAST(_n AS DOUBLE) - CAST(_nx AS DOUBLE) * CAST(_ny AS DOUBLE)) "
@@ -5509,7 +5247,6 @@ def ljung_box(
     val_col: str,
     max_lag: int = 7,
     decimals: int = 6,
-    collect_max_points: int | None = None,
 ) -> DataFrame:
     """Ljung–Box portmanteau Q test: is a series white noise, jointly
     over the first ``max_lag`` autocorrelations —
@@ -5526,14 +5263,7 @@ def ljung_box(
 
     Output ONE row: (n, m, q_stat).
     """
-    acf = autocorrelation(
-        series,
-        idx_col,
-        val_col,
-        max_lag=max_lag,
-        decimals=12,
-        collect_max_points=collect_max_points,
-    )
+    acf = autocorrelation(series, idx_col, val_col, max_lag=max_lag, decimals=12)
     n = series.agg(F.count(F.lit(1)).alias("n"))
     terms = acf.join(F.broadcast(n)).select(
         "n",
@@ -5673,18 +5403,14 @@ def _collected_rank_pergroup(
     never a silent truncation.
     """
     q = F.expr(f"CAST(ROUND(CAST({val_col} AS DOUBLE) * {int(value_scale)}) AS BIGINT)")
-    cells = (
+    cells = bounded_collect(
         df.filter(F.col(val_col).isNotNull())
         .select(F.col(group_col).cast("string").alias("_g"), q.alias("_v"))
         .groupBy("_g", "_v")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .collect()
+        .agg(F.count(F.lit(1)).alias("_c")),
+        max_cells,
+        "rank grid (collect_max_cells)",
     )
-    if len(cells) > max_cells:
-        raise ValueError(
-            f"collected rank grid has {len(cells)} cells > collect_max_cells="
-            f"{max_cells}; use the distributed path for unbounded value domains"
-        )
     pooled: dict[int, int] = {}
     for r in cells:
         pooled[r["_v"]] = pooled.get(r["_v"], 0) + r["_c"]
@@ -6156,47 +5882,15 @@ def cmh_test(
     )
 
 
-def _complete_block_filter(base: DataFrame, skey: list[str] | None = None) -> DataFrame:
-    """Blocks of ``base`` (columns `_b`, `_t`) carrying ALL treatment
-    levels — the friedman/page/kendall-w/cochran-q complete-block
-    contract, computed ENTIRELY in-plan (round-11: the former
-    ``base.select("_t").distinct().count()`` ran a driver job at plan
-    construction for every call; the scalar now rides a broadcast
-    1-row aggregate into the same action). The total level count
-    matches the old ``distinct().count()`` exactly: a NULL treatment
-    is its own level (count_distinct skips NULLs, the MAX(CASE) adds
-    it back), so a NULL level still disqualifies every block — the
-    per-block count_distinct never reaches it. ``skey`` (the round-11
-    series key) scopes both the level count and the per-block counts
-    to each series — per series, the kept (_b) set is identical to the
-    single-series run."""
-    skey = skey or []
-    kt = base.groupBy(*skey).agg(
-        (
-            F.count_distinct("_t")
-            + F.coalesce(F.max(F.when(F.col("_t").isNull(), F.lit(1))), F.lit(0))
-        ).alias("_ktot")
-    )
-    per_b = base.groupBy(*skey, "_b").agg(F.count_distinct("_t").alias("_kt"))
-    joined = per_b.join(F.broadcast(kt), skey) if skey else per_b.join(F.broadcast(kt))
-    return joined.filter(F.col("_kt") == F.col("_ktot")).select(*skey, "_b")
-
-
-def _collected_complete_blocks(base: DataFrame, max_rows: int, op: str) -> list:
-    """Collect the contract-bounded pre-aggregated blocked frame ONCE and
-    apply the complete-block filter in exact Python — identical semantics
-    to `_complete_block_filter` + the left-semi join: the level count is
-    |distinct non-NULL treatments| + 1 if any NULL treatment exists (so a
-    NULL level disqualifies every block), per-block counts skip NULL
-    treatments, and NULL blocks never survive the semi join (NULL never
-    equals NULL). Raises past ``max_rows`` — a contract, never a
-    truncation."""
-    data = base.collect()
-    if len(data) > max_rows:
-        raise ValueError(
-            f"{op}: collected blocked frame has {len(data)} rows > "
-            f"collect_max_rows={max_rows}; use the distributed path"
-        )
+def _collected_complete_blocks(base: DataFrame, op: str) -> list:
+    """Pull the pre-aggregated blocked frame of ``base`` (columns `_b`,
+    `_t`, ...) to the driver once — more than ``BLOCK_MAX_ROWS`` rows
+    raise — and keep the rows of blocks carrying ALL treatment levels,
+    the friedman/page/kendall-w/cochran-q complete-block contract. The
+    level count is |distinct non-NULL treatments| + 1 if any NULL
+    treatment exists (so a NULL level disqualifies every block), per-block
+    counts skip NULL treatments, and NULL blocks never survive."""
+    data = bounded_collect(base, BLOCK_MAX_ROWS, f"{op} blocked frame")
     ts = {r["_t"] for r in data}
     ktot = len(ts - {None}) + (1 if None in ts else 0)
     per_b: dict[str, set] = {}
@@ -6209,8 +5903,7 @@ def _collected_complete_blocks(base: DataFrame, max_rows: int, op: str) -> list:
 
 def _collected_block_ranks(rows: list) -> dict[tuple, tuple[int, int]]:
     """(block, value) -> (doubled within-block midrank r2, cell count c)
-    over the kept rows — the same 2*before + ties + 1 closed form the
-    distributed within-block window computes, in exact Python ints."""
+    over the kept rows: r2 = 2*before + ties + 1, in exact Python ints."""
     gridc: dict[tuple, int] = {}
     for r in rows:
         key = (r["_b"], r["_v"])
@@ -6234,8 +5927,6 @@ def friedman_test(
     treatment_col: str,
     val_col: str,
     decimals: int = 6,
-    series_col: str | None = None,
-    collect_max_rows: int | None = None,
 ) -> DataFrame:
     """Friedman test: do k treatments differ when measured WITHIN each
     of n blocks — the repeated-measures sibling of `kruskal_wallis`
@@ -6247,132 +5938,60 @@ def friedman_test(
         A = SUM_ij r_ij^2,   C = n k (k+1)^2 / 4
 
     Ranks are average tie ranks WITHIN each block, carried DOUBLED so
-    everything stays integral: R_j*2 and A*4 are exact integer sums in
-    DECIMAL(38,0) (the factor-of-4 cancels between numerator and A-C),
-    and T is one double tree rounded once. Blocks missing a treatment
-    drop entirely (complete-block design contract). The input is the
-    PRE-AGGREGATED (block, treatment, value) frame — block x treatment
-    bounded, so the per-block rank windows never see the corpus.
+    everything stays integral: R_j*2 and A*4 are exact integer sums
+    (the factor-of-4 cancels between numerator and A-C), and T is one
+    double tree rounded once. Blocks missing a treatment drop entirely
+    (complete-block design contract). The input is the PRE-AGGREGATED
+    (block, treatment, value) frame — block x treatment bounded — and is
+    pulled to the driver once (more than ``BLOCK_MAX_ROWS`` rows raise);
+    the partials are exact Python ints fed back as DECIMAL(38,0)/BIGINT
+    literals into `_friedman_tail`.
 
     Output ONE row: (k, n_blocks, t_stat) plus per-treatment mean
     doubled-rank columns are NOT emitted — read `R_j` from a groupBy if
     needed.
-
-    ``series_col`` scores SEVERAL value-transformed series of the same
-    (block, treatment) rows in ONE chain (the `ad_k_statistic` series
-    contract): every groupBy/window/join — including the complete-block
-    filter — gains the series key, so per-series row sets and
-    expression trees are identical to the single-series run and the
-    exact DECIMAL sums are order-independent; results are bit-for-bit
-    the same per series. Output one row PER series; a series with no
-    surviving rows emits no row.
     """
-    dec = "decimal(38,0)"
-    from morphik_core_spark.plans.cache import scoped_persist
-
-    skey = ["_ser"] if series_col is not None else []
     base = df.select(
-        *([F.col(series_col).cast("string").alias("_ser")] if series_col else []),
         F.col(block_col).cast("string").alias("_b"),
         F.col(treatment_col).cast("string").alias("_t"),
         F.col(val_col).cast("bigint").alias("_v"),
     ).filter(F.col("_v").isNotNull())
-    if collect_max_rows is not None:
-        # collected-blocked fast path (round-11 bounded-frame recipe):
-        # ONE collect of the contract-bounded (block, treatment, value)
-        # frame replaces the semi join, the within-block rank windows
-        # and the two aggregations; all partials are exact Python ints
-        # fed back as DECIMAL(38,0)/BIGINT literals into the IDENTICAL
-        # t_stat double tree, so results are bit-for-bit unchanged.
-        if series_col is not None:
-            raise ValueError("collect_max_rows requires series_col=None")
-        rows_k = _collected_complete_blocks(base, collect_max_rows, "friedman_test")
-        r2m = _collected_block_ranks(rows_k)
-        pert: dict[str, list] = {}
-        for r in rows_k:
-            r2, _c = r2m[(r["_b"], r["_v"])]
-            a = pert.setdefault(r["_t"], [0, 0, 0, set()])
-            a[0] += r2
-            a[1] += 1
-            a[2] += r2 * r2
-            a[3].add(r["_b"])
-        if pert:
-            out_row = (
-                len(pert),
-                sum(a[0] * a[0] for a in pert.values()),
-                sum(a[0] for a in pert.values()),
-                max(a[1] for a in pert.values()),
-                sum(a[2] for a in pert.values()),
-                max(len(a[3]) for a in pert.values()),
-            )
-        else:
-            out_row = (0, None, None, None, None, 0)
-        out = _values_literal_frame(
-            df.sparkSession,
-            [
-                ("k", "bigint"),
-                ("_sq2", "decimal(38,0)"),
-                ("_sum2", "decimal(38,0)"),
-                ("_nb", "bigint"),
-                ("_A4", "decimal(38,0)"),
-                ("n_blocks", "bigint"),
-            ],
-            [out_row],
+    rows_k = _collected_complete_blocks(base, "friedman_test")
+    r2m = _collected_block_ranks(rows_k)
+    pert: dict[str, list] = {}
+    for r in rows_k:
+        r2, _c = r2m[(r["_b"], r["_v"])]
+        a = pert.setdefault(r["_t"], [0, 0, set()])
+        a[0] += r2
+        a[1] += r2 * r2
+        a[2].add(r["_b"])
+    if pert:
+        out_row = (
+            len(pert),
+            sum(a[0] * a[0] for a in pert.values()),
+            sum(a[0] for a in pert.values()),
+            sum(a[1] for a in pert.values()),
+            max(len(a[2]) for a in pert.values()),
         )
-        return _friedman_tail(out, decimals, series_col, skey)
-    # complete-block contract: keep only blocks carrying ALL k treatments
-    rows = scoped_persist(
-        base.join(
-            F.broadcast(_complete_block_filter(base, skey)),
-            skey + ["_b"],
-            "left_semi",
-        )
+    else:
+        out_row = (0, None, None, None, 0)
+    out = _values_literal_frame(
+        df.sparkSession,
+        [
+            ("k", "bigint"),
+            ("_sq2", "decimal(38,0)"),
+            ("_sum2", "decimal(38,0)"),
+            ("_A4", "decimal(38,0)"),
+            ("n_blocks", "bigint"),
+        ],
+        [out_row],
     )
-    # doubled average tie rank within block: 2*before + ties + 1 over
-    # the within-block value grid (k-bounded per block)
-    w_cum = (
-        Window.partitionBy(*skey, "_b")
-        .orderBy(F.col("_v").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    grid = rows.groupBy(*skey, "_b", "_v").agg(F.count(F.lit(1)).alias("_c"))
-    ranked_grid = grid.withColumn(
-        "_r2",
-        2 * F.coalesce(F.sum("_c").over(w_cum), F.lit(0)) + F.col("_c") + 1,
-    )
-    ranked = rows.join(ranked_grid, skey + ["_b", "_v"])
-    # A4 and n_blocks FOLD into the per-treatment aggregation (round-11:
-    # the former separate `a4` chain re-ran the whole grid+window+join
-    # lineage once more, plus a broadcast join): A4 = SUM_t of the
-    # per-treatment partial (every row carries exactly one _t, DECIMAL
-    # sums are order-free exact), and in a complete-block design every
-    # treatment touches every kept block, so per-treatment
-    # count_distinct(_b) == n_blocks for each t and MAX recovers it
-    # (COALESCE 0 keeps the empty-input case identical to the old
-    # global count_distinct).
-    per_t = ranked.groupBy(*skey, "_t").agg(
-        F.sum(F.col("_r2").cast(dec)).alias("_R2"),
-        F.count(F.lit(1)).alias("_nb"),
-        F.sum(F.col("_r2").cast(dec) * F.col("_r2")).alias("_A4t"),
-        F.count_distinct("_b").alias("_nbd"),
-    )
-    out = per_t.groupBy(*skey).agg(
-        F.count(F.lit(1)).alias("k"),
-        # SUM_j (2R_j - n(k+1))^2 = 4 * SUM_j (R_j - n(k+1)/2)^2, exact ints
-        F.sum(F.expr("CAST(_R2 AS DECIMAL(38,0)) * _R2")).alias("_sq2"),
-        F.sum("_R2").alias("_sum2"),
-        F.max("_nb").alias("_nb"),
-        F.sum("_A4t").alias("_A4"),
-        F.coalesce(F.max("_nbd"), F.lit(0)).alias("n_blocks"),
-    )
-    return _friedman_tail(out, decimals, series_col, skey)
+    return _friedman_tail(out, decimals)
 
 
-def _friedman_tail(
-    out: DataFrame, decimals: int, series_col: str | None, skey: list[str]
-) -> DataFrame:
-    """Shared Conover T double tree — identical expression tree for the
-    distributed and collected-blocked paths of `friedman_test`."""
+def _friedman_tail(out: DataFrame, decimals: int) -> DataFrame:
+    """Conover T double tree of `friedman_test` over its exact integer
+    partials (k, _sq2, _sum2, _A4, n_blocks)."""
     kd, nd = "CAST(k AS DOUBLE)", "CAST(n_blocks AS DOUBLE)"
     # numerator*4: SUM (2R_j)^2 - 2*(n(k+1))*SUM(2R_j) + k*(n(k+1))^2
     num4 = (
@@ -6386,7 +6005,6 @@ def _friedman_tail(
         f"ELSE ({kd} - 1.0) * ({num4}) / ({den4}) END)"
     )
     return out.select(
-        *([F.col("_ser").alias(series_col)] if series_col else []),
         F.col("k").cast("bigint").alias("k"),
         F.col("n_blocks").cast("bigint").alias("n_blocks"),
         F.round(F.expr(t_stat), decimals).alias("t_stat"),
@@ -6962,9 +6580,8 @@ def overdispersion_screen(
 
 
 def _ccf_tail(stats: DataFrame, decimals: int) -> DataFrame:
-    """Shared output tail over exact per-lag stats (lag, n_pairs, _num,
-    _dxx, _dyy) — one code object for both paths so the double trees
-    cannot diverge."""
+    """Output tail of `cross_correlation` over its exact per-lag stats
+    (lag, n_pairs, _num, _dxx, _dyy): the ccf double tree."""
     return stats.select(
         F.col("lag").cast("int").alias("lag"),
         "n_pairs",
@@ -6984,7 +6601,6 @@ def cross_correlation(
     y_col: str,
     max_lag: int = 7,
     decimals: int = 6,
-    collect_max_points: int | None = None,
 ) -> DataFrame:
     """Sample cross-correlation between two integer-indexed series at
     lags −``max_lag``..+``max_lag`` — the lead/lag screen
@@ -6999,117 +6615,69 @@ def cross_correlation(
     one double division (sqrt of exact sums) rounded once. Pairs drop
     at gaps; denominators stay full-series (the ACF convention).
 
-    Scale: the input is an already-aggregated series frame; lags fan
-    out via a (2m+1)-row spine and one shifted-index equi-join.
+    Scale: the input is an already-aggregated series frame, pulled to
+    the driver once (more than ``SERIES_MAX_POINTS`` points raise);
+    deviations, per-lag pair counts and product sums are exact Python
+    integers with SQL semantics — NULL indexes never pair, NULL
+    deviations still COUNT as pairs but drop from the SUM, lags with
+    zero pairs emit no row — and the ccf doubles come from `_ccf_tail`.
 
     Output: (lag, n_pairs, ccf), ordered by lag.
-
-    ``collect_max_points`` opts a CONTRACT-BOUNDED series into ONE
-    collect (the acf/mann_kendall recipe): deviations, per-lag pair
-    counts and DECIMAL product sums replay in exact Python integers
-    mirroring the distributed plan EXACTLY — NULL indexes never join,
-    NULL deviations still COUNT as pairs but drop from the SUM, lags
-    with zero pairs emit no row — and the ccf doubles come from the
-    IDENTICAL Spark tail over the integer literals. Raises past the
-    bound.
     """
     dec = "decimal(38,0)"
-    if collect_max_points is not None:
-        rows = (
-            series.select(
-                F.col(idx_col).cast("bigint").alias("_i"),
-                F.col(x_col).cast("bigint").alias("_x"),
-                F.col(y_col).cast("bigint").alias("_y"),
-            )
-            .limit(int(collect_max_points) + 1)
-            .collect()
+    rows = bounded_collect(
+        series.select(
+            F.col(idx_col).cast("bigint").alias("_i"),
+            F.col(x_col).cast("bigint").alias("_x"),
+            F.col(y_col).cast("bigint").alias("_y"),
+        ),
+        SERIES_MAX_POINTS,
+        "cross_correlation series",
+    )
+    pts = [(r["_i"], r["_x"], r["_y"]) for r in rows]
+    n = len(pts)
+    xs = [x for _i, x, _y in pts if x is not None]
+    ys = [y for _i, _x, y in pts if y is not None]
+    sx = sum(xs) if xs else None
+    sy = sum(ys) if ys else None
+    dev = [
+        (
+            i,
+            None if (x is None or sx is None) else n * x - sx,
+            None if (y is None or sy is None) else n * y - sy,
         )
-        if len(rows) > int(collect_max_points):
-            raise ValueError(
-                f"cross_correlation collect_max_points={collect_max_points} "
-                f"exceeded: the series is larger than the caller's bound; "
-                f"drop the option (distributed path) or raise the bound."
+        for i, x, y in pts
+    ]
+    dxx_terms = [dx * dx for _i, dx, _dy in dev if dx is not None]
+    dyy_terms = [dy * dy for _i, _dx, dy in dev if dy is not None]
+    dxx = sum(dxx_terms) if dxx_terms else None
+    dyy = sum(dyy_terms) if dyy_terms else None
+    by_idx: dict = {}
+    for i, _dx, dy in dev:
+        if i is not None:
+            by_idx.setdefault(i, []).append(dy)
+    stat_rows = []
+    for lag in range(-int(max_lag), int(max_lag) + 1):
+        n_pairs, num_terms, any_pair = 0, [], False
+        for i, dx, _dy in dev:
+            if i is None:
+                continue
+            for dy in by_idx.get(i + lag, ()):
+                any_pair = True
+                n_pairs += 1
+                if dx is not None and dy is not None:
+                    num_terms.append(dx * dy)
+        if any_pair:
+            stat_rows.append(
+                (lag, n_pairs, sum(num_terms) if num_terms else None, dxx, dyy)
             )
-        pts = [(r["_i"], r["_x"], r["_y"]) for r in rows]
-        n = len(pts)
-        xs = [x for _i, x, _y in pts if x is not None]
-        ys = [y for _i, _x, y in pts if y is not None]
-        sx = sum(xs) if xs else None
-        sy = sum(ys) if ys else None
-        dev = [
-            (
-                i,
-                None if (x is None or sx is None) else n * x - sx,
-                None if (y is None or sy is None) else n * y - sy,
-            )
-            for i, x, y in pts
-        ]
-        dxx_terms = [dx * dx for _i, dx, _dy in dev if dx is not None]
-        dyy_terms = [dy * dy for _i, _dx, dy in dev if dy is not None]
-        dxx = sum(dxx_terms) if dxx_terms else None
-        dyy = sum(dyy_terms) if dyy_terms else None
-        by_idx: dict = {}
-        for i, _dx, dy in dev:
-            if i is not None:
-                by_idx.setdefault(i, []).append(dy)
-        stat_rows = []
-        for lag in range(-int(max_lag), int(max_lag) + 1):
-            n_pairs, num_terms, any_pair = 0, [], False
-            for i, dx, _dy in dev:
-                if i is None:
-                    continue
-                for dy in by_idx.get(i + lag, ()):
-                    any_pair = True
-                    n_pairs += 1
-                    if dx is not None and dy is not None:
-                        num_terms.append(dx * dy)
-            if any_pair:
-                stat_rows.append(
-                    (lag, n_pairs, sum(num_terms) if num_terms else None, dxx, dyy)
-                )
-        stats = _values_literal_frame(
-            series.sparkSession,
-            [("lag", "int"), ("n_pairs", "bigint"), ("_num", dec),
-             ("_dxx", dec), ("_dyy", dec)],
-            stat_rows,
-        )
-        return _ccf_tail(stats, decimals)
-
-    base = series.select(
-        F.col(idx_col).cast("bigint").alias("_i"),
-        F.col(x_col).cast("bigint").alias("_x"),
-        F.col(y_col).cast("bigint").alias("_y"),
+    stats = _values_literal_frame(
+        series.sparkSession,
+        [("lag", "int"), ("n_pairs", "bigint"), ("_num", dec),
+         ("_dxx", dec), ("_dyy", dec)],
+        stat_rows,
     )
-    from morphik_core_spark.plans.cache import scoped_persist
-
-    # series-bounded; base feeds glob + dev, dev feeds the denominator
-    # and both sides of the lag join — persist both or every branch
-    # re-derives the upstream day-grid aggregation (12 FileScans measured)
-    base = scoped_persist(base)
-    glob = base.agg(
-        F.sum("_x").alias("_sx"), F.sum("_y").alias("_sy"), F.count(F.lit(1)).alias("_n")
-    )
-    dev = scoped_persist(
-        base.join(F.broadcast(glob)).select(
-            "_i",
-            (F.col("_n") * F.col("_x") - F.col("_sx")).alias("_dx"),
-            (F.col("_n") * F.col("_y") - F.col("_sy")).alias("_dy"),
-        )
-    )
-    den = dev.agg(
-        F.sum(F.col("_dx").cast(dec) * F.col("_dx")).alias("_dxx"),
-        F.sum(F.col("_dy").cast(dec) * F.col("_dy")).alias("_dyy"),
-    )
-    lags = F.explode(
-        F.array(*[F.lit(k) for k in range(-int(max_lag), int(max_lag) + 1)])
-    ).alias("lag")
-    left = dev.select(lags, "_i", "_dx").withColumn("_j", F.col("_i") + F.col("lag"))
-    pairs = left.join(dev.select(F.col("_i").alias("_j"), "_dy"), "_j")
-    num = pairs.groupBy("lag").agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.sum(F.col("_dx").cast(dec) * F.col("_dy")).alias("_num"),
-    )
-    return _ccf_tail(num.join(F.broadcast(den)), decimals)
+    return _ccf_tail(stats, decimals)
 
 
 def seasonal_strength(
@@ -7712,21 +7280,17 @@ def mood_median_test(
     from morphik_core_spark.plans.cache import scoped_persist
 
     if collect_max_cells is not None:
-        collected = (
+        collected = bounded_collect(
             df.filter(F.col(group_col).isNotNull() & F.col(val_col).isNotNull())
             .select(
                 F.col(group_col).cast("string").alias("_g"),
                 F.col(val_col).cast("bigint").alias("_v"),
             )
             .groupBy("_g", "_v")
-            .agg(F.count(F.lit(1)).alias("_c"))
-            .collect()
+            .agg(F.count(F.lit(1)).alias("_c")),
+            collect_max_cells,
+            "mood_median_test median grid (collect_max_cells)",
         )
-        if len(collected) > collect_max_cells:
-            raise ValueError(
-                f"collected median grid has {len(collected)} cells > "
-                f"collect_max_cells={collect_max_cells}; use the distributed path"
-            )
         pooled: dict[int, int] = {}
         for r in collected:
             pooled[r["_v"]] = pooled.get(r["_v"], 0) + r["_c"]
@@ -7983,8 +7547,6 @@ def page_trend_test(
     treatment_col: str,
     val_col: str,
     decimals: int = 6,
-    series_col: str | None = None,
-    collect_max_rows: int | None = None,
 ) -> DataFrame:
     """Page's L trend test: do k ORDERED treatments trend monotonically
     when measured within each of n blocks — the ordered-alternative
@@ -7997,100 +7559,48 @@ def page_trend_test(
         L = SUM_j w_j R_j,   z = (L - E[L]) / sqrt(Var[L])
         E[L] = n k (k+1)^2 / 4,   Var[L] = n (k^3 - k)^2 / (144 (k-1))
 
-    Shares `friedman_test`'s machinery verbatim: complete blocks only,
-    DOUBLED average tie ranks within each block so L2 = 2L is an exact
-    DECIMAL(38,0) integer; z is one double tree over exact integers
-    rounded once. The classical moments assume untied ranks — with
-    midranks this is the standard practical form (documented; the tie
-    effect on Var[L] is second-order), unlike Friedman where the
-    Conover correction is exact.
+    Shares `friedman_test`'s machinery verbatim: the blocked frame is
+    pulled once (more than ``BLOCK_MAX_ROWS`` rows raise), complete
+    blocks only, DOUBLED average tie ranks within each block so L2 = 2L
+    is an exact integer; z is one double tree over exact integers
+    rounded once. The w_j weights sort treatment keys in Python, whose
+    code-point order equals Spark's UTF8 binary order. The classical
+    moments assume untied ranks — with midranks this is the standard
+    practical form (documented; the tie effect on Var[L] is
+    second-order), unlike Friedman where the Conover correction is
+    exact.
 
     Output ONE row: (k, n_blocks, page_l, z).
-
-    ``series_col`` scores SEVERAL value-transformed series of the same
-    (block, treatment) rows in ONE chain — the `friedman_test` series
-    contract verbatim (per-series row sets and expression trees
-    identical to the single-series run; exact DECIMAL sums are
-    order-independent; one row PER series; an empty series emits no
-    row).
     """
-    from morphik_core_spark.plans.cache import scoped_persist
-
-    skey = ["_ser"] if series_col is not None else []
     base = df.select(
-        *([F.col(series_col).cast("string").alias("_ser")] if series_col else []),
         F.col(block_col).cast("string").alias("_b"),
         F.col(treatment_col).cast("string").alias("_t"),
         F.col(val_col).cast("bigint").alias("_v"),
     ).filter(F.col("_v").isNotNull())
-    if collect_max_rows is not None:
-        # collected-blocked fast path — see friedman_test: exact Python
-        # integer partials into the IDENTICAL z double tree. The w_j
-        # weights come from sorting treatment keys in Python; code-point
-        # order equals Spark's UTF8 binary order, so the ordered weights
-        # are the same as row_number() over _t asc.
-        if series_col is not None:
-            raise ValueError("collect_max_rows requires series_col=None")
-        rows_k = _collected_complete_blocks(base, collect_max_rows, "page_trend_test")
-        r2m = _collected_block_ranks(rows_k)
-        pert: dict[str, list] = {}
-        for r in rows_k:
-            r2, _c = r2m[(r["_b"], r["_v"])]
-            a = pert.setdefault(r["_t"], [0, set()])
-            a[0] += r2
-            a[1].add(r["_b"])
-        if pert:
-            l2 = sum((i + 1) * pert[t][0] for i, t in enumerate(sorted(pert)))
-            agg_row = (len(pert), l2, max(len(a[1]) for a in pert.values()))
-        else:
-            agg_row = (0, None, 0)
-        agg = _values_literal_frame(
-            df.sparkSession,
-            [("k", "bigint"), ("_L2", "decimal(38,0)"), ("n_blocks", "bigint")],
-            [agg_row],
-        )
-        return _page_trend_tail(agg, decimals, series_col)
-    rows = scoped_persist(
-        base.join(
-            F.broadcast(_complete_block_filter(base, skey)),
-            skey + ["_b"],
-            "left_semi",
-        )
+    rows_k = _collected_complete_blocks(base, "page_trend_test")
+    r2m = _collected_block_ranks(rows_k)
+    pert: dict[str, list] = {}
+    for r in rows_k:
+        r2, _c = r2m[(r["_b"], r["_v"])]
+        a = pert.setdefault(r["_t"], [0, set()])
+        a[0] += r2
+        a[1].add(r["_b"])
+    if pert:
+        l2 = sum((i + 1) * pert[t][0] for i, t in enumerate(sorted(pert)))
+        agg_row = (len(pert), l2, max(len(a[1]) for a in pert.values()))
+    else:
+        agg_row = (0, None, 0)
+    agg = _values_literal_frame(
+        df.sparkSession,
+        [("k", "bigint"), ("_L2", "decimal(38,0)"), ("n_blocks", "bigint")],
+        [agg_row],
     )
-    w_cum = (
-        Window.partitionBy(*skey, "_b")
-        .orderBy(F.col("_v").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    grid = rows.groupBy(*skey, "_b", "_v").agg(F.count(F.lit(1)).alias("_c"))
-    ranked_grid = grid.withColumn(
-        "_r2",
-        2 * F.coalesce(F.sum("_c").over(w_cum), F.lit(0)) + F.col("_c") + 1,
-    )
-    ranked = rows.join(ranked_grid, skey + ["_b", "_v"])
-    # n_blocks FOLDS into the per-treatment aggregation (round-11: the
-    # former `nb` chain re-scanned rows and joined back) — complete
-    # blocks make per-treatment count_distinct(_b) equal n_blocks for
-    # every t; MAX + COALESCE 0 keeps empty input exact.
-    per_t = ranked.groupBy(*skey, "_t").agg(
-        F.sum(F.col("_r2").cast("decimal(38,0)")).alias("_R2"),
-        F.count_distinct("_b").alias("_nbd"),
-    )
-    w_rank = (Window.partitionBy(*skey) if skey else Window).orderBy(
-        F.col("_t").asc()
-    )
-    scored = per_t.withColumn("_w", F.row_number().over(w_rank).cast("bigint"))
-    agg = scored.groupBy(*skey).agg(
-        F.count(F.lit(1)).alias("k"),
-        F.sum(F.expr("CAST(_w AS DECIMAL(38,0)) * _R2")).alias("_L2"),
-        F.coalesce(F.max("_nbd"), F.lit(0)).alias("n_blocks"),
-    )
-    return _page_trend_tail(agg, decimals, series_col)
+    return _page_trend_tail(agg, decimals)
 
 
-def _page_trend_tail(agg: DataFrame, decimals: int, series_col: str | None) -> DataFrame:
-    """Shared Page L / z double tree — identical expression tree for the
-    distributed and collected-blocked paths of `page_trend_test`."""
+def _page_trend_tail(agg: DataFrame, decimals: int) -> DataFrame:
+    """Page L / z double tree of `page_trend_test` over its exact
+    integer partials (k, _L2, n_blocks)."""
     kd, nd = "CAST(k AS DOUBLE)", "CAST(n_blocks AS DOUBLE)"
     el = f"({nd} * {kd} * ({kd} + 1.0) * ({kd} + 1.0) / 4.0)"
     vl = (
@@ -8098,7 +7608,6 @@ def _page_trend_tail(agg: DataFrame, decimals: int, series_col: str | None) -> D
         f"/ (144.0 * ({kd} - 1.0)))"
     )
     return agg.select(
-        *([F.col("_ser").alias(series_col)] if series_col else []),
         F.col("k").cast("bigint").alias("k"),
         F.col("n_blocks").cast("bigint").alias("n_blocks"),
         F.expr("CAST(_L2 AS DOUBLE) / 2.0").alias("page_l"),
@@ -8748,7 +8257,6 @@ def kendall_w(
     treatment_col: str,
     val_col: str,
     decimals: int = 6,
-    collect_max_rows: int | None = None,
 ) -> DataFrame:
     """Kendall's W coefficient of concordance — the 0..1 effect-size
     companion to `friedman_test`'s significance (and, via
@@ -8760,94 +8268,57 @@ def kendall_w(
         W = 12 S / (m^2 (k^3 - k) - m T),
         S = SUM_j (R_j - m(k+1)/2)^2,  T = SUM_blocks SUM_ties (t^3-t)
 
-    Shares `friedman_test`'s machinery verbatim (complete blocks,
-    DOUBLED within-block average tie ranks): 4S and T are exact
-    DECIMAL(38,0) integers, W is one double tree rounded once.
+    Shares `friedman_test`'s machinery verbatim (the blocked frame is
+    pulled once, more than ``BLOCK_MAX_ROWS`` rows raise; complete
+    blocks, DOUBLED within-block average tie ranks): 4S and T are exact
+    integers, W is one double tree rounded once.
 
     Output ONE row: (k, n_blocks, w, chi2) with chi2 = m(k-1)W —
     NULL when the tie-corrected denominator degenerates (all values
     tied in every block).
     """
-    from morphik_core_spark.plans.cache import scoped_persist
-
     base = df.select(
         F.col(block_col).cast("string").alias("_b"),
         F.col(treatment_col).cast("string").alias("_t"),
         F.col(val_col).cast("bigint").alias("_v"),
     ).filter(F.col("_v").isNotNull())
-    if collect_max_rows is not None:
-        # collected-blocked fast path — see friedman_test: exact Python
-        # integer partials into the IDENTICAL W/chi2 double trees.
-        rows_k = _collected_complete_blocks(base, collect_max_rows, "kendall_w")
-        r2m = _collected_block_ranks(rows_k)
-        pert: dict[str, list] = {}
-        for r in rows_k:
-            r2, c = r2m[(r["_b"], r["_v"])]
-            a = pert.setdefault(r["_t"], [0, 0, set()])
-            a[0] += r2
-            a[1] += c * c - 1
-            a[2].add(r["_b"])
-        if pert:
-            agg_row = (
-                len(pert),
-                sum(a[0] * a[0] for a in pert.values()),
-                sum(a[0] for a in pert.values()),
-                sum(a[1] for a in pert.values()),
-                max(len(a[2]) for a in pert.values()),
-            )
-        else:
-            # COALESCE(SUM over empty, 0) makes _T exactly 0, not NULL
-            agg_row = (0, None, None, 0, 0)
-        agg = _values_literal_frame(
-            df.sparkSession,
-            [
-                ("k", "bigint"),
-                ("_sq2", "decimal(38,0)"),
-                ("_sum2", "decimal(38,0)"),
-                ("_T", "decimal(38,0)"),
-                ("n_blocks", "bigint"),
-            ],
-            [agg_row],
+    rows_k = _collected_complete_blocks(base, "kendall_w")
+    r2m = _collected_block_ranks(rows_k)
+    pert: dict[str, list] = {}
+    for r in rows_k:
+        r2, c = r2m[(r["_b"], r["_v"])]
+        a = pert.setdefault(r["_t"], [0, 0, set()])
+        a[0] += r2
+        a[1] += c * c - 1
+        a[2].add(r["_b"])
+    if pert:
+        agg_row = (
+            len(pert),
+            sum(a[0] * a[0] for a in pert.values()),
+            sum(a[0] for a in pert.values()),
+            sum(a[1] for a in pert.values()),
+            max(len(a[2]) for a in pert.values()),
         )
-        return _kendall_w_tail(agg, decimals)
-    rows = scoped_persist(
-        base.join(F.broadcast(_complete_block_filter(base)), "_b", "left_semi")
-    )
-    w_cum = (
-        Window.partitionBy("_b")
-        .orderBy(F.col("_v").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    grid = rows.groupBy("_b", "_v").agg(F.count(F.lit(1)).alias("_c"))
-    ranked_grid = grid.withColumn(
-        "_r2",
-        2 * F.coalesce(F.sum("_c").over(w_cum), F.lit(0)) + F.col("_c") + 1,
-    )
-    ranked = rows.join(ranked_grid, ["_b", "_v"])
-    # tie term and n_blocks FOLD into the per-treatment aggregation
-    # (round-11: the former `ties` chain re-aggregated the grid lineage
-    # and joined back): each (b, v) cell contributes (c^3 - c) once,
-    # i.e. (c^2 - 1) on each of its c ranked rows — exact DECIMAL —
-    # and complete blocks make per-treatment count_distinct(_b) equal
-    # n_blocks for every t (MAX + COALESCE 0 keeps empty input exact).
-    per_t = ranked.groupBy("_t").agg(
-        F.sum(F.col("_r2").cast("decimal(38,0)")).alias("_R2"),
-        F.sum(F.expr("CAST(_c AS DECIMAL(38,0)) * _c - 1")).alias("_Tt"),
-        F.count_distinct("_b").alias("_nbd"),
-    )
-    agg = per_t.agg(
-        F.count(F.lit(1)).alias("k"),
-        F.sum(F.expr("CAST(_R2 AS DECIMAL(38,0)) * _R2")).alias("_sq2"),
-        F.sum("_R2").alias("_sum2"),
-        F.coalesce(F.sum("_Tt"), F.lit(0).cast("decimal(38,0)")).alias("_T"),
-        F.coalesce(F.max("_nbd"), F.lit(0)).alias("n_blocks"),
+    else:
+        # COALESCE(SUM over empty, 0) makes _T exactly 0, not NULL
+        agg_row = (0, None, None, 0, 0)
+    agg = _values_literal_frame(
+        df.sparkSession,
+        [
+            ("k", "bigint"),
+            ("_sq2", "decimal(38,0)"),
+            ("_sum2", "decimal(38,0)"),
+            ("_T", "decimal(38,0)"),
+            ("n_blocks", "bigint"),
+        ],
+        [agg_row],
     )
     return _kendall_w_tail(agg, decimals)
 
 
 def _kendall_w_tail(agg: DataFrame, decimals: int) -> DataFrame:
-    """Shared W / chi2 double tree — identical expression tree for the
-    distributed and collected-blocked paths of `kendall_w`."""
+    """W / chi2 double trees of `kendall_w` over its exact integer
+    partials (k, _sq2, _sum2, _T, n_blocks)."""
     kd, md = "CAST(k AS DOUBLE)", "CAST(n_blocks AS DOUBLE)"
     # 4S = SUM (2R_j)^2 - 2*(m(k+1))*SUM(2R_j) + k*(m(k+1))^2, exact ints
     s4 = (
@@ -8879,7 +8350,6 @@ def cochran_q(
     treatment_col: str,
     flag_col,
     decimals: int = 6,
-    collect_max_rows: int | None = None,
 ) -> DataFrame:
     """Cochran's Q test — the BINARY-outcome member of the blocked
     family (`friedman_test` ranks magnitudes; Q asks whether k
@@ -8895,7 +8365,10 @@ def cochran_q(
     double division rounded once; under H0, Q ~ chi2(k-1). Complete
     blocks only (the friedman contract); blocks where every treatment
     agrees (L_i = 0 or k) contribute nothing to the denominator, and a
-    fully-degenerate table emits NULL.
+    fully-degenerate table emits NULL. The blocked frame is pulled to
+    the driver once (more than ``BLOCK_MAX_ROWS`` rows raise); the G_j /
+    L_i totals are exact Python integer sums fed back as literals into
+    the Q double tree.
 
     Output ONE row: (k, n_blocks, q_stat, dof).
     """
@@ -8905,55 +8378,32 @@ def cochran_q(
         F.col(treatment_col).cast("string").alias("_t"),
         flag.cast("int").alias("_f"),
     ).filter(F.col("_f").isNotNull())
-    from morphik_core_spark.plans.cache import scoped_persist
-
-    if collect_max_rows is not None:
-        # collected-blocked fast path — see friedman_test: the G_j / L_i
-        # success totals are exact Python integer sums fed back as
-        # DECIMAL(38,0)/BIGINT literals into the IDENTICAL Q double tree.
-        rows_k = _collected_complete_blocks(base, collect_max_rows, "cochran_q")
-        pert: dict[str, int] = {}
-        perb: dict[str, int] = {}
-        for r in rows_k:
-            pert[r["_t"]] = pert.get(r["_t"], 0) + r["_f"]
-            perb[r["_b"]] = perb.get(r["_b"], 0) + r["_f"]
-        out_row = (
-            len(pert),
-            sum(pert.values()) if pert else None,
-            sum(g * g for g in pert.values()) if pert else None,
-            len(perb),
-            sum(perb.values()) if perb else None,
-            sum(lv * lv for lv in perb.values()) if perb else None,
-        )
-        out = _values_literal_frame(
-            df.sparkSession,
-            [
-                ("k", "bigint"),
-                ("_sg", "decimal(38,0)"),
-                ("_sg2", "decimal(38,0)"),
-                ("n_blocks", "bigint"),
-                ("_sl", "decimal(38,0)"),
-                ("_sl2", "decimal(38,0)"),
-            ],
-            [out_row],
-        )
-    else:
-        rows = scoped_persist(
-            base.join(F.broadcast(_complete_block_filter(base)), "_b", "left_semi")
-        )
-        per_t = rows.groupBy("_t").agg(F.sum("_f").alias("_g"))
-        per_b = rows.groupBy("_b").agg(F.sum("_f").alias("_l"))
-        gt = per_t.agg(
-            F.count(F.lit(1)).alias("k"),
-            F.sum(F.col("_g").cast("decimal(38,0)")).alias("_sg"),
-            F.sum(F.expr("CAST(_g AS DECIMAL(38,0)) * _g")).alias("_sg2"),
-        )
-        bt = per_b.agg(
-            F.count(F.lit(1)).alias("n_blocks"),
-            F.sum(F.col("_l").cast("decimal(38,0)")).alias("_sl"),
-            F.sum(F.expr("CAST(_l AS DECIMAL(38,0)) * _l")).alias("_sl2"),
-        )
-        out = gt.join(F.broadcast(bt))
+    rows_k = _collected_complete_blocks(base, "cochran_q")
+    pert: dict[str, int] = {}
+    perb: dict[str, int] = {}
+    for r in rows_k:
+        pert[r["_t"]] = pert.get(r["_t"], 0) + r["_f"]
+        perb[r["_b"]] = perb.get(r["_b"], 0) + r["_f"]
+    out_row = (
+        len(pert),
+        sum(pert.values()) if pert else None,
+        sum(g * g for g in pert.values()) if pert else None,
+        len(perb),
+        sum(perb.values()) if perb else None,
+        sum(lv * lv for lv in perb.values()) if perb else None,
+    )
+    out = _values_literal_frame(
+        df.sparkSession,
+        [
+            ("k", "bigint"),
+            ("_sg", "decimal(38,0)"),
+            ("_sg2", "decimal(38,0)"),
+            ("n_blocks", "bigint"),
+            ("_sl", "decimal(38,0)"),
+            ("_sl2", "decimal(38,0)"),
+        ],
+        [out_row],
+    )
     num = (
         "(CAST(k AS DOUBLE) * CAST(_sg2 AS DOUBLE) "
         "- CAST(_sg AS DOUBLE) * CAST(_sg AS DOUBLE))"
@@ -9006,18 +8456,14 @@ def lilliefors_stat(
         # are exact Python integers fed back as a VALUES literal frame
         # into the IDENTICAL mean/std/Phi/gap double trees, so results
         # are bit-for-bit unchanged. Raises past the bound.
-        collected = (
+        collected = bounded_collect(
             df.filter(F.col(val_col).isNotNull())
             .select(qv.alias("_v"))
             .groupBy("_v")
-            .agg(F.count(F.lit(1)).alias("lv"))
-            .collect()
+            .agg(F.count(F.lit(1)).alias("lv")),
+            collect_max_cells,
+            "lilliefors_stat ECDF grid (collect_max_cells)",
         )
-        if len(collected) > collect_max_cells:
-            raise ValueError(
-                f"collected ECDF grid has {len(collected)} cells > "
-                f"collect_max_cells={collect_max_cells}; use the distributed path"
-            )
         gridm = {r["_v"]: r["lv"] for r in collected}
         n_tot = sum(gridm.values())
         s1 = sum(v * c for v, c in gridm.items())

@@ -28,6 +28,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from morphik_core_spark.plans.literal import bounded_collect
+
 __all__ = ["folder_children", "folder_descendants", "descendants_by_path", "folder_doc_counts"]
 
 
@@ -82,18 +84,13 @@ def folder_descendants(
     """
     spark = folders.sparkSession
     if collect_max_folders is not None:
-        rows = (
-            folders.select(F.col(id_col), F.col(parent_col))
-            .filter(F.col(parent_col).isNotNull())
-            .limit(int(collect_max_folders) + 1)
-            .collect()
+        rows = bounded_collect(
+            folders.select(F.col(id_col), F.col(parent_col)).filter(
+                F.col(parent_col).isNotNull()
+            ),
+            collect_max_folders,
+            "folder_descendants folders dimension (collect_max_folders)",
         )
-        if len(rows) > int(collect_max_folders):
-            raise ValueError(
-                f"folder_descendants collect_max_folders={collect_max_folders} "
-                f"exceeded: the folders dimension is larger than the caller's "
-                f"bound; drop the option (distributed BFS) or raise the bound."
-            )
         children_of: dict[str, list[str]] = {}
         for r in rows:
             children_of.setdefault(r[parent_col], []).append(r[id_col])

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from morphik_core_spark.plans.literal import bounded_collect
+
 __all__ = [
     "pagerank_fixed_point",
     "connected_components_star",
@@ -82,21 +84,15 @@ def pagerank_fixed_point(
         # that path rather than replicate Spark's coercion table here
         collect_max_edges = None
     if collect_max_edges is not None:
-        rows = (
+        rows = bounded_collect(
             edges.select(
                 F.col(src_col).alias("s"),
                 F.col(dst_col).alias("d"),
                 F.col(weight_col).cast("bigint").alias("w"),
-            )
-            .limit(int(collect_max_edges) + 1)
-            .collect()
+            ),
+            collect_max_edges,
+            "pagerank_fixed_point edge list (collect_max_edges)",
         )
-        if len(rows) > int(collect_max_edges):
-            raise ValueError(
-                f"pagerank_fixed_point collect_max_edges={collect_max_edges} "
-                f"exceeded: the edge list is larger than the caller's bound; "
-                f"drop the option (distributed loop) or raise the bound."
-            )
         elist = [(r["s"], r["d"], int(r["w"])) for r in rows]
         node_set = {s for s, _, _ in elist} | {d for _, d, _ in elist}
         n_nodes = len(node_set)
@@ -312,14 +308,9 @@ def triangle_count(
         .distinct()
     )
     if collect_max_edges is not None:
-        rows = e.limit(int(collect_max_edges) + 1).collect()
-        if len(rows) > int(collect_max_edges):
-            raise ValueError(
-                f"triangle_count collect_max_edges={collect_max_edges} "
-                f"exceeded: the canonical edge list is larger than the "
-                f"caller's bound; drop the option (distributed path) or "
-                f"raise the bound if the graph genuinely fits."
-            )
+        rows = bounded_collect(
+            e, collect_max_edges, "triangle_count canonical edge list (collect_max_edges)"
+        )
         adj: dict[int, set[int]] = {}
         for r in rows:
             u, v = int(r["u"]), int(r["v"])

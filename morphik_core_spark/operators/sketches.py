@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from morphik_core_spark.operators.dedup import portable_hash
+from morphik_core_spark.plans.literal import bounded_collect, literal_frame_from_schema
 
 __all__ = [
     "hll_distinct",
@@ -261,16 +262,11 @@ def sliding_cms_window(
         import datetime as _dt
         import hashlib as _hl
 
-        rows = (
-            day_counts.select(F.col(day_col), F.col(token_col), F.col(count_col))
-            .limit(int(collect_max_rows) + 1)
-            .collect()
+        rows = bounded_collect(
+            day_counts.select(F.col(day_col), F.col(token_col), F.col(count_col)),
+            collect_max_rows,
+            "sliding_cms_window day grid (collect_max_rows)",
         )
-        if len(rows) > int(collect_max_rows):
-            raise ValueError(
-                f"sliding_cms_window: day grid has {len(rows)} rows > "
-                f"collect_max_rows={collect_max_rows}; use the distributed path"
-            )
 
         def _bucket(d: int, tok: str) -> int:
             h = int(_hl.md5(f"cms{d}|{tok}".encode("utf-8")).hexdigest()[:15], 16)
@@ -295,13 +291,10 @@ def sliding_cms_window(
                 continue
             est = min(sketch[(wday, d, _bucket(d, tok))] for d in range(depth))
             out_rows.append((wday, tok, ex, est))
-        from morphik_core_spark.plans.literal import values_literal_frame
-
         tok_t = day_counts.schema[token_col].dataType.simpleString()
-        return values_literal_frame(
+        return literal_frame_from_schema(
             day_counts.sparkSession,
-            [("day", "date"), (token_col, tok_t),
-             ("exact_n", "bigint"), ("cms_est", "bigint")],
+            f"day date, {token_col} {tok_t}, exact_n bigint, cms_est bigint",
             out_rows,
         )
 
@@ -507,14 +500,11 @@ def kmv_overlap(
     """
     if collect_max_rows is not None:
         key_t = sketches.schema[key_col].dataType.simpleString()
-        # bounded BEFORE the pull: at most collect_max_rows + 1 rows leave
-        # the executors, whatever the sketch's real size
-        rows = sketches.select(F.col(key_col), F.col("v")).limit(int(collect_max_rows) + 1).collect()
-        if len(rows) > collect_max_rows:
-            raise ValueError(
-                f"kmv_overlap: sketch has more than "
-                f"collect_max_rows={collect_max_rows} rows; use the distributed path"
-            )
+        rows = bounded_collect(
+            sketches.select(F.col(key_col), F.col("v")),
+            collect_max_rows,
+            "kmv_overlap sketch (collect_max_rows)",
+        )
         by_key: dict = {}
         for kk, v in rows:
             if kk is None:
@@ -533,8 +523,6 @@ def kmv_overlap(
                     len(union_topk), union_topk[-1],
                     sum(1 for v in union_topk if v in a_set and v in b_set),
                 ))
-        from morphik_core_spark.plans.literal import literal_frame_from_schema
-
         stats = literal_frame_from_schema(
             sketches.sparkSession,
             f"ka {key_t}, kb {key_t}, cnt_a bigint, kth_a bigint, "

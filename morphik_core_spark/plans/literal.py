@@ -1,4 +1,10 @@
-"""Tiny literal DataFrames via SQL VALUES LocalRelations — pure JVM.
+"""Bounded driver-side pulls, and tiny literal DataFrames via SQL VALUES
+LocalRelations — pure JVM.
+
+``bounded_collect`` is the one way an operator pulls a contract-bounded
+frame to the driver: it collects ``df.limit(bound + 1)``, so an
+over-bound frame is caught with at most one row past the bound leaving
+the executors, and raises instead of truncating.
 
 ``spark.createDataFrame`` on local Python data plans a pickled-RDD scan
 whose per-ACTION cost is a full Python worker round trip, spread over
@@ -27,6 +33,19 @@ from pyspark.sql import DataFrame
 SAFE_TYPES = ("string", "bigint", "int", "smallint", "tinyint", "long",
               "double", "float", "boolean", "decimal", "array<double>",
               "date")
+
+
+def bounded_collect(df: DataFrame, bound: int, what: str) -> list:
+    """Collect ``df`` to the driver, or raise ``ValueError`` naming
+    ``what`` and ``bound`` when it holds more than ``bound`` rows; at
+    most ``bound + 1`` rows are ever pulled."""
+    rows = df.limit(int(bound) + 1).collect()
+    if len(rows) > int(bound):
+        raise ValueError(
+            f"{what} exceeds its bound of {bound} rows; the bound is a "
+            f"contract, not a truncation"
+        )
+    return rows
 
 
 def _cell(v, typ: str) -> str:

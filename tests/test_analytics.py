@@ -770,37 +770,50 @@ def test_mann_kendall_hand_computed(spark):
 
 
 def test_mann_kendall_collect_path_matches_distributed(spark):
-    import pytest
-
+    """Golden rows of the plain and seasonal tests: the values the former
+    distributed implementation returned on each fixture."""
     from morphik_core_spark.operators.analytics import (
         mann_kendall_test,
         seasonal_mann_kendall,
     )
 
     cases = [
-        [(i, v) for i, v in enumerate([3, 1, 4, 1, 5, 9, 2, 6, 5, 3])],  # ties
-        [(0, 5), (1, 6), (3, 6), (7, 2)],  # index gaps
-        [(0, 5), (0, 9), (1, 7)],  # duplicate index: no pair within it
-        [(0, 5), (1, None), (None, 7), (3, 2), (4, None)],  # NULL idx/val
-        [(i, (i * 31) % 11 + (i // 7)) for i in range(45)],  # weekly-ish
-        [(0, 1)],  # single point: s stays NULL
+        (  # ties
+            [(i, v) for i, v in enumerate([3, 1, 4, 1, 5, 9, 2, 6, 5, 3])],
+            (10, 12, 122.0, 0.995893, "none"),
+            (10, 7, 1, 3.0, 0.0, "none"),
+        ),
+        (  # index gaps
+            [(0, 5), (1, 6), (3, 6), (7, 2)],
+            (4, -1, 7.666667, 0.0, "none"),
+            (4, 3, -1, 1.0, 0.0, "none"),
+        ),
+        (  # duplicate index: no pair within it
+            [(0, 5), (0, 9), (1, 7)],
+            (3, 0, 3.666667, 0.0, "none"),
+            (3, 2, None, 1.0, 0.0, "none"),
+        ),
+        (  # NULL idx/val
+            [(0, 5), (1, None), (None, 7), (3, 2), (4, None)],
+            (5, -1, 15.666667, 0.0, "none"),
+            (5, 5, None, 0.0, 0.0, "none"),
+        ),
+        (  # weekly-ish
+            [(i, (i * 31) % 11 + (i // 7)) for i in range(45)],
+            (45, 277, 10327.0, 2.715951, "increasing"),
+            (45, 7, 23, 246.333333, 1.401719, "none"),
+        ),
+        (  # single point: s stays NULL
+            [(0, 1)],
+            (1, None, 0.0, 0.0, "none"),
+            (1, 1, None, 0.0, 0.0, "none"),
+        ),
     ]
-    for rows in cases:
+    for rows, plain, seasonal in cases:
         df = spark.createDataFrame(rows, "di long, y long")
-        for op, kw in ((mann_kendall_test, {}), (seasonal_mann_kendall, {"period": 7})):
-            dist = sorted(map(tuple, op(df, "di", "y", **kw).collect()))
-            fast = sorted(
-                map(
-                    tuple,
-                    op(df, "di", "y", collect_max_points=1000, **kw).collect(),
-                )
-            )
-            assert fast == dist, (op.__name__, rows)
-    big = spark.createDataFrame([(i, 1) for i in range(30)], "di long, y long")
-    with pytest.raises(ValueError, match="collect_max_points"):
-        mann_kendall_test(big, "di", "y", collect_max_points=5)
-    with pytest.raises(ValueError, match="collect_max_points"):
-        seasonal_mann_kendall(big, "di", "y", collect_max_points=5)
+        assert [tuple(r) for r in mann_kendall_test(df, "di", "y").collect()] == [plain], rows
+        got = [tuple(r) for r in seasonal_mann_kendall(df, "di", "y", period=7).collect()]
+        assert got == [seasonal], rows
 
 
 def test_mann_kendall_tie_correction(spark):
@@ -2511,55 +2524,6 @@ def test_series_col_matches_single_series_runs(spark):
             assert multi == single.asDict(), (op.__name__, name)
         with _pytest.raises(ValueError, match="series_col requires"):
             op(tagged, "g", "v", series_col="s", **kwargs)
-
-
-def test_blocked_rank_series_col_matches_single_series_runs(spark):
-    """friedman_test / page_trend_test ``series_col``: the one-chain
-    series path (complete-block filter, rank windows and aggregations
-    all gaining the series key) must be bit-identical, per series, to
-    one operator call per series — on a fixture with ties, an
-    incomplete block (dropped by the complete-block contract), and a
-    value-transformed twin series."""
-    import hashlib
-
-    from pyspark.sql import functions as F
-
-    from morphik_core_spark.operators.analytics import (
-        friedman_test,
-        page_trend_test,
-    )
-
-    rows = []
-    for b in range(12):
-        for ti, t in enumerate(["t0", "t1", "t2", "t3"]):
-            if b == 7 and t == "t2":
-                continue  # incomplete block: must drop in BOTH series
-            h = int(hashlib.md5(f"blk:{b}:{t}".encode()).hexdigest()[:8], 16) % 9
-            rows.append((str(b), t, h + ti))
-    df = spark.createDataFrame(rows, "b string, t string, v long")
-    uplift = df.select(
-        "b",
-        "t",
-        F.when(F.col("t") == "t1", F.col("v") + F.expr("v div 2"))
-        .otherwise(F.col("v"))
-        .alias("v"),
-    )
-    tagged = df.select(F.lit("raw").alias("s"), "b", "t", "v").unionByName(
-        uplift.select(F.lit("uplifted").alias("s"), "b", "t", "v")
-    )
-
-    for op in (friedman_test, page_trend_test):
-        [raw] = op(df, "b", "t", "v").collect()
-        [upl] = op(uplift, "b", "t", "v").collect()
-        got = {
-            r["s"]: r.asDict()
-            for r in op(tagged, "b", "t", "v", series_col="s").collect()
-        }
-        assert set(got) == {"raw", "uplifted"}
-        assert raw["n_blocks"] == 11  # the incomplete block dropped
-        for name, single in [("raw", raw), ("uplifted", upl)]:
-            multi = {kk: vv for kk, vv in got[name].items() if kk != "s"}
-            assert multi == single.asDict(), (op.__name__, name)
 
 
 def test_bartlett_matches_closed_form(spark):

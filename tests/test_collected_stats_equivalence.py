@@ -1,12 +1,23 @@
-"""Collected-grid fast paths must be bit-identical to the distributed
-paths (round-12 optimization): the rank/median/blocked-rank statistics
-gained an opt-in ``collect_max_cells`` / ``collect_max_rows`` that
-collects the contract-bounded grid once and replays the integer
-combinatorics in Python, feeding exact literals into the IDENTICAL final
-double trees. These tests drive both paths over fixtures that exercise
-every semantic corner — ties, NULL groups/blocks/treatments/values,
-incomplete blocks, empty input — and assert exact equality, plus that
-the bound RAISES instead of truncating.
+"""Collected-grid statistics keep the results of the distributed plans
+they replaced or sit beside.
+
+Two kinds of operator collect a bounded frame once, replay the integer
+combinatorics in exact Python, and feed literals into one Spark double
+tree:
+
+- the series, blocked and categorical tests (friedman, page, kendall W,
+  cochran Q, chi-square, theil-sen, ccf) have only this path, bounded by
+  the module constants of ``analytics.py``; their tests assert golden
+  rows that the former distributed implementation produced on the same
+  fixtures;
+- the rank/median grids and the sketches keep an opt-in
+  ``collect_max_cells`` / ``collect_max_rows`` beside the distributed
+  default, and their tests assert that both paths agree.
+
+The fixtures exercise every semantic corner — ties, NULL
+groups/blocks/treatments/values, incomplete blocks, empty input. Every
+bounded pull RAISES instead of truncating, and pulls at most bound + 1
+rows.
 """
 
 from __future__ import annotations
@@ -14,6 +25,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from morphik_core_spark.operators import analytics
 from morphik_core_spark.operators.analytics import (
     chi_square_independence,
     lilliefors_stat,
@@ -30,6 +42,11 @@ from morphik_core_spark.operators.analytics import (
 
 def _rows(df):
     return sorted(repr(tuple(r)) for r in df.collect())
+
+
+def _golden(rows):
+    """Expected rows in ``_rows`` form."""
+    return sorted(repr(r) for r in rows)
 
 
 @pytest.fixture(scope="module")
@@ -92,21 +109,18 @@ def test_mood_collected_matches_distributed(grouped):
 
 
 def test_friedman_collected_matches_distributed(blocked):
-    a = friedman_test(blocked, "b", "t", "v")
-    b = friedman_test(blocked, "b", "t", "v", collect_max_rows=10_000)
-    assert _rows(a) == _rows(b)
+    # b1, b2 and b4 are complete; b3 and the NULL block drop
+    assert _rows(friedman_test(blocked, "b", "t", "v")) == _golden([(3, 3, 0.666667)])
 
 
 def test_page_collected_matches_distributed(blocked):
-    a = page_trend_test(blocked, "b", "t", "v")
-    b = page_trend_test(blocked, "b", "t", "v", collect_max_rows=10_000)
-    assert _rows(a) == _rows(b)
+    assert _rows(page_trend_test(blocked, "b", "t", "v")) == _golden([(3, 3, 36.0, 0.0)])
 
 
 def test_kendall_w_collected_matches_distributed(blocked):
-    a = kendall_w(blocked, "b", "t", "v")
-    b = kendall_w(blocked, "b", "t", "v", collect_max_rows=10_000)
-    assert _rows(a) == _rows(b)
+    assert _rows(kendall_w(blocked, "b", "t", "v")) == _golden(
+        [(3, 3, 0.111111, 0.666667)]
+    )
 
 
 def test_cochran_collected_matches_distributed(spark):
@@ -118,9 +132,7 @@ def test_cochran_collected_matches_distributed(spark):
         ("b4", "t1", 1), ("b4", "t2", None), ("b4", "t2", 1), ("b4", "t3", 0),
     ]
     flags = spark.createDataFrame(data, "b string, t string, f int")
-    a = cochran_q(flags, "b", "t", "f")
-    b = cochran_q(flags, "b", "t", "f", collect_max_rows=10_000)
-    assert _rows(a) == _rows(b)
+    assert _rows(cochran_q(flags, "b", "t", "f")) == _golden([(3, 3, 0.666667, 2)])
 
 
 def test_null_treatment_disqualifies_every_block_both_paths(spark):
@@ -131,9 +143,7 @@ def test_null_treatment_disqualifies_every_block_both_paths(spark):
         ("b2", "t1", 4), ("b2", "t2", 5),
     ]
     df = spark.createDataFrame(data, "b string, t string, v bigint")
-    a = friedman_test(df, "b", "t", "v")
-    b = friedman_test(df, "b", "t", "v", collect_max_rows=100)
-    assert _rows(a) == _rows(b)
+    assert _rows(friedman_test(df, "b", "t", "v")) == _golden([(0, 0, None)])
 
 
 def test_empty_input_matches_both_paths(spark):
@@ -145,12 +155,8 @@ def test_empty_input_matches_both_paths(spark):
         mood_median_test(empty_g, "g", "v", collect_max_cells=10)
     )
     empty_b = spark.createDataFrame([], "b string, t string, v bigint")
-    assert _rows(friedman_test(empty_b, "b", "t", "v")) == _rows(
-        friedman_test(empty_b, "b", "t", "v", collect_max_rows=10)
-    )
-    assert _rows(kendall_w(empty_b, "b", "t", "v")) == _rows(
-        kendall_w(empty_b, "b", "t", "v", collect_max_rows=10)
-    )
+    assert _rows(friedman_test(empty_b, "b", "t", "v")) == _golden([(0, 0, None)])
+    assert _rows(kendall_w(empty_b, "b", "t", "v")) == _golden([(0, 0, None, None)])
 
 
 def test_chi_square_collected_matches_distributed(spark):
@@ -162,15 +168,13 @@ def test_chi_square_collected_matches_distributed(spark):
         (None, "y1"), ("b", None),
     ]
     df = spark.createDataFrame(data, "x string, y string")
-    a = chi_square_independence(df, "x", "y")
-    b = chi_square_independence(df, "x", "y", collect_max_cells=10_000)
-    assert _rows(a) == _rows(b)
-    empty = spark.createDataFrame([], "x string, y string")
-    assert _rows(chi_square_independence(empty, "x", "y")) == _rows(
-        chi_square_independence(empty, "x", "y", collect_max_cells=10)
+    assert _rows(chi_square_independence(df, "x", "y")) == _golden(
+        [(9.499997, 9, 0.513701, 12)]
     )
-    with pytest.raises(ValueError, match="collect_max_cells"):
-        chi_square_independence(df, "x", "y", collect_max_cells=2)
+    empty = spark.createDataFrame([], "x string, y string")
+    assert _rows(chi_square_independence(empty, "x", "y")) == _golden(
+        [(None, 1, None, None)]
+    )
 
 
 def test_lilliefors_collected_matches_distributed(spark, grouped):
@@ -193,17 +197,12 @@ def test_lilliefors_collected_matches_distributed(spark, grouped):
         lilliefors_stat(grouped, "v", collect_max_cells=2)
 
 
-def test_bounds_raise_instead_of_truncating(grouped, blocked):
+def test_bounds_raise_instead_of_truncating(grouped, blocked, monkeypatch):
     with pytest.raises(ValueError, match="collect_max_cells"):
         kruskal_wallis(grouped, "g", "v", collect_max_cells=3)
-    with pytest.raises(ValueError, match="collect_max_rows"):
-        friedman_test(blocked, "b", "t", "v", collect_max_rows=3)
-
-
-def test_series_col_rejects_collect_path(blocked):
-    tagged = blocked.withColumn("s", F.lit("one"))
-    with pytest.raises(ValueError, match="series_col"):
-        friedman_test(tagged, "b", "t", "v", series_col="s", collect_max_rows=10)
+    monkeypatch.setattr(analytics, "BLOCK_MAX_ROWS", 3)
+    with pytest.raises(ValueError, match="friedman_test blocked frame exceeds its bound of 3"):
+        friedman_test(blocked, "b", "t", "v")
 
 
 def test_kmv_overlap_collected_matches_distributed(spark):
@@ -226,16 +225,10 @@ def test_kmv_overlap_collected_matches_distributed(spark):
     assert len(dist) == 6  # C(4,2) non-null pairs
 
 
-def test_kmv_overlap_bound_raises(spark, monkeypatch):
+def _count_collects(monkeypatch) -> list:
+    """Record the row count of every ``DataFrame.collect`` from now on."""
     from pyspark.sql.classic.dataframe import DataFrame
 
-    from morphik_core_spark.operators.sketches import kmv_overlap, kmv_sketch
-
-    df = spark.createDataFrame(
-        [("x", f"t{i}") for i in range(30)] + [("y", f"t{i}") for i in range(30)],
-        "src string, tok string",
-    )
-    sk = kmv_sketch(df, "src", "tok", k=16)
     pulled = []
     collect = DataFrame.collect
 
@@ -245,6 +238,18 @@ def test_kmv_overlap_bound_raises(spark, monkeypatch):
         return rows
 
     monkeypatch.setattr(DataFrame, "collect", counting_collect)
+    return pulled
+
+
+def test_kmv_overlap_bound_raises(spark, monkeypatch):
+    from morphik_core_spark.operators.sketches import kmv_overlap, kmv_sketch
+
+    df = spark.createDataFrame(
+        [("x", f"t{i}") for i in range(30)] + [("y", f"t{i}") for i in range(30)],
+        "src string, tok string",
+    )
+    sk = kmv_sketch(df, "src", "tok", k=16)
+    pulled = _count_collects(monkeypatch)
     with pytest.raises(ValueError, match="collect_max_rows"):
         kmv_overlap(sk, "src", k=16, collect_max_rows=3)
     # checked before the pull: the 32-row sketch never reaches the driver
@@ -254,63 +259,42 @@ def test_kmv_overlap_bound_raises(spark, monkeypatch):
 def test_theil_sen_collected_matches_distributed(spark):
     from morphik_core_spark.operators.analytics import theil_sen_trend
 
+    def run(rows):
+        return _rows(theil_sen_trend(spark.createDataFrame(rows, "i long, y long"), "i", "y"))
+
     # ties, negatives, an outlier, NULL value rows, a NULL index row
     rows = [
         (1, 10), (2, 12), (3, 12), (4, 900), (5, 18), (6, 20), (7, -3),
         (8, None), (None, 5),
     ]
-    df = spark.createDataFrame(rows, "i long, y long")
-    dist = _rows(theil_sen_trend(df, "i", "y"))
-    coll = _rows(theil_sen_trend(df, "i", "y", collect_max_points=1000))
-    assert dist == coll
-
+    assert run(rows) == _golden([(9, 28, -2.583334, 17.166667)])
     # even pair count without NULLs
-    df2 = spark.createDataFrame([(1, 4), (2, 9), (3, 2), (4, 16)], "i long, y long")
-    assert _rows(theil_sen_trend(df2, "i", "y")) == _rows(
-        theil_sen_trend(df2, "i", "y", collect_max_points=1000)
-    )
-
+    assert run([(1, 4), (2, 9), (3, 2), (4, 16)]) == _golden([(4, 6, 3.75, 0.625)])
     # single point and empty input
-    df1 = spark.createDataFrame([(1, 4)], "i long, y long")
-    assert _rows(theil_sen_trend(df1, "i", "y")) == _rows(
-        theil_sen_trend(df1, "i", "y", collect_max_points=1000)
-    )
-    df0 = spark.createDataFrame([], "i long, y long")
-    assert _rows(theil_sen_trend(df0, "i", "y")) == _rows(
-        theil_sen_trend(df0, "i", "y", collect_max_points=1000)
-    )
-
-    with pytest.raises(ValueError, match="collect_max_points"):
-        theil_sen_trend(df, "i", "y", collect_max_points=3)
+    assert run([(1, 4)]) == _golden([(1, None, None, None)])
+    assert run([]) == _golden([(0, None, None, None)])
 
 
 def test_cross_correlation_collected_matches_distributed(spark):
     from morphik_core_spark.operators.analytics import cross_correlation
+
+    def run(rows, max_lag):
+        df = spark.createDataFrame(rows, "i long, x long, y long")
+        return _rows(cross_correlation(df, "i", "x", "y", max_lag=max_lag))
 
     # gaps in the index (pairs drop), NULL x / NULL y rows, a NULL index
     rows = [
         (1, 10, 3), (2, 12, 5), (3, 9, 4), (5, 20, 9), (6, 18, 8),
         (7, None, 6), (8, 14, None), (None, 4, 4),
     ]
-    df = spark.createDataFrame(rows, "i long, x long, y long")
-    dist = _rows(cross_correlation(df, "i", "x", "y", max_lag=3))
-    coll = _rows(cross_correlation(df, "i", "x", "y", max_lag=3, collect_max_points=1000))
-    assert dist == coll
-
-    # short series: some lags have zero pairs and must emit no row
-    df2 = spark.createDataFrame([(1, 4, 7), (2, 9, 1)], "i long, x long, y long")
-    assert _rows(cross_correlation(df2, "i", "x", "y", max_lag=5)) == _rows(
-        cross_correlation(df2, "i", "x", "y", max_lag=5, collect_max_points=1000)
-    )
-
+    assert run(rows, 3) == _golden([
+        (-3, 3, 0.096637), (-2, 4, 0.065651), (-1, 5, 0.378801), (0, 7, 0.784908),
+        (1, 5, 0.439223), (2, 4, 0.040862), (3, 3, -0.015106),
+    ])
+    # short series: lags with zero pairs emit no row
+    assert run([(1, 4, 7), (2, 9, 1)], 5) == _golden([(-1, 1, 0.5), (0, 2, -1.0), (1, 1, 0.5)])
     # empty input
-    df0 = spark.createDataFrame([], "i long, x long, y long")
-    assert _rows(cross_correlation(df0, "i", "x", "y", max_lag=2)) == _rows(
-        cross_correlation(df0, "i", "x", "y", max_lag=2, collect_max_points=1000)
-    )
-
-    with pytest.raises(ValueError, match="collect_max_points"):
-        cross_correlation(df, "i", "x", "y", max_lag=2, collect_max_points=3)
+    assert run([], 2) == []
 
 
 def test_sliding_cms_window_collected_matches_distributed(spark):
@@ -340,3 +324,140 @@ def test_sliding_cms_window_collected_matches_distributed(spark):
 
     with pytest.raises(ValueError, match="collect_max_rows"):
         sliding_cms_window(df, "day", "tok", "n", collect_max_rows=2)
+
+
+def test_sliding_cms_window_varchar_token_collected_matches_distributed(spark):
+    # a VARCHAR(n) token type (kept when preserveCharVarcharTypeInfo is
+    # on) must not leak into the literal frame's SQL
+    import datetime as dt
+
+    from morphik_core_spark.operators.sketches import sliding_cms_window
+
+    key = "spark.sql.preserveCharVarcharTypeInfo"
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, "true")
+    try:
+        d = dt.date(2031, 3, 1)
+        df = spark.createDataFrame(
+            [(d, "view", 10), (d, "buy", 3), (d + dt.timedelta(days=2), "view", 4)],
+            "day date, tok string, n long",
+        ).selectExpr("day", "CAST(tok AS VARCHAR(8)) AS tok", "n")
+        assert df.schema["tok"].dataType.simpleString() == "varchar(8)"
+        kw = dict(window_days=3, depth=2, width=4)
+        dist = _rows(sliding_cms_window(df, "day", "tok", "n", **kw))
+        coll = _rows(sliding_cms_window(df, "day", "tok", "n", collect_max_rows=100, **kw))
+        assert coll == dist
+        assert len(dist) == 4
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+
+
+_BOUND = 3
+
+
+def _bounded_cases():
+    """op name -> (analytics bound constant to patch or None, call that
+    must overflow a bound of ``_BOUND``)."""
+    from morphik_core_spark.operators import graph, sketches
+    from morphik_core_spark.operators.folders import folder_descendants
+
+    def series(spark):
+        return spark.createDataFrame([(i, i % 5) for i in range(30)], "i long, x long")
+
+    def pair_series(spark):
+        return spark.createDataFrame(
+            [(i, i % 5, i % 3) for i in range(30)], "i long, x long, y long"
+        )
+
+    def blocks(spark):
+        return spark.createDataFrame(
+            [(f"b{b}", f"t{t}", (b * t) % 4) for b in range(10) for t in range(3)],
+            "b string, t string, v bigint",
+        )
+
+    def groups(spark):
+        return spark.createDataFrame(
+            [(g, v) for g in ("a", "b") for v in range(12)], "g string, v bigint"
+        )
+
+    def edges(spark):
+        return spark.createDataFrame(
+            [(i, (i + 1) % 10, 1) for i in range(10)], "src long, dst long, w long"
+        )
+
+    def day_grid(spark):
+        import datetime as dt
+
+        d = dt.date(2031, 3, 1)
+        return spark.createDataFrame(
+            [(d + dt.timedelta(days=i), "view", 1) for i in range(10)],
+            "day date, tok string, n long",
+        )
+
+    def folders(spark):
+        return spark.createDataFrame(
+            [(f"f{i}", "root") for i in range(10)], "id string, parent_id string"
+        )
+
+    a = analytics
+    series_ops = {
+        "autocorrelation": lambda s: a.autocorrelation(series(s), "i", "x"),
+        "pacf_durbin_levinson": lambda s: a.pacf_durbin_levinson(series(s), "i", "x"),
+        "ljung_box": lambda s: a.ljung_box(series(s), "i", "x"),
+        "theil_sen_trend": lambda s: a.theil_sen_trend(series(s), "i", "x"),
+        "mann_kendall_test": lambda s: a.mann_kendall_test(series(s), "i", "x"),
+        "seasonal_mann_kendall": lambda s: a.seasonal_mann_kendall(series(s), "i", "x"),
+        "cross_correlation": lambda s: a.cross_correlation(pair_series(s), "i", "x", "y"),
+    }
+    block_ops = {
+        "friedman_test": lambda s: a.friedman_test(blocks(s), "b", "t", "v"),
+        "page_trend_test": lambda s: a.page_trend_test(blocks(s), "b", "t", "v"),
+        "kendall_w": lambda s: a.kendall_w(blocks(s), "b", "t", "v"),
+        "cochran_q": lambda s: a.cochran_q(
+            blocks(s).withColumn("f", F.expr("CAST(v % 2 AS INT)")), "b", "t", "f"
+        ),
+    }
+    option_ops = {
+        "kruskal_wallis": lambda s: a.kruskal_wallis(groups(s), "g", "v", collect_max_cells=_BOUND),
+        "mann_whitney_u": lambda s: a.mann_whitney_u(
+            groups(s), "g", "v", "a", "b", collect_max_cells=_BOUND
+        ),
+        "dunn_posthoc": lambda s: a.dunn_posthoc(groups(s), "g", "v", collect_max_cells=_BOUND),
+        "mood_median_test": lambda s: a.mood_median_test(
+            groups(s), "g", "v", collect_max_cells=_BOUND
+        ),
+        "lilliefors_stat": lambda s: a.lilliefors_stat(groups(s), "v", collect_max_cells=_BOUND),
+        "sliding_cms_window": lambda s: sketches.sliding_cms_window(
+            day_grid(s), "day", "tok", "n", collect_max_rows=_BOUND
+        ),
+        "pagerank_fixed_point": lambda s: graph.pagerank_fixed_point(
+            edges(s), "src", "dst", "w", collect_max_edges=_BOUND
+        ),
+        "triangle_count": lambda s: graph.triangle_count(edges(s), collect_max_edges=_BOUND),
+        "folder_descendants": lambda s: folder_descendants(
+            folders(s), ["root"], collect_max_folders=_BOUND
+        ),
+    }
+    cases = {name: ("SERIES_MAX_POINTS", call) for name, call in series_ops.items()}
+    cases.update({name: ("BLOCK_MAX_ROWS", call) for name, call in block_ops.items()})
+    cases["chi_square_independence"] = (
+        "CHI_SQUARE_MAX_CELLS",
+        lambda s: a.chi_square_independence(groups(s), "g", "v"),
+    )
+    cases.update({name: (None, call) for name, call in option_ops.items()})
+    return cases
+
+
+@pytest.mark.parametrize("op", sorted(_bounded_cases()))
+def test_bounded_pull_raises_before_pulling_past_bound(spark, monkeypatch, op):
+    const, call = _bounded_cases()[op]
+    if const is not None:
+        monkeypatch.setattr(analytics, const, _BOUND)
+    pulled = _count_collects(monkeypatch)
+    with pytest.raises(ValueError, match=f"exceeds its bound of {_BOUND} rows"):
+        call(spark).collect()
+    # checked before the pull: no collect brings more than bound + 1 rows
+    assert pulled and max(pulled) <= _BOUND + 1

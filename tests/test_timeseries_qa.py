@@ -29,39 +29,55 @@ def test_acf_gaps_drop_pairs_only(spark):
 
 
 def test_acf_collect_path_matches_distributed(spark):
+    """Golden rows: the values the former distributed implementation
+    returned on each fixture."""
     import pytest
 
     cases = [
-        [(0, 2), (1, 0), (2, 2), (3, 0)],  # alternation
-        [(0, 5), (1, 7), (3, 7), (4, 5)],  # gap drops pairs
-        [(0, 5), (0, 9), (1, 7), (2, 3)],  # duplicate index multiplies pairs
-        [(i, (i * 7919) % 23) for i in range(40)],
+        (  # alternation
+            [(0, 2), (1, 0), (2, 2), (3, 0)],
+            [(1, 3, -0.75), (2, 2, 0.5), (3, 1, -0.25)],
+        ),
+        (  # gap drops pairs
+            [(0, 5), (1, 7), (3, 7), (4, 5)],
+            [(1, 2, -0.5), (2, 1, 0.25), (3, 2, -0.5)],
+        ),
+        (  # duplicate index multiplies pairs
+            [(0, 5), (0, 9), (1, 7), (2, 3)],
+            [(1, 3, -0.05), (2, 2, -0.3)],
+        ),
+        (
+            [(i, (i * 7919) % 23) for i in range(40)],
+            [(1, 39, -0.209477), (2, 38, -0.416255), (3, 37, 0.406662)],
+        ),
     ]
-    for rows in cases:
+    for rows, expected in cases:
         df = spark.createDataFrame(rows, "di long, x long")
-        dist = sorted(map(tuple, autocorrelation(df, "di", "x", max_lag=3).collect()))
-        fast = sorted(
-            map(
-                tuple,
-                autocorrelation(
-                    df, "di", "x", max_lag=3, collect_max_points=1000
-                ).collect(),
-            )
-        )
-        assert fast == dist, rows
-    big = spark.createDataFrame([(i, 1) for i in range(30)], "di long, x long")
-    with pytest.raises(ValueError, match="collect_max_points"):
-        autocorrelation(big, "di", "x", collect_max_points=5)
-    # degenerate constant series (den = 0): BOTH paths raise the same
-    # ANSI DIVIDE_BY_ZERO — the collected form must not silently widen
-    # the op's domain
+        got = sorted(map(tuple, autocorrelation(df, "di", "x", max_lag=3).collect()))
+        assert got == expected, rows
+    # degenerate constant series (den = 0) raises the ANSI
+    # DIVIDE_BY_ZERO — the op's domain is not silently widened
     const = spark.createDataFrame([(0, 4), (1, 4), (2, 4)], "di long, x long")
-    for kw in ({}, {"collect_max_points": 100}):
-        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-            autocorrelation(const, "di", "x", max_lag=1, **kw).collect()
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        autocorrelation(const, "di", "x", max_lag=1).collect()
+
+
+def test_acf_null_index_and_values_keep_sql_semantics(spark):
+    """A NULL index never pairs; a NULL value counts in n and in its
+    pairs but drops from every sum (golden rows of the former
+    distributed implementation); an all-NULL series gives NULL acf."""
+    rows = [(0, 5), (1, None), (2, 7), (None, 3), (3, 4), (3, 6), (4, 9)]
+    df = spark.createDataFrame(rows, "di long, x long")
+    got = sorted(map(tuple, autocorrelation(df, "di", "x", max_lag=2).collect()))
+    assert got == [(1, 6, 0.065868), (2, 4, 0.336826)]
+    nulls = spark.createDataFrame([(0, None), (1, None), (2, None)], "di long, x long")
+    got = sorted(map(tuple, autocorrelation(nulls, "di", "x", max_lag=2).collect()))
+    assert got == [(1, 2, None), (2, 1, None)]
 
 
 def test_pacf_collect_path_matches_distributed(spark):
+    """Golden rows: the values the former distributed implementation
+    returned on this fixture."""
     from morphik_core_spark.operators.analytics import pacf_durbin_levinson
 
     vals, v = [], 50
@@ -69,16 +85,14 @@ def test_pacf_collect_path_matches_distributed(spark):
         v = (v * 13 + 7) % 101
         vals.append((i, v + (10 if i % 7 == 0 else 0)))
     df = spark.createDataFrame(vals, "di long, x long")
-    dist = sorted(map(tuple, pacf_durbin_levinson(df, "di", "x", max_lag=5).collect()))
-    fast = sorted(
-        map(
-            tuple,
-            pacf_durbin_levinson(
-                df, "di", "x", max_lag=5, collect_max_points=1000
-            ).collect(),
-        )
-    )
-    assert fast == dist
+    got = sorted(map(tuple, pacf_durbin_levinson(df, "di", "x", max_lag=5).collect()))
+    assert got == [
+        (1, 0.117623082535, 0.117623082535),
+        (2, 0.062186971444, 0.049030122943),
+        (3, 0.138326659301, 0.127672646728),
+        (4, -0.23958839164, -0.280414489127),
+        (5, -0.307199627474, -0.287412844938),
+    ]
 
 
 def test_cusum_matches_textbook_recursion(spark):
