@@ -825,8 +825,7 @@ def _q_sliding_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocabulary): one collect replays the fanout/merge/estimate chain in
     # exact integers (sketches.sliding_cms_window; bound raises)
     return sliding_cms_window(
-        day_counts, "day", "event_type", "n",
-        window_days=7, depth=3, width=16, collect_max_rows=500_000,
+        day_counts, "day", "event_type", "n", window_days=7, depth=3, width=16
     )
 
 
@@ -1437,11 +1436,10 @@ def _q_folder_descendants(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     folders, _ = _folders_dim(spark, sf_dir)
     # the synthetic tree is sources x langs x 2 (dimension-sized by
-    # construction): the bounded-collect BFS pays 1 job instead of 2 per
-    # tree level (eager checkpoint + emptiness probe)
-    return folder_ops.folder_descendants(
-        folders, ["/src1"], collect_max_folders=100_000
-    ).select("root", "id", "rel_depth")
+    # construction): one bounded collect, then a driver-side BFS
+    return folder_ops.folder_descendants(folders, ["/src1"]).select(
+        "root", "id", "rel_depth"
+    )
 
 
 def _q_usage_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2407,9 +2405,9 @@ def _q_kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = word_shingles(docs, "text", "source", n=3)
     sk = kmv_sketch(sh, "source", "shingle", k=128)
     # crawl sources are a bounded dimension (tens), so the keys×k sketch
-    # is driver-safe at any corpus size: opt into the collected pairwise
-    # tail (bound raises at 512 sources × k — far past the contract)
-    return kmv_overlap(sk, "source", k=128, collect_max_rows=512 * 128)
+    # is driver-safe at any corpus size (kmv_overlap raises past 512
+    # sources — far past the contract)
+    return kmv_overlap(sk, "source", k=128)
 
 
 def _q_c4_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3484,12 +3482,10 @@ def _q_trade_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    # nation keys bound the graph at 25 nodes / 300 canonical edges, so
-    # the census rides the bounded-collect fast path (exact driver ints;
-    # the clustering double still comes from the identical Spark ROUND
-    # expression) instead of ~20 sub-KB AQE stage-jobs. 10_000 is a
-    # two-orders-of-magnitude margin on the schema contract.
-    return triangle_count(edges, collect_max_edges=10_000)
+    # nation keys bound the graph at 25 nodes / 300 canonical edges;
+    # triangle_count's 10k-edge bound is a two-orders-of-magnitude
+    # margin on the schema contract
+    return triangle_count(edges)
 
 
 def _q_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6003,16 +5999,13 @@ def _q_kruskal_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from morphik_core_spark.operators.analytics import kruskal_wallis
 
     docs = _t(spark, sf_dir, "documents")
-    # collected-grid fast path: the (lang|source, n_chars) grid is
-    # char-grain-bounded (distinct doc lengths saturate; 2k/10k cells at
-    # sf0.1), so ONE collect replaces ~30 scheduled bounded-frame stages
-    # per call; the bound RAISES if the contract is ever violated.
-    by_lang = kruskal_wallis(
-        docs, "lang", "n_chars", collect_max_cells=1_000_000
-    ).withColumn("split", F.lit("by_lang"))
-    by_source = kruskal_wallis(
-        docs, "source", "n_chars", collect_max_cells=1_000_000
-    ).withColumn("split", F.lit("by_source"))
+    # the (lang|source, n_chars) grid is char-grain-bounded (distinct doc
+    # lengths saturate; 2k/10k cells at sf0.1), far inside the operator's
+    # 1M-cell bound
+    by_lang = kruskal_wallis(docs, "lang", "n_chars").withColumn("split", F.lit("by_lang"))
+    by_source = kruskal_wallis(docs, "source", "n_chars").withColumn(
+        "split", F.lit("by_source")
+    )
     return (
         by_lang.unionByName(by_source)
         .select("split", "k", "n", "h_stat", "h_tie_corrected")
@@ -6422,10 +6415,7 @@ def _q_mann_whitney_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from morphik_core_spark.operators.analytics import mann_whitney_u
 
     docs = _t(spark, sf_dir, "documents")
-    # collected-grid fast path (kruskal_doclen's char-grain bound)
-    return mann_whitney_u(
-        docs, "lang", "n_chars", "en", "de", collect_max_cells=1_000_000
-    )
+    return mann_whitney_u(docs, "lang", "n_chars", "en", "de")
 
 
 def _q_dunn_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6437,8 +6427,7 @@ def _q_dunn_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from morphik_core_spark.operators.analytics import dunn_posthoc
 
     docs = _t(spark, sf_dir, "documents")
-    # collected-grid fast path (kruskal_doclen's char-grain bound)
-    return dunn_posthoc(docs, "lang", "n_chars", collect_max_cells=1_000_000)
+    return dunn_posthoc(docs, "lang", "n_chars")
 
 
 def _q_overdispersion_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7780,13 +7769,12 @@ def _q_mood_median_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
     `kruskal_doclen`: every document reduces to above/below the pooled
     lower median, so a handful of pathological giant documents cannot
     move the statistic at all (they can drag Kruskal's rank sums).
-    Bucketed-prefix grand median; exact 2 x k counts; per-cell
+    Lower grand median from one collected grid; exact 2 x k counts; per-cell
     (O-E)^2/E quantized 1e-12."""
     from morphik_core_spark.operators.analytics import mood_median_test
 
     docs = _t(spark, sf_dir, "documents")
-    # collected-grid fast path (kruskal_doclen's char-grain bound)
-    return mood_median_test(docs, "lang", "n_chars", collect_max_cells=1_000_000)
+    return mood_median_test(docs, "lang", "n_chars")
 
 
 def _q_durbin_watson_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8030,7 +8018,7 @@ def _q_lilliefors_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (near-normal daily volume, skewed document length) — the CDF-shape
     check beside the moments check: together they split "non-normal
     because skewed/kurtotic" from "non-normal in shape with normal
-    moments". Shared A&S Phi tree, bucketed-prefix ECDF, raw statistic
+    moments". Shared A&S Phi tree, collected-grid ECDF, raw statistic
     (the ~0.886/sqrt(n) 5% bound is external)."""
     from morphik_core_spark.operators.analytics import lilliefors_stat
 
@@ -8039,9 +8027,8 @@ def _q_lilliefors_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("unix_micros(ts) div 86400000000").alias("di")
     ).agg(F.count(F.lit(1)).alias("y"))
     docs = _t(spark, sf_dir, "documents")
-    # collected-grid fast path: day-grain / char-grain value grids
-    a = lilliefors_stat(daily, "y", collect_max_cells=1_000_000)
-    b = lilliefors_stat(docs, "n_chars", collect_max_cells=1_000_000)
+    a = lilliefors_stat(daily, "y")
+    b = lilliefors_stat(docs, "n_chars")
     return (
         a.select(F.lit("daily_volume").alias("series"), "n", "mean", "std", "d_stat")
         .unionByName(

@@ -111,6 +111,16 @@ __all__ = [
 SERIES_MAX_POINTS = 100_000
 BLOCK_MAX_ROWS = 200_000
 CHI_SQUARE_MAX_CELLS = 100_000
+# theil_sen_trend visits all n(n-1)/2 point pairs at the driver, so the
+# linear series bound does not fit it: 5k points (12.5M pairs) take
+# 12.7 s on a 4-core VM.
+THEIL_SEN_MAX_POINTS = 5_000
+# The rank and median tests (kruskal_wallis, mann_whitney_u,
+# dunn_posthoc, mood_median_test, lilliefors_stat) pull the grid of
+# (group, quantized value) cells, which the data does not bound: past
+# RANK_GRID_MAX_CELLS cells they raise, and a coarser value_scale
+# shrinks the grid.
+RANK_GRID_MAX_CELLS = 1_000_000
 
 
 def funnel_counts(
@@ -3277,26 +3287,29 @@ def theil_sen_trend(
     as 2·median to keep even-count interpolation integral, and the
     intercept medians over per-point micro residuals the same way.
 
-    The pairwise grid is SERIES-bounded (n(n−1)/2 on the pre-aggregated
-    series — 435 pairs for a 30-day window); the series is pulled to the
-    driver once (more than ``SERIES_MAX_POINTS`` points raise) and the
-    micro-slopes, both nearest-rank medians and the residual grid are
-    exact Python integers with SQL semantics — NULL indexes never pair
-    but count in n_points, NULL values form NULL slopes that sort first
-    (asc_nulls_first) and SUM skips NULLs inside an even-median pair.
-    The slope/intercept doubles come from `_theil_sen_tail`.
+    The series is pulled to the driver once and the micro-slopes, both
+    nearest-rank medians and the residual grid are exact Python integers
+    with SQL semantics — NULL indexes never pair but count in n_points,
+    equal indexes never pair, NULL values form NULL slopes that sort
+    first (asc_nulls_first) and SUM skips NULLs inside an even-median
+    pair. The slope/intercept doubles come from `_theil_sen_tail`. The
+    driver visits each of the n(n−1)/2 index-ordered pairs once (435
+    for a 30-day window), so the bound is ``THEIL_SEN_MAX_POINTS``, not
+    the linear operators' ``SERIES_MAX_POINTS``: more points raise.
 
     Output: one row (n_points, n_pairs, slope, intercept).
     """
     import math as _m
+    from bisect import bisect_right as _bisect_right
+    from itertools import islice as _islice
 
     rows = bounded_collect(
         df.select(
             F.col(idx_col).cast("bigint").alias("_i"),
             F.col(val_col).cast("bigint").alias("_y"),
         ),
-        SERIES_MAX_POINTS,
-        "theil_sen_trend series",
+        THEIL_SEN_MAX_POINTS,
+        "theil_sen_trend series (THEIL_SEN_MAX_POINTS)",
     )
     pts = [(r["_i"], r["_y"]) for r in rows]
     n_points = len(pts)
@@ -3304,18 +3317,16 @@ def theil_sen_trend(
     def _rha(x: float) -> int:
         return int(_m.floor(x + 0.5)) if x >= 0 else int(_m.ceil(x - 0.5))
 
-    idx_pts = [(i, y) for i, y in pts if i is not None]
+    # sorted by index, each pair (a, b) with ia < ib is visited once:
+    # b runs over the points past the last one sharing a's index
+    idx_pts = sorted(((i, y) for i, y in pts if i is not None), key=lambda p: p[0])
+    idxs = [i for i, _ in idx_pts]
     slopes: list = []
-    for j in range(len(idx_pts)):
-        ia, ya = idx_pts[j]
-        for kk in range(len(idx_pts)):
-            ib, yb = idx_pts[kk]
-            if ia < ib:
-                slopes.append(
-                    None
-                    if ya is None or yb is None
-                    else _rha(float(yb - ya) * 1e6 / float(ib - ia))
-                )
+    for ia, ya in idx_pts:
+        for ib, yb in _islice(idx_pts, _bisect_right(idxs, ia), None):
+            slopes.append(
+                None if ya is None or yb is None else _rha(float(yb - ya) * 1e6 / float(ib - ia))
+            )
     np_ = len(slopes)
 
     def _med2_sql(vals: list) -> "int | None":
@@ -3324,7 +3335,7 @@ def theil_sen_trend(
         nv = len(vals)
         if nv == 0:
             return None
-        ordered = sorted(vals, key=lambda v: (v is not None, v))
+        ordered = [None] * vals.count(None) + sorted(v for v in vals if v is not None)
         if nv % 2 == 1:
             sel = [ordered[(nv - 1) // 2]]
             s = sel[0]
@@ -4994,7 +5005,6 @@ def kruskal_wallis(
     val_col: str,
     value_scale: int = 1,
     decimals: int = 6,
-    collect_max_cells: int | None = None,
 ) -> DataFrame:
     """Kruskal–Wallis rank test: do the k groups come from the same
     distribution — the nonparametric sibling of `anova_oneway` (rank-
@@ -5011,36 +5021,18 @@ def kruskal_wallis(
     into the closed form. Per-group R_g²/n_g is ONE double division
     immediately ROUND(·1e6)-quantized (integer cross-group sum — the
     anova_oneway recipe), and the tie term is exact DECIMAL(38,0) over
-    grid counts. Scale: one grid groupBy + one grid→row join (AQE-
-    sized) + one k-row aggregate.
+    grid counts.
+
+    Driver-bounded: ONE collect pulls the (group, quantized value)
+    grid, the per-group rank sums and the tie term are exact Python
+    integers (`_collected_rank_pergroup`), and they enter the double
+    tree below as DECIMAL(38,0)/BIGINT literals. Past
+    ``RANK_GRID_MAX_CELLS`` cells it raises; coarsen ``value_scale`` to
+    shrink the grid.
 
     Output ONE row: (k, n, h_stat, h_tie_corrected).
-
-    ``collect_max_cells`` opts into the collected-grid fast path (the
-    round-11 bounded-frame recipe): when the pooled (group, value) grid
-    is value-grain-bounded by contract, ONE collect replaces the grid
-    windows, the grid->row join and the per-group aggregation; the
-    per-group rank sums and the tie term are exact Python integers fed
-    back as DECIMAL(38,0)/BIGINT literals into the IDENTICAL final
-    double tree, so results are bit-for-bit unchanged (raises past the
-    bound — a contract, not a truncation).
     """
-    dec = "decimal(38,0)"
-    if collect_max_cells is not None:
-        per_g, ties, _, _ = _rank_pergroup_frames(
-            df, group_col, val_col, value_scale, collect_max_cells
-        )
-    else:
-        joined, grid = _grid_ranked_rows(df, group_col, val_col, value_scale)
-        per_g = joined.groupBy("_g").agg(
-            F.count(F.lit(1)).alias("_ng"),
-            F.sum(F.col("_r2").cast(dec)).alias("_s2"),
-        )
-        ties = grid.agg(
-            F.sum(
-                F.col("_c").cast(dec) * F.col("_c") * F.col("_c") - F.col("_c").cast(dec)
-            ).alias("_tt")
-        )
+    per_g, ties, _, _ = _collected_rank_pergroup(df, group_col, val_col, value_scale)
     # R_g^2/n_g = (S2/2)^2/n_g: one double division, micro-quantized.
     # The quantized term is DECIMAL(38,0) — rank sums grow with N, so
     # R_g^2/n_g x 1e6 passes 2^63 near N ~ 10^8 (the double mantissa is
@@ -5364,43 +5356,26 @@ def ipw_ate(
     )
 
 
-_RANK_PERGROUP_COLS = [
-    ("_g", "string"),
-    ("_ng", "bigint"),
-    ("_s2", "decimal(38,0)"),
-]
-
-
 def _collected_rank_pergroup(
-    df: DataFrame,
-    group_col: str,
-    val_col: str,
-    value_scale: int,
-    max_cells: int,
-) -> tuple[list[tuple[str | None, int, int]], int | None, int]:
-    """Collect the bounded (group, value, count) grid ONCE and replay the
-    pooled doubled-tie-rank combinatorics in exact Python integers — the
-    round-11 wave-23-27 recipe for contract-bounded frames whose local
-    Spark cost is pure stage-scheduling latency (the grid prefix windows,
-    the grid->row join and the per-group aggregation each cost a
-    scheduled stage at any scale, while the frames they run over are
-    value-domain-bounded).
+    df: DataFrame, group_col: str, val_col: str, value_scale: int
+) -> tuple[DataFrame, DataFrame, int, int | None]:
+    """Shared pooled-rank plumbing for the rank-test family
+    (`kruskal_wallis`, `mann_whitney_u`, `dunn_posthoc`): collect the
+    (group, quantized value, count) grid ONCE and replay the pooled
+    doubled-tie-rank combinatorics in exact Python integers.
 
-    Equivalence with `_grid_ranked_rows` + per-group aggregation is
-    structural: the quantized value ``_v`` comes from the IDENTICAL Spark
-    expression (collected, never re-derived in Python), the doubled rank
-    r2(v) = 2*before(v) + ties(v) + 1 is the same closed form over the
-    same pooled grid, and every per-group reduction is an exact integer
-    sum, so the returned numbers equal the distributed
-    DECIMAL(38,0)/BIGINT aggregates bit-for-bit (unit-asserted). Python
-    ints are arbitrary precision, so nothing can overflow where the
-    DECIMAL path could not.
+    The quantized value ``_v`` comes from a Spark expression (collected,
+    never re-derived in Python); the doubled average tie rank
+    r2(v) = 2*before(v) + ties(v) + 1 keeps everything integral, and
+    every per-group reduction is an exact integer sum. Python ints are
+    arbitrary precision, so nothing overflows.
 
-    Returns (per-group [(g, n_g, s2_g)], tie term T = SUM t^3-t or None
-    when the grid is empty — matching SUM-over-empty = NULL — and the
-    pooled row count n). Raises past ``max_cells``: the bound is a
-    CONTRACT (callers opt in only for value-grain-bounded domains),
-    never a silent truncation.
+    Returns literal frames ``per_g`` (``_g string, _ng bigint,
+    _s2 decimal(38,0)``: per-group count and doubled rank sum) and
+    ``ties`` (``_tt decimal(38,0)``: the tie term T = SUM t^3-t, NULL
+    on an empty grid as SUM-over-empty is), plus the pooled row count n
+    and T as Python ints for callers that need them as literals (dunn).
+    Raises past ``RANK_GRID_MAX_CELLS`` cells.
     """
     q = F.expr(f"CAST(ROUND(CAST({val_col} AS DOUBLE) * {int(value_scale)}) AS BIGINT)")
     cells = bounded_collect(
@@ -5408,8 +5383,8 @@ def _collected_rank_pergroup(
         .select(F.col(group_col).cast("string").alias("_g"), q.alias("_v"))
         .groupBy("_g", "_v")
         .agg(F.count(F.lit(1)).alias("_c")),
-        max_cells,
-        "rank grid (collect_max_cells)",
+        RANK_GRID_MAX_CELLS,
+        "rank grid (RANK_GRID_MAX_CELLS)",
     )
     pooled: dict[int, int] = {}
     for r in cells:
@@ -5425,78 +5400,14 @@ def _collected_rank_pergroup(
         acc[0] += r["_c"]
         acc[1] += (2 * before[r["_v"]] + pooled[r["_v"]] + 1) * r["_c"]
     tie_term = sum(c * c * c - c for c in pooled.values()) if cells else None
-    return [(g, a[0], a[1]) for g, a in per_g.items()], tie_term, run
-
-
-def _rank_pergroup_frames(
-    df: DataFrame,
-    group_col: str,
-    val_col: str,
-    value_scale: int,
-    collect_max_cells: int,
-) -> tuple[DataFrame, DataFrame, int, int | None]:
-    """Literal (per_g, ties) frames for the rank-test tails, built from
-    one collected grid — schemas identical to the distributed
-    ``_grid_ranked_rows`` consumers' aggregates (``_g string, _ng bigint,
-    _s2 decimal(38,0)`` / ``_tt decimal(38,0)``) so the downstream double
-    expression trees are untouched. Also returns (n, tie_term) for
-    callers that need the pooled count as a literal (dunn)."""
     spark = df.sparkSession
-    rows_g, tt, n = _collected_rank_pergroup(
-        df, group_col, val_col, value_scale, collect_max_cells
+    per_g_frame = _values_literal_frame(
+        spark,
+        [("_g", "string"), ("_ng", "bigint"), ("_s2", "decimal(38,0)")],
+        [(g, a[0], a[1]) for g, a in per_g.items()],
     )
-    per_g = _values_literal_frame(spark, _RANK_PERGROUP_COLS, rows_g)
-    ties = _values_literal_frame(spark, [("_tt", "decimal(38,0)")], [(tt,)])
-    return per_g, ties, n, tt
-
-
-def _grid_ranked_rows(
-    df: DataFrame, group_col: str, val_col: str, value_scale: int
-) -> tuple[DataFrame, DataFrame]:
-    """Shared pooled-rank plumbing for the rank-test family
-    (`kruskal_wallis`, `mann_whitney_u`, `dunn_posthoc`):
-    returns (rows with DOUBLED average tie ranks ``_r2``, the value grid
-    with counts ``_c``) — rank_avg from the value grid alone, bucketed
-    hierarchical prefix, no corpus sort (the spearman_corr recipe)."""
-    from morphik_core_spark.plans.cache import scoped_persist
-
-    q = F.expr(f"CAST(ROUND(CAST({val_col} AS DOUBLE) * {int(value_scale)}) AS BIGINT)")
-    rows = df.filter(F.col(val_col).isNotNull()).select(
-        F.col(group_col).cast("string").alias("_g"), q.alias("_v")
-    )
-    # rows feeds the grid groupBy AND the grid→row join; the grid feeds
-    # the bucket prefix, the in-bucket prefix, and the caller's tie term
-    # — unpersisted, each branch re-derives the corpus scan (the
-    # quality_ensemble 8-FileScan lesson). Both frames are narrow: rows
-    # is (string, bigint), the grid is bounded by distinct values.
-    rows = scoped_persist(rows)
-    grid = scoped_persist(rows.groupBy("_v").agg(F.count(F.lit(1)).alias("_c")))
-    grid = grid.withColumn(
-        "_bkt", F.expr("CAST(floor(CAST(_v AS DOUBLE) / 1048576.0) AS BIGINT)")
-    )
-    bsum = grid.groupBy("_bkt").agg(F.sum("_c").alias("_bc"))
-    w_b = Window.orderBy(F.col("_bkt").asc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    bprev = bsum.select("_bkt", (F.sum("_bc").over(w_b) - F.col("_bc")).alias("_before_b"))
-    w_in = (
-        Window.partitionBy("_bkt")
-        .orderBy(F.col("_v").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ranked_grid = (
-        grid.withColumn("_before_in", F.sum("_c").over(w_in) - F.col("_c"))
-        .join(bprev, "_bkt")
-        .select(
-            F.col("_v").alias("_gv"),
-            (2 * (F.col("_before_b") + F.col("_before_in")) + F.col("_c") + 1).alias("_r2"),
-        )
-    )
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if rows.rdd.getNumPartitions() < par:
-        rows = rows.repartition(par)
-    joined = rows.join(ranked_grid, rows["_v"] == ranked_grid["_gv"]).select("_g", "_r2")
-    return joined, grid.select("_v", "_c")
+    ties = _values_literal_frame(spark, [("_tt", "decimal(38,0)")], [(tie_term,)])
+    return per_g_frame, ties, run, tie_term
 
 
 def mann_whitney_u(
@@ -5507,7 +5418,6 @@ def mann_whitney_u(
     right_value: str,
     value_scale: int = 1,
     decimals: int = 6,
-    collect_max_cells: int | None = None,
 ) -> DataFrame:
     """Mann–Whitney U test (Wilcoxon rank-sum) of ``left_value`` vs
     ``right_value`` — the nonparametric two-sample location test between
@@ -5520,33 +5430,22 @@ def mann_whitney_u(
         σ² = n₁n₂/12 · ((N+1) − ΣT/(N(N−1))),  T = Σ(t³−t)
 
     Exactness: ranks from the pooled value grid (doubled — integers),
-    R₁ and the tie term are exact DECIMAL sums, z is ONE double tree,
+    R₁ and the tie term are exact integer sums, z is ONE double tree,
     and the two-sided p comes from the shared Abramowitz–Stegun tail
-    quantized to 1e-12 before reporting. One grid groupBy + one
-    grid→row join + a 2-row reduction.
+    quantized to 1e-12 before reporting.
+
+    Driver-bounded like `kruskal_wallis`: one collect of the two
+    groups' (group, quantized value) grid, exact integer rank sums fed
+    to the double tree as literals; raises past
+    ``RANK_GRID_MAX_CELLS`` cells (coarsen ``value_scale`` to shrink
+    the grid).
 
     Output ONE row: (n_left, n_right, u_stat, z, p_value).
     """
-    dec = "decimal(38,0)"
     filtered = df.filter(
         F.col(group_col).cast("string").isin([str(left_value), str(right_value)])
     )
-    if collect_max_cells is not None:
-        # collected-grid fast path: exact integer rank sums as literals
-        # into the identical double tree (see kruskal_wallis)
-        per_g, ties, _, _ = _rank_pergroup_frames(
-            filtered, group_col, val_col, value_scale, collect_max_cells
-        )
-    else:
-        joined, grid = _grid_ranked_rows(filtered, group_col, val_col, value_scale)
-        per_g = joined.groupBy("_g").agg(
-            F.count(F.lit(1)).alias("_ng"), F.sum(F.col("_r2").cast(dec)).alias("_s2")
-        )
-        ties = grid.agg(
-            F.sum(
-                F.col("_c").cast(dec) * F.col("_c") * F.col("_c") - F.col("_c").cast(dec)
-            ).alias("_tt")
-        )
+    per_g, ties, _, _ = _collected_rank_pergroup(filtered, group_col, val_col, value_scale)
     agg = (
         per_g.agg(
             F.sum(F.when(F.col("_g") == str(left_value), F.col("_ng"))).alias("n1"),
@@ -5585,7 +5484,6 @@ def dunn_posthoc(
     alpha: float = 0.05,
     value_scale: int = 1,
     decimals: int = 6,
-    collect_max_cells: int | None = None,
 ) -> DataFrame:
     """Dunn's post-hoc test: which PAIRS of groups differ, after
     `kruskal_wallis` says "some do" — pairwise mean-rank z statistics
@@ -5597,51 +5495,30 @@ def dunn_posthoc(
     `bh_fdr` step-up rule — testing 10 groups is 45 hypotheses; report
     them honestly).
 
-    Exactness: per-group rank sums are exact DECIMAL over doubled grid
-    ranks; every z is one double tree; p quantizes to 1e-12 integers
-    BEFORE the BH ranking so the step-up is integer-deterministic.
-    The pair frame is groups², bounded by the vocabulary.
+    Exactness: per-group rank sums, the pooled count and the tie term
+    are exact Python integers from ONE collect of the (group, quantized
+    value) grid (`_collected_rank_pergroup`; raises past
+    ``RANK_GRID_MAX_CELLS`` cells — coarsen ``value_scale`` to shrink
+    the grid); every z is one double tree over those literals; p
+    quantizes to 1e-12 integers BEFORE the BH ranking so the step-up is
+    integer-deterministic. The pair frame is groups², bounded by the
+    vocabulary.
 
     Output per pair (g_left < g_right): (g_left, g_right, n_left,
     n_right, z, p_value, p_rank, rejected), ordered by p_rank.
     """
-    dec = "decimal(38,0)"
-    if collect_max_cells is not None:
-        # collected-grid fast path: exact integer rank sums / pooled
-        # count / tie term as literals into the identical pairwise
-        # double trees (see kruskal_wallis)
-        per_g, _ties, _n, _tt_int = _rank_pergroup_frames(
-            df, group_col, val_col, value_scale, collect_max_cells
-        )
-        tot = _values_literal_frame(
-            df.sparkSession,
-            [("_n", "bigint"), ("_tt", "decimal(38,0)")],
-            [(_n, _tt_int)],
-        )
-    else:
-        joined, grid = _grid_ranked_rows(df, group_col, val_col, value_scale)
-        per_g = joined.groupBy("_g").agg(
-            F.count(F.lit(1)).alias("_ng"), F.sum(F.col("_r2").cast(dec)).alias("_s2")
-        )
-        tot = joined.agg(F.count(F.lit(1)).alias("_n")).join(
-            F.broadcast(
-                grid.agg(
-                    F.sum(
-                        F.col("_c").cast(dec) * F.col("_c") * F.col("_c")
-                        - F.col("_c").cast(dec)
-                    ).alias("_tt")
-                )
-            )
-        )
+    per_g, _, n, tie_term = _collected_rank_pergroup(df, group_col, val_col, value_scale)
+    tot = _values_literal_frame(
+        df.sparkSession, [("_n", "bigint"), ("_tt", "decimal(38,0)")], [(n, tie_term)]
+    )
     a = per_g.select(
         F.col("_g").alias("g_left"), F.col("_ng").alias("n_left"), F.col("_s2").alias("_s2l")
     )
     b = per_g.select(
         F.col("_g").alias("g_right"), F.col("_ng").alias("n_right"), F.col("_s2").alias("_s2r")
     )
-    # explicit broadcast: both sides are groups-sized by contract, but
-    # cached lineage hides size estimates and the non-equi join would
-    # otherwise degrade to CartesianProduct
+    # explicit broadcast: both sides are groups-sized literal frames;
+    # without the hint the non-equi join may plan a CartesianProduct
     pairs = a.join(F.broadcast(b), F.col("g_left") < F.col("g_right")).join(
         F.broadcast(tot)
     )
@@ -7247,7 +7124,6 @@ def mood_median_test(
     group_col: str,
     val_col: str,
     decimals: int = 6,
-    collect_max_cells: int | None = None,
 ) -> DataFrame:
     """Mood's median test: do k groups share a common median — the
     bluntest, most outlier-proof member of the k-group location family
@@ -7259,119 +7135,63 @@ def mood_median_test(
         E = row_total * group_total / N,  dof = k - 1
 
     The pooled GRAND median is the LOWER median (smallest value whose
-    pooled cumulative reaches ceil(N/2)) on the quantized integer grid
-    — deterministic, no interpolation. Cumulative counts come from the
-    bucketed hierarchical prefix (the `_pooled_cdf_frame` recipe, never
-    a global single-task window). Per-cell (O-E)^2/E terms quantize
+    pooled cumulative reaches ceil(N/2)) on the integer value grid —
+    deterministic, no interpolation. Per-cell (O-E)^2/E terms quantize
     ROUND(·1e12) to integers before the cross-cell sum; chi2 is the
     integer sum divided once. A degenerate split (everything on one
     side of the median) emits NULL chi2.
 
+    Driver-bounded: ONE collect pulls the (group, value) grid; the
+    grand median and the per-group above/total counts are exact Python
+    integers fed as BIGINT literals into the (O-E)^2/E double tree
+    (`_mood_median_tail`). Past ``RANK_GRID_MAX_CELLS`` cells it raises.
+
     Output ONE row: (k, n, grand_median, chi2, dof).
-
-    ``collect_max_cells`` opts into the collected-grid fast path (the
-    round-11 bounded-frame recipe): ONE collect of the (group, value)
-    grid replaces the pooled-prefix windows, the median broadcast chain
-    and the 2 x k table aggregation; the grand median and per-group
-    above/below counts are exact Python integers fed back as BIGINT
-    literals into the IDENTICAL (O-E)^2/E double tree, so results are
-    bit-for-bit unchanged (raises past the bound).
     """
-    from morphik_core_spark.plans.cache import scoped_persist
-
-    if collect_max_cells is not None:
-        collected = bounded_collect(
-            df.filter(F.col(group_col).isNotNull() & F.col(val_col).isNotNull())
-            .select(
-                F.col(group_col).cast("string").alias("_g"),
-                F.col(val_col).cast("bigint").alias("_v"),
-            )
-            .groupBy("_g", "_v")
-            .agg(F.count(F.lit(1)).alias("_c")),
-            collect_max_cells,
-            "mood_median_test median grid (collect_max_cells)",
-        )
-        pooled: dict[int, int] = {}
-        for r in collected:
-            pooled[r["_v"]] = pooled.get(r["_v"], 0) + r["_c"]
-        n_tot = sum(pooled.values())
-        med_v: int | None = None
-        cum = 0
-        for v in sorted(pooled):
-            cum += pooled[v]
-            if cum >= (n_tot + 1) // 2:  # Spark `(n + 1) div 2`, n >= 0
-                med_v = v
-                break
-        acc: dict[str | None, list[int]] = {}
-        for r in collected:
-            a = acc.setdefault(r["_g"], [0, 0])
-            if r["_v"] > med_v:
-                a[0] += r["_c"]
-            a[1] += r["_c"]
-        per_g = _values_literal_frame(
-            df.sparkSession,
-            [
-                ("_g", "string"),
-                ("grand_median", "bigint"),
-                ("_a", "bigint"),
-                ("_tot", "bigint"),
-            ],
-            [(g, med_v, a0, t0) for g, (a0, t0) in acc.items()],
-        )
-        return _mood_median_tail(per_g, decimals)
-
-    cells = scoped_persist(
+    collected = bounded_collect(
         df.filter(F.col(group_col).isNotNull() & F.col(val_col).isNotNull())
         .select(
             F.col(group_col).cast("string").alias("_g"),
             F.col(val_col).cast("bigint").alias("_v"),
         )
         .groupBy("_g", "_v")
-        .agg(F.count(F.lit(1)).alias("_c"))
+        .agg(F.count(F.lit(1)).alias("_c")),
+        RANK_GRID_MAX_CELLS,
+        "mood_median_test median grid (RANK_GRID_MAX_CELLS)",
     )
-    vals = (
-        cells.groupBy("_v")
-        .agg(F.sum("_c").alias("lv"))
-        .withColumn("_bkt", F.expr("CAST(floor(CAST(_v AS DOUBLE) / 1048576.0) AS BIGINT)"))
-    )
-    bsum = vals.groupBy("_bkt").agg(F.sum("lv").alias("_bl"))
-    w_b = Window.orderBy(F.col("_bkt").asc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    bprev = bsum.select(
-        "_bkt", (F.sum("_bl").over(w_b) - F.col("_bl")).alias("_before")
-    )
-    w_in = (
-        Window.partitionBy("_bkt")
-        .orderBy(F.col("_v").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pooled = (
-        vals.withColumn("_in", F.sum("lv").over(w_in))
-        .join(bprev, "_bkt")
-        .select("_v", (F.col("_before") + F.col("_in")).alias("cum"))
-    )
-    tot = cells.agg(F.sum("_c").alias("n"))
-    med = (
-        pooled.join(F.broadcast(tot))
-        .filter(F.expr("cum >= (n + 1) div 2"))
-        .agg(F.min("_v").alias("grand_median"))
-    )
-    per_g = (
-        cells.join(F.broadcast(med))
-        .groupBy("_g", "grand_median")
-        .agg(
-            F.sum(F.when(F.col("_v") > F.col("grand_median"), F.col("_c")).otherwise(F.lit(0))).alias("_a"),
-            F.sum("_c").alias("_tot"),
-        )
+    pooled: dict[int, int] = {}
+    for r in collected:
+        pooled[r["_v"]] = pooled.get(r["_v"], 0) + r["_c"]
+    n_tot = sum(pooled.values())
+    med_v: int | None = None
+    cum = 0
+    for v in sorted(pooled):
+        cum += pooled[v]
+        if cum >= (n_tot + 1) // 2:  # Spark `(n + 1) div 2`, n >= 0
+            med_v = v
+            break
+    acc: dict[str | None, list[int]] = {}
+    for r in collected:
+        a = acc.setdefault(r["_g"], [0, 0])
+        if r["_v"] > med_v:
+            a[0] += r["_c"]
+        a[1] += r["_c"]
+    per_g = _values_literal_frame(
+        df.sparkSession,
+        [
+            ("_g", "string"),
+            ("grand_median", "bigint"),
+            ("_a", "bigint"),
+            ("_tot", "bigint"),
+        ],
+        [(g, med_v, a0, t0) for g, (a0, t0) in acc.items()],
     )
     return _mood_median_tail(per_g, decimals)
 
 
 def _mood_median_tail(per_g: DataFrame, decimals: int) -> DataFrame:
-    """Shared 2 x k chi-square tail over the per-group (above, total)
-    counts — identical expression tree for the distributed and
-    collected-grid paths of `mood_median_test`."""
+    """The 2 x k chi-square of `mood_median_test` over its literal
+    per-group (grand_median, above, total) counts."""
     marg = per_g.groupBy("grand_median").agg(
         F.sum("_a").alias("_ra"),
         F.sum(F.col("_tot") - F.col("_a")).alias("_rb"),
@@ -8426,7 +8246,6 @@ def lilliefors_stat(
     val_col: str,
     value_scale: int = 1,
     decimals: int = 6,
-    collect_max_cells: int | None = None,
 ) -> DataFrame:
     """Lilliefors (one-sample KS-vs-fitted-normal) statistic — the
     CDF-shape normality check beside `dagostino_k2`'s moment form (K^2
@@ -8438,91 +8257,56 @@ def lilliefors_stat(
 
     Phi comes from the shared Abramowitz-Stegun 26.2.17 tail
     (`_AS_NORMAL_SF`) — exp/+,*,/ only, so Spark and DuckDB produce
-    bit-identical doubles; the ECDF runs on the quantized value grid
-    with bucketed-prefix cumulatives; D is a MAX over per-value double
-    gaps (order-free without quantization, unlike sums). Emits the raw
+    bit-identical doubles; D is a MAX over per-value double gaps
+    (order-free without quantization, unlike sums). Emits the raw
     statistic — the Lilliefors null table is external (documented;
     ~0.886/sqrt(n) at 5%).
+
+    Driver-bounded: ONE collect pulls the quantized (value, count)
+    grid; the ECDF cumulatives and the moments are exact Python
+    integers fed as a VALUES literal frame into the mean/std/Phi/gap
+    double trees (`_lilliefors_tail`). Past ``RANK_GRID_MAX_CELLS``
+    distinct values it raises; coarsen ``value_scale`` to shrink the
+    grid.
 
     Output ONE row: (n, mean, std, d_stat) — NULL when n < 4 or the
     column is constant.
     """
     qv = F.expr(f"CAST(ROUND(CAST({val_col} AS DOUBLE) * {int(value_scale)}) AS BIGINT)")
-    from morphik_core_spark.plans.cache import scoped_persist
-
-    if collect_max_cells is not None:
-        # collected-grid fast path (round-12 bounded-frame recipe): ONE
-        # collect of the (value, count) grid; cumulatives and moments
-        # are exact Python integers fed back as a VALUES literal frame
-        # into the IDENTICAL mean/std/Phi/gap double trees, so results
-        # are bit-for-bit unchanged. Raises past the bound.
-        collected = bounded_collect(
-            df.filter(F.col(val_col).isNotNull())
-            .select(qv.alias("_v"))
-            .groupBy("_v")
-            .agg(F.count(F.lit(1)).alias("lv")),
-            collect_max_cells,
-            "lilliefors_stat ECDF grid (collect_max_cells)",
-        )
-        gridm = {r["_v"]: r["lv"] for r in collected}
-        n_tot = sum(gridm.values())
-        s1 = sum(v * c for v, c in gridm.items())
-        s2 = sum(v * v * c for v, c in gridm.items())
-        rows, cum = [], 0
-        for v in sorted(gridm):
-            cum += gridm[v]
-            rows.append((v, gridm[v], cum, n_tot, s1, s2))
-        frame = _values_literal_frame(
-            df.sparkSession,
-            [
-                ("_v", "bigint"),
-                ("lv", "bigint"),
-                ("cum", "bigint"),
-                ("n", "bigint"),
-                ("_s1", "decimal(38,0)"),
-                ("_s2", "decimal(38,0)"),
-            ],
-            rows,
-        )
-        return _lilliefors_tail(frame, decimals)
-
-    vals = scoped_persist(
+    collected = bounded_collect(
         df.filter(F.col(val_col).isNotNull())
         .select(qv.alias("_v"))
         .groupBy("_v")
-        .agg(F.count(F.lit(1)).alias("lv"))
-        .withColumn("_bkt", F.expr("CAST(floor(CAST(_v AS DOUBLE) / 1048576.0) AS BIGINT)"))
+        .agg(F.count(F.lit(1)).alias("lv")),
+        RANK_GRID_MAX_CELLS,
+        "lilliefors_stat ECDF grid (RANK_GRID_MAX_CELLS)",
     )
-    mom = vals.agg(
-        F.sum("lv").alias("n"),
-        F.sum(F.expr("CAST(_v AS DECIMAL(38,0)) * lv")).alias("_s1"),
-        F.sum(F.expr("CAST(_v AS DECIMAL(38,0)) * _v * lv")).alias("_s2"),
-    )
-    bsum = vals.groupBy("_bkt").agg(F.sum("lv").alias("_bl"))
-    w_b = Window.orderBy(F.col("_bkt").asc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    bprev = bsum.select(
-        "_bkt", (F.sum("_bl").over(w_b) - F.col("_bl")).alias("_before")
-    )
-    w_in = (
-        Window.partitionBy("_bkt")
-        .orderBy(F.col("_v").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    frame = (
-        vals.withColumn("_in", F.sum("lv").over(w_in))
-        .join(bprev, "_bkt")
-        .select("_v", "lv", (F.col("_before") + F.col("_in")).alias("cum"))
-        .join(F.broadcast(mom))
+    gridm = {r["_v"]: r["lv"] for r in collected}
+    n_tot = sum(gridm.values())
+    s1 = sum(v * c for v, c in gridm.items())
+    s2 = sum(v * v * c for v, c in gridm.items())
+    rows, cum = [], 0
+    for v in sorted(gridm):
+        cum += gridm[v]
+        rows.append((v, gridm[v], cum, n_tot, s1, s2))
+    frame = _values_literal_frame(
+        df.sparkSession,
+        [
+            ("_v", "bigint"),
+            ("lv", "bigint"),
+            ("cum", "bigint"),
+            ("n", "bigint"),
+            ("_s1", "decimal(38,0)"),
+            ("_s2", "decimal(38,0)"),
+        ],
+        rows,
     )
     return _lilliefors_tail(frame, decimals)
 
 
 def _lilliefors_tail(frame: DataFrame, decimals: int) -> DataFrame:
-    """Shared mean/std/Phi/gap double trees over the cumulated value
-    grid — identical expression tree for the distributed and
-    collected-grid paths of `lilliefors_stat`."""
+    """The mean/std/Phi/gap double trees of `lilliefors_stat` over its
+    literal cumulated value grid."""
     nd = "CAST(n AS DOUBLE)"
     mean = f"(CAST(_s1 AS DOUBLE) / {nd})"
     s = (

@@ -12,11 +12,11 @@ Reference surface (/root/reference/core/database/postgres_database.py):
 
 Spark restatement. The folders table is a *dimension*: even a 100 TB
 corpus has maybe 1e6 folders, so every join against it broadcasts, and
-the recursive descendants walk is a driver-side BFS loop of small
-broadcast equi-joins — one join per tree LEVEL (not per folder), bounded
-by ``max_depth``. Spark has no native recursive CTE; for the
-path-materialized encoding the non-recursive scale path is
-``descendants_by_path`` (a prefix predicate the scan can push down).
+the recursive descendants walk is a driver-side BFS over one bounded
+collect of the (id, parent_id) edges, bounded by ``max_depth``. Spark
+has no native recursive CTE; for the path-materialized encoding the
+non-recursive scale path is ``descendants_by_path`` (a prefix predicate
+the scan can push down).
 Doc counts stay aggregate-side: count per folder key FIRST, then join
 the small result to folders — never join raw documents to folders.
 """
@@ -28,9 +28,13 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from morphik_core_spark.plans.literal import bounded_collect
+from morphik_core_spark.plans.literal import bounded_collect, literal_frame_from_schema
 
 __all__ = ["folder_children", "folder_descendants", "descendants_by_path", "folder_doc_counts"]
+
+# The folders dimension is pulled to the driver for the descendants
+# walk; past this many parented folders it raises
+FOLDERS_MAX_ROWS = 100_000
 
 
 def folder_children(
@@ -61,84 +65,51 @@ def folder_descendants(
     id_col: str = "id",
     parent_col: str = "parent_id",
     max_depth: int = 20,
-    collect_max_folders: int | None = None,
 ) -> DataFrame:
-    """All strict descendants of ``root_ids`` via iterative parent_id BFS.
+    """All strict descendants of ``root_ids`` via parent_id BFS.
 
-    Returns (root, <id_col>, rel_depth) — rel_depth 1 = direct child.
-    One broadcast equi-join per tree level; terminates when a level is
-    empty or at ``max_depth`` (cycle guard). The folders dimension is
-    driver-loop-friendly by construction (see module docstring); for the
+    Returns (root, <id_col>, rel_depth) — rel_depth 1 = direct child;
+    ``root`` is a string and ``id_col`` keeps its input type.
+
+    ONE collect pulls the (id, parent_id) edges of the dimension and
+    the BFS runs on driver dicts — the reference's own shape
+    (move_folder walks the tree driver-side); it terminates when a
+    level is empty or at ``max_depth`` (cycle guard). Ids match as
+    strings, so string roots find integer-typed ids. Per-row
+    multiplicity is kept (no visited set, so DAG/cycle re-reach repeats
+    rows, bounded by ``max_depth``); NULL parents never match. The
+    folders dimension is bounded by contract (see module docstring):
+    more than ``FOLDERS_MAX_ROWS`` parented folders raise. For the
     path-materialized encoding prefer :func:`descendants_by_path`.
-
-    ``collect_max_folders`` opts a CONTRACT-BOUNDED dimension into one
-    collect of (id, parent_id) + the same BFS on driver dicts — the
-    reference's own shape (move_folder walks the tree driver-side). The
-    distributed loop pays 2 jobs per LEVEL (eager checkpoint +
-    emptiness probe); the collected form pays 1 job total. Semantics
-    mirror the join exactly: per-row multiplicity kept (no visited set,
-    so DAG/cycle re-reach repeats rows, bounded by ``max_depth``), NULL
-    parents never match. Raises when the dimension exceeds the bound
-    rather than collecting unboundedly. Outputs are strings/ints only,
-    so results are identical by construction.
     """
-    spark = folders.sparkSession
-    if collect_max_folders is not None:
-        rows = bounded_collect(
-            folders.select(F.col(id_col), F.col(parent_col)).filter(
-                F.col(parent_col).isNotNull()
-            ),
-            collect_max_folders,
-            "folder_descendants folders dimension (collect_max_folders)",
-        )
-        children_of: dict[str, list[str]] = {}
-        for r in rows:
-            children_of.setdefault(r[parent_col], []).append(r[id_col])
-        frontier_d = [(str(r), str(r)) for r in root_ids]
-        out_rows: list[tuple[str, str, int]] = []
-        for depth in range(1, max_depth + 1):
-            nxt = [
-                (root, child)
-                for root, fid in frontier_d
-                for child in children_of.get(fid, ())
-            ]
-            if not nxt:
-                break
-            out_rows.extend((root, child, depth) for root, child in nxt)
-            frontier_d = nxt
-        from morphik_core_spark.plans.literal import values_literal_frame
-
-        return values_literal_frame(
-            spark,
-            [("root", "string"), (id_col, "string"), ("rel_depth", "int")],
-            out_rows,
-        )
-    frontier = spark.createDataFrame([(r,) for r in root_ids], f"{id_col} string").select(
-        F.col(id_col).alias("root"), F.col(id_col)
+    rows = bounded_collect(
+        folders.filter(F.col(parent_col).isNotNull()).select(
+            F.col(id_col),
+            F.col(id_col).cast("string").alias("_id"),
+            F.col(parent_col).cast("string").alias("_parent"),
+        ),
+        FOLDERS_MAX_ROWS,
+        "folder_descendants folders dimension (FOLDERS_MAX_ROWS)",
     )
-    levels: list[DataFrame] = []
+    children_of: dict[str, list] = {}
+    for fid, fid_s, parent in rows:
+        children_of.setdefault(parent, []).append((fid, fid_s))
+    frontier = [(str(r), str(r)) for r in root_ids]
+    out_rows: list[tuple] = []
     for depth in range(1, max_depth + 1):
-        children = (
-            folders.alias("f")
-            .join(
-                F.broadcast(frontier.select("root", F.col(id_col).alias(parent_col))),
-                parent_col,
-            )
-            .select("root", F.col(f"f.{id_col}").alias(id_col), F.lit(depth).alias("rel_depth"))
-        )
-        # dimension-sized: materialize the level to test emptiness and feed
-        # the next join without recomputing the whole lineage each round
-        children = children.localCheckpoint(eager=True)
-        if children.isEmpty():
+        level = [
+            (root, child, child_s)
+            for root, fid_s in frontier
+            for child, child_s in children_of.get(fid_s, ())
+        ]
+        if not level:
             break
-        levels.append(children)
-        frontier = children.select("root", id_col)
-    if not levels:
-        return frontier.limit(0).withColumn("rel_depth", F.lit(0)).select("root", id_col, "rel_depth")
-    out = levels[0]
-    for lvl in levels[1:]:
-        out = out.unionByName(lvl)
-    return out
+        out_rows.extend((root, child, depth) for root, child, _ in level)
+        frontier = [(root, child_s) for root, _, child_s in level]
+    id_t = folders.schema[id_col].dataType.simpleString()
+    return literal_frame_from_schema(
+        folders.sparkSession, f"root string, {id_col} {id_t}, rel_depth int", out_rows
+    )
 
 
 def descendants_by_path(

@@ -42,6 +42,10 @@ __all__ = [
 # stay under 2^63, i.e. per-edge weights up to ~9e6 at full rank
 UNIT = 1_000_000_000_000
 
+# triangle_count pulls the canonical edge list of a contract-bounded
+# graph to the driver; past this many edges it raises
+TRIANGLE_MAX_EDGES = 10_000
+
 
 def pagerank_fixed_point(
     edges: DataFrame,
@@ -268,35 +272,22 @@ def triangle_count(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    collect_max_edges: int | None = None,
 ) -> DataFrame:
     """Global triangle census over an undirected graph — one row:
     (n_nodes, n_edges, n_triangles, n_wedges, global_clustering).
 
-    The scale move is the degree-ordered ORIENTATION (Schank; Suri &
-    Vassilvitskii's MR variant): every undirected edge points from its
-    (degree, id)-smaller endpoint to the larger, so each triangle is
-    counted exactly once AND the wedge-join fan-out per node is bounded
-    by its oriented out-degree — O(sqrt(m)) for any graph, which is what
-    keeps one celebrity node from detonating the self-join at 100 TB.
-    Input edges may be directed/duplicated/self-looped; they normalize
-    to canonical undirected form first. Clustering = 3·triangles /
-    wedges via exact ints into one ROUND(6) division.
+    Input edges may be directed/duplicated/self-looped; one Spark pass
+    normalizes them to the canonical undirected edge list (least,
+    greatest), which ONE collect pulls to the driver. The census runs
+    on plain Python ints: each edge u < v (any consistent order of the
+    node ids, whatever their type) adds |adj(u) ∩ adj(v)|, so each
+    triangle is seen 3x and divided by 3 with `//` (== SQL `div` on
+    non-negative ints). Clustering = 3·triangles / wedges is ONE
+    Spark ROUND(·, 6) division over the exact integer literals.
 
-    ``collect_max_edges`` opts a CONTRACT-BOUNDED graph (a nation/tenant
-    dimension graph, never corpus-scale) into the markov_attribution
-    recipe: one pass derives the canonical edge list, one collect pulls
-    it to the driver, and the census runs on plain Python ints (exact
-    set-intersection triangle count; each triangle seen 3x, divided by
-    3 with `//` == SQL `div` on non-negative ints). Raises if the bound
-    is violated rather than collecting unboundedly. The distributed
-    orientation path is unchanged for unbounded graphs, and the final
-    clustering double still comes from the IDENTICAL Spark
-    ROUND(3·tri/wedges, 6) expression, evaluated over the exact integer
-    literals, so results are bit-for-bit the same either way. Local
-    measurement (sf0.1 nation graph, 25 nodes): the distributed census
-    spends ~20 AQE stage-jobs scheduling sub-KB frames; this path is
-    one job.
+    Driver-bounded: for contract-bounded graphs (a nation/tenant
+    dimension graph, never corpus-scale); more than
+    ``TRIANGLE_MAX_EDGES`` canonical edges raise.
     """
     e = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -307,90 +298,28 @@ def triangle_count(
         )
         .distinct()
     )
-    if collect_max_edges is not None:
-        rows = bounded_collect(
-            e, collect_max_edges, "triangle_count canonical edge list (collect_max_edges)"
-        )
-        adj: dict[int, set[int]] = {}
-        for r in rows:
-            u, v = int(r["u"]), int(r["v"])
-            adj.setdefault(u, set()).add(v)
-            adj.setdefault(v, set()).add(u)
-        n_nodes = len(adj)
-        n_edges = len(rows)
-        n_wedges = sum(d * (d - 1) // 2 for d in (len(s) for s in adj.values()))
-        tri3 = sum(len(adj[u] & adj[v]) for u, vs in adj.items() for v in vs if u < v)
-        n_triangles = tri3 // 3
-        one = e.sparkSession.range(1)
-        return one.select(
-            F.lit(n_nodes).cast("bigint").alias("n_nodes"),
-            F.lit(n_edges).cast("bigint").alias("n_edges"),
-            F.lit(n_triangles).cast("bigint").alias("n_triangles"),
-            F.lit(n_wedges).cast("bigint").alias("n_wedges"),
-            F.when(
-                F.lit(n_wedges) > 0,
-                F.round(
-                    (F.lit(3) * F.lit(n_triangles)).cast("double")
-                    / F.lit(n_wedges).cast("double"),
-                    6,
-                ),
-            ).alias("global_clustering"),
-        )
-    from morphik_core_spark.plans.cache import scoped_persist
-
-    # the canonical edge list feeds the degree count (twice), the
-    # orientation join, and the wedge-closing semi-join - persist it so
-    # the upstream edge derivation (often a fact-table join) runs once
-    e = scoped_persist(e)
-    deg = (
-        e.select(F.col("u").alias("n")).unionByName(e.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
+    rows = bounded_collect(
+        e, TRIANGLE_MAX_EDGES, "triangle_count canonical edge list (TRIANGLE_MAX_EDGES)"
     )
-    du = deg.select(F.col("n").alias("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))
-    # orient from (deg, id)-smaller to larger
-    oriented = (
-        e.join(du, "u").join(dv, "v")
-        .select(
-            F.when(
-                (F.col("du") < F.col("dv"))
-                | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))),
-                F.struct(F.col("u").alias("s"), F.col("v").alias("t")),
-            )
-            .otherwise(F.struct(F.col("v").alias("s"), F.col("u").alias("t")))
-            .alias("o")
-        )
-        .select("o.s", "o.t")
-    )
-    oriented = scoped_persist(oriented)  # both wedge sides read it
-    w1 = oriented.select(F.col("s"), F.col("t").alias("x"))
-    w2 = oriented.select(F.col("s"), F.col("t").alias("y"))
-    wedges = w1.join(w2, "s").filter(F.col("x") < F.col("y"))
-    # a wedge (s; x, y) closes iff {x, y} is an edge (canonical form)
-    tri = wedges.join(
-        e.select(F.col("u").alias("x2"), F.col("v").alias("y2")),
-        (F.least("x", "y") == F.col("x2")) & (F.greatest("x", "y") == F.col("y2")),
-        "left_semi",
-    )
-    stats = (
-        deg.agg(
-            F.count(F.lit(1)).alias("n_nodes"),
-            F.sum(F.expr("d * (d - 1) div 2")).alias("n_wedges"),
-        )
-        .crossJoin(F.broadcast(e.agg(F.count(F.lit(1)).alias("n_edges"))))
-        .crossJoin(F.broadcast(tri.agg(F.count(F.lit(1)).alias("n_triangles"))))
-    )
-    return stats.select(
-        "n_nodes",
-        "n_edges",
-        "n_triangles",
-        "n_wedges",
+    adj: dict = {}
+    for u, v in rows:
+        adj.setdefault(u, set()).add(v)
+        adj.setdefault(v, set()).add(u)
+    n_nodes = len(adj)
+    n_edges = len(rows)
+    n_wedges = sum(d * (d - 1) // 2 for d in (len(s) for s in adj.values()))
+    tri3 = sum(len(adj[u] & adj[v]) for u, vs in adj.items() for v in vs if u < v)
+    n_triangles = tri3 // 3
+    return e.sparkSession.range(1).select(
+        F.lit(n_nodes).cast("bigint").alias("n_nodes"),
+        F.lit(n_edges).cast("bigint").alias("n_edges"),
+        F.lit(n_triangles).cast("bigint").alias("n_triangles"),
+        F.lit(n_wedges).cast("bigint").alias("n_wedges"),
         F.when(
-            F.col("n_wedges") > 0,
+            F.lit(n_wedges) > 0,
             F.round(
-                (F.lit(3) * F.col("n_triangles")).cast("double")
-                / F.col("n_wedges").cast("double"),
+                (F.lit(3) * F.lit(n_triangles)).cast("double")
+                / F.lit(n_wedges).cast("double"),
                 6,
             ),
         ).alias("global_clustering"),

@@ -57,6 +57,12 @@ __all__ = [
 # register index is peeled off
 _HASH_BITS = 60
 
+# Contract bounds of the driver-side pulls (past its bound an operator
+# raises): the (day, token) grid of `sliding_cms_window`, and the keys of
+# a `kmv_overlap` sketch, whose pair loop is quadratic in keys.
+SLIDING_CMS_MAX_ROWS = 500_000
+KMV_MAX_KEYS = 512
+
 
 def hll_distinct(
     df: DataFrame,
@@ -237,7 +243,6 @@ def sliding_cms_window(
     window_days: int = 7,
     depth: int = 3,
     width: int = 16,
-    collect_max_rows: int | None = None,
 ) -> DataFrame:
     """Trailing-``window_days`` per-token counts from SLIDING count-min
     sketches beside the exact rollup: day-grain sketches fan to the
@@ -248,88 +253,53 @@ def sliding_cms_window(
     Input must be the pre-combined (day, token, n) day-grain table.
     Output: (day, token_col, exact_n, cms_est).
 
-    ``collect_max_rows`` opts the CONTRACT-BOUNDED day × token grid into
-    ONE collect: the fanout, cell merge, exact rollup and min-over-depth
-    estimates replay in exact Python integers — the bucket hash is the
-    same md5 fold `portable_hash` computes, NULL days never fan (explode
-    of a NULL sequence drops the row) and NULL tokens hash to a NULL
-    bucket no probe ever matches, exactly as distributed — and the
-    literal result is emitted as a VALUES LocalRelation (every column is
-    already an exact integer/date/string; there is no double tree).
-    Raises past the bound.
+    Driver-bounded: ONE collect pulls the day x token grid (more than
+    ``SLIDING_CMS_MAX_ROWS`` rows raise), and the fanout, cell merge,
+    exact rollup and min-over-depth estimates run in exact Python
+    integers. The bucket hash is the md5 fold `portable_hash` computes,
+    so the sketch equals the one `cms_sketch` builds; NULL days never
+    fan out and NULL tokens never output. The result is a VALUES
+    LocalRelation (every column is an exact integer/date/string; there
+    is no double tree).
     """
-    if collect_max_rows is not None:
-        import datetime as _dt
-        import hashlib as _hl
+    import datetime as _dt
+    import hashlib as _hl
 
-        rows = bounded_collect(
-            day_counts.select(F.col(day_col), F.col(token_col), F.col(count_col)),
-            collect_max_rows,
-            "sliding_cms_window day grid (collect_max_rows)",
-        )
-
-        def _bucket(d: int, tok: str) -> int:
-            h = int(_hl.md5(f"cms{d}|{tok}".encode("utf-8")).hexdigest()[:15], 16)
-            return h % width
-
-        obs_days = {r[0] for r in rows if r[0] is not None}
-        sketch: dict = {}
-        exact: dict = {}
-        for day, tok, n in rows:
-            if day is None:
-                continue  # NULL days never fan out
-            for k in range(window_days):
-                wday = day + _dt.timedelta(days=k)
-                if tok is not None:
-                    exact[(wday, tok)] = exact.get((wday, tok), 0) + n
-                    for d in range(depth):
-                        cell = (wday, d, _bucket(d, tok))
-                        sketch[cell] = sketch.get(cell, 0) + n
-        out_rows = []
-        for (wday, tok), ex in exact.items():
-            if wday not in obs_days:
-                continue
-            est = min(sketch[(wday, d, _bucket(d, tok))] for d in range(depth))
-            out_rows.append((wday, tok, ex, est))
-        tok_t = day_counts.schema[token_col].dataType.simpleString()
-        return literal_frame_from_schema(
-            day_counts.sparkSession,
-            f"day date, {token_col} {tok_t}, exact_n bigint, cms_est bigint",
-            out_rows,
-        )
-
-    from morphik_core_spark.plans.cache import scoped_persist
-
-    # (day x token)-bounded; feeds the sketch, the exact rollup, and the
-    # observed-day semi-join — persist so the upstream is derived once
-    day_counts = scoped_persist(
-        day_counts.select(
-            F.col(day_col).alias("day"), F.col(token_col), F.col(count_col).alias("n")
-        )
+    rows = bounded_collect(
+        day_counts.select(F.col(day_col), F.col(token_col), F.col(count_col)),
+        SLIDING_CMS_MAX_ROWS,
+        "sliding_cms_window day grid (SLIDING_CMS_MAX_ROWS)",
     )
-    day_sketch = cms_sketch(
-        day_counts, token_col, "n", depth=depth, width=width, group_cols=["day"]
+
+    def _bucket(d: int, tok: str) -> int:
+        h = int(_hl.md5(f"cms{d}|{tok}".encode("utf-8")).hexdigest()[:15], 16)
+        return h % width
+
+    obs_days = {r[0] for r in rows if r[0] is not None}
+    sketch: dict = {}
+    exact: dict = {}
+    for day, tok, n in rows:
+        if day is None:
+            continue  # NULL days never fan out
+        for k in range(window_days):
+            wday = day + _dt.timedelta(days=k)
+            if tok is not None:
+                exact[(wday, tok)] = exact.get((wday, tok), 0) + n
+                for d in range(depth):
+                    cell = (wday, d, _bucket(d, tok))
+                    sketch[cell] = sketch.get(cell, 0) + n
+    out_rows = []
+    for (wday, tok), ex in exact.items():
+        if wday not in obs_days:
+            continue
+        est = min(sketch[(wday, d, _bucket(d, tok))] for d in range(depth))
+        out_rows.append((wday, tok, ex, est))
+    tok_t = day_counts.schema[token_col].dataType.simpleString()
+    return literal_frame_from_schema(
+        day_counts.sparkSession,
+        f"day date, {token_col} {tok_t}, exact_n bigint, cms_est bigint",
+        out_rows,
     )
-    fan = F.explode(
-        F.expr(f"sequence(day, date_add(day, {int(window_days) - 1}), interval 1 day)")
-    ).alias("wday")
-    fanned = day_sketch.withColumn("wday", fan)
-    merged = fanned.groupBy("wday", "depth_i", "bucket").agg(
-        F.sum("bucket_count").alias("bucket_count")
-    )
-    exact = (
-        day_counts.withColumn("wday", fan)
-        .groupBy("wday", token_col)
-        .agg(F.sum("n").alias("exact_n"))
-        .join(
-            day_counts.select("day").distinct(),
-            F.col("wday") == F.col("day"),
-            "left_semi",
-        )
-    )
-    return cms_estimates(
-        exact, merged, token_col, depth=depth, width=width, group_cols=["wday"]
-    ).select(F.col("wday").alias("day"), token_col, "exact_n", "cms_est")
 
 
 def bloom_bits(
@@ -430,10 +400,9 @@ def kmv_sketch(
 
 
 def _kmv_overlap_tail(stats: DataFrame, k: int) -> DataFrame:
-    """Shared estimate tail over exact per-pair integer stats
-    (ka, kb, cnt_a, kth_a, cnt_b, kth_b, cnt_u, kth_u, match_k) — the
-    SAME code object for the distributed and collected paths, so the
-    double trees (and their rounding) cannot diverge between them."""
+    """The estimate tail of `kmv_overlap` over its literal per-pair
+    integer stats (ka, kb, cnt_a, kth_a, cnt_b, kth_b, cnt_u, kth_u,
+    match_k): one fixed double tree per estimate."""
     space = float(1 << 30)
 
     def est(cnt, kth):  # exact below k, KMV estimator at k
@@ -464,7 +433,6 @@ def kmv_overlap(
     sketches: DataFrame,
     key_col: str,
     k: int = 128,
-    collect_max_rows: int | None = None,
 ) -> DataFrame:
     """Pairwise corpus-overlap estimates from per-key KMV sketches.
 
@@ -481,98 +449,51 @@ def kmv_overlap(
     hashes, D ≈ (k-1) * 2^30 / v_k; groups smaller than k report their
     exact count. est_intersection = jaccard * est_union (Beyer et al.).
 
-    All comparisons/counts are int-exact; each estimate is one fixed
-    double expression over exact ints, mirrored verbatim in the oracle.
-    Input is the output of :func:`kmv_sketch`; sketches are tiny, so every
-    join below is a broadcast — zero large shuffles regardless of corpus
-    size.
-
-    ``collect_max_rows`` opts into the collected fast path (the
-    round-11/12 recipe): the sketch is keys×k-bounded BY CONSTRUCTION
-    ("driver-safe to collect" above), so ONE collect pulls it, the
-    pairwise union/agreement combinatorics run in exact Python integers
-    (hashes and counts are exact ints; ka<kb uses UTF-8 == code-point
-    order on both engines; NULL keys never pair, exactly as the
-    distributed ka<kb filter null-poisons them), and the integer stats
-    feed the IDENTICAL estimate tail (`_kmv_overlap_tail`) over a VALUES
-    LocalRelation. The bound RAISES when exceeded — unbounded key
-    domains must keep the distributed default.
+    Input is the output of :func:`kmv_sketch`, at most k rows per key.
+    Driver-bounded: ONE collect pulls the non-NULL-key sketch (NULL keys
+    never pair), and the pairwise union/agreement combinatorics run in
+    exact Python integers (hashes and counts are exact ints; ka < kb
+    uses code-point order, which equals Spark's and DuckDB's UTF-8
+    order); the integer stats feed `_kmv_overlap_tail` over a VALUES
+    LocalRelation. The pair loop is quadratic in keys, so the bound is
+    on keys: more than ``KMV_MAX_KEYS`` keys raise, and the pull stops
+    at ``KMV_MAX_KEYS * k`` rows.
     """
-    if collect_max_rows is not None:
-        key_t = sketches.schema[key_col].dataType.simpleString()
-        rows = bounded_collect(
-            sketches.select(F.col(key_col), F.col("v")),
-            collect_max_rows,
-            "kmv_overlap sketch (collect_max_rows)",
+    key_t = sketches.schema[key_col].dataType.simpleString()
+    rows = bounded_collect(
+        sketches.filter(F.col(key_col).isNotNull()).select(F.col(key_col), F.col("v")),
+        KMV_MAX_KEYS * k,
+        "kmv_overlap sketch (KMV_MAX_KEYS * k)",
+    )
+    by_key: dict = {}
+    for kk, v in rows:
+        by_key.setdefault(kk, set()).add(v)
+    if len(by_key) > KMV_MAX_KEYS:
+        raise ValueError(
+            f"kmv_overlap sketch exceeds its bound of {KMV_MAX_KEYS} keys; "
+            f"the bound is a contract, not a truncation"
         )
-        by_key: dict = {}
-        for kk, v in rows:
-            if kk is None:
-                continue  # NULL keys never survive ka < kb
-            by_key.setdefault(kk, set()).add(v)
-        keys_sorted = sorted(by_key)
-        stat_rows = []
-        for i, ka in enumerate(keys_sorted):
-            a_set = by_key[ka]
-            cnt_a, kth_a = len(a_set), max(a_set)
-            for kb in keys_sorted[i + 1:]:
-                b_set = by_key[kb]
-                union_topk = sorted(a_set | b_set)[:k]
-                stat_rows.append((
-                    ka, kb, cnt_a, kth_a, len(b_set), max(b_set),
-                    len(union_topk), union_topk[-1],
-                    sum(1 for v in union_topk if v in a_set and v in b_set),
-                ))
-        stats = literal_frame_from_schema(
-            sketches.sparkSession,
-            f"ka {key_t}, kb {key_t}, cnt_a bigint, kth_a bigint, "
-            "cnt_b bigint, kth_b bigint, cnt_u bigint, kth_u bigint, "
-            "match_k bigint",
-            stat_rows,
-        )
-        return _kmv_overlap_tail(stats, k)
-
-    from morphik_core_spark.plans.cache import scoped_persist
-
-    # keys x k rows, but its LINEAGE is the corpus-wide shingle distinct:
-    # every consumer below (per-key stats, both pair sides, the union
-    # ranking) would re-run that pipeline unpersisted (10 FileScans
-    # measured) — persist the tiny sketch once
-    sketches = scoped_persist(sketches)
-
-    per_key = sketches.groupBy(key_col).agg(
-        F.count(F.lit(1)).alias("cnt"), F.max("v").alias("kth")
+    keys_sorted = sorted(by_key)
+    stat_rows = []
+    for i, ka in enumerate(keys_sorted):
+        a_set = by_key[ka]
+        cnt_a, kth_a = len(a_set), max(a_set)
+        for kb in keys_sorted[i + 1:]:
+            b_set = by_key[kb]
+            union_topk = sorted(a_set | b_set)[:k]
+            stat_rows.append((
+                ka, kb, cnt_a, kth_a, len(b_set), max(b_set),
+                len(union_topk), union_topk[-1],
+                sum(1 for v in union_topk if v in a_set and v in b_set),
+            ))
+    stats = literal_frame_from_schema(
+        sketches.sparkSession,
+        f"ka {key_t}, kb {key_t}, cnt_a bigint, kth_a bigint, "
+        "cnt_b bigint, kth_b bigint, cnt_u bigint, kth_u bigint, "
+        "match_k bigint",
+        stat_rows,
     )
-    keys = per_key.select(F.col(key_col).alias("ka"), F.col("cnt").alias("cnt_a"), F.col("kth").alias("kth_a"))
-    keys_b = per_key.select(F.col(key_col).alias("kb"), F.col("cnt").alias("cnt_b"), F.col("kth").alias("kth_b"))
-    pairs = keys.crossJoin(keys_b).filter(F.col("ka") < F.col("kb"))
-
-    sa = sketches.select(F.col(key_col).alias("ka"), F.col("v").alias("v"))
-    sb = sketches.select(F.col(key_col).alias("kb"), F.col("v").alias("v"))
-    pair_vals = (
-        pairs.select("ka", "kb")
-        .join(sa, "ka")
-        .select("ka", "kb", "v")
-        .unionByName(pairs.select("ka", "kb").join(sb, "kb").select("ka", "kb", "v"))
-        .distinct()
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("ka", "kb").orderBy(F.col("v").asc())
-    merged = pair_vals.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
-    flagged = (
-        merged.join(sa.withColumn("in_a", F.lit(1)), ["ka", "v"], "left")
-        .join(sb.withColumn("in_b", F.lit(1)), ["kb", "v"], "left")
-    )
-    union_stats = flagged.groupBy("ka", "kb").agg(
-        F.count(F.lit(1)).alias("cnt_u"),
-        F.max("v").alias("kth_u"),
-        F.sum(
-            F.when(F.col("in_a").isNotNull() & F.col("in_b").isNotNull(), 1).otherwise(0)
-        ).alias("match_k"),
-    )
-    out = pairs.join(union_stats, ["ka", "kb"])
-    return _kmv_overlap_tail(out, k)
+    return _kmv_overlap_tail(stats, k)
 
 
 def cms_join_size_estimate(

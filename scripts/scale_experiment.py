@@ -96,7 +96,7 @@ def main() -> None:
     ap.add_argument(
         "--ops",
         default="dsir,ppl_buckets,covariance,image_bands,neardup_batch,tfidf,"
-        "c4,kmv,interval,shards,ctfidf",
+        "c4,interval,shards,ctfidf",
     )
     args = ap.parse_args()
     ops = set(args.ops.split(","))
@@ -150,14 +150,6 @@ def main() -> None:
             )
             mat(curation.c4_line_filters(relined, "t", "doc_id"))
         runs["c4_filters"] = c4
-    if "kmv" in ops:
-        from morphik_core_spark.operators.dedup import word_shingles
-        from morphik_core_spark.operators.sketches import kmv_overlap, kmv_sketch
-
-        def kmv(d):
-            sh = word_shingles(d, "text", "source", n=3)
-            mat(kmv_overlap(kmv_sketch(sh, "source", "shingle", k=128), "source", k=128))
-        runs["kmv_overlap"] = kmv
     if "shards" in ops:
         runs["training_shards"] = lambda d: mat(
             curation.training_shards(d, "doc_id", "n_chars", "source", n_shards=64)
@@ -815,14 +807,12 @@ def main() -> None:
     if "r5b" in ops:
         # Late round-5 batch: PSI drift (bin-level shuffles only),
         # basket lift (capped pair join — the 10x axis multiplies
-        # baskets, not basket size), triangle census (10x edges via
-        # perturbed tiling), debounce (one lag window over 10x-deep
-        # keys), readability + script mix (pure maps).
+        # baskets, not basket size), debounce (one lag window over
+        # 10x-deep keys), readability + script mix (pure maps).
         from morphik_core_spark.operators.analytics import (
             basket_lift,
             population_stability,
         )
-        from morphik_core_spark.operators.graph import triangle_count
         from morphik_core_spark.operators.sessions import debounce_events
         from morphik_core_spark.operators.text_analysis import readability, script_mix
 
@@ -881,41 +871,6 @@ def main() -> None:
         report("drift_psi", psi, ev1, ev10)
         report("basket_lift", basket, ev1, ev10)
         report("debounce", debounce, ev1, ev10)
-
-        def tri(edges):
-            mat(triangle_count(edges))
-
-        li1 = load_table(spark, "lineitem", SF_DIR)
-        orders = load_table(spark, "orders", SF_DIR)
-        cust = load_table(spark, "customer", SF_DIR)
-        supp = load_table(spark, "supplier", SF_DIR)
-        base_edges = (
-            li1.join(orders, li1["l_orderkey"] == orders["o_orderkey"])
-            .join(F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"])
-            .join(F.broadcast(supp), li1["l_suppkey"] == supp["s_suppkey"])
-            .select(
-                F.col("c_nationkey").cast("bigint").alias("src"),
-                F.col("s_nationkey").cast("bigint").alias("dst"),
-            )
-            .distinct()
-        )
-        e1_p = os.path.join(tmp, "edges1")
-        base_edges.write.mode("overwrite").parquet(e1_p)
-        edges1 = spark.read.parquet(e1_p)
-        etiles = [
-            edges1.select(
-                (F.col("src") * 10 + k).alias("src"),
-                (F.col("dst") * 10 + ((k + F.col("dst")) % 10)).alias("dst"),
-            )
-            for k in range(10)
-        ]
-        edges10 = etiles[0]
-        for t in etiles[1:]:
-            edges10 = edges10.unionByName(t)
-        e10_p = os.path.join(tmp, "edges10")
-        edges10.write.mode("overwrite").parquet(e10_p)
-        edges10 = spark.read.parquet(e10_p)
-        report("triangle_count", tri, edges1, edges10)
 
         def read_q(d):
             mat(readability(d, "text", "doc_id"))
@@ -1833,7 +1788,6 @@ def main() -> None:
         report("sliding_hll_windows", sliding_hll, ev_h, ev10h)
 
         from morphik_core_spark.operators.analytics import markov_removal_effects
-        from morphik_core_spark.operators.sketches import cms_estimates, cms_sketch
         from morphik_core_spark.operators.validation import t_closeness_classes
 
         ev_m = load_table(spark, "events", SF_DIR).select(
@@ -1855,22 +1809,6 @@ def main() -> None:
             ),
             ev_m, ev10m,
         )
-
-        def sliding_cms(e):
-            dc = e.select(F.to_date("ts").alias("day"), "event_type").groupBy(
-                "day", "event_type"
-            ).agg(F.count(F.lit(1)).alias("n"))
-            sk = cms_sketch(dc, "event_type", "n", depth=3, width=16, group_cols=["day"])
-            fanned = sk.withColumn(
-                "wday", F.explode(F.expr("sequence(day, date_add(day, 6), interval 1 day)"))
-            )
-            mat(
-                fanned.groupBy("wday", "depth_i", "bucket").agg(
-                    F.sum("bucket_count").alias("bucket_count")
-                )
-            )
-
-        report("sliding_cms_windows", sliding_cms, ev_m, ev10m)
 
         report(
             "t_closeness",
@@ -2364,7 +2302,6 @@ def main() -> None:
         # screens, stratified IPW, dimension-side IVM
         from morphik_core_spark.operators.analytics import (
             ipw_ate,
-            kruskal_wallis,
             levene_test,
             ljung_box,
         )
@@ -2406,11 +2343,6 @@ def main() -> None:
             (F.col("c_acctbal") + k * 0.07).alias("c_acctbal"),
         ], "r9_cust10")
 
-        report(
-            "kruskal_wallis",
-            lambda c: mat(kruskal_wallis(c, "c_mktsegment", "c_acctbal", value_scale=100)),
-            cust1, cust10,
-        )
         report(
             "levene_test",
             lambda c: mat(levene_test(c, "c_mktsegment", "c_acctbal", value_scale=100)),
@@ -2668,23 +2600,8 @@ def main() -> None:
         report("embedding_drift", drift, emb1e, emb10e)
 
     if "round9d" in ops:
-        # round-9 wave 4: rank-test family + dispersion screen
-        from morphik_core_spark.operators.analytics import (
-            dunn_posthoc,
-            mann_whitney_u,
-            overdispersion_screen,
-        )
-
-        report(
-            "mann_whitney",
-            lambda d: mat(mann_whitney_u(d, "lang", "n_chars", "en", "de")),
-            docs1, docs10,
-        )
-        report(
-            "dunn_posthoc",
-            lambda d: mat(dunn_posthoc(d, "lang", "n_chars")),
-            docs1, docs10,
-        )
+        # round-9 wave 4: dispersion screen
+        from morphik_core_spark.operators.analytics import overdispersion_screen
 
         ev1f = load_table(spark, "events", SF_DIR).select("event_id", "ts", "event_type")
 
@@ -3165,13 +3082,11 @@ def main() -> None:
 
         report("ad_k_sample", adk, o1k, o10k)
 
-        # spread/location/trend wave: bartlett (k-row moments), mood
-        # (bucketed median + 2xk counts), DW/runs (day-grid series),
-        # page (week x dow blocked ranks)
+        # spread/trend wave: bartlett (k-row moments), DW/runs (day-grid
+        # series), page (week x dow blocked ranks)
         from morphik_core_spark.operators.analytics import (
             bartlett_test,
             durbin_watson,
-            mood_median_test,
             page_trend_test,
             runs_test,
         )
@@ -3201,12 +3116,6 @@ def main() -> None:
             "bartlett",
             lambda c: mat(bartlett_test(c, "c_mktsegment", "c_acctbal", value_scale=100)),
             c1k, c10k,
-        )
-
-        report(
-            "mood_median",
-            lambda d: mat(mood_median_test(d, "lang", "n_chars")),
-            docs1, docs10,
         )
 
         def dw(e):
@@ -3349,7 +3258,7 @@ def main() -> None:
 
         report("kendall_w", kw, evt1, evt10)
 
-        from morphik_core_spark.operators.analytics import cochran_q, lilliefors_stat
+        from morphik_core_spark.operators.analytics import cochran_q
         from pyspark.sql import Window as _W
 
         def cq(e):
@@ -3369,12 +3278,6 @@ def main() -> None:
             mat(cochran_q(flags, "di", "event_type", "f"))
 
         report("cochran_q", cq, evt1, evt10)
-
-        report(
-            "lilliefors",
-            lambda d: mat(lilliefors_stat(d, "n_chars")),
-            docs1, docs10,
-        )
 
         from morphik_core_spark.operators.analytics import page_hinkley
 

@@ -218,37 +218,31 @@ def test_triangle_count_known_graphs(spark):
 
 
 def test_triangle_count_collect_path_matches_distributed(spark):
-    import pytest
-
     from morphik_core_spark.operators.graph import triangle_count
 
-    cases = [
-        [(a, b) for a in range(4) for b in range(4) if a < b],  # K4
-        [(0, 1), (1, 2), (2, 3)],  # path: 0 triangles, clustering 0.0
-        [(0, 1), (1, 0), (1, 1), (1, 2), (2, 0), (0, 2)],  # messy dupes
-        [(100, i) for i in range(50)] + [(0, 1)],  # hub + rim
-    ]
-    for edges in cases:
-        df = spark.createDataFrame(edges, "src int, dst int")
-        dist = triangle_count(df).collect()
-        fast = triangle_count(df, collect_max_edges=1000).collect()
-        assert fast == dist
-    # the bound is a contract: a graph larger than it must raise, not
-    # collect unboundedly
-    big = spark.createDataFrame([(0, i) for i in range(1, 20)], "src int, dst int")
-    with pytest.raises(ValueError, match="collect_max_edges"):
-        triangle_count(big, collect_max_edges=5)
+    def census(edges, schema="src int, dst int"):
+        return [tuple(r) for r in triangle_count(spark.createDataFrame(edges, schema)).collect()]
+
+    # golden rows of the former distributed orientation census
+    assert census([(a, b) for a in range(4) for b in range(4) if a < b]) == [(4, 6, 4, 12, 1.0)]
+    # path: 0 triangles, clustering 0.0
+    assert census([(0, 1), (1, 2), (2, 3)]) == [(4, 3, 0, 2, 0.0)]
+    # reversed duplicates and a self-loop normalize away
+    assert census([(0, 1), (1, 0), (1, 1), (1, 2), (2, 0), (0, 2)]) == [(3, 3, 1, 3, 1.0)]
+    # hub + rim
+    assert census([(100, i) for i in range(50)] + [(0, 1)]) == [(51, 51, 1, 1227, 0.002445)]
+    # an empty graph has 0 wedges
+    assert census([]) == [(0, 0, 0, 0, None)]
 
 
-def test_triangle_orientation_handles_hub(spark):
+def test_triangle_count_string_node_ids(spark):
     from morphik_core_spark.operators.graph import triangle_count
 
-    # star hub + one rim edge: exactly 1 triangle, hub degree 50 —
-    # orientation must point rim->hub so the wedge join never fans out 50^2
-    edges = [(100, i) for i in range(50)] + [(0, 1)]
-    df = spark.createDataFrame(edges, "src int, dst int")
-    r = triangle_count(df).collect()[0]
-    assert r.n_triangles == 1
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")], "src string, dst string"
+    )
+    # golden row of the former distributed census
+    assert [tuple(r) for r in triangle_count(edges).collect()] == [(4, 4, 1, 5, 0.6)]
 
 
 def test_debounce_semantics(spark):

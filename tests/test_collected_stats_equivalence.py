@@ -1,21 +1,18 @@
 """Collected-grid statistics keep the results of the distributed plans
-they replaced or sit beside.
+they replaced.
 
-Two kinds of operator collect a bounded frame once, replay the integer
-combinatorics in exact Python, and feed literals into one Spark double
-tree:
-
-- the series, blocked and categorical tests (friedman, page, kendall W,
-  cochran Q, chi-square, theil-sen, ccf) have only this path, bounded by
-  the module constants of ``analytics.py``; their tests assert golden
-  rows that the former distributed implementation produced on the same
-  fixtures;
-- the rank/median grids and the sketches keep an opt-in
-  ``collect_max_cells`` / ``collect_max_rows`` beside the distributed
-  default, and their tests assert that both paths agree.
+The series, blocked and categorical tests (friedman, page, kendall W,
+cochran Q, chi-square, theil-sen, ccf), the rank and median tests
+(kruskal-wallis, mann-whitney, dunn, mood, lilliefors) and the sketch
+operators (kmv_overlap, sliding_cms_window) collect a bounded frame
+once, replay the integer combinatorics in exact Python, and feed
+literals into one Spark double tree. Each has this one path, bounded by
+a module constant of its own module. The tests assert golden rows that
+the former distributed implementations produced on the same fixtures.
 
 The fixtures exercise every semantic corner — ties, NULL
-groups/blocks/treatments/values, incomplete blocks, empty input. Every
+groups/blocks/treatments/values/days/tokens, incomplete blocks,
+``value_scale``, a constant column, a VARCHAR token, empty input. Every
 bounded pull RAISES instead of truncating, and pulls at most bound + 1
 rows.
 """
@@ -78,34 +75,37 @@ def blocked(spark):
 
 
 def test_kruskal_collected_matches_distributed(grouped):
-    a = kruskal_wallis(grouped, "g", "v")
-    b = kruskal_wallis(grouped, "g", "v", collect_max_cells=10_000)
-    assert _rows(a) == _rows(b)
+    assert _rows(kruskal_wallis(grouped, "g", "v")) == _golden([(4, 16, 0.590074, 0.606118)])
 
 
 def test_kruskal_value_scale_collected_matches(grouped):
     scaled = grouped.select("g", (F.col("v") / 4.0).alias("v"))
-    a = kruskal_wallis(scaled, "g", "v", value_scale=100)
-    b = kruskal_wallis(scaled, "g", "v", value_scale=100, collect_max_cells=10_000)
-    assert _rows(a) == _rows(b)
+    assert _rows(kruskal_wallis(scaled, "g", "v", value_scale=100)) == _golden(
+        [(4, 16, 0.590074, 0.606118)]
+    )
 
 
 def test_mann_whitney_collected_matches_distributed(grouped):
-    a = mann_whitney_u(grouped, "g", "v", "a", "b")
-    b = mann_whitney_u(grouped, "g", "v", "a", "b", collect_max_cells=10_000)
-    assert _rows(a) == _rows(b)
+    assert _rows(mann_whitney_u(grouped, "g", "v", "a", "b")) == _golden(
+        [(5, 5, 10.0, -0.535373, 0.592391935781)]
+    )
+    scaled = grouped.select("g", (F.col("v") / 4.0).alias("v"))
+    assert _rows(mann_whitney_u(scaled, "g", "v", "a", "c", value_scale=100)) == _golden(
+        [(5, 4, 7.0, -0.750652, 0.452862037659)]
+    )
 
 
 def test_dunn_collected_matches_distributed(grouped):
-    a = dunn_posthoc(grouped, "g", "v")
-    b = dunn_posthoc(grouped, "g", "v", collect_max_cells=10_000)
-    assert _rows(a) == _rows(b)
+    assert _rows(dunn_posthoc(grouped, "g", "v")) == _golden([
+        ("a", "b", 5, 5, -0.572204, 0.567183988962, 1, False),
+        ("a", "c", 5, 4, -0.571213, 0.567855363514, 2, False),
+        ("b", "c", 5, 4, -0.031734, 0.974684036648, 3, False),
+    ])
 
 
 def test_mood_collected_matches_distributed(grouped):
-    a = mood_median_test(grouped, "g", "v")
-    b = mood_median_test(grouped, "g", "v", collect_max_cells=10_000)
-    assert _rows(a) == _rows(b)
+    # the NULL group's rows drop; lower grand median 7
+    assert _rows(mood_median_test(grouped, "g", "v")) == _golden([(3, 14, 7, 2.022222, 2)])
 
 
 def test_friedman_collected_matches_distributed(blocked):
@@ -148,12 +148,10 @@ def test_null_treatment_disqualifies_every_block_both_paths(spark):
 
 def test_empty_input_matches_both_paths(spark):
     empty_g = spark.createDataFrame([], "g string, v bigint")
-    assert _rows(kruskal_wallis(empty_g, "g", "v")) == _rows(
-        kruskal_wallis(empty_g, "g", "v", collect_max_cells=10)
-    )
-    assert _rows(mood_median_test(empty_g, "g", "v")) == _rows(
-        mood_median_test(empty_g, "g", "v", collect_max_cells=10)
-    )
+    assert _rows(kruskal_wallis(empty_g, "g", "v")) == _golden([(0, None, None, None)])
+    assert _rows(mood_median_test(empty_g, "g", "v")) == _golden([(None,) * 5])
+    assert _rows(mann_whitney_u(empty_g, "g", "v", "a", "b")) == _golden([(None,) * 5])
+    assert _rows(dunn_posthoc(empty_g, "g", "v")) == []
     empty_b = spark.createDataFrame([], "b string, t string, v bigint")
     assert _rows(friedman_test(empty_b, "b", "t", "v")) == _golden([(0, 0, None)])
     assert _rows(kendall_w(empty_b, "b", "t", "v")) == _golden([(0, 0, None, None)])
@@ -178,28 +176,23 @@ def test_chi_square_collected_matches_distributed(spark):
 
 
 def test_lilliefors_collected_matches_distributed(spark, grouped):
-    a = lilliefors_stat(grouped, "v")
-    b = lilliefors_stat(grouped, "v", collect_max_cells=10_000)
-    assert _rows(a) == _rows(b)
+    assert _rows(lilliefors_stat(grouped, "v")) == _golden([(16, 7.75, 9.355925, 0.321857)])
     scaled = grouped.select((F.col("v") / 3.0).alias("v"))
-    a2 = lilliefors_stat(scaled, "v", value_scale=10)
-    b2 = lilliefors_stat(scaled, "v", value_scale=10, collect_max_cells=10_000)
-    assert _rows(a2) == _rows(b2)
+    assert _rows(lilliefors_stat(scaled, "v", value_scale=10)) == _golden(
+        [(16, 25.875, 31.108145, 0.322254)]
+    )
     tiny = spark.createDataFrame([(1,), (2,), (2,)], "v bigint")  # n < 4 guard
-    assert _rows(lilliefors_stat(tiny, "v")) == _rows(
-        lilliefors_stat(tiny, "v", collect_max_cells=10)
-    )
+    assert _rows(lilliefors_stat(tiny, "v")) == _golden([(3, None, None, None)])
+    constant = spark.createDataFrame([(7,)] * 6, "v bigint")  # zero variance
+    assert _rows(lilliefors_stat(constant, "v")) == _golden([(6, None, None, None)])
     empty = spark.createDataFrame([], "v bigint")
-    assert _rows(lilliefors_stat(empty, "v")) == _rows(
-        lilliefors_stat(empty, "v", collect_max_cells=10)
-    )
-    with pytest.raises(ValueError, match="collect_max_cells"):
-        lilliefors_stat(grouped, "v", collect_max_cells=2)
+    assert _rows(lilliefors_stat(empty, "v")) == _golden([(None,) * 4])
 
 
 def test_bounds_raise_instead_of_truncating(grouped, blocked, monkeypatch):
-    with pytest.raises(ValueError, match="collect_max_cells"):
-        kruskal_wallis(grouped, "g", "v", collect_max_cells=3)
+    monkeypatch.setattr(analytics, "RANK_GRID_MAX_CELLS", 3)
+    with pytest.raises(ValueError, match="rank grid .* exceeds its bound of 3"):
+        kruskal_wallis(grouped, "g", "v")
     monkeypatch.setattr(analytics, "BLOCK_MAX_ROWS", 3)
     with pytest.raises(ValueError, match="friedman_test blocked frame exceeds its bound of 3"):
         friedman_test(blocked, "b", "t", "v")
@@ -207,7 +200,7 @@ def test_bounds_raise_instead_of_truncating(grouped, blocked, monkeypatch):
 
 def test_kmv_overlap_collected_matches_distributed(spark):
     # groups: x/y overlap partially, z below k (exact), w disjoint, a
-    # NULL key (never pairs on either path)
+    # NULL key (never pairs)
     from morphik_core_spark.operators.sketches import kmv_overlap, kmv_sketch
 
     data = (
@@ -219,10 +212,15 @@ def test_kmv_overlap_collected_matches_distributed(spark):
     )
     df = spark.createDataFrame(data, "src string, tok string")
     sk = kmv_sketch(df, "src", "tok", k=8)
-    dist = _rows(kmv_overlap(sk, "src", k=8))
-    coll = _rows(kmv_overlap(sk, "src", k=8, collect_max_rows=10_000))
-    assert dist == coll
-    assert len(dist) == 6  # C(4,2) non-null pairs
+    # C(4,2) non-null pairs
+    assert _rows(kmv_overlap(sk, "src", k=8)) == _golden([
+        ("w", "x", 10.6771, 62.5694, 79.8724, 0, 0.0, 0.0, 0.0, 0.0),
+        ("w", "y", 10.6771, 80.5717, 94.9689, 0, 0.0, 0.0, 0.0, 0.0),
+        ("w", "z", 10.6771, 3.0, 11.0367, 0, 0.0, 0.0, 0.0, 0.0),
+        ("x", "y", 62.5694, 80.5717, 144.0421, 4, 0.5, 72.0211, 1.0, 0.893875),
+        ("x", "z", 62.5694, 3.0, 62.5694, 0, 0.0, 0.0, 0.0, 0.0),
+        ("y", "z", 80.5717, 3.0, 80.5717, 0, 0.0, 0.0, 0.0, 0.0),
+    ])
 
 
 def _count_collects(monkeypatch) -> list:
@@ -242,18 +240,29 @@ def _count_collects(monkeypatch) -> list:
 
 
 def test_kmv_overlap_bound_raises(spark, monkeypatch):
+    from morphik_core_spark.operators import sketches
     from morphik_core_spark.operators.sketches import kmv_overlap, kmv_sketch
 
+    monkeypatch.setattr(sketches, "KMV_MAX_KEYS", 1)
     df = spark.createDataFrame(
         [("x", f"t{i}") for i in range(30)] + [("y", f"t{i}") for i in range(30)],
         "src string, tok string",
     )
     sk = kmv_sketch(df, "src", "tok", k=16)
     pulled = _count_collects(monkeypatch)
-    with pytest.raises(ValueError, match="collect_max_rows"):
-        kmv_overlap(sk, "src", k=16, collect_max_rows=3)
-    # checked before the pull: the 32-row sketch never reaches the driver
-    assert pulled and max(pulled) <= 4
+    with pytest.raises(ValueError, match="exceeds its bound of 16 rows"):
+        kmv_overlap(sk, "src", k=16)
+    # the row bound is KMV_MAX_KEYS * k: the 32-row sketch never reaches
+    # the driver whole
+    assert pulled and max(pulled) <= 17
+    # keys bound the quadratic pair loop even when each key holds one
+    # value and the rows fit
+    singles = kmv_sketch(
+        spark.createDataFrame([("x", "t0"), ("y", "t1")], "src string, tok string"),
+        "src", "tok", k=16,
+    )
+    with pytest.raises(ValueError, match="exceeds its bound of 1 keys"):
+        kmv_overlap(singles, "src", k=16)
 
 
 def test_theil_sen_collected_matches_distributed(spark):
@@ -270,6 +279,9 @@ def test_theil_sen_collected_matches_distributed(spark):
     assert run(rows) == _golden([(9, 28, -2.583334, 17.166667)])
     # even pair count without NULLs
     assert run([(1, 4), (2, 9), (3, 2), (4, 16)]) == _golden([(4, 6, 3.75, 0.625)])
+    # equal indexes never pair: 7 indexed points, 3 equal-index pairs
+    rows = [(3, 30), (1, 10), (2, 12), (1, 14), (3, None), (None, 5), (5, 8), (2, 12)]
+    assert run(rows) == _golden([(8, 18, -1.416667, 14.833333)])
     # single point and empty input
     assert run([(1, 4)]) == _golden([(1, None, None, None)])
     assert run([]) == _golden([(0, None, None, None)])
@@ -312,18 +324,14 @@ def test_sliding_cms_window_collected_matches_distributed(spark):
         (d + dt.timedelta(days=1), None, 4),     # NULL token never outputs
     ]
     df = spark.createDataFrame(rows, "day date, tok string, n long")
-    dist = _rows(sliding_cms_window(df, "day", "tok", "n", window_days=7, depth=3, width=4))
-    coll = _rows(
-        sliding_cms_window(
-            df, "day", "tok", "n", window_days=7, depth=3, width=4,
-            collect_max_rows=10_000,
-        )
-    )
-    assert dist == coll
-    assert len(dist) > 0
-
-    with pytest.raises(ValueError, match="collect_max_rows"):
-        sliding_cms_window(df, "day", "tok", "n", collect_max_rows=2)
+    out = sliding_cms_window(df, "day", "tok", "n", window_days=7, depth=3, width=4)
+    day = [d + dt.timedelta(days=i) for i in (0, 1, 3, 9)]
+    assert _rows(out) == _golden([
+        (day[0], "purchase", 3, 13), (day[0], "view", 10, 13),
+        (day[1], "purchase", 3, 20), (day[1], "view", 17, 20),
+        (day[2], "click", 5, 5), (day[2], "purchase", 3, 20), (day[2], "view", 17, 20),
+        (day[3], "click", 5, 5), (day[3], "view", 2, 2),
+    ])
 
 
 def test_sliding_cms_window_varchar_token_collected_matches_distributed(spark):
@@ -343,11 +351,11 @@ def test_sliding_cms_window_varchar_token_collected_matches_distributed(spark):
             "day date, tok string, n long",
         ).selectExpr("day", "CAST(tok AS VARCHAR(8)) AS tok", "n")
         assert df.schema["tok"].dataType.simpleString() == "varchar(8)"
-        kw = dict(window_days=3, depth=2, width=4)
-        dist = _rows(sliding_cms_window(df, "day", "tok", "n", **kw))
-        coll = _rows(sliding_cms_window(df, "day", "tok", "n", collect_max_rows=100, **kw))
-        assert coll == dist
-        assert len(dist) == 4
+        out = sliding_cms_window(df, "day", "tok", "n", window_days=3, depth=2, width=4)
+        d2 = d + dt.timedelta(days=2)
+        assert _rows(out) == _golden([
+            (d, "buy", 3, 3), (d, "view", 10, 10), (d2, "buy", 3, 3), (d2, "view", 14, 14),
+        ])
     finally:
         if before is None:
             spark.conf.unset(key)
@@ -359,10 +367,11 @@ _BOUND = 3
 
 
 def _bounded_cases():
-    """op name -> (analytics bound constant to patch or None, call that
-    must overflow a bound of ``_BOUND``)."""
+    """op name -> (module, bound constant to patch, call that must
+    overflow a bound of ``_BOUND``); module and constant are None for an
+    option-bounded call."""
+    from morphik_core_spark.operators import folders as folders_mod
     from morphik_core_spark.operators import graph, sketches
-    from morphik_core_spark.operators.folders import folder_descendants
 
     def series(spark):
         return spark.createDataFrame([(i, i % 5) for i in range(30)], "i long, x long")
@@ -407,7 +416,6 @@ def _bounded_cases():
         "autocorrelation": lambda s: a.autocorrelation(series(s), "i", "x"),
         "pacf_durbin_levinson": lambda s: a.pacf_durbin_levinson(series(s), "i", "x"),
         "ljung_box": lambda s: a.ljung_box(series(s), "i", "x"),
-        "theil_sen_trend": lambda s: a.theil_sen_trend(series(s), "i", "x"),
         "mann_kendall_test": lambda s: a.mann_kendall_test(series(s), "i", "x"),
         "seasonal_mann_kendall": lambda s: a.seasonal_mann_kendall(series(s), "i", "x"),
         "cross_correlation": lambda s: a.cross_correlation(pair_series(s), "i", "x", "y"),
@@ -420,42 +428,62 @@ def _bounded_cases():
             blocks(s).withColumn("f", F.expr("CAST(v % 2 AS INT)")), "b", "t", "f"
         ),
     }
-    option_ops = {
-        "kruskal_wallis": lambda s: a.kruskal_wallis(groups(s), "g", "v", collect_max_cells=_BOUND),
-        "mann_whitney_u": lambda s: a.mann_whitney_u(
-            groups(s), "g", "v", "a", "b", collect_max_cells=_BOUND
+    constant_ops = {
+        "kruskal_wallis": (
+            a, "RANK_GRID_MAX_CELLS", lambda s: a.kruskal_wallis(groups(s), "g", "v")
         ),
-        "dunn_posthoc": lambda s: a.dunn_posthoc(groups(s), "g", "v", collect_max_cells=_BOUND),
-        "mood_median_test": lambda s: a.mood_median_test(
-            groups(s), "g", "v", collect_max_cells=_BOUND
+        "mann_whitney_u": (
+            a, "RANK_GRID_MAX_CELLS", lambda s: a.mann_whitney_u(groups(s), "g", "v", "a", "b")
         ),
-        "lilliefors_stat": lambda s: a.lilliefors_stat(groups(s), "v", collect_max_cells=_BOUND),
-        "sliding_cms_window": lambda s: sketches.sliding_cms_window(
-            day_grid(s), "day", "tok", "n", collect_max_rows=_BOUND
+        "dunn_posthoc": (a, "RANK_GRID_MAX_CELLS", lambda s: a.dunn_posthoc(groups(s), "g", "v")),
+        "mood_median_test": (
+            a, "RANK_GRID_MAX_CELLS", lambda s: a.mood_median_test(groups(s), "g", "v")
         ),
-        "pagerank_fixed_point": lambda s: graph.pagerank_fixed_point(
-            edges(s), "src", "dst", "w", collect_max_edges=_BOUND
+        "lilliefors_stat": (
+            a, "RANK_GRID_MAX_CELLS", lambda s: a.lilliefors_stat(groups(s), "v")
         ),
-        "triangle_count": lambda s: graph.triangle_count(edges(s), collect_max_edges=_BOUND),
-        "folder_descendants": lambda s: folder_descendants(
-            folders(s), ["root"], collect_max_folders=_BOUND
+        "theil_sen_trend": (
+            a, "THEIL_SEN_MAX_POINTS", lambda s: a.theil_sen_trend(series(s), "i", "x")
+        ),
+        "sliding_cms_window": (
+            sketches,
+            "SLIDING_CMS_MAX_ROWS",
+            lambda s: sketches.sliding_cms_window(day_grid(s), "day", "tok", "n"),
+        ),
+        "triangle_count": (
+            graph, "TRIANGLE_MAX_EDGES", lambda s: graph.triangle_count(edges(s))
+        ),
+        "folder_descendants": (
+            folders_mod,
+            "FOLDERS_MAX_ROWS",
+            lambda s: folders_mod.folder_descendants(folders(s), ["root"]),
         ),
     }
-    cases = {name: ("SERIES_MAX_POINTS", call) for name, call in series_ops.items()}
-    cases.update({name: ("BLOCK_MAX_ROWS", call) for name, call in block_ops.items()})
+    cases = {name: (a, "SERIES_MAX_POINTS", call) for name, call in series_ops.items()}
+    cases.update({name: (a, "BLOCK_MAX_ROWS", call) for name, call in block_ops.items()})
     cases["chi_square_independence"] = (
+        a,
         "CHI_SQUARE_MAX_CELLS",
         lambda s: a.chi_square_independence(groups(s), "g", "v"),
     )
-    cases.update({name: (None, call) for name, call in option_ops.items()})
+    cases.update(constant_ops)
+    # pagerank keeps its option: the registry runs it on a bounded
+    # dimension graph and on an unbounded vocabulary graph
+    cases["pagerank_fixed_point"] = (
+        None,
+        None,
+        lambda s: graph.pagerank_fixed_point(
+            edges(s), "src", "dst", "w", collect_max_edges=_BOUND
+        ),
+    )
     return cases
 
 
 @pytest.mark.parametrize("op", sorted(_bounded_cases()))
 def test_bounded_pull_raises_before_pulling_past_bound(spark, monkeypatch, op):
-    const, call = _bounded_cases()[op]
-    if const is not None:
-        monkeypatch.setattr(analytics, const, _BOUND)
+    module, const, call = _bounded_cases()[op]
+    if module is not None:
+        monkeypatch.setattr(module, const, _BOUND)
     pulled = _count_collects(monkeypatch)
     with pytest.raises(ValueError, match=f"exceeds its bound of {_BOUND} rows"):
         call(spark).collect()

@@ -53,28 +53,33 @@ def test_descendants_cycle_guard_terminates(spark):
 
 
 def test_descendants_collect_path_matches_distributed(spark):
-    import pytest
+    # golden rows of the former distributed BFS of broadcast joins
+    def walk(folders, roots, **kw):
+        return sorted(tuple(r) for r in fo.folder_descendants(folders, roots, **kw).collect())
 
-    for roots in (["a"], ["a1", "b"], ["nope"]):
-        dist = sorted(
-            tuple(r) for r in fo.folder_descendants(_folders(spark), roots).collect()
-        )
-        fast = sorted(
-            tuple(r)
-            for r in fo.folder_descendants(
-                _folders(spark), roots, collect_max_folders=1000
-            ).collect()
-        )
-        assert fast == dist
-    # cycle guard: identical bounded repetition, no visited set
+    tree = _folders(spark)
+    assert walk(tree, ["a"]) == [
+        ("a", "a1", 1), ("a", "a1x", 2), ("a", "a1xz", 3), ("a", "a1y", 2), ("a", "a2", 1),
+    ]
+    assert walk(tree, ["a1", "b"]) == [("a1", "a1x", 1), ("a1", "a1xz", 2), ("a1", "a1y", 1)]
+    assert walk(tree, ["nope"]) == []
+    # cycle guard: bounded repetition, no visited set
     cyc = spark.createDataFrame(
         [("p", "q", "/p"), ("q", "p", "/q")], "id string, parent_id string, full_path string"
     )
-    rows = fo.folder_descendants(cyc, ["p"], max_depth=5, collect_max_folders=10).collect()
-    assert len(rows) == 5
-    # the bound is a contract: larger dimensions must raise, not collect
-    with pytest.raises(ValueError, match="collect_max_folders"):
-        fo.folder_descendants(_folders(spark), ["a"], collect_max_folders=2)
+    assert walk(cyc, ["p"], max_depth=5) == [
+        ("p", "p", 2), ("p", "p", 4), ("p", "q", 1), ("p", "q", 3), ("p", "q", 5),
+    ]
+
+
+def test_descendants_bigint_ids_match_string_roots(spark):
+    # ids match as strings; the id column keeps its input type
+    folders = spark.createDataFrame(
+        [(1, None), (2, 1), (3, 2), (4, 1)], "id bigint, parent_id bigint"
+    )
+    out = fo.folder_descendants(folders, ["1"])
+    assert sorted(tuple(r) for r in out.collect()) == [("1", 2, 1), ("1", 3, 2), ("1", 4, 1)]
+    assert out.schema.simpleString() == "struct<root:string,id:bigint,rel_depth:int>"
 
 
 def test_descendants_by_path_prefix_not_sibling(spark):

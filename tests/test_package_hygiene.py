@@ -3,6 +3,9 @@ twice (the paste-error class that produced the duplicate
 ``l_diversity_classes`` in round 6 — VERDICT.md r06 "What's wrong" #1),
 and no ``__all__`` list may contain duplicates.
 
+Also: no operator but ``pagerank_fixed_point`` takes a ``collect_max_*``
+option.
+
 Pure-AST, no Spark session needed — runs in milliseconds.
 """
 
@@ -89,3 +92,29 @@ def test_all_entries_exist():
                                 f"undefined name {e.value!r}"
                             )
     assert not offenders, "\n".join(offenders)
+
+
+# pagerank_fixed_point keeps its opt-in collected path: the registry runs
+# it on a bounded dimension graph (nation_pagerank) and on a vocabulary
+# graph with no bound (textrank_keywords), so neither path can go.
+COLLECT_OPTION_ALLOWED = {"pagerank_fixed_point"}
+
+
+def test_operators_take_no_collect_max_option():
+    """Every other bounded operator has one implementation whose bound is
+    a module constant, not a caller-set ``collect_max_*`` switch."""
+    offenders: list[str] = []
+    for path in sorted((PACKAGE / "operators").rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            if node.name in COLLECT_OPTION_ALLOWED:
+                continue
+            a = node.args
+            for arg in a.posonlyargs + a.args + a.kwonlyargs:
+                if arg.arg.startswith("collect_max_"):
+                    offenders.append(
+                        f"{path.relative_to(PACKAGE.parent)}: {node.name}({arg.arg})"
+                    )
+    assert not offenders, "collect_max_* options:\n" + "\n".join(offenders)
