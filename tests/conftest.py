@@ -4,15 +4,24 @@ import os
 
 import pytest
 
-# Test-session core count (bench/driver set their own env; this only
-# affects `pytest tests/`). Measured round 12 on the 32-core sandbox:
-# the heavy data-parallel files (pipeline e2e, property tests) run 1.7x
-# faster at 8 cores (277 -> 164 s) while the parity-dominated light set
-# still improves (332 -> 304 s); 16 cores adds nothing (305 s) because
-# tiny-frame stages then pay more per-stage task bookkeeping.
+# Test-session core count. The Tier-1 verify command (ROADMAP.md) exports
+# SPARK_GRAFT_CPUS=$(nproc), so this default applies only to a bare
+# `pytest tests/`. Measured round 12 on a 32-core host: the heavy data-parallel files (pipeline e2e,
+# property tests) run 1.7x faster at 8 cores (277 -> 164 s) while the
+# parity-dominated light set still improves (332 -> 304 s); 16 cores adds
+# nothing (305 s) because tiny-frame stages then pay more per-stage task
+# bookkeeping.
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def pytest_report_collectionfinish(config, start_path, items):
+    # the session the `spark` fixture builds: get_spark() defaults master
+    # and shuffle partitions to SPARK_GRAFT_CPUS. Printed after collection
+    # rather than as a report header, which `-q` suppresses.
+    cpus = os.environ["SPARK_GRAFT_CPUS"]
+    return f"spark: local[{cpus}], spark.sql.shuffle.partitions={cpus}"
 
 
 @pytest.fixture(scope="session")

@@ -333,8 +333,9 @@ def test_dsir_resample_is_gumbel_topk_deterministic(spark):
     assert sum(1 for r in a if r.logw > 5.0) >= 8
 
 
-def test_perplexity_buckets_tercile_sizes_and_ranges(docs):
+def test_perplexity_buckets_tercile_sizes_and_ranges(spark, docs):
     out = curation.perplexity_buckets(docs, "text", "doc_id", "lang").collect()
+    assert all(r.min_ppl is not None and r.max_ppl is not None for r in out)
     by_lang = {}
     for r in out:
         by_lang.setdefault(r.lang, {})[r.bucket] = r
@@ -349,6 +350,30 @@ def test_perplexity_buckets_tercile_sizes_and_ranges(docs):
                 assert buckets["head"].max_ppl <= buckets["middle"].min_ppl
             if "middle" in buckets and "tail" in buckets:
                 assert buckets["middle"].max_ppl <= buckets["tail"].min_ppl
+
+    # ppl is never NULL, so no cut is: a NULL text drops before scoring,
+    # the <s> start token gives an empty, whitespace-only or one-token text
+    # one bigram, and the join back on the id drops a NULL id
+    edge = spark.createDataFrame(
+        [
+            (1, "the cat sat on the mat", "en"),
+            (2, "", "en"),
+            (3, "   ", "en"),
+            (4, "hello", "en"),
+            (5, "the cat", "en"),
+            (6, None, "en"),
+            (None, "the dog sat", "en"),
+            (7, "bonjour", "fr"),
+            (8, None, "fr"),
+        ],
+        "doc_id long, text string, lang string",
+    )
+    out = curation.perplexity_buckets(edge, "text", "doc_id", "lang").collect()
+    assert all(r.min_ppl is not None and r.max_ppl is not None for r in out)
+    n_docs = {}
+    for r in out:
+        n_docs[r.lang] = n_docs.get(r.lang, 0) + r.n_docs
+    assert n_docs == {"en": 5, "fr": 1}
 
 
 def test_unicode_normalization_stats_nfc(spark):

@@ -1,9 +1,20 @@
-"""Local replica of the driver's correctness gate.
+"""Local replica of the driver's correctness gate, plus the plan gates.
 
-Runs every ``queries()`` entry through Spark AND its ``oracle_sql()`` through
-DuckDB on the same parquet tables, then compares row count, column names, and
-exact values (order-insensitive). The driver does the same at sf0.01 with a
-value hash, so EXACT equality (not approx) is what we assert here.
+``test_registry_query`` builds every ``queries()`` entry ONCE and runs all
+per-query checks on that one DataFrame (building runs real Spark jobs, so
+each extra build is a real cost):
+
+- plan: no ``CartesianProduct``, no ``BatchEvalPython``, no DECIMAL output
+  column, and at most ``_SCAN_BUDGET`` effective scans of any one table;
+- oracle: its ``oracle_sql()`` through DuckDB on the same parquet tables,
+  with no driver-unsafe result type, then row count, column names and
+  exact values (order-insensitive). The driver does the same at sf0.01
+  with a value hash, so EXACT equality (not approx) is what we assert;
+- partition invariance, for the ``SENSITIVE`` queries: the gate runs
+  under 3 shuffle partitions and a rebuild under 17 must return
+  identical rows.
+
+``PARITY_SF_DIR`` moves the whole gate to another scale.
 """
 
 from __future__ import annotations
@@ -13,8 +24,10 @@ import os
 
 import duckdb
 import pytest
+from pyspark.sql.types import DecimalType
 
 import __spark_entry__ as entry_mod
+from morphik_core_spark.plans.cache import release_all_scoped
 from morphik_core_spark.sources.tables import TABLES
 
 # default sf0.001 for speed; CI-equivalent gate runs at sf0.01
@@ -49,30 +62,401 @@ def _normalize(rows, columns):
 QUERY_NAMES = sorted(entry_mod.queries().keys())
 
 
-@pytest.mark.parametrize("name", QUERY_NAMES)
-def test_query_matches_oracle(spark, duck, name):
-    fn = entry_mod.queries()[name]
+# ------------------------------------------------------------ scan budget
+# Effective FileScans per input table: FileSourceScanExec nodes reachable
+# WITHOUT crossing a cache boundary, plus each distinct InMemoryRelation's
+# populating scan counted ONCE (an InMemoryTableScan consumer re-reads the
+# cache, not the file). This is the metric that caught quality_ensemble
+# re-tokenizing the corpus 8x from unpersisted multi-read lineage — a
+# constant-factor waste that multiplies at 100 TB. Budget: <= 4 scans of
+# any one table; exceptions go in the allowlist below with a comment.
+_SCAN_BUDGET = 4
+# name -> measured max scans per table (2026-08, sf0.001 plans); shrink,
+# never grow.
+_SCAN_ALLOWLIST: dict[str, int] = {
+    # Near-empty as of round 10: every other registry query measures
+    # <= _SCAN_BUDGET after the scoped_persist burn-down (worst offender
+    # was 17). Add an entry ONLY with a comment justifying why the extra
+    # scans are cheaper than the persist at 100 TB.
+    #
+    # spearman_screen: two spearman_corr calls x (rows + 2 value grids)
+    # = 6-10 pruned 1-2-column scans. Persisting was MEASURED NET-SLOWER
+    # (3-col projection persist: 3.4->6.3 s at sf0.1; grid-only persist:
+    # 4.5->5.4 s) because the materialization barrier costs more than the
+    # pipelined pruned scans it saves; at 100 TB a corpus-scale cache
+    # thrashes to disk while column-pruned scans stream. Round 12
+    # re-confirmed with a joint-(x,y,count)-grid variant (one scan per
+    # call): 3.8 -> 5.6 s — near-unique pairs don't compress, so the
+    # persist barrier loses again. The scans stay.
+    "spearman_screen": 10,
+}
+
+
+# the counter itself lives in the library so bench.py records the same
+# number per query per round (BENCH_DETAIL "scans" field)
+from morphik_core_spark.plans.scan_audit import effective_scans as _effective_scans
+
+
+# --------------------------------------------------- partition invariance
+# The queries whose math could in principle depend on aggregation order
+# (float sums, iterative updates, sketch merges) must return IDENTICAL
+# rows under different shuffle-partition counts. This is the local
+# stand-in for the 1000-executor question: if a result survives
+# 3-vs-17 partitions bit-for-bit, the arithmetic is order-free
+# (integer/decimal accumulation, array-ordered folds, fixed expression
+# trees) rather than accidentally stable. Plain integer aggregates are
+# trivially invariant and are not listed.
+SENSITIVE = [
+    "hll_distinct",
+    "anomaly_stats",
+    "nation_pagerank",
+    "semantic_dedup",
+    "moving_aggregates",
+    "quantile_estimate",
+    "pmi_bigrams",
+    "perplexity",
+    "bm25_topk",
+    "weighted_sample",
+    "knn_sq8",
+    # round-6 DOUBLE-edge fixes over DECIMAL internals (driver-red class)
+    "range_window_agg",
+    "small_quantity_revenue",
+    "large_order_customers",
+    "dow_seasonality",
+    "skew_salted_agg",
+    # round-6 new operators: scaled-int DCG sums + edge divisions;
+    # containment's two per-pair divisions; hash-threshold Poisson
+    # bootstrap (integer weights, one division per resample mean)
+    "ranking_quality",
+    "containment_dedup",
+    "bootstrap_ci",
+    # round-6 session-2 additions: interval avg division; rolling-median
+    # halves (exact .0/.5 doubles from int64 m2)
+    "interval_overlap",
+    "rolling_median_anomaly",
+    # decimal-argmax edge divisions; merged-register harmonic estimate
+    "changepoint_split",
+    "hll_rollup",
+    # quantized-ln cell sums; global-grid nearest-rank selection
+    "mutual_information",
+    "quantile_normalization",
+    "sliding_distinct_users",
+    # integer fixed-point absorption, double only at the edge
+    "markov_attribution",
+    "t_closeness",
+    "token_budget_mixture",
+    # round-7 additions: pico-quantized AP terms, micro-unit squared
+    # errors, ntile lift ratios, threshold-sweep edge divisions,
+    # coverage ratios, quantized-ln OLS moments
+    "pr_auc",
+    "brier_score",
+    "gains_deciles",
+    "threshold_metrics",
+    "vocab_coverage",
+    "demand_elasticity",
+    "quality_ensemble",
+    "length_matching",
+    "seasonal_decompose",
+    "holt_forecast",
+    "weighted_price_quantiles",
+    "neyman_allocation",
+    "conformal_interval",
+    "isotonic_calibration",
+    "theil_sen_trend",
+    "ratio_metric_ci",
+    "mann_kendall",
+    "sprt_decision",
+    # round-6 float-bearing additions
+    "kmv_source_overlap",
+    "minhash_calibration",
+    "cluster_keywords",
+    "group_sample",
+    "in_transit_by_day",
+    # round-5 TPC-H shape extensions: per-row double division feeding a
+    # struct-min (Q2), DOUBLE-edge shares over DECIMAL sums (Q8/Q14),
+    # two-product DECIMAL subtraction (Q9)
+    "min_cost_supplier",
+    "market_share",
+    "promo_revenue_share",
+    "product_type_profit",
+    # round-5 continuation: ratio trees over one-pass aggregates, mode
+    # tie-breaks, DECIMAL state merges, window-credited DECIMAL revenue,
+    # exact-rank ntile boundaries
+    "validation_suite",
+    "golden_record",
+    "incremental_agg",
+    "attribution",
+    "balance_deciles",
+    # late round-5: scaled-int PSI sum, lift ratios, clustering ratio,
+    # per-doc fixed trees (trivially invariant but cheap to pin)
+    "drift_psi",
+    "basket_lift",
+    "trade_triangles",
+    "hybrid_rrf",
+    "trending_items",
+    "bounce_rate",
+    "readability",
+    "script_mix",
+    # this session: scaled-int OLS (zipf), pico-scaled MSE sums (sq8),
+    # ratio trees over integer counts (transitions, diversity)
+    "zipf_audit",
+    "sq8_error_audit",
+    "event_transitions",
+    "ngram_diversity",
+    # scaled-int centroid means + rounded-cos argmax; bucketed waste ratios
+    "label_centroids",
+    "centroid_assignments",
+    "length_bucketing",
+    # this session: ntile boundaries over DECIMAL monetary, smoothed-
+    # prior ratio trees, present-rate ratios, hash-CDF draws
+    "rfm_segments",
+    "target_encoding",
+    "json_schema_profile",
+    "negative_sampling",
+    # governance/experimentation batch: scaled-int IV sum, sqrt z-trees,
+    # rounded-cos greedy argmax (engine-independent selection), share
+    # ratios vs literal Benford constants
+    "woe_iv",
+    "ab_test",
+    "mmr_rerank",
+    "benford_audit",
+    "k_anonymity",
+    # ml-eval: DECIMAL(38,0) rank sums, scaled-int ECE, contingency trees
+    "auc_score",
+    "calibration",
+    "rater_agreement",
+    # time-series QA + index audit: DECIMAL(38,0) ACF products, integer
+    # CUSUM windows, recall ratio of two rank-stable top-k sets
+    "acf_daily",
+    "cusum_drift",
+    "ann_recall",
+    # distribution audits: DECIMAL(38,0) CDF gaps / grouped-rank sums,
+    # scaled-int error means
+    "ks_price_drift",
+    "revenue_gini",
+    "forecast_backtest",
+    # experimentation + survival: DECIMAL moments, quantized-ln prefix
+    # products with exp at the edge
+    "cuped_ab",
+    "session_survival",
+    "did_effect",
+    # corpus drift: per-term ln trees as scaled-int sums; ratio trees
+    "vocab_drift",
+    "ngram_novelty",
+    # split hygiene: share ratios over hash/threshold partitions
+    "grouped_split",
+    "temporal_split",
+    "mad_outliers",
+    "lineitem_corr",
+    "term_gini",
+    "winsorized_prices",
+    "ucb_allocation",
+    "theil_nations",
+    "source_diversity",
+    "event_trends",
+    # round-9 additions: grid-rank R^2/n micro-quantized terms, micro-
+    # quantized group means feeding integer deviations, pico-quantized
+    # ACF terms, micro-quantized stratum mean diffs
+    "kruskal_doclen",
+    "levene_acctbal",
+    "ljung_box_daily",
+    "ipw_ate_doclen",
+    # quantized-distance sqrt ratios; pico-quantized weight-spine sums
+    "silhouette_labels",
+    "rbo_rankings",
+    # quantized-ln OLS over checkpoint sums; driver-side integer-micro
+    # raking over a collected (hence order-sensitive-if-wrong) cell table
+    "heaps_law",
+    "ipf_mixture",
+    # rounded-argmax window ranks feeding a precision ratio; quantized
+    # centroid distances with sqrt at the edge
+    "linkage_assignment",
+    "embedding_drift_labels",
+    # rank-test family: grid ranks + A&S tails, pico-quantized p before
+    # BH; dispersion ratios over DECIMAL moments
+    "mann_whitney_doclen",
+    "dunn_doclen",
+    "overdispersion_daily",
+    # DECIMAL deviation products with edge divisions; min-centered
+    # micro-moment strength ratios
+    "ccf_event_types",
+    "seasonal_strength_daily",
+    # driver-side integer-micro triple smoothing (series-bounded)
+    "holt_winters_daily",
+    # round-10: pico-quantized driver-side Durbin-Levinson over the
+    # 12-dp ACF; pooled-z + A&S tail + BH in 1e-12 integer space; the
+    # 1.1x double re-price in the two-sided IVM delta
+    "pacf_daily",
+    "chi_posthoc_priority",
+    "ivm_join_both",
+    # round-10 wave 2: dense-grid concordance counts with one final
+    # division; DECIMAL trend/JT cores with A&S tails
+    "kendall_chars_tokens",
+    "cochran_priority_trend",
+    "jt_priority_price",
+    # micro-quantized per-stratum CMH terms; doubled within-block ranks
+    "cmh_lang_exposure",
+    "friedman_dow_types",
+    # median-deviation ANOVA edge divisions; per-season integer S/var;
+    # micro-quantized pairwise r feeding the partial closed form
+    "brown_forsythe_acctbal",
+    "seasonal_mk_daily",
+    "partial_corr_user_activity",
+    # double-domain gap-square accumulation; integer |gap| x width sums
+    "cvm_price_drift",
+    "wasserstein_price_drift",
+    "ad_price_drift",
+    # round-11: driver-side integer-micro multiplicative smoothing
+    # (ratio-micro season, explicit-float division trees); doubled-
+    # midrank k-sample terms quantized 1e-12 before the cross-cell sum
+    "holt_winters_mult_daily",
+    "ad_k_priority",
+    # 1e-12-quantized ln/chi-square/term sums over exact DECIMAL
+    # moments; exact integer runs/lag cores with one double z/d tree;
+    # doubled within-block midranks feeding integer L2
+    "bartlett_acctbal",
+    "mood_median_doclen",
+    "durbin_watson_daily",
+    "runs_daily",
+    "page_week_dow",
+    # doubled |d| midranks with tie-corrected variance; M-scaled micro
+    # precision weights; shared-tree moment transforms; weighted grid
+    # medians
+    "wilcoxon_wow_daily",
+    "welch_anova_acctbal",
+    "dagostino_profiles",
+    "hl_quantity_shift",
+    # driver-side SES + exact-prefix-sum drift recursion
+    "theta_daily",
+    # 1e-12-quantized per-item variances; doubled-midrank concordance
+    "cronbach_dow_types",
+    "kendall_w_dow_types",
+    # exact-integer binary blocked test; A&S-Phi ECDF sup gaps (MAX is
+    # order-free on deterministic doubles)
+    "cochran_q_dow_types",
+    "lilliefors_profiles",
+    # micro-integer PH accumulator over the ordered series window
+    "page_hinkley_daily",
+]
+
+
+def test_sensitive_names_are_unique_registry_queries():
+    dupes = sorted({n for n in SENSITIVE if SENSITIVE.count(n) > 1})
+    assert not dupes, f"SENSITIVE lists these twice: {dupes}"
+    unknown = sorted(set(SENSITIVE) - set(QUERY_NAMES))
+    assert not unknown, f"SENSITIVE names that are not registry queries: {unknown}"
+
+
+def _repr_rows(columns, rows):
+    """Raw ``repr`` rows, columns by name, rows sorted: the bit-level form
+    the partition check compares (no float normalization)."""
+    cols = sorted(columns)
+    return sorted(tuple(repr(r[c]) for c in cols) for r in rows)
+
+
+# DuckDB's untyped SUM(BIGINT) returns HUGEINT (int128) and DECIMAL
+# survives division-free pipelines; the driver hashes TYPED values, so
+# either in an oracle's RESULT schema hash-mismatches against Spark even
+# when all values are equal (round-5 decimal reds; round-7 HUGEINT reds).
+# fetchall() collapses HUGEINT->int, so the bound result types are gated
+# directly: every aggregate an oracle returns must be CAST at the oracle
+# edge (NOTES.md convention).
+_BANNED_ORACLE_TYPES = ("HUGEINT", "DECIMAL", "UHUGEINT")
+
+
+def _check_plan(spark, name, sdf):
+    executed = sdf._jdf.queryExecution().executedPlan()
+    plan = executed.toString()
+    assert "CartesianProduct" not in plan, f"{name}: cartesian product in plan"
+    assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF in plan"
+    decimal_cols = [f.name for f in sdf.schema.fields if isinstance(f.dataType, DecimalType)]
+    assert not decimal_cols, (
+        f"{name}: DECIMAL-typed output column(s) {decimal_cols} — cast to "
+        "DOUBLE with an explicit ROUND at the output edge (keep DECIMAL "
+        "internally); the harness hash diverges on decimal rendering"
+    )
+    scans = _effective_scans(spark, executed)
+    worst = max(scans.values(), default=0)
+    budget = _SCAN_ALLOWLIST.get(name, _SCAN_BUDGET)
+    assert worst <= budget, (
+        f"{name}: {dict(scans)} — a table is read {worst}x (budget {budget}). "
+        "Persist the shared frame (plans.cache.scoped_persist) instead of "
+        "re-deriving it; each extra scan is a full corpus pass at 100 TB."
+    )
+
+
+def _check_oracle(duck, name, spark_cols, spark_rows):
     sql = entry_mod.oracle_sql().get(name)
-    sdf = fn(spark, SF_DIR)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
-
-    if sql is None:
-        # non-SQL-expressible op: weaker rows-only check, like the driver
-        assert len(spark_rows) >= 0
-        return
-
-    res = duck.execute(sql)
-    duck_cols = [d[0] for d in res.description]
-    duck_rows = res.fetchall()
+    assert sql is not None, f"{name}: registry query without oracle SQL"
+    rel = duck.sql(sql)
+    duck_cols = rel.columns
+    bad = [
+        (c, str(t))
+        for c, t in zip(duck_cols, rel.types)
+        if any(b in str(t).upper() for b in _BANNED_ORACLE_TYPES)
+    ]
+    assert not bad, f"{name}: oracle result columns with driver-unsafe types: {bad}"
+    duck_rows = rel.fetchall()
 
     assert sorted(spark_cols) == sorted(duck_cols), f"{name}: column mismatch"
     assert len(spark_rows) == len(duck_rows), f"{name}: row count {len(spark_rows)} vs {len(duck_rows)}"
 
-    s_norm, cols = _normalize(spark_rows, spark_cols)
+    s_norm, _ = _normalize(spark_rows, spark_cols)
     d_norm, _ = _normalize(duck_rows, duck_cols)
     mismatches = [(a, b) for a, b in zip(s_norm, d_norm) if a != b]
     assert not mismatches, f"{name}: first value mismatches (spark vs duck): {mismatches[:5]}"
+
+
+@pytest.mark.parametrize("name", QUERY_NAMES)
+def test_registry_query(spark, duck, name):
+    sensitive = name in SENSITIVE
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        if sensitive:
+            spark.conf.set("spark.sql.shuffle.partitions", "3")
+        sdf = entry_mod.queries()[name](spark, SF_DIR)
+        _check_plan(spark, name, sdf)
+        rows = sdf.collect()
+        _check_oracle(duck, name, sdf.columns, [tuple(r) for r in rows])
+        if sensitive:
+            # the rebuild must not read what the 3-partition run cached
+            release_all_scoped()
+            spark.conf.set("spark.sql.shuffle.partitions", "17")
+            again = entry_mod.queries()[name](spark, SF_DIR)
+            assert _repr_rows(sdf.columns, rows) == _repr_rows(again.columns, again.collect()), (
+                f"{name}: result depends on partitioning"
+            )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+        release_all_scoped()
+
+
+def test_effective_scans_detects_unpersisted_multi_read(spark):
+    """The counter itself: an unpersisted frame consumed by 6 branches
+    shows 6 effective scans; scoped_persist collapses them to 1 (the
+    populating scan, counted once)."""
+    from pyspark.sql import functions as F
+
+    from morphik_core_spark.plans.cache import release_scoped, scoped_persist
+
+    base = spark.read.parquet(f"{SF_DIR}/nation.parquet").select("n_nationkey")
+    branches = [base.agg(F.sum(F.col("n_nationkey") + i).alias("s")) for i in range(6)]
+    u = branches[0]
+    for b in branches[1:]:
+        u = u.unionAll(b)
+    scans = _effective_scans(spark, u._jdf.queryExecution().executedPlan())
+    assert scans.get("nation", 0) == 6, dict(scans)
+
+    cached = scoped_persist(base)
+    try:
+        branches = [cached.agg(F.sum(F.col("n_nationkey") + i).alias("s")) for i in range(6)]
+        u = branches[0]
+        for b in branches[1:]:
+            u = u.unionAll(b)
+        scans = _effective_scans(spark, u._jdf.queryExecution().executedPlan())
+        assert scans.get("nation", 0) == 1, dict(scans)
+    finally:
+        release_scoped()
 
 
 def test_entry_smoke(spark):
@@ -80,37 +464,3 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert df.columns == ["document_id", "score"]
-
-
-# ops whose kernel is genuinely not SQL-expressible (driver records the
-# weaker rows-only check for these)
-ROWS_ONLY = {"chunk_stats"}
-
-
-def test_every_query_has_oracle_or_is_declared():
-    qs, os_ = entry_mod.queries(), entry_mod.oracle_sql()
-    missing = [k for k in qs if k not in os_ and k not in ROWS_ONLY]
-    assert not missing, f"queries without oracle SQL: {missing}"
-
-
-def test_no_hugeint_or_decimal_oracle_result_types(duck):
-    """The driver hashes TYPED values; DuckDB's untyped SUM(BIGINT) returns
-    HUGEINT (int128) and DECIMAL survives division-free pipelines, so either
-    in an oracle's RESULT schema hash-mismatches against Spark even when all
-    values are equal (round-5 decimal reds; round-7 HUGEINT reds). The local
-    replica can't see this because fetchall() collapses HUGEINT->int, so gate
-    the bound result types directly: every aggregate an oracle returns must be
-    CAST at the oracle edge (NOTES.md convention).
-    """
-    banned = ("HUGEINT", "DECIMAL", "UHUGEINT")
-    offenders = []
-    for name, sql in sorted(entry_mod.oracle_sql().items()):
-        types = [str(t).upper() for t in duck.sql(sql).types]
-        bad = [
-            (c, t)
-            for c, t in zip(duck.sql(sql).columns, types)
-            if any(b in t for b in banned)
-        ]
-        if bad:
-            offenders.append((name, bad))
-    assert not offenders, f"oracle result columns with driver-unsafe types: {offenders}"
