@@ -1,6 +1,6 @@
 """Physical-plan audit: walk a DataFrame's executed plan and report the
 patterns that kill jobs at 100 TB — as a library API, so pipelines can
-CI-gate their own queries the way tests/test_oracle_parity.py gates
+CI-gate their own queries the way tests/test_all_query_plans.py gates
 this repo's driver surface.
 
 Each finding is (severity, rule, detail). ``error`` findings are the

@@ -1,5 +1,5 @@
 """Effective-FileScan counter — the scan-amplification metric behind the
-registry gate (tests/test_oracle_parity.py) and the bench sidecar.
+plan gate (tests/test_all_query_plans.py) and the bench sidecar.
 
 "Effective" scans per input table = FileSourceScanExec nodes reachable in
 the physical plan WITHOUT crossing a cache boundary, plus each distinct

@@ -83,7 +83,7 @@ def main() -> None:
         "test); top-k = `TakeOrderedAndProject` (per-partition heaps, no",
         "global sort); codegen = whole-stage-codegen stages in the plan;",
         "python = Arrow-batched kernels (row-at-a-time would be flagged",
-        "ROW-PYTHON and is also denied by `tests/test_oracle_parity.py`).",
+        "ROW-PYTHON and is also denied by `tests/test_all_query_plans.py`).",
         "",
         "| query | shuffles | joins | top-k | codegen | python |",
         "|---|---|---|---|---|---|",

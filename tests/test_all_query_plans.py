@@ -14,31 +14,25 @@ just the operators with dedicated plan tests:
   driver-red on `moving_aggregates` et al.), so every final output
   column must be cast DOUBLE+ROUND at the edge.
 
-New queries inherit the audit the moment they're registered.
+New queries inherit the audit the moment they're registered. The plan
+and its effective scans come from the one shared build of each query
+(``test_oracle_parity.registry_run``), which also serves the oracle and
+partition-invariance tests.
 """
 
 from __future__ import annotations
 
 import pytest
-
-from pyspark.sql.types import DecimalType
-
-import __spark_entry__ as entry_mod
-
-SF_DIR = "/root/testdata/sf0.001"
-
-QUERY_NAMES = sorted(entry_mod.queries().keys())
+from test_oracle_parity import QUERY_NAMES, SF_DIR, registry_run
 
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_no_cartesian_no_row_python(spark, name):
-    df = entry_mod.queries()[name](spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan, f"{name}: cartesian product in plan"
-    assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF in plan"
-    decimal_cols = [f.name for f in df.schema.fields if isinstance(f.dataType, DecimalType)]
-    assert not decimal_cols, (
-        f"{name}: DECIMAL-typed output column(s) {decimal_cols} — cast to "
+    run = registry_run(spark, name).need("build")
+    assert "CartesianProduct" not in run.plan, f"{name}: cartesian product in plan"
+    assert "BatchEvalPython" not in run.plan, f"{name}: row-at-a-time Python UDF in plan"
+    assert not run.decimal_cols, (
+        f"{name}: DECIMAL-typed output column(s) {run.decimal_cols} — cast to "
         "DOUBLE with an explicit ROUND at the output edge (keep DECIMAL "
         "internally); the harness hash diverges on decimal rendering"
     )
@@ -81,13 +75,7 @@ from morphik_core_spark.plans.scan_audit import effective_scans as _effective_sc
 
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_scan_budget(spark, name):
-    from morphik_core_spark.plans.cache import release_all_scoped
-
-    try:
-        df = entry_mod.queries()[name](spark, SF_DIR)
-        scans = _effective_scans(spark, df._jdf.queryExecution().executedPlan())
-    finally:
-        release_all_scoped()
+    scans = registry_run(spark, name).need("build", "scans").scans
     worst = max(scans.values(), default=0)
     budget = _SCAN_ALLOWLIST.get(name, _SCAN_BUDGET)
     assert worst <= budget, (

@@ -5,269 +5,17 @@ return IDENTICAL rows under different shuffle-partition counts.
 This is the local stand-in for the 1000-executor question: if a result
 survives 3-vs-17 partitions bit-for-bit, the arithmetic is order-free
 (integer/decimal accumulation, array-ordered folds, fixed expression
-trees) rather than accidentally stable."""
+trees) rather than accidentally stable. ``SENSITIVE`` lives beside the
+shared build (``test_oracle_parity.registry_run``), which runs these
+queries under 3 partitions and rebuilds them once under 17."""
 
 from __future__ import annotations
 
 import pytest
-
-import __spark_entry__ as entry_mod
-
-SF_DIR = "/root/testdata/sf0.001"
-
-# the queries with float-bearing or iterative math whose design claims
-# order-freedom; plain integer aggregates are trivially invariant
-SENSITIVE = [
-    "hll_distinct",
-    "anomaly_stats",
-    "nation_pagerank",
-    "semantic_dedup",
-    "moving_aggregates",
-    "quantile_estimate",
-    "pmi_bigrams",
-    "perplexity",
-    "bm25_topk",
-    "weighted_sample",
-    "knn_sq8",
-    # round-6 DOUBLE-edge fixes over DECIMAL internals (driver-red class)
-    "range_window_agg",
-    "small_quantity_revenue",
-    "large_order_customers",
-    "dow_seasonality",
-    "skew_salted_agg",
-    # round-6 new operators: scaled-int DCG sums + edge divisions;
-    # containment's two per-pair divisions; hash-threshold Poisson
-    # bootstrap (integer weights, one division per resample mean)
-    "ranking_quality",
-    "containment_dedup",
-    "bootstrap_ci",
-    # round-6 session-2 additions: interval avg division; rolling-median
-    # halves (exact .0/.5 doubles from int64 m2)
-    "interval_overlap",
-    "rolling_median_anomaly",
-    # decimal-argmax edge divisions; merged-register harmonic estimate
-    "changepoint_split",
-    "hll_rollup",
-    # quantized-ln cell sums; global-grid nearest-rank selection
-    "mutual_information",
-    "quantile_normalization",
-    "sliding_distinct_users",
-    # integer fixed-point absorption, double only at the edge
-    "markov_attribution",
-    "t_closeness",
-    "token_budget_mixture",
-    # round-7 additions: pico-quantized AP terms, micro-unit squared
-    # errors, ntile lift ratios, threshold-sweep edge divisions,
-    # coverage ratios, quantized-ln OLS moments
-    "pr_auc",
-    "brier_score",
-    "gains_deciles",
-    "threshold_metrics",
-    "vocab_coverage",
-    "demand_elasticity",
-    "quality_ensemble",
-    "length_matching",
-    "seasonal_decompose",
-    "holt_forecast",
-    "weighted_price_quantiles",
-    "neyman_allocation",
-    "conformal_interval",
-    "isotonic_calibration",
-    "theil_sen_trend",
-    "ratio_metric_ci",
-    "mann_kendall",
-    "sprt_decision",
-    # round-6 float-bearing additions
-    "kmv_source_overlap",
-    "minhash_calibration",
-    "cluster_keywords",
-    "group_sample",
-    "in_transit_by_day",
-    # round-5 TPC-H shape extensions: per-row double division feeding a
-    # struct-min (Q2), DOUBLE-edge shares over DECIMAL sums (Q8/Q14),
-    # two-product DECIMAL subtraction (Q9)
-    "min_cost_supplier",
-    "market_share",
-    "promo_revenue_share",
-    "product_type_profit",
-    # round-5 continuation: ratio trees over one-pass aggregates, mode
-    # tie-breaks, DECIMAL state merges, window-credited DECIMAL revenue,
-    # exact-rank ntile boundaries
-    "validation_suite",
-    "golden_record",
-    "incremental_agg",
-    "attribution",
-    "balance_deciles",
-    # late round-5: scaled-int PSI sum, lift ratios, clustering ratio,
-    # per-doc fixed trees (trivially invariant but cheap to pin)
-    "drift_psi",
-    "basket_lift",
-    "trade_triangles",
-    "hybrid_rrf",
-    "trending_items",
-    "bounce_rate",
-    "readability",
-    "script_mix",
-    # this session: scaled-int OLS (zipf), pico-scaled MSE sums (sq8),
-    # ratio trees over integer counts (transitions, diversity, dow index)
-    "zipf_audit",
-    "sq8_error_audit",
-    "event_transitions",
-    "ngram_diversity",
-    "dow_seasonality",
-    # scaled-int centroid means + rounded-cos argmax; bucketed waste ratios
-    "label_centroids",
-    "centroid_assignments",
-    "length_bucketing",
-    # this session: ntile boundaries over DECIMAL monetary, smoothed-
-    # prior ratio trees, salted two-stage DECIMAL merge, present-rate
-    # ratios, hash-CDF draws
-    "rfm_segments",
-    "target_encoding",
-    "skew_salted_agg",
-    "json_schema_profile",
-    "negative_sampling",
-    # governance/experimentation batch: scaled-int IV sum, sqrt z-trees,
-    # rounded-cos greedy argmax (engine-independent selection), share
-    # ratios vs literal Benford constants
-    "woe_iv",
-    "ab_test",
-    "mmr_rerank",
-    "benford_audit",
-    "k_anonymity",
-    # ml-eval: DECIMAL(38,0) rank sums, scaled-int ECE, contingency trees
-    "auc_score",
-    "calibration",
-    "rater_agreement",
-    # time-series QA + index audit: DECIMAL(38,0) ACF products, integer
-    # CUSUM windows, recall ratio of two rank-stable top-k sets
-    "acf_daily",
-    "cusum_drift",
-    "ann_recall",
-    # distribution audits: DECIMAL(38,0) CDF gaps / grouped-rank sums,
-    # scaled-int error means
-    "ks_price_drift",
-    "revenue_gini",
-    "forecast_backtest",
-    # experimentation + survival: DECIMAL moments, quantized-ln prefix
-    # products with exp at the edge
-    "cuped_ab",
-    "session_survival",
-    "did_effect",
-    # corpus drift: per-term ln trees as scaled-int sums; ratio trees
-    "vocab_drift",
-    "ngram_novelty",
-    # split hygiene: share ratios over hash/threshold partitions
-    "grouped_split",
-    "temporal_split",
-    "mad_outliers",
-    "lineitem_corr",
-    "term_gini",
-    "winsorized_prices",
-    "ucb_allocation",
-    "theil_nations",
-    "source_diversity",
-    "event_trends",
-    # round-9 additions: grid-rank R^2/n micro-quantized terms, micro-
-    # quantized group means feeding integer deviations, pico-quantized
-    # ACF terms, micro-quantized stratum mean diffs
-    "kruskal_doclen",
-    "levene_acctbal",
-    "ljung_box_daily",
-    "ipw_ate_doclen",
-    # quantized-distance sqrt ratios; pico-quantized weight-spine sums
-    "silhouette_labels",
-    "rbo_rankings",
-    # quantized-ln OLS over checkpoint sums; driver-side integer-micro
-    # raking over a collected (hence order-sensitive-if-wrong) cell table
-    "heaps_law",
-    "ipf_mixture",
-    # rounded-argmax window ranks feeding a precision ratio; quantized
-    # centroid distances with sqrt at the edge
-    "linkage_assignment",
-    "embedding_drift_labels",
-    # rank-test family: grid ranks + A&S tails, pico-quantized p before
-    # BH; dispersion ratios over DECIMAL moments
-    "mann_whitney_doclen",
-    "dunn_doclen",
-    "overdispersion_daily",
-    # DECIMAL deviation products with edge divisions; min-centered
-    # micro-moment strength ratios
-    "ccf_event_types",
-    "seasonal_strength_daily",
-    # driver-side integer-micro triple smoothing (series-bounded)
-    "holt_winters_daily",
-    # round-10: pico-quantized driver-side Durbin-Levinson over the
-    # 12-dp ACF; pooled-z + A&S tail + BH in 1e-12 integer space; the
-    # 1.1x double re-price in the two-sided IVM delta
-    "pacf_daily",
-    "chi_posthoc_priority",
-    "ivm_join_both",
-    # round-10 wave 2: dense-grid concordance counts with one final
-    # division; DECIMAL trend/JT cores with A&S tails
-    "kendall_chars_tokens",
-    "cochran_priority_trend",
-    "jt_priority_price",
-    # micro-quantized per-stratum CMH terms; doubled within-block ranks
-    "cmh_lang_exposure",
-    "friedman_dow_types",
-    # median-deviation ANOVA edge divisions; per-season integer S/var;
-    # micro-quantized pairwise r feeding the partial closed form
-    "brown_forsythe_acctbal",
-    "seasonal_mk_daily",
-    "partial_corr_user_activity",
-    # double-domain gap-square accumulation; integer |gap| x width sums
-    "cvm_price_drift",
-    "wasserstein_price_drift",
-    "ad_price_drift",
-    # round-11: driver-side integer-micro multiplicative smoothing
-    # (ratio-micro season, explicit-float division trees); doubled-
-    # midrank k-sample terms quantized 1e-12 before the cross-cell sum
-    "holt_winters_mult_daily",
-    "ad_k_priority",
-    # 1e-12-quantized ln/chi-square/term sums over exact DECIMAL
-    # moments; exact integer runs/lag cores with one double z/d tree;
-    # doubled within-block midranks feeding integer L2
-    "bartlett_acctbal",
-    "mood_median_doclen",
-    "durbin_watson_daily",
-    "runs_daily",
-    "page_week_dow",
-    # doubled |d| midranks with tie-corrected variance; M-scaled micro
-    # precision weights; shared-tree moment transforms; weighted grid
-    # medians
-    "wilcoxon_wow_daily",
-    "welch_anova_acctbal",
-    "dagostino_profiles",
-    "hl_quantity_shift",
-    # driver-side SES + exact-prefix-sum drift recursion
-    "theta_daily",
-    # 1e-12-quantized per-item variances; doubled-midrank concordance
-    "cronbach_dow_types",
-    "kendall_w_dow_types",
-    # exact-integer binary blocked test; A&S-Phi ECDF sup gaps (MAX is
-    # order-free on deterministic doubles)
-    "cochran_q_dow_types",
-    "lilliefors_profiles",
-    # micro-integer PH accumulator over the ordered series window
-    "page_hinkley_daily",
-]
-
-
-def _rows(spark, name):
-    df = entry_mod.queries()[name](spark, SF_DIR)
-    cols = sorted(df.columns)
-    return sorted(tuple(repr(r[c]) for c in cols) for r in df.collect())
+from test_oracle_parity import SENSITIVE, _repr_rows, registry_run
 
 
 @pytest.mark.parametrize("name", SENSITIVE)
 def test_result_is_partition_invariant(spark, name):
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "3")
-        a = _rows(spark, name)
-        spark.conf.set("spark.sql.shuffle.partitions", "17")
-        b = _rows(spark, name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
-    assert a == b, f"{name}: result depends on partitioning"
+    run = registry_run(spark, name).need("build", "collect", "rebuild")
+    assert _repr_rows(run.columns, run.rows) == run.rows_17, f"{name}: result depends on partitioning"

@@ -1,26 +1,28 @@
-"""Local replica of the driver's correctness gate, plus the plan gates.
+"""Local replica of the driver's correctness gate.
 
-``test_registry_query`` builds every ``queries()`` entry ONCE and runs all
-per-query checks on that one DataFrame (building runs real Spark jobs, so
-each extra build is a real cost):
+``test_query_matches_oracle`` runs every ``queries()`` entry through Spark
+AND its ``oracle_sql()`` through DuckDB on the same parquet tables, then
+compares row count, column names, and exact values (order-insensitive).
+The driver does the same at sf0.01 with a value hash, so EXACT equality
+(not approx) is what we assert here.
 
-- plan: no ``CartesianProduct``, no ``BatchEvalPython``, no DECIMAL output
-  column, and at most ``_SCAN_BUDGET`` effective scans of any one table;
-- oracle: its ``oracle_sql()`` through DuckDB on the same parquet tables,
-  with no driver-unsafe result type, then row count, column names and
-  exact values (order-insensitive). The driver does the same at sf0.01
-  with a value hash, so EXACT equality (not approx) is what we assert;
-- partition invariance, for the ``SENSITIVE`` queries: the gate runs
-  under 3 shuffle partitions and a rebuild under 17 must return
-  identical rows.
+Building a registry query runs real Spark jobs, so the per-query tests
+here, in ``test_all_query_plans.py`` (plan and scan budget) and in
+``test_determinism.py`` (partition invariance) share ONE build of each
+query: ``registry_run`` builds it the first time any of them asks, reads
+the executed plan, its effective scans and the collected rows, and, for a
+``SENSITIVE`` query, rebuilds it once more under 17 shuffle partitions.
+The tests then assert on what that run recorded.
 
-``PARITY_SF_DIR`` moves the whole gate to another scale.
+``PARITY_SF_DIR`` moves all of these checks to another scale.
 """
 
 from __future__ import annotations
 
 import math
 import os
+from contextlib import contextmanager
+from dataclasses import dataclass, field
 
 import duckdb
 import pytest
@@ -62,41 +64,6 @@ def _normalize(rows, columns):
 QUERY_NAMES = sorted(entry_mod.queries().keys())
 
 
-# ------------------------------------------------------------ scan budget
-# Effective FileScans per input table: FileSourceScanExec nodes reachable
-# WITHOUT crossing a cache boundary, plus each distinct InMemoryRelation's
-# populating scan counted ONCE (an InMemoryTableScan consumer re-reads the
-# cache, not the file). This is the metric that caught quality_ensemble
-# re-tokenizing the corpus 8x from unpersisted multi-read lineage — a
-# constant-factor waste that multiplies at 100 TB. Budget: <= 4 scans of
-# any one table; exceptions go in the allowlist below with a comment.
-_SCAN_BUDGET = 4
-# name -> measured max scans per table (2026-08, sf0.001 plans); shrink,
-# never grow.
-_SCAN_ALLOWLIST: dict[str, int] = {
-    # Near-empty as of round 10: every other registry query measures
-    # <= _SCAN_BUDGET after the scoped_persist burn-down (worst offender
-    # was 17). Add an entry ONLY with a comment justifying why the extra
-    # scans are cheaper than the persist at 100 TB.
-    #
-    # spearman_screen: two spearman_corr calls x (rows + 2 value grids)
-    # = 6-10 pruned 1-2-column scans. Persisting was MEASURED NET-SLOWER
-    # (3-col projection persist: 3.4->6.3 s at sf0.1; grid-only persist:
-    # 4.5->5.4 s) because the materialization barrier costs more than the
-    # pipelined pruned scans it saves; at 100 TB a corpus-scale cache
-    # thrashes to disk while column-pruned scans stream. Round 12
-    # re-confirmed with a joint-(x,y,count)-grid variant (one scan per
-    # call): 3.8 -> 5.6 s — near-unique pairs don't compress, so the
-    # persist barrier loses again. The scans stay.
-    "spearman_screen": 10,
-}
-
-
-# the counter itself lives in the library so bench.py records the same
-# number per query per round (BENCH_DETAIL "scans" field)
-from morphik_core_spark.plans.scan_audit import effective_scans as _effective_scans
-
-
 # --------------------------------------------------- partition invariance
 # The queries whose math could in principle depend on aggregation order
 # (float sums, iterative updates, sketch merges) must return IDENTICAL
@@ -105,7 +72,8 @@ from morphik_core_spark.plans.scan_audit import effective_scans as _effective_sc
 # 3-vs-17 partitions bit-for-bit, the arithmetic is order-free
 # (integer/decimal accumulation, array-ordered folds, fixed expression
 # trees) rather than accidentally stable. Plain integer aggregates are
-# trivially invariant and are not listed.
+# trivially invariant and are not listed. A listed query runs its one
+# shared build under 3 partitions and is rebuilt under 17.
 SENSITIVE = [
     "hll_distinct",
     "anomaly_stats",
@@ -350,113 +318,100 @@ def test_sensitive_names_are_unique_registry_queries():
 def _repr_rows(columns, rows):
     """Raw ``repr`` rows, columns by name, rows sorted: the bit-level form
     the partition check compares (no float normalization)."""
-    cols = sorted(columns)
-    return sorted(tuple(repr(r[c]) for c in cols) for r in rows)
+    idx = sorted(range(len(columns)), key=lambda i: columns[i])
+    return sorted(tuple(repr(row[i]) for i in idx) for row in rows)
 
 
-# DuckDB's untyped SUM(BIGINT) returns HUGEINT (int128) and DECIMAL
-# survives division-free pipelines; the driver hashes TYPED values, so
-# either in an oracle's RESULT schema hash-mismatches against Spark even
-# when all values are equal (round-5 decimal reds; round-7 HUGEINT reds).
-# fetchall() collapses HUGEINT->int, so the bound result types are gated
-# directly: every aggregate an oracle returns must be CAST at the oracle
-# edge (NOTES.md convention).
-_BANNED_ORACLE_TYPES = ("HUGEINT", "DECIMAL", "UHUGEINT")
+# ------------------------------------------------------ one build per query
+@dataclass
+class QueryRun:
+    """What one build of a registry query showed. A step that raised is
+    kept in ``errors`` and re-raised by every test that ``need``s it."""
+
+    plan: str = ""  # executedPlan().toString()
+    decimal_cols: list[str] = field(default_factory=list)
+    scans: dict[str, int] = field(default_factory=dict)  # effective scans per table
+    columns: list[str] = field(default_factory=list)
+    rows: list[tuple] = field(default_factory=list)
+    rows_17: list[tuple] | None = None  # _repr_rows of the 17-partition rebuild
+    errors: dict[str, Exception] = field(default_factory=dict)
+
+    def need(self, *steps: str) -> QueryRun:
+        for step in steps:
+            if step in self.errors:
+                raise self.errors[step]
+        return self
 
 
-def _check_plan(spark, name, sdf):
-    executed = sdf._jdf.queryExecution().executedPlan()
-    plan = executed.toString()
-    assert "CartesianProduct" not in plan, f"{name}: cartesian product in plan"
-    assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF in plan"
-    decimal_cols = [f.name for f in sdf.schema.fields if isinstance(f.dataType, DecimalType)]
-    assert not decimal_cols, (
-        f"{name}: DECIMAL-typed output column(s) {decimal_cols} — cast to "
-        "DOUBLE with an explicit ROUND at the output edge (keep DECIMAL "
-        "internally); the harness hash diverges on decimal rendering"
-    )
-    scans = _effective_scans(spark, executed)
-    worst = max(scans.values(), default=0)
-    budget = _SCAN_ALLOWLIST.get(name, _SCAN_BUDGET)
-    assert worst <= budget, (
-        f"{name}: {dict(scans)} — a table is read {worst}x (budget {budget}). "
-        "Persist the shared frame (plans.cache.scoped_persist) instead of "
-        "re-deriving it; each extra scan is a full corpus pass at 100 TB."
-    )
+@contextmanager
+def _step(run: QueryRun, step: str):
+    try:
+        yield
+    except Exception as exc:
+        run.errors[step] = exc
 
 
-def _check_oracle(duck, name, spark_cols, spark_rows):
-    sql = entry_mod.oracle_sql().get(name)
-    assert sql is not None, f"{name}: registry query without oracle SQL"
-    rel = duck.sql(sql)
-    duck_cols = rel.columns
-    bad = [
-        (c, str(t))
-        for c, t in zip(duck_cols, rel.types)
-        if any(b in str(t).upper() for b in _BANNED_ORACLE_TYPES)
-    ]
-    assert not bad, f"{name}: oracle result columns with driver-unsafe types: {bad}"
-    duck_rows = rel.fetchall()
-
-    assert sorted(spark_cols) == sorted(duck_cols), f"{name}: column mismatch"
-    assert len(spark_rows) == len(duck_rows), f"{name}: row count {len(spark_rows)} vs {len(duck_rows)}"
-
-    s_norm, _ = _normalize(spark_rows, spark_cols)
-    d_norm, _ = _normalize(duck_rows, duck_cols)
-    mismatches = [(a, b) for a, b in zip(s_norm, d_norm) if a != b]
-    assert not mismatches, f"{name}: first value mismatches (spark vs duck): {mismatches[:5]}"
+_RUNS: dict[str, QueryRun] = {}
 
 
-@pytest.mark.parametrize("name", QUERY_NAMES)
-def test_registry_query(spark, duck, name):
+def registry_run(spark, name: str) -> QueryRun:
+    """The one shared build of registry query ``name``."""
+    if name not in _RUNS:
+        _RUNS[name] = _run_query(spark, name)
+    return _RUNS[name]
+
+
+def _run_query(spark, name: str) -> QueryRun:
+    from morphik_core_spark.plans.scan_audit import effective_scans
+
+    run = QueryRun()
     sensitive = name in SENSITIVE
     before = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         if sensitive:
             spark.conf.set("spark.sql.shuffle.partitions", "3")
-        sdf = entry_mod.queries()[name](spark, SF_DIR)
-        _check_plan(spark, name, sdf)
-        rows = sdf.collect()
-        _check_oracle(duck, name, sdf.columns, [tuple(r) for r in rows])
-        if sensitive:
-            # the rebuild must not read what the 3-partition run cached
-            release_all_scoped()
-            spark.conf.set("spark.sql.shuffle.partitions", "17")
-            again = entry_mod.queries()[name](spark, SF_DIR)
-            assert _repr_rows(sdf.columns, rows) == _repr_rows(again.columns, again.collect()), (
-                f"{name}: result depends on partitioning"
-            )
+        with _step(run, "build"):
+            sdf = entry_mod.queries()[name](spark, SF_DIR)
+            executed = sdf._jdf.queryExecution().executedPlan()
+            run.plan = executed.toString()
+            run.decimal_cols = [f.name for f in sdf.schema.fields if isinstance(f.dataType, DecimalType)]
+        if "build" in run.errors:
+            return run
+        with _step(run, "scans"):
+            run.scans = dict(effective_scans(spark, executed))
+        with _step(run, "collect"):
+            run.columns = sdf.columns
+            run.rows = [tuple(r) for r in sdf.collect()]
+        if sensitive and "collect" not in run.errors:
+            with _step(run, "rebuild"):
+                # the rebuild must not read what the 3-partition run cached
+                release_all_scoped()
+                spark.conf.set("spark.sql.shuffle.partitions", "17")
+                again = entry_mod.queries()[name](spark, SF_DIR)
+                run.rows_17 = _repr_rows(again.columns, [tuple(r) for r in again.collect()])
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
         release_all_scoped()
+    return run
 
 
-def test_effective_scans_detects_unpersisted_multi_read(spark):
-    """The counter itself: an unpersisted frame consumed by 6 branches
-    shows 6 effective scans; scoped_persist collapses them to 1 (the
-    populating scan, counted once)."""
-    from pyspark.sql import functions as F
+@pytest.mark.parametrize("name", QUERY_NAMES)
+def test_query_matches_oracle(spark, duck, name):
+    run = registry_run(spark, name).need("build", "collect")
+    sql = entry_mod.oracle_sql().get(name)
+    assert sql is not None, f"{name}: registry query without oracle SQL"
 
-    from morphik_core_spark.plans.cache import release_scoped, scoped_persist
+    res = duck.execute(sql)
+    duck_cols = [d[0] for d in res.description]
+    duck_rows = res.fetchall()
 
-    base = spark.read.parquet(f"{SF_DIR}/nation.parquet").select("n_nationkey")
-    branches = [base.agg(F.sum(F.col("n_nationkey") + i).alias("s")) for i in range(6)]
-    u = branches[0]
-    for b in branches[1:]:
-        u = u.unionAll(b)
-    scans = _effective_scans(spark, u._jdf.queryExecution().executedPlan())
-    assert scans.get("nation", 0) == 6, dict(scans)
+    assert sorted(run.columns) == sorted(duck_cols), f"{name}: column mismatch"
+    assert len(run.rows) == len(duck_rows), f"{name}: row count {len(run.rows)} vs {len(duck_rows)}"
 
-    cached = scoped_persist(base)
-    try:
-        branches = [cached.agg(F.sum(F.col("n_nationkey") + i).alias("s")) for i in range(6)]
-        u = branches[0]
-        for b in branches[1:]:
-            u = u.unionAll(b)
-        scans = _effective_scans(spark, u._jdf.queryExecution().executedPlan())
-        assert scans.get("nation", 0) == 1, dict(scans)
-    finally:
-        release_scoped()
+    s_norm, _ = _normalize(run.rows, run.columns)
+    d_norm, _ = _normalize(duck_rows, duck_cols)
+    mismatches = [(a, b) for a, b in zip(s_norm, d_norm) if a != b]
+    assert not mismatches, f"{name}: first value mismatches (spark vs duck): {mismatches[:5]}"
 
 
 def test_entry_smoke(spark):
@@ -464,3 +419,28 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert df.columns == ["document_id", "score"]
+
+
+def test_every_query_has_oracle_or_is_declared():
+    # nothing is rows-only: every registry query has an oracle
+    missing = sorted(set(entry_mod.queries()) - set(entry_mod.oracle_sql()))
+    assert not missing, f"queries without oracle SQL: {missing}"
+
+
+def test_no_hugeint_or_decimal_oracle_result_types(duck):
+    """The driver hashes TYPED values; DuckDB's untyped SUM(BIGINT) returns
+    HUGEINT (int128) and DECIMAL survives division-free pipelines, so either
+    in an oracle's RESULT schema hash-mismatches against Spark even when all
+    values are equal (round-5 decimal reds; round-7 HUGEINT reds). The local
+    replica can't see this because fetchall() collapses HUGEINT->int, so gate
+    the bound result types directly: every aggregate an oracle returns must be
+    CAST at the oracle edge (NOTES.md convention).
+    """
+    banned = ("HUGEINT", "DECIMAL", "UHUGEINT")
+    offenders = []
+    for name, sql in sorted(entry_mod.oracle_sql().items()):
+        rel = duck.sql(sql)
+        bad = [(c, str(t)) for c, t in zip(rel.columns, rel.types) if any(b in str(t).upper() for b in banned)]
+        if bad:
+            offenders.append((name, bad))
+    assert not offenders, f"oracle result columns with driver-unsafe types: {offenders}"

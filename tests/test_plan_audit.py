@@ -65,7 +65,7 @@ def test_exchange_budget(spark):
 
 def test_driver_queries_pass_error_gate(spark, sf_dir):
     """Spot-check: real driver queries audit clean at the error level
-    (the registry gate in tests/test_oracle_parity.py checks every query)."""
+    (the parametrized twin of tests/test_all_query_plans.py)."""
     import __spark_entry__ as em
 
     for name in ["semi_join_auth", "balance_deciles", "drift_psi"]:
