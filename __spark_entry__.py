@@ -7870,8 +7870,7 @@ def _q_page_hinkley_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     alarm should stay quiet on the generator's stationary series) and
     a +50% uplift injected into the second half of the days (the
     detector MUST alarm after the shift point). Exact micro-integer
-    accumulator; streaming twin `streaming.stateful.
-    page_hinkley_stream` replays it bit-for-bit."""
+    accumulator."""
     from morphik_core_spark.operators.analytics import page_hinkley
     from morphik_core_spark.plans.cache import scoped_persist
 

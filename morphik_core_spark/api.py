@@ -1203,8 +1203,8 @@ class MorphikSpark:
         ONLY this document's chunks, bump updated_at (reference POST
         /documents/{id}/update_text, routes/documents.py:397-440). The
         documents-table mutation rides the partition-granularity merge;
-        the chunk swap is a filter + union snapshot (at 100 TB chunks are
-        bucketed by document_id — the swap touches one bucket's files)."""
+        the chunk swap is a filter + union that `_write_chunks` writes
+        as a new flat chunks snapshot (every chunk file is rewritten)."""
         doc = self.get_document(document_id)
         if doc is None:
             raise KeyError(document_id)

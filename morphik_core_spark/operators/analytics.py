@@ -285,10 +285,9 @@ def quantile_estimate(
     events: DataFrame,
     group_col: str,
     value_col: str,
-    quantiles: Sequence[float] = (0.5, 0.9, 0.99),
-    bin_width: float = 5.0,
 ) -> DataFrame:
-    """Histogram-sketch quantiles per group: (group, q, est).
+    """Histogram-sketch quantiles per group: (group, q, est) for q in
+    0.5, 0.9 and 0.99, over 5.0-wide value bins.
 
     The mergeable scale path beside `curation.length_percentiles`' exact
     nearest-rank: the histogram is a fixed-size additive sketch (combine
@@ -304,6 +303,7 @@ def quantile_estimate(
     """
     from pyspark.sql import Window
 
+    quantiles, bin_width = (0.5, 0.9, 0.99), 5.0
     hist = value_histogram(events, group_col, value_col, bin_width)
     w = Window.partitionBy(group_col).orderBy("bin")
     cum = hist.select(
@@ -1027,7 +1027,6 @@ def cusum_screen(
     idx_col: str,
     val_col: str,
     h_mult: int = 3,
-    target: int | None = None,
 ) -> DataFrame:
     """One-sided CUSUM change detector over an integer series (Page
     1954): cumulative excess over the series' floor-mean target, with
@@ -1054,16 +1053,7 @@ def cusum_screen(
         F.col(idx_col).cast("bigint").alias("idx"),
         F.col(val_col).cast("bigint").alias("value"),
     )
-    if target is None:
-        glob = base.agg(
-            F.expr("CAST(sum(value) AS BIGINT) div count(1)").alias("_target")
-        )
-    else:
-        # fixed trained target: the form a streaming monitor uses
-        # (`streaming.stateful.cusum_stream` is the incremental twin)
-        glob = base.sparkSession.range(1).select(
-            F.lit(int(target)).cast("bigint").alias("_target")
-        )
+    glob = base.agg(F.expr("CAST(sum(value) AS BIGINT) div count(1)").alias("_target"))
     w = Window.orderBy("idx").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     cum = (
         base.join(F.broadcast(glob))
@@ -3738,7 +3728,7 @@ def sprt_monitor(
 
     Scale: the per-group ordered window is the batch REPLAY of an
     inherently sequential monitor — a deployment runs it incrementally
-    (cusum_stream-style O(1) state); the replay's window shards by
+    (O(1) state per group); the replay's window shards by
     group and SPRT's geometric decision time means real inputs decide
     within O(100) units, so cap the replay input upstream if the unit
     stream is corpus-scale.
@@ -4575,8 +4565,6 @@ def ewma_chart(
     lam: float = 0.2,
     n_sigma: float = 3.0,
     decimals: int = 6,
-    mu: float | None = None,
-    sigma: float | None = None,
 ) -> DataFrame:
     """EWMA control chart (Roberts 1959): exponentially weighted moving
     average of a series against time-varying control limits
@@ -4598,11 +4586,6 @@ def ewma_chart(
 
     Output per index: (idx, value, ewma, ucl, lcl, out_of_control) —
     the flag is an exact integer micro-unit comparison.
-
-    ``mu``/``sigma`` default to the series' own exact-moment estimates
-    (retrospective chart). Pass them explicitly to chart against KNOWN
-    process parameters — the live-monitoring form `streaming.stateful.
-    ewma_stream` requires, since a stream can't see global moments.
     """
 
     def _rha(x: float) -> int:
@@ -4623,10 +4606,8 @@ def ewma_chart(
     s = sum(y for _, y in rows)
     sxx = sum(y * y for _, y in rows)
     # one fixed expression each, mirrored verbatim by the oracle
-    mu_micro = _rha(float(mu) * 1_000_000) if mu is not None else _rha(s * 1_000_000 / n)
-    sigma = (
-        float(sigma) if sigma is not None else _math.sqrt(float(n * sxx - s * s)) / n
-    )
+    mu_micro = _rha(s * 1_000_000 / n)
+    sigma = _math.sqrt(float(n * sxx - s * s)) / n
     lam = float(lam)
     one_m = 1.0 - lam
     decay = one_m * one_m
@@ -8364,8 +8345,7 @@ def page_hinkley(
     prefix sum (mean_i = S1_i / i) quantized ROUND(·1e6) to
     micro-integers, so the accumulator, its running minimum, and every
     alarm flag are exact integer comparisons — bit-stable under any
-    partitioning and replayable by both the DuckDB oracle and the
-    streaming twin (`streaming.stateful.page_hinkley_stream`).
+    partitioning and replayable by the DuckDB oracle.
 
     Output ONE row: (n, n_alarms, first_alarm_idx, max_excess) —
     max_excess = max_t (m_t - M_t) / 1e6 in value units,

@@ -25,23 +25,22 @@ finalized values — or the merge is wrong; `finalize_agg` exists so that
 mistake has a pit-of-success API. MIN/MAX merge the same way (they are
 monoids too); add them to a state via ordinary agg columns if needed.
 
-Pairs with `streaming/cdc.py` (epoch-tagged commits make replays
-no-op) and `plans/maintenance.versioned_write` for exactly-once state
-evolution; the demo query `incremental_agg` proves merge(state, delta)
-== full recompute via the DuckDB oracle.
+The demo query `incremental_agg` proves merge(state, delta) == full
+recompute via the DuckDB oracle.
 """
 
 from __future__ import annotations
 
 from typing import Mapping, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = [
     "agg_state",
     "merge_agg_states",
     "finalize_agg",
+    "compact_changes",
     "incremental_join_apply",
     "incremental_join_apply_delta_b",
     "incremental_join_apply_both",
@@ -113,6 +112,24 @@ def finalize_agg(
     return out
 
 
+def compact_changes(
+    changes: DataFrame,
+    keys: list[str],
+    op_col: str = "op",
+    seq_col: str = "seq",
+) -> DataFrame:
+    """One final op per key: the latest change by ``seq_col`` wins (ties
+    break to the row whose op sorts last, so a same-seq U+D pair resolves
+    deterministically). Output drops ``seq_col``; this is the compaction
+    every CDC consumer runs before merging a batch."""
+    w = Window.partitionBy(*keys).orderBy(F.col(seq_col).desc(), F.col(op_col).desc())
+    return (
+        changes.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn", seq_col)
+    )
+
+
 def incremental_join_apply(
     joined: DataFrame,
     delta_a: DataFrame,
@@ -126,7 +143,7 @@ def incremental_join_apply(
     J = A ⋈ B under a CDC batch on A — the join-side sibling of
     `agg_state`'s aggregate maintenance, completing the two standing
     materializations a serving layer keeps. With A keyed by ``pk_a``
-    and the delta carrying I/U/D ops (the `streaming/cdc.py` shape),
+    and the delta carrying I/U/D ops (the `docstore.cdc_apply` shape),
     the classical delta decomposition collapses to:
 
         J' = (J anti-join touched_keys) ∪ ((ΔA minus deletes) ⋈ B)
@@ -148,12 +165,10 @@ def incremental_join_apply(
     batch carrying I-then-D (or two Us) for a key would evict the key
     once but re-add every superseded non-delete row. Pass ``seq_col``
     to compact the delta here (latest seq wins, ties to the op sorting
-    last — `streaming/cdc.compact_changes` semantics); without it the
-    delta must already be compacted, e.g. by `compact_changes`.
+    last — `compact_changes` semantics); without it the delta must
+    already be compacted, e.g. by `compact_changes`.
     """
     if seq_col is not None:
-        from morphik_core_spark.streaming.cdc import compact_changes
-
         delta_a = compact_changes(delta_a, [pk_a], op_col=op_col, seq_col=seq_col)
     touched = delta_a.select(F.col(pk_a)).distinct()
     kept = joined.join(F.broadcast(touched), pk_a, "left_anti")
@@ -190,8 +205,6 @@ def incremental_join_apply_delta_b(
     one final op per ``join_key``.
     """
     if seq_col is not None:
-        from morphik_core_spark.streaming.cdc import compact_changes
-
         delta_b = compact_changes(delta_b, [join_key], op_col=op_col, seq_col=seq_col)
     touched = delta_b.select(F.col(join_key)).distinct()
     kept = joined.join(F.broadcast(touched), join_key, "left_anti")
@@ -249,12 +262,9 @@ def incremental_join_apply_both(
     Passing ``a_for_revival`` — the CURRENT A snapshot, carrying the
     view's A-side columns — CLOSES the gap: revival then draws from A
     instead of the view, so facts whose dimension key left and came
-    back re-attach; `streaming.join_view` maintains that snapshot
-    beside the view when given an ``a_path``.
+    back re-attach.
     """
     if seq_col is not None:
-        from morphik_core_spark.streaming.cdc import compact_changes
-
         delta_a = compact_changes(delta_a, [pk_a], op_col=op_col, seq_col=seq_col)
         delta_b = compact_changes(delta_b, [join_key], op_col=op_col, seq_col=seq_col)
     ka = delta_a.select(F.col(pk_a)).distinct()

@@ -811,7 +811,7 @@ def novelty_rate(
     Output: one row (n_test_shingles, n_novel, novelty_rate,
     n_distinct_test, n_distinct_novel, distinct_novelty_rate).
     Scale: shuffle keyed on the shingle (left-anti against the train
-    DISTINCT set — bloom-prefilterable at 100 TB, `plans/skipping`).
+    DISTINCT set — bloom-prefilterable at 100 TB, `sketches.bloom_bits`).
     """
     from morphik_core_spark.operators.dedup import word_shingles
 

@@ -23,9 +23,9 @@ engine's materialized IVF layouts:
 - ``.cutover`` runs the audit, refuses unless every query clears the
   overlap floor and counts match, then atomically flips the state file.
 
-State is a tiny JSON document next to the layouts (same manifest
-discipline as plans/maintenance.py's versioned tables), so the window
-survives process restarts and a crashed migration resumes where it was.
+State is a tiny JSON document next to the layouts, written to a temp
+file and atomically renamed into place, so the window survives process
+restarts and a crashed migration resumes where it was.
 """
 
 from __future__ import annotations

@@ -3,10 +3,14 @@ survives 100 TB.
 
 These helpers encode the project's physical-layout conventions:
 
-- ``write_chunks_table``: the chunks/vectors fact table is partitioned by
+- ``merge_upsert_partitioned``: the documents table is partitioned by
   ``app_id`` (tenant pruning — the reference's flattened-auth-columns
-  lesson) and bucketed by ``document_id`` so chunk⋈document and padding
-  self-joins co-locate without a shuffle.
+  lesson), and an upsert rewrites only the partitions its rows land in
+  (`MorphikSpark._merge_documents`). The chunks table is a flat parquet
+  snapshot that every chunk write rewrites whole.
+- ``write_partitioned`` / ``write_chunks_table``: plain partitioned and
+  ``document_id``-bucketed writers; bucketing lets chunk⋈document and
+  padding self-joins co-locate without a shuffle.
 - ``salted_join``: explicit skew-salting for joins whose key histogram is
   pathological even for AQE (one viral document, one giant tenant): the
   hot side explodes each build row into N salted copies, the probe side

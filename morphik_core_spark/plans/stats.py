@@ -6,8 +6,8 @@ This closes the planning loop SCALE.md promises: the broadcast gates
 (`retrieval.scoped_chunks`'s limit-probe, bench-time join choices) can
 consult persisted stats instead of probing — on a cluster the probe
 costs a scan-task launch per query, while stats are computed once per
-snapshot (e.g. in the same job as `maintenance.versioned_write` /
-`compact`) and read for free.
+snapshot (e.g. right after the write that produced it) and read for
+free.
 
 The ndv estimate uses Spark's built-in HLL (`approx_count_distinct`) —
 engine-internal planning data needs no cross-engine oracle; the

@@ -1,24 +1,19 @@
-"""Streaming near-duplicate filtering: MinHash-LSH against a persistent
-band store.
+"""Incremental near-duplicate filtering: MinHash-LSH against a band store.
 
-``stateful.dedup_docs_stream`` guards an ingest feed against EXACT
-re-sends; this module is its near-dup sibling — a document is dropped
-when any of its MinHash-LSH band keys was already claimed by an earlier
-kept document, i.e. exactly the candidate-pair criterion the batch
-``dedup.lsh_candidate_pairs`` uses, applied incrementally.
+A document is dropped when any of its MinHash-LSH band keys was already
+claimed by an earlier kept document, i.e. exactly the candidate-pair
+criterion the batch ``dedup.lsh_candidate_pairs`` uses, applied one
+batch at a time:
 
-Why not ``applyInPandasWithState``: a document's verdict aggregates over
-ALL its band keys, which live under different state keys — cross-key
-reads aren't expressible in the keyed-state API. The standard shape is
-``foreachBatch`` against a persistent band store:
+- hash → band keys → semi-join against the store (docs hitting any
+  known band drop), then a greedy first-wins pass inside the batch (a
+  band's minimum surviving doc id claims it);
+- the kept docs' band rows are returned for the caller to append to the
+  store.
 
-- per micro-batch: hash → band keys → semi-join against the store
-  (docs hitting any known band drop), then a greedy first-wins pass
-  inside the batch (a band's minimum surviving doc id claims it);
-- kept docs and their band keys are written partitioned by ``_epoch``
-  with dynamic partition overwrite, so a crashed-and-replayed epoch
-  rewrites itself instead of double-inserting (the same effectively-once
-  trick as ``streaming/ingestion``).
+A document's verdict aggregates over ALL its band keys, which live
+under different keys — so the filter is a join against a band table,
+not keyed per-document state.
 
 Semantics notes, deliberate and documented: the within-batch pass is
 greedy first-wins, not connected-components — a doc can be dropped
@@ -26,22 +21,17 @@ because it collides with a doc that was itself dropped (over-drop, the
 conservative direction for dedup); docs too short to shingle (< n
 tokens) carry no bands and always pass. At 100 TB the store is a
 parquet table partitioned by band hash — the semi-join prunes to the
-batch's band partitions; compact it with ``plans/maintenance`` like any
-other snapshot table.
+batch's band partitions.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from morphik_core_spark.operators.dedup import minhash_signatures, word_shingles
 
-__all__ = ["doc_band_keys", "near_dup_batch", "near_dup_docs_stream"]
-
-BAND_STORE_SCHEMA = "band int, key string"
+__all__ = ["doc_band_keys", "near_dup_batch"]
 
 
 def doc_band_keys(
@@ -80,7 +70,7 @@ def near_dup_batch(
     bands: int = 4,
     batch_bands: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """One micro-batch of the streaming filter. Returns (kept_docs,
+    """One batch of the incremental filter. Returns (kept_docs,
     new_band_rows): docs whose bands were all unclaimed — by the store
     AND by smaller-id docs in the same batch — plus the band rows to
     append for them.
@@ -120,51 +110,3 @@ def near_dup_batch(
     kept_docs = batch_docs.join(kept_ids.union(no_bands).distinct(), id_col, "left_semi")
     return kept_docs, kept_bands.select("band", "key")
 
-
-def near_dup_docs_stream(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    schema: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    checkpoint_dir: str | None = None,
-    num_hashes: int = 8,
-    bands: int = 4,
-) -> None:
-    """AvailableNow streaming near-dup over a parquet drop directory.
-
-    Kept docs land in ``output_dir/docs``; the band store grows in
-    ``output_dir/bands``. Both sinks partition by ``_epoch`` with dynamic
-    overwrite = replay-idempotent. Stops when the backlog drains; the
-    checkpoint resumes from new files on the next call.
-    """
-    checkpoint_dir = checkpoint_dir or os.path.join(output_dir, "_checkpoint")
-    docs_dir = os.path.join(output_dir, "docs")
-    bands_dir = os.path.join(output_dir, "bands")
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        try:
-            store = spark.read.parquet(bands_dir).select("band", "key")
-        except Exception:  # noqa: BLE001 — first epoch: no store yet
-            store = None
-        kept, new_bands = near_dup_batch(
-            batch_df, store, text_col, id_col, num_hashes, bands
-        )
-        for df, path in ((kept, docs_dir), (new_bands, bands_dir)):
-            (
-                df.withColumn("_epoch", F.lit(epoch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_epoch")
-                .parquet(path)
-            )
-
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )

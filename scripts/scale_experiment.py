@@ -884,10 +884,9 @@ def main() -> None:
     if "r5c" in ops:
         # Final round-5 batch: k-core peeling (10x edges), decayed
         # trending counts, RRF fusion (candidate lists stay k-sized —
-        # the corpus only feeds the two rankers), bloom index build.
+        # the corpus only feeds the two rankers).
         from morphik_core_spark.operators.analytics import decayed_counts
         from morphik_core_spark.operators.graph import k_core
-        from morphik_core_spark.plans.skipping import write_bloom_index
 
         ev1 = load_table(spark, "events", SF_DIR).select("event_id", "ts", "event_type", "props")
         tiles = [
@@ -942,22 +941,6 @@ def main() -> None:
             mat(k_core(e, 3))
 
         report("k_core", kcore, pairs1, pairs10)
-
-        docs10_p = os.path.join(tmp, "docs10_bloom")
-        docs10.repartition(16).write.mode("overwrite").parquet(docs10_p)
-
-        def bloom1():
-            write_bloom_index(spark, os.path.join(tmp, "docs10_bloom"), "doc_id")
-
-        docs1_p = os.path.join(tmp, "docs1_bloom")
-        docs1.repartition(16).write.mode("overwrite").parquet(docs1_p)
-
-        def bloom_small():
-            write_bloom_index(spark, docs1_p, "doc_id")
-
-        t1 = timed(bloom_small)
-        t10 = timed(bloom1)
-        print(json.dumps({"op": "bloom_index_build", "t_1x": t1, "t_10x": t10, "ratio": round(t10 / t1, 2)}))
 
     if "gov" in ops:
         # Governance/experimentation batch: k-anonymity (10x customers

@@ -1,76 +1,8 @@
-"""Versioned snapshots (time travel) and compaction."""
+"""Table statistics sidecar and the broadcast gate it drives."""
 
 from __future__ import annotations
 
-import os
-
-import pytest
 from pyspark.sql import functions as F
-
-from morphik_core_spark.plans.maintenance import (
-    compact,
-    current_version,
-    list_versions,
-    read_version,
-    versioned_upsert,
-    versioned_write,
-)
-
-
-def _docs(spark, n, tag):
-    return spark.range(n).select(
-        F.col("id").alias("doc_id"), F.lit(tag).alias("status")
-    )
-
-
-def test_versioned_upsert_keeps_history(spark, tmp_path):
-    t = str(tmp_path / "tbl")
-    v0 = versioned_write(_docs(spark, 10, "a"), t)
-    updates = _docs(spark, 3, "b")  # doc_id 0..2 -> status b
-    v1 = versioned_upsert(spark, t, updates, ["doc_id"])
-    assert (v0, v1) == (0, 1)
-    assert current_version(t) == 1
-
-    now = read_version(spark, t)
-    assert now.count() == 10
-    assert now.filter(F.col("status") == "b").count() == 3
-    # time travel: version 0 is untouched
-    then = read_version(spark, t, 0)
-    assert then.filter(F.col("status") == "b").count() == 0
-    ops = [e["op"] for e in list_versions(t)]
-    assert ops == ["write", "upsert"]
-
-
-def test_upsert_inserts_new_keys(spark, tmp_path):
-    t = str(tmp_path / "tbl")
-    versioned_write(_docs(spark, 5, "a"), t)
-    newrows = spark.createDataFrame([(100, "new")], "doc_id long, status string")
-    versioned_upsert(spark, t, newrows, ["doc_id"])
-    assert read_version(spark, t).count() == 6
-
-
-def test_compaction_reduces_files_preserves_rows_and_history(spark, tmp_path):
-    t = str(tmp_path / "tbl")
-    # fragment deliberately: 16 files of ~6 rows
-    versioned_write(_docs(spark, 100, "a").repartition(16), t)
-    files_before = len([f for f in os.listdir(os.path.join(t, "v=0")) if f.endswith(".parquet")])
-    assert files_before == 16
-    v = compact(spark, t, target_rows_per_file=50)
-    files_after = len([f for f in os.listdir(os.path.join(t, f"v={v}")) if f.endswith(".parquet")])
-    assert files_after == 2
-    # same data, old layout still readable
-    a = sorted(r["doc_id"] for r in read_version(spark, t).collect())
-    b = sorted(r["doc_id"] for r in read_version(spark, t, 0).collect())
-    assert a == b == list(range(100))
-
-
-def test_read_missing_version_raises(spark, tmp_path):
-    t = str(tmp_path / "tbl")
-    versioned_write(_docs(spark, 3, "a"), t)
-    with pytest.raises(ValueError, match="version 7"):
-        read_version(spark, t, 7)
-    with pytest.raises(FileNotFoundError):
-        current_version(str(tmp_path / "nope"))
 
 
 def test_table_stats_roundtrip_and_broadcast_gate(spark, tmp_path):
@@ -115,77 +47,3 @@ def test_stats_hint_drives_scoped_chunks_gate(spark):
     # large hint -> shuffle semi-join, AQE free to re-plan
     p_large = plan(scoped_chunks(chunks, auth, broadcast_threshold=100, auth_rows_hint=10_000))
     assert "BroadcastHashJoin" not in p_large
-
-
-def test_vacuum_retention(spark, tmp_path):
-    import os
-
-    import pytest
-
-    from morphik_core_spark.plans.maintenance import (
-        list_versions,
-        read_version,
-        vacuum,
-        versioned_write,
-    )
-
-    table = str(tmp_path / "vac")
-    for i in range(4):
-        versioned_write(
-            spark.createDataFrame([(i,)], "x int"), table, op=f"w{i}"
-        )
-    assert [e["version"] for e in list_versions(table)] == [0, 1, 2, 3]
-
-    deleted = vacuum(table, keep_versions=2)
-    assert deleted == [0, 1]
-    assert [e["version"] for e in list_versions(table)] == [2, 3]
-    # latest still readable; vacuumed version now raises like unknown
-    assert read_version(spark, table).collect()[0].x == 3
-    assert read_version(spark, table, 2).collect()[0].x == 2
-    with pytest.raises(ValueError, match="not found"):
-        read_version(spark, table, 0)
-    # directories actually gone
-    assert not os.path.exists(os.path.join(table, "v=0"))
-    assert os.path.exists(os.path.join(table, "v=3"))
-
-    # no-op when inside retention; latest never deletable
-    assert vacuum(table, keep_versions=5) == []
-    with pytest.raises(ValueError):
-        vacuum(table, keep_versions=0)
-    # versions keep increasing monotonically after a vacuum
-    versioned_write(spark.createDataFrame([(9,)], "x int"), table)
-    assert [e["version"] for e in list_versions(table)] == [2, 3, 4]
-
-
-def test_diff_versions_and_schema_diff(spark, tmp_path):
-    from morphik_core_spark.plans.maintenance import (
-        diff_versions,
-        schema_diff,
-        versioned_write,
-    )
-
-    table = str(tmp_path / "diff")
-    v0 = spark.createDataFrame(
-        [(1, "a", 1.0), (2, "b", 2.0), (3, "c", None)], "id int, s string, x double"
-    )
-    versioned_write(v0, table)
-    v1 = spark.createDataFrame(
-        # 2 changed, 3: NULL -> '' must count as changed, 4 added, 1 same
-        [(1, "a", 1.0), (2, "B", 2.0), (3, "c", float("nan")), (4, "d", 0.0)],
-        "id int, s string, x double",
-    )
-    versioned_write(v1, table)
-    d = {r.id: r.change for r in diff_versions(spark, table, ["id"], 0, 1).collect()}
-    assert d == {2: "changed", 3: "changed", 4: "added"}
-
-    # removed rows + unchanged rows excluded
-    d2 = {r.id: r.change for r in diff_versions(spark, table, ["id"], 1, 0).collect()}
-    assert d2[4] == "removed"
-
-    sd = schema_diff(spark, table, 0, 1)
-    assert sd["compatible"] and sd["added"] == [] and sd["removed"] == []
-
-    v2 = spark.createDataFrame([(1, "a", 5)], "id int, s string, x bigint")
-    versioned_write(v2, table)
-    sd2 = schema_diff(spark, table, 1, 2)
-    assert not sd2["compatible"] and "x" in sd2["type_changed"]

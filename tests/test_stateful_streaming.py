@@ -1,176 +1,11 @@
-"""applyInPandasWithState: state persists across micro-batches."""
+"""Structured Streaming over Spark's built-in event-time windows: a
+watermarked sliding window equals the batch operator."""
 
 from __future__ import annotations
 
-import time
 from datetime import datetime
 
-import pytest
-
 from pyspark.sql import functions as F
-
-from morphik_core_spark.streaming.stateful import gap_session_stream, running_counter_stream
-
-
-def test_running_counters_accumulate_across_batches(spark, tmp_path):
-    src = str(tmp_path / "in")
-    chk = str(tmp_path / "chk")
-    schema = "event_id long, user_id long, value double, ts timestamp"
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
-
-    out = str(tmp_path / "out")
-
-    def run_once():
-        # memory sink rejects checkpoint recovery; foreachBatch + parquet is
-        # the fault-tolerant shape (same as the ingestion pipeline)
-        stream = spark.readStream.schema(schema).parquet(src)
-
-        def sink(batch_df, epoch_id):
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            running_counter_stream(stream)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not terminate"
-        snapshots = spark.read.parquet(out).collect()
-        latest = {}
-        for r in snapshots:  # keep the most advanced snapshot per user
-            cur = latest.get(r.user_id)
-            if cur is None or r.n_events > cur[0]:
-                latest[r.user_id] = (r.n_events, r.total_value)
-        return latest
-
-    t = datetime(2024, 1, 1)
-    write_batch([(1, 10, 1.0, t), (2, 10, 2.0, t), (3, 20, 5.0, t)])
-    got1 = run_once()
-    assert got1[10] == (2, 3.0) and got1[20] == (1, 5.0)
-
-    # second batch: state must carry over via the checkpoint
-    write_batch([(4, 10, 4.0, t)])
-    got2 = run_once()
-    assert got2[10] == (3, 7.0)  # 2 events + 1 new, totals accumulate
-
-
-def test_gap_sessionizer_matches_batch_operator(spark, tmp_path):
-    """Closed streaming sessions ≡ batch sessionize minus each user's
-    open (final) session."""
-    from datetime import timedelta
-
-    from morphik_core_spark.operators.sessions import session_stats
-
-    schema = "event_id long, user_id long, value double, ts timestamp"
-    t0 = datetime(2024, 3, 1, 12, 0, 0)
-    rows = []
-    eid = 0
-    # user 1: three bursts (two closed, one open); user 2: one burst (open)
-    for offset_min, n in ((0, 3), (120, 2), (300, 4)):
-        for i in range(n):
-            rows.append((eid, 1, 1.0, t0 + timedelta(minutes=offset_min, seconds=10 * i)))
-            eid += 1
-    for i in range(5):
-        rows.append((eid, 2, 1.0, t0 + timedelta(seconds=30 * i)))
-        eid += 1
-
-    src = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    chk = str(tmp_path / "chk")
-    spark.createDataFrame(rows, schema).write.parquet(src)
-
-    stream = spark.readStream.schema(schema).parquet(src)
-
-    def sink(batch_df, epoch_id):
-        batch_df.write.mode("append").parquet(out)
-
-    q = (
-        gap_session_stream(stream, gap_seconds=1800)
-        .writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "stream did not terminate"
-
-    closed = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in spark.read.parquet(out).collect()
-    }
-    # batch truth: all sessions with start/end, drop each user's last
-    batch = session_stats(spark.createDataFrame(rows, schema), gap_seconds=1800)
-    sess = spark.createDataFrame(rows, schema)
-    from morphik_core_spark.operators.sessions import sessionize
-
-    per_session = (
-        sessionize(sess, gap_seconds=1800)
-        .groupBy("user_id", "session_id")
-        .agg(F.min("ts").alias("session_start"), F.max("ts").alias("session_end"), F.count(F.lit(1)).alias("n_events"))
-        .collect()
-    )
-    last_id = {}
-    for r in per_session:
-        last_id[r.user_id] = max(last_id.get(r.user_id, -1), r.session_id)
-    expected = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in per_session
-        if r.session_id != last_id[r.user_id]
-    }
-    assert closed == expected
-    assert len(closed) == 2  # user 1's two sealed bursts; user 2 still open
-    assert batch.count() == 4  # sanity: batch sees all four sessions
-
-
-def test_streaming_dedup_within_and_across_batches(spark, tmp_path):
-    """dropDuplicatesWithinWatermark: first occurrence wins inside a batch,
-    the checkpoint carries the key state across micro-batches/restarts,
-    and fresh keys always pass."""
-    from morphik_core_spark.streaming.stateful import dedup_docs_stream
-
-    src = str(tmp_path / "in")
-    chk = str(tmp_path / "chk")
-    out = str(tmp_path / "out")
-    schema = "doc_id long, text string, ts timestamp"
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
-
-    def run_once():
-        stream = spark.readStream.schema(schema).parquet(src)
-
-        def sink(batch_df, epoch_id):
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            dedup_docs_stream(stream, watermark="1 hour")
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not terminate"
-        return sorted((r.doc_id, r.fp) for r in spark.read.parquet(out).collect())
-
-    t = datetime(2024, 1, 1)
-    # doc 2 duplicates doc 1's content modulo whitespace/case (same fingerprint)
-    write_batch([(1, "Alpha  Beta", t), (2, "alpha beta", t), (3, "unique one", t)])
-    got1 = run_once()
-    ids1 = [d for d, _ in got1]
-    assert len(got1) == 2 and 3 in ids1 and len({1, 2} & set(ids1)) == 1
-
-    # second run: same content re-sent within the watermark -> dropped;
-    # a brand-new doc passes
-    write_batch([(4, "ALPHA BETA", t), (5, "another new text", t)])
-    got2 = run_once()
-    ids2 = [d for d, _ in got2]
-    assert 4 not in ids2 and 5 in ids2
-    assert len(got2) == 3
 
 
 def test_streaming_sliding_windows_match_batch_operator(spark, tmp_path):
@@ -228,1065 +63,3 @@ def test_streaming_sliding_windows_match_batch_operator(spark, tmp_path):
     missing = expected - got
     assert all(ws + timedelta(seconds=600) > watermark for _, ws, _ in missing)
     assert len(got) >= len(expected) * 0.5  # the bulk was emitted closed
-
-
-def test_asof_backward_stream_matches_batch_across_restart(spark, tmp_path):
-    """Streaming backward as-of ≡ batch asof_backward under per-key
-    event-time-ordered feeds, with state carried across a checkpoint
-    restart (the second batch's probes match series rows from the
-    first)."""
-    from datetime import timedelta
-
-    from morphik_core_spark.operators.asof import asof_backward
-    from morphik_core_spark.streaming.stateful import asof_backward_stream
-
-    schema = "user_id long, ts timestamp, is_series int, event_id long"
-    t0 = datetime(2024, 5, 1, 8, 0, 0)
-
-    def m(minutes):
-        return t0 + timedelta(minutes=minutes)
-
-    # batch 1: series then probes, incl. an exact-tie probe (u1 @10) and
-    # a probe before any series (u2 @1)
-    batch1 = [
-        (1, m(0), 1, None), (1, m(10), 1, None),
-        (1, m(10), 0, 101), (1, m(15), 0, 102),
-        (2, m(1), 0, 201), (2, m(5), 1, None), (2, m(7), 0, 202),
-    ]
-    # batch 2 (after restart): u1's probe must match batch-1 state;
-    # a fresh series row then advances it
-    batch2 = [
-        (1, m(20), 0, 103), (1, m(25), 1, None), (1, m(30), 0, 104),
-    ]
-
-    src, out, chk = (str(tmp_path / d) for d in ("in", "out", "chk"))
-
-    def run_once(rows):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
-
-        def sink(batch_df, epoch_id):
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            asof_backward_stream(stream)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not terminate"
-
-    run_once(batch1)
-    run_once(batch2)
-
-    got = {
-        r.event_id: r.matched_ts
-        for r in spark.read.parquet(out).collect()
-    }
-
-    all_rows = batch1 + batch2
-    probes = spark.createDataFrame(
-        [(e, u, ts) for (u, ts, s, e) in all_rows if s == 0],
-        "event_id long, user_id long, ts timestamp",
-    )
-    series = spark.createDataFrame(
-        [(u, ts) for (u, ts, s, _e) in all_rows if s == 1],
-        "user_id long, ts timestamp",
-    )
-    want = {
-        r.event_id: r.matched_ts
-        for r in asof_backward(probes, series, key="user_id").collect()
-    }
-    assert got == want
-    assert got[101] == m(10)  # exact tie matches (<= rule)
-    assert got[201] is None  # probe before any series
-    assert got[103] == m(10)  # state survived the restart
-    assert got[104] == m(25)  # new series row advanced the state
-
-
-def test_debounce_stream_kept_state_across_restart(spark, tmp_path):
-    """Streaming debounce keeps previous-KEPT state: a steady sub-gap
-    drizzle emits one event per gap interval (where the batch lag rule
-    would keep only the first), state survives a checkpoint restart,
-    and short bursts match the batch rule exactly."""
-    from datetime import timedelta
-
-    from morphik_core_spark.streaming.stateful import debounce_stream
-
-    schema = "user_id long, event_type string, ts timestamp, event_id long"
-    t0 = datetime(2024, 5, 1, 8, 0, 0)
-
-    def s(secs):
-        return t0 + timedelta(seconds=secs)
-
-    # user 1: drizzle every 40 s with a 60 s gap -> kept at 0, 80, 160
-    batch1 = [(1, "c", s(k * 40), k + 1) for k in range(4)]  # 0,40,80,120
-    # after restart: 160 kept (last kept 80 at +80), 200 dropped (40 gap)
-    batch2 = [(1, "c", s(160), 5), (1, "c", s(200), 6)]
-
-    src, out, chk = (str(tmp_path / d) for d in ("din", "dout", "dchk"))
-
-    def run_once(rows):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
-
-        def sink(batch_df, epoch_id):
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            debounce_stream(stream, 60)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not terminate"
-
-    run_once(batch1)
-    run_once(batch2)
-    kept = sorted(r.event_id for r in spark.read.parquet(out).collect())
-    assert kept == [1, 3, 5]
-
-
-def test_debounce_stream_agrees_with_batch_on_short_bursts(spark, tmp_path):
-    """Bursts shorter than the gap: streaming (kept-state) and batch
-    (lag-gap) rules agree exactly."""
-    from datetime import timedelta
-
-    from morphik_core_spark.operators.sessions import debounce_events
-    from morphik_core_spark.streaming.stateful import debounce_stream
-
-    schema = "user_id long, event_type string, ts timestamp, event_id long"
-    t0 = datetime(2024, 5, 1, 8, 0, 0)
-
-    def s(secs):
-        return t0 + timedelta(seconds=secs)
-
-    rows = [
-        (1, "c", s(0), 1), (1, "c", s(10), 2), (1, "c", s(20), 3),  # burst
-        (1, "c", s(200), 4),  # fresh
-        (2, "c", s(0), 5), (2, "c", s(0), 6),  # tie
-    ]
-    src, out, chk = (str(tmp_path / d) for d in ("bin", "bout", "bchk"))
-    spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-
-    def sink(batch_df, epoch_id):
-        batch_df.write.mode("append").parquet(out)
-
-    q = (
-        debounce_stream(stream, 60)
-        .writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    got = sorted(r.event_id for r in spark.read.parquet(out).collect())
-
-    batch = debounce_events(
-        spark.createDataFrame(rows, schema),
-        ["user_id", "event_type"], "ts", 60, tiebreak_col="event_id",
-    )
-    want = sorted(r.event_id for r in batch.filter("kept").collect())
-    assert got == want == [1, 4, 5]
-
-
-def test_cusum_stream_matches_batch_and_survives_restart(spark, tmp_path):
-    """Streaming CUSUM state (one bigint per key) survives a checkpoint
-    restart, matches the batch closed form bit-for-bit on the same
-    fixed target, and drops replayed points instead of double-applying."""
-    from morphik_core_spark.operators.analytics import cusum_screen
-    from morphik_core_spark.streaming.stateful import cusum_stream
-
-    schema = "series_key string, idx long, value long"
-    xs = [10, 9, 11, 10, 16, 17, 18, 12]
-    batch1 = [("k", i, x) for i, x in enumerate(xs[:4])]
-    # batch2 REPLAYS idx 3 (must be ignored) then continues
-    batch2 = [("k", 3, 999)] + [("k", i + 4, x) for i, x in enumerate(xs[4:])]
-
-    src, out, chk = (str(tmp_path / d) for d in ("cin", "cout", "cchk"))
-
-    def run_once(rows):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
-
-        def sink(batch_df, epoch_id):
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            cusum_stream(stream, target=12, h=6)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not terminate"
-
-    run_once(batch1)
-    run_once(batch2)
-    got = {
-        r.idx: (r.value, r.cusum, r.alarm)
-        for r in spark.read.parquet(out).collect()
-    }
-    assert len(got) == len(xs)  # replayed idx 3 emitted once, value 10 kept
-    assert got[3][0] == 10
-
-    series = spark.createDataFrame(
-        [(i, x) for i, x in enumerate(xs)], "idx long, x long"
-    )
-    batch = {
-        r.idx: (r.value, r.cusum, r.alarm)
-        for r in cusum_screen(series, "idx", "x", h_mult=1, target=12).collect()
-    }
-    # batch h = target * h_mult = 12; stream used h=6: compare cusum only,
-    # then alarms against the stream's own threshold
-    assert {i: v[1] for i, v in got.items()} == {i: v[1] for i, v in batch.items()}
-    s_replay = 0
-    for i, x in enumerate(xs):
-        s_replay = max(0, s_replay + x - 12)
-        assert got[i][2] is (s_replay > 6)
-
-
-def test_hampel_stream_matches_batch_and_survives_restart(spark, tmp_path):
-    """Streaming centered rolling-median screen: finalizes each point
-    when its half_window-th successor arrives, matches the batch
-    `rolling_median_flags` EXACTLY on every finalized point (shrinking
-    left edge included), keeps O(window) state across a checkpoint
-    restart, and drops replayed idx instead of double-applying."""
-    import random as _random
-
-    from morphik_core_spark.operators.analytics import rolling_median_flags
-    from morphik_core_spark.streaming.stateful import hampel_stream
-
-    rng = _random.Random(9)
-    xs = [rng.randint(0, 30) for _ in range(25)]
-    xs[12] = 400  # guaranteed spike
-
-    schema = "series_key string, idx long, value long"
-    batch1 = [("k", i, x) for i, x in enumerate(xs[:10])]
-    batch2 = [("k", 9, 999)] + [("k", i + 10, x) for i, x in enumerate(xs[10:])]
-
-    src, out, chk = (str(tmp_path / d) for d in ("hin", "hout", "hchk"))
-
-    def run_once(rows):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
-
-        def sink(batch_df, epoch_id):
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            hampel_stream(stream, half_window=4)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not terminate"
-
-    run_once(batch1)
-    run_once(batch2)
-    got = {r.idx: (r.value, r.med, r.is_anomaly) for r in spark.read.parquet(out).collect()}
-    # head..len-hw-1 finalized; trailing hw points pend forever
-    assert sorted(got) == list(range(len(xs) - 4))
-    assert got[9][0] == xs[9]  # replayed idx kept its first value
-
-    series = spark.createDataFrame(list(enumerate(xs)), "t long, x long")
-    want = {
-        r.t: (r.x, r.med, r.is_anomaly)
-        for r in rolling_median_flags(series, "t", "x", half_window=4).collect()
-    }
-    for i in got:
-        assert got[i] == want[i], f"idx {i}: {got[i]} vs {want[i]}"
-    assert any(got[i][2] for i in got)  # the spike fired
-
-
-def test_hll_stream_matches_batch_and_survives_restart(spark, tmp_path):
-    """Streaming HLL state (one 512-register array per key) survives a
-    checkpoint restart, tolerates replayed rows (MAX-merge idempotence —
-    no idx contract needed), and its final per-key snapshot finalizes to
-    the BIT-IDENTICAL estimate the batch sketch computes over the same
-    distinct values."""
-    from morphik_core_spark.operators.sketches import hll_distinct
-    from morphik_core_spark.streaming.stateful import hll_stream, hll_stream_estimates
-
-    schema = "series_key string, value string"
-    vals1 = [("k1", f"v{i % 70}") for i in range(200)] + [("k2", f"u{i % 9}") for i in range(40)]
-    # batch 2 REPLAYS some of batch 1's rows (harmless) and adds new ones
-    vals2 = vals1[:25] + [("k1", f"w{i}") for i in range(50)]
-
-    src, out, chk = (str(tmp_path / d) for d in ("gin", "gout", "gchk"))
-
-    def run_once(rows):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
-
-        def sink(batch_df, epoch_id):
-            batch_df.withColumn("epoch", __import__("pyspark.sql.functions", fromlist=["lit"]).lit(epoch_id)) \
-                .write.mode("append").parquet(out)
-
-        q = (
-            hll_stream(stream)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not terminate"
-
-    run_once(vals1)
-    run_once(vals2)
-    snaps = spark.read.parquet(out)
-    from pyspark.sql import functions as F
-
-    last = snaps.orderBy("n_seen").groupBy("series_key").agg(
-        F.max_by(F.struct("registers_used", "s"), "n_seen").alias("fin"),
-        F.max("n_seen").alias("n_seen"),
-    ).select("series_key", "fin.registers_used", "fin.s", "n_seen")
-    got = {
-        r.series_key: (r.registers_used, r.distinct_est)
-        for r in hll_stream_estimates(last).collect()
-    }
-
-    batch_rows = spark.createDataFrame(vals1 + vals2, schema)
-    want = {
-        r.series_key: (r.registers_used, r.distinct_est)
-        for r in hll_distinct(batch_rows, ["series_key"], "value", p=9).collect()
-    }
-    assert got == want  # register-exact AND estimate-bit-identical
-
-
-def test_funnel_stream_matches_batch_and_is_replay_idempotent(spark, tmp_path):
-    """Streaming funnel completions aggregate to the exact batch
-    funnel_counts rows; a replayed batch cannot double-emit because
-    step transitions are set-once; state survives checkpoint restart."""
-    from morphik_core_spark.operators.analytics import funnel_counts
-    from morphik_core_spark.streaming.stateful import funnel_stream, funnel_stream_counts
-
-    schema = "user_id long, ts timestamp, event_type string"
-
-    def t(s):
-        from datetime import datetime
-
-        return datetime(2026, 1, 1, 0, 0, s)
-
-    rows1 = [
-        (1, t(1), "view"), (1, t(2), "click"),
-        (2, t(1), "view"),
-        (3, t(5), "click"),          # click with no prior view: never converts
-        (4, t(1), "view"), (4, t(1), "click"),  # same-ts click is NOT after view
-    ]
-    rows2 = [
-        (1, t(3), "purchase"),
-        (2, t(9), "click"), (2, t(10), "purchase"),
-        (4, t(2), "click"),
-        (1, t(2), "click"),          # replay of an already-closed step: no-op
-    ]
-    steps = ["view", "click", "purchase"]
-    src, out, chk = (str(tmp_path / d) for d in ("fin", "fout", "fchk"))
-
-    def run_once(rows):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
-
-        def sink(batch_df, epoch_id):
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            funnel_stream(stream, steps)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not terminate"
-
-    run_once(rows1)
-    run_once(rows2)
-    completions = spark.read.parquet(out)
-    # one completion row per (user, step): the replayed click for user 1
-    # and user 4's same-timestamp click emitted nothing extra
-    assert completions.groupBy("user_id", "step_index").count().filter("count > 1").count() == 0
-    got = {
-        (r.step_index, r.step_name): r.n_users
-        for r in funnel_stream_counts(completions).collect()
-    }
-    batch = {
-        (r.step_index, r.step_name): r.n_users
-        for r in funnel_counts(
-            spark.createDataFrame(rows1 + rows2[:-1], schema), "user_id", "ts", "event_type", steps
-        ).collect()
-    }
-    assert got == batch
-    # hand-check: views 1,2,4; clicks after view: 1@2, 2@9, 4@2; purchases: 1,2
-    assert got[(0, "view")] == 3 and got[(1, "click")] == 3 and got[(2, "purchase")] == 2
-
-
-def test_holt_stream_matches_batch_and_survives_restart(spark, tmp_path):
-    """Streaming Holt state (two ints per key) survives checkpoint
-    restart, drops replayed points, and matches analytics.holt_linear
-    bit-for-bit from the second point on (the first point's trend needs
-    the second point in the batch init — inherent look-ahead, so the
-    stream leaves it NULL and never re-emits)."""
-    from morphik_core_spark.operators.analytics import holt_linear
-    from morphik_core_spark.streaming.stateful import holt_stream
-
-    schema = "series_key string, idx long, value long"
-    ys = [14, 9, 17, 12, 20, 15, 23, 18]
-    batch1 = [("k", i, y) for i, y in enumerate(ys[:3])]
-    batch2 = [("k", 2, 999)] + [("k", i + 3, y) for i, y in enumerate(ys[3:])]
-
-    src, out, chk = (str(tmp_path / d) for d in ("hin", "hout", "hchk"))
-
-    def run_once(rows):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = (
-            holt_stream(stream, alpha=0.3, beta=0.1)
-            .writeStream.outputMode("append")
-            .foreachBatch(lambda b, e: b.write.mode("append").parquet(out))
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not terminate"
-
-    run_once(batch1)
-    run_once(batch2)
-    got = {r.idx: r for r in spark.read.parquet(out).collect()}
-    assert len(got) == len(ys)  # replayed idx 2 emitted once
-    assert got[2].value == 17
-
-    batch = {r.di: r for r in holt_linear(
-        spark.createDataFrame(list(enumerate(ys)), "di long, y long"), "di", "y",
-        alpha=0.3, beta=0.1,
-    ).collect()}
-    for i in range(1, len(ys)):
-        assert round(got[i].level_micro / 1e6, 6) == batch[i]["level"]
-        assert round(got[i].trend_micro / 1e6, 6) == batch[i]["trend"]
-        assert round(got[i].forecast_micro / 1e6, 6) == batch[i]["forecast"]
-        assert round(got[i].error_micro / 1e6, 6) == batch[i]["error"]
-    assert got[0].forecast_micro is None and got[0].trend_micro is None
-
-
-def test_funnel_stream_rejects_stale_state_on_changed_steps(spark, tmp_path):
-    """Resuming a funnel checkpoint with a DIFFERENT steps list must fail
-    fast (ADVICE round-7): the persisted times array is sized to the old
-    definition, so the new indices would mis-map or crash. The error has
-    to surface, not silently produce a wrong funnel."""
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from morphik_core_spark.streaming.stateful import funnel_stream
-
-    schema = "user_id long, ts timestamp, event_type string"
-
-    def t(s):
-        from datetime import datetime
-
-        return datetime(2026, 1, 1, 0, 0, s)
-
-    src, out, chk = (str(tmp_path / d) for d in ("fin", "fout", "fchk"))
-
-    def run_once(rows, steps):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
-
-        def sink(batch_df, epoch_id):
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            funnel_stream(stream, steps)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not terminate"
-
-    run_once([(1, t(1), "view"), (1, t(2), "click")], ["view", "click", "purchase"])
-    with pytest.raises(StreamingQueryException, match="different funnel definition"):
-        run_once([(1, t(3), "purchase")], ["view", "purchase"])
-
-
-def test_ewma_stream_matches_batch_and_survives_restart(spark, tmp_path):
-    """Streaming EWMA chart against known process parameters is
-    bit-identical to the batch ewma_chart(mu=, sigma=) over the same
-    rows, across a checkpoint restart, with replays dropped."""
-    from morphik_core_spark.operators.analytics import ewma_chart
-    from morphik_core_spark.streaming.stateful import ewma_stream
-
-    ys = [20, 22, 19, 21, 20, 30, 31, 32, 33, 30, 29, 31]
-    mu, sigma = 21.0, 1.5
-    schema = "series_key string, idx long, value long"
-    batch1 = [("k", i, y) for i, y in enumerate(ys[:5])]
-    batch2 = [("k", 3, 999)] + [("k", i + 5, y) for i, y in enumerate(ys[5:])]
-
-    src, out, chk = (str(tmp_path / d) for d in ("ein", "eout", "echk"))
-
-    def run_once(rows):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
-
-        def sink(batch_df, epoch_id):
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            ewma_stream(stream, mu=mu, sigma=sigma, lam=0.2, n_sigma=3.0)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not terminate"
-
-    run_once(batch1)
-    run_once(batch2)
-    got = {
-        r["idx"]: (r["ewma_micro"], r["ucl_micro"], r["out_of_control"])
-        for r in spark.read.parquet(out).collect()
-    }
-    assert len(got) == 12  # the replayed idx 3 emitted nothing extra
-
-    bdf = spark.createDataFrame(list(enumerate(ys)), "di long, y long")
-    want = {
-        r["di"]: (
-            round(r["ewma"] * 1e6), round(r["ucl"] * 1e6), r["out_of_control"]
-        )
-        for r in ewma_chart(bdf, "di", "y", lam=0.2, n_sigma=3.0, mu=mu, sigma=sigma).collect()
-    }
-    for i in range(12):
-        g, w = got[i], want[i]
-        assert g[0] == w[0] and g[1] == w[1] and g[2] == w[2], (i, g, w)
-    # the level shift at idx 5+ must be flagged against the known params
-    assert any(got[i][2] for i in range(6, 12))
-
-
-def test_jsd_stream_matches_batch_and_survives_restart(spark, tmp_path):
-    """The streaming drift monitor's snapshot equals the batch
-    js_divergence over (reference || seen-so-far) rows exactly; state
-    (the running histogram) survives a checkpoint restart."""
-    from morphik_core_spark.operators.analytics import js_divergence
-    from morphik_core_spark.streaming.stateful import jsd_stream
-
-    reference = {"view": 50, "click": 30, "purchase": 20}
-    schema = "monitor_key string, category string"
-    batch1 = [("m", c) for c in ["view"] * 10 + ["click"] * 5]
-    batch2 = [("m", c) for c in ["purchase"] * 8 + ["signup"] * 4]  # novel cat
-
-    src, out, chk = (str(tmp_path / d) for d in ("jin", "jout", "jchk"))
-
-    def run_once(rows):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
-
-        def sink(batch_df, epoch_id):
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            jsd_stream(stream, reference)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not terminate"
-
-    run_once(batch1)
-    run_once(batch2)
-    rows = spark.read.parquet(out).orderBy("batch_seq").collect()
-    assert [r["batch_seq"] for r in rows] == [1, 2]
-    assert rows[0]["n_seen"] == 15 and rows[1]["n_seen"] == 27
-
-    def batch_jsd(seen):
-        ref_rows = [("r", c) for c, n in reference.items() for _ in range(n)]
-        seen_rows = [("s", c) for _, c in seen]
-        df = spark.createDataFrame(ref_rows + seen_rows, "side string, c string")
-        [r] = js_divergence(df, "side", "c", "s", "r").collect()
-        return r["jsd_nats"]
-
-    assert rows[0]["jsd_nats"] == batch_jsd(batch1)
-    assert rows[1]["jsd_nats"] == batch_jsd(batch1 + batch2)
-    # drift grew when a novel category appeared
-    assert rows[1]["jsd_nats"] > 0
-
-
-def test_quantile_stream_matches_batch_and_survives_restart(spark, tmp_path):
-    """Streaming histogram quantiles equal analytics.quantile_estimate
-    over the same rows (identical bin/interpolation tree); histogram
-    state survives a checkpoint restart."""
-    from morphik_core_spark.operators.analytics import quantile_estimate
-    from morphik_core_spark.streaming.stateful import quantile_stream
-
-    schema = "monitor_key string, value double"
-    vals1 = [float(5 + (i * 17) % 90) for i in range(60)]
-    vals2 = [float(30 + (i * 13) % 140) for i in range(40)]
-    src, out, chk = (str(tmp_path / d) for d in ("qin", "qout", "qchk"))
-
-    def run_once(vals):
-        rows = [("m", v) for v in vals]
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
-
-        def sink(batch_df, epoch_id):
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            quantile_stream(stream, [0.5, 0.9], bin_width=5.0)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not terminate"
-
-    run_once(vals1)
-    run_once(vals2)
-    got = {
-        (r["batch_seq"], r["q"]): (r["est"], r["n_seen"])
-        for r in spark.read.parquet(out).collect()
-    }
-    assert len(got) == 4
-
-    def batch_q(vals):
-        df = spark.createDataFrame([("m", v) for v in vals], schema)
-        return {
-            r["q"]: r["est"]
-            for r in quantile_estimate(
-                df, "monitor_key", "value", quantiles=(0.5, 0.9), bin_width=5.0
-            ).collect()
-        }
-
-    b1, b2 = batch_q(vals1), batch_q(vals1 + vals2)
-    assert got[(1, 0.5)] == (b1[0.5], 60) and got[(1, 0.9)] == (b1[0.9], 60)
-    assert got[(2, 0.5)] == (b2[0.5], 100) and got[(2, 0.9)] == (b2[0.9], 100)
-
-
-def test_ewma_and_jsd_streams_isolate_keys(spark, tmp_path):
-    """Per-key state isolation: two monitored series flowing through the
-    same query must never leak state into each other — each key's
-    trajectory equals its solo batch twin."""
-    from morphik_core_spark.operators.analytics import ewma_chart
-    from morphik_core_spark.streaming.stateful import ewma_stream
-
-    schema = "series_key string, idx long, value long"
-    ys_a = [20, 22, 19, 21, 30, 31]
-    ys_b = [5, 50, 5, 50, 5, 50]
-    rows = [("a", i, y) for i, y in enumerate(ys_a)] + [
-        ("b", i, y) for i, y in enumerate(ys_b)
-    ]
-    src, out, chk = (str(tmp_path / d) for d in ("min", "mout", "mchk"))
-    spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-
-    def sink(batch_df, epoch_id):
-        batch_df.write.mode("append").parquet(out)
-
-    q = (
-        ewma_stream(stream, mu=20.0, sigma=2.0, lam=0.3, n_sigma=3.0)
-        .writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", chk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120)
-    got = {
-        (r["series_key"], r["idx"]): (r["ewma_micro"], r["out_of_control"])
-        for r in spark.read.parquet(out).collect()
-    }
-    for key, ys in (("a", ys_a), ("b", ys_b)):
-        bdf = spark.createDataFrame(list(enumerate(ys)), "di long, y long")
-        want = {
-            r["di"]: (round(r["ewma"] * 1e6), r["out_of_control"])
-            for r in ewma_chart(bdf, "di", "y", lam=0.3, n_sigma=3.0, mu=20.0, sigma=2.0).collect()
-        }
-        for i in range(len(ys)):
-            assert got[(key, i)] == want[i], (key, i)
-
-
-def test_centroid_drift_stream_matches_batch_and_survives_restart(spark, tmp_path):
-    """The streaming monitor's snapshot equals embedding_drift between
-    the reference snapshot and the rows seen so far — bit-for-bit via
-    the shared quantization trees — and the running sums survive a
-    checkpoint restart. Multi-key state stays isolated; labels without
-    a reference centroid emit NULL shift."""
-    from morphik_core_spark.operators.embedding_stats import embedding_drift
-    from morphik_core_spark.streaming.stateful import centroid_drift_stream
-
-    ref_rows = [
-        (100 + i, [float(i % 3), 1.0 + 0.25 * (i % 2)], 0) for i in range(6)
-    ] + [(200 + i, [5.0 + 0.5 * (i % 2), -1.0], 1) for i in range(4)]
-    ref_df = spark.createDataFrame(
-        ref_rows, "vec_id long, embedding array<float>, label int"
-    )
-    # reference centroids exactly as the batch op quantizes them
-    mul = 1024.0
-
-    def rha(x):
-        import math
-        return int(math.floor(x + 0.5)) if x >= 0 else int(math.ceil(x - 0.5))
-
-    refs = {}
-    for lbl in (0, 1):
-        vecs = [v for _, v, l in ref_rows if l == lbl]
-        sums = [sum(rha(x * mul) for x in col) for col in zip(*vecs)]
-        refs[lbl] = [rha(float(s) * mul / len(vecs)) for s in sums]
-
-    schema = "label int, embedding array<float>"
-    batch1 = [(0, [0.4, 1.1]), (0, [1.9, 1.2]), (1, [5.2, -0.8]), (2, [9.9, 9.9])]
-    batch2 = [(0, [2.5, 0.9]), (1, [5.4, -1.3])]
-
-    src, out, chk = (str(tmp_path / d) for d in ("cin", "cout", "cchk"))
-
-    def run_once(rows):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
-
-        def sink(batch_df, epoch_id):
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            centroid_drift_stream(stream, refs)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not terminate"
-
-    run_once(batch1)
-    run_once(batch2)
-    rows = spark.read.parquet(out).collect()
-    by = {(r["label"], r["batch_seq"]): r for r in rows}
-    assert by[(0, 1)]["n_seen"] == 2 and by[(0, 2)]["n_seen"] == 3  # restart kept state
-    assert by[(2, 1)]["centroid_shift"] is None  # no reference centroid
-
-    def batch_shift(lbl, seen):
-        seen_rows = [
-            (1000 + i, v, l) for i, (l, v) in enumerate(seen) if l == lbl
-        ]
-        seen_df = spark.createDataFrame(
-            seen_rows, "vec_id long, embedding array<float>, label int"
-        )
-        [r] = embedding_drift(
-            ref_df.filter(f"label = {lbl}"), seen_df, dims=2
-        ).collect()
-        return r["centroid_shift"]
-
-    assert by[(0, 1)]["centroid_shift"] == batch_shift(0, batch1)
-    assert by[(0, 2)]["centroid_shift"] == batch_shift(0, batch1 + batch2)
-    assert by[(1, 2)]["centroid_shift"] == batch_shift(1, batch1 + batch2)
-
-
-def test_w1_drift_stream_matches_batch_and_survives_restart(spark, tmp_path):
-    """The streaming monitor's snapshot equals wasserstein_1d between
-    the reference rows and the rows seen so far — bit-for-bit via the
-    shared quantize/gap/divide trees — and the running histogram
-    survives a checkpoint restart. Multi-key state stays isolated; keys
-    without a reference emit NULL."""
-    from morphik_core_spark.operators.analytics import wasserstein_1d
-    from morphik_core_spark.streaming.stateful import w1_drift_stream
-
-    import math
-
-    def rha(x):
-        return int(math.floor(x + 0.5)) if x >= 0 else int(math.ceil(x - 0.5))
-
-    scale = 10
-    ref_vals = {
-        "a": [1.0, 1.5, 2.0, 2.0, 3.7],
-        "b": [10.0, 10.0, 12.5],
-    }
-    refs = {}
-    for k, vals in ref_vals.items():
-        h: dict = {}
-        for v in vals:
-            b = rha(v * scale)
-            h[b] = h.get(b, 0) + 1
-        refs[k] = h
-
-    schema = "key string, value double"
-    batch1 = [("a", 1.1), ("a", 2.9), ("b", 11.0), ("c", 99.0)]
-    batch2 = [("a", 3.6), ("b", 10.1), ("b", 12.4)]
-
-    src, out, chk = (str(tmp_path / d) for d in ("win", "wout", "wchk"))
-
-    def run_once(rows):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
-
-        def sink(batch_df, epoch_id):
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            w1_drift_stream(stream, refs, value_scale=scale)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not terminate"
-
-    run_once(batch1)
-    run_once(batch2)
-    rows = spark.read.parquet(out).collect()
-    by = {(r["key"], r["batch_seq"]): r for r in rows}
-    assert by[("a", 1)]["n_seen"] == 2 and by[("a", 2)]["n_seen"] == 3  # restart kept state
-    assert by[("c", 1)]["w1"] is None  # no reference histogram
-
-    def batch_w1(key, seen):
-        a = spark.createDataFrame([(v,) for v in ref_vals[key]], "v double")
-        b = spark.createDataFrame(
-            [(v,) for k, v in seen if k == key], "v double"
-        )
-        [r] = wasserstein_1d(a, b, "v", value_scale=scale).collect()
-        return r["w1"]
-
-    assert by[("a", 1)]["w1"] == batch_w1("a", batch1)
-    assert by[("a", 2)]["w1"] == batch_w1("a", batch1 + batch2)
-    assert by[("b", 2)]["w1"] == batch_w1("b", batch1 + batch2)
-
-
-def test_round6_like_spark_matches_spark_round(spark):
-    """The stream-side 6-dp rounding helper must equal Spark's
-    ROUND(double, 6) — which goes through BigDecimal.valueOf (shortest
-    decimal repr, HALF_UP), NOT the exact binary expansion — on the
-    adversarial class whose shortest repr ends in an exact 5 at the 7th
-    decimal (1.5e-06 etc.), where Decimal(float) would round DOWN."""
-    from morphik_core_spark.streaming.stateful import _round6_like_spark
-
-    vals = [
-        1.5e-06,  # binary expansion 1.4999...e-06 -> exact-binary rounds to 1e-06
-        2.5e-06,
-        -1.5e-06,
-        0.0000035,
-        0.1234565,
-        2.675e-06,
-        1.0000005,
-        0.0,
-        7.0,
-        123.4567894,
-        123.4567895,
-        1e-07,
-        -9.9999995,
-    ]
-    df = spark.createDataFrame([(v,) for v in vals], "x double")
-    got = {
-        r["x"]: r["r"]
-        for r in df.selectExpr("x", "round(x, 6) as r").collect()
-    }
-    for v in vals:
-        assert _round6_like_spark(v) == got[v], (v, _round6_like_spark(v), got[v])
-
-
-def test_psi_drift_stream_matches_batch_and_survives_restart(spark, tmp_path):
-    """The streaming PSI monitor's snapshot equals population_stability
-    between the reference rows and the rows seen so far — bit-for-bit
-    via the shared add-one/ln/1e-12-quantize trees — and the running
-    histogram survives a checkpoint restart. Keys without a reference
-    emit NULLs; the drift flag uses the rounded psi like the batch op."""
-    from morphik_core_spark.operators.analytics import population_stability
-    from morphik_core_spark.streaming.stateful import psi_drift_stream
-
-    refs = {
-        "a": {"low": 5, "mid": 3, "high": 2},
-        "b": {"x": 4, "y": 4},
-    }
-    schema = "key string, bin string"
-    batch1 = [("a", "low"), ("a", "low"), ("a", "new"), ("b", "x"), ("c", "zz")]
-    batch2 = [("a", "high"), ("a", "high"), ("a", "high"), ("b", "y"), ("b", "y")]
-
-    src, out, chk = (str(tmp_path / d) for d in ("pin", "pout", "pchk"))
-
-    def run_once(rows):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
-
-        def sink(batch_df, epoch_id):
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            psi_drift_stream(stream, refs, alert_threshold=0.2)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not terminate"
-
-    run_once(batch1)
-    run_once(batch2)
-    rows = spark.read.parquet(out).collect()
-    by = {(r["key"], r["batch_seq"]): r for r in rows}
-    assert by[("a", 1)]["n_seen"] == 3 and by[("a", 2)]["n_seen"] == 6  # restart kept state
-    assert by[("c", 1)]["psi"] is None and by[("c", 1)]["n_bins"] is None
-
-    def batch_psi(key, seen):
-        base = spark.createDataFrame(
-            [(key, b) for b, c in refs[key].items() for _ in range(c)], schema
-        )
-        cur = spark.createDataFrame(
-            [(k, b) for k, b in seen if k == key], schema
-        )
-        [r] = population_stability(base, cur, ["key"], "bin").collect()
-        return r["n_bins"], r["psi"], r["drift"]
-
-    for key, seq, seen in [
-        ("a", 1, batch1),
-        ("a", 2, batch1 + batch2),
-        ("b", 2, batch1 + batch2),
-    ]:
-        nb, psi, drift = batch_psi(key, seen)
-        got = by[(key, seq)]
-        assert (got["n_bins"], got["psi"], got["drift"]) == (nb, psi, drift), (key, seq)
-    # the injected 'a' shift (3x high + a novel bin) must trip the gate
-    assert by[("a", 2)]["drift"] is True
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="counts >= 1"):
-        psi_drift_stream(spark.readStream.schema(schema).parquet(src), {"a": {"low": 0}})
-
-
-def test_mk_trend_stream_matches_batch_and_survives_restart(spark, tmp_path):
-    """The streaming Mann-Kendall monitor's snapshot equals
-    mann_kendall_test over the rows seen so far — exact incremental S,
-    tie-corrected variance off the histogram state, identical
-    continuity-corrected z trees — and state survives a checkpoint
-    restart. A planted monotone key must flip to 'increasing'."""
-    from morphik_core_spark.operators.analytics import mann_kendall_test
-    from morphik_core_spark.streaming.stateful import mk_trend_stream
-
-    schema = "key string, idx long, value long"
-    # key a: trending with ties; key b: flat noise
-    batch1 = [("a", i, 10 + i + (i % 3 == 0) * 0) for i in range(12)] + [
-        ("b", i, 50 + (i % 2)) for i in range(10)
-    ]
-    batch2 = [("a", 12 + i, 30 + 2 * i) for i in range(10)] + [
-        ("b", 10 + i, 50 + ((i + 1) % 2)) for i in range(6)
-    ]
-
-    src, out, chk = (str(tmp_path / d) for d in ("min", "mout", "mchk"))
-
-    def run_once(rows):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
-
-        def sink(batch_df, epoch_id):
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            mk_trend_stream(stream)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not terminate"
-
-    run_once(batch1)
-    run_once(batch2)
-    rows = spark.read.parquet(out).collect()
-    by = {(r["key"], r["batch_seq"]): r for r in rows}
-    assert by[("a", 1)]["n_points"] == 12 and by[("a", 2)]["n_points"] == 22
-
-    def batch_mk(key, seen):
-        df = spark.createDataFrame(
-            [(i, v) for k, i, v in seen if k == key], "i long, y long"
-        )
-        [r] = mann_kendall_test(df, "i", "y").collect()
-        return r
-
-    for key, seq, seen in [
-        ("a", 1, batch1),
-        ("a", 2, batch1 + batch2),
-        ("b", 2, batch1 + batch2),
-    ]:
-        want = batch_mk(key, seen)
-        got = by[(key, seq)]
-        assert (
-            got["n_points"], got["s_stat"], got["var_s"], got["z"], got["trend"]
-        ) == (
-            want["n_points"], want["s_stat"], want["var_s"], want["z"], want["trend"]
-        ), (key, seq)
-    assert by[("a", 2)]["trend"] == "increasing"
-    assert by[("b", 2)]["trend"] == "none"
-
-
-def test_page_hinkley_stream_matches_batch_and_survives_restart(spark, tmp_path):
-    """The streaming PH snapshot equals page_hinkley over the rows seen
-    so far — identical micro-integer accumulator trees — and the six-
-    int64 state survives a checkpoint restart; the shifted key alarms,
-    the flat key does not."""
-    from morphik_core_spark.operators.analytics import page_hinkley
-    from morphik_core_spark.streaming.stateful import page_hinkley_stream
-
-    import hashlib
-
-    def h(s, m):
-        return int(hashlib.md5(s.encode()).hexdigest()[:8], 16) % m
-
-    schema = "key string, idx long, value long"
-    flat = [("f", i, 100 + h(f"pf{i}", 9)) for i in range(40)]
-    shift = [("s", i, 100 + h(f"pf{i}", 9) + (60 if i >= 20 else 0)) for i in range(40)]
-    batch1 = [r for r in flat + shift if r[1] < 25]
-    batch2 = [r for r in flat + shift if r[1] >= 25]
-
-    src, out, chk = (str(tmp_path / d) for d in ("phin", "phout", "phchk"))
-
-    def run_once(rows):
-        spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
-
-        def sink(batch_df, epoch_id):
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            page_hinkley_stream(stream, delta=2.0, lam=50.0)
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "stream did not terminate"
-
-    run_once(batch1)
-    run_once(batch2)
-    rows = spark.read.parquet(out).collect()
-    by = {(r["key"], r["batch_seq"]): r for r in rows}
-    assert by[("s", 1)]["n"] == 25 and by[("s", 2)]["n"] == 40  # restart kept state
-
-    def batch_ph(key, seen):
-        df = spark.createDataFrame(
-            [(i, v) for k, i, v in seen if k == key], "i long, y long"
-        )
-        [r] = page_hinkley(df, "i", "y", delta=2.0, lam=50.0).collect()
-        return r
-
-    for key, seq, seen in [("s", 1, batch1), ("s", 2, batch1 + batch2), ("f", 2, batch1 + batch2)]:
-        want = batch_ph(key, seen)
-        got = by[(key, seq)]
-        assert (
-            got["n"], got["n_alarms"], got["first_alarm_idx"], got["max_excess"]
-        ) == (
-            want["n"], want["n_alarms"], want["first_alarm_idx"], want["max_excess"]
-        ), (key, seq)
-    assert by[("s", 2)]["n_alarms"] > 0 and by[("f", 2)]["n_alarms"] == 0

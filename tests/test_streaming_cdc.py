@@ -1,32 +1,10 @@
-"""Streaming CDC merge: change batches applied to a versioned snapshot
-with crash-replay idempotency (the Debezium-consumer shape).
-
-Drives the real file-source → foreachBatch → versioned_write path with
-maxFilesPerTrigger=1 so multiple epochs actually occur, then restarts
-the stream against the same checkpoint to pin resume semantics, and
-calls the epoch applier directly with a committed epoch id to pin the
-replay no-op.
-"""
+"""CDC batch compaction: one final op per key, latest sequence wins."""
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import functions as F
-
-from morphik_core_spark.plans.maintenance import (
-    current_version,
-    list_versions,
-    read_version,
-    versioned_write,
-)
-from morphik_core_spark.streaming.cdc import apply_cdc_epoch, compact_changes, run_cdc_stream
+from morphik_core_spark.operators.incremental import compact_changes
 
 CHANGE_SCHEMA = "id long, v string, op string, seq long"
-
-
-def _write_changes(spark, path, rows):
-    spark.createDataFrame(rows, CHANGE_SCHEMA).coalesce(1).write.mode("append").parquet(path)
 
 
 def test_compact_changes_last_op_wins(spark):
@@ -40,67 +18,3 @@ def test_compact_changes_last_op_wins(spark):
     out = {r.id: (r.v, r.op) for r in compact_changes(
         spark.createDataFrame(rows, CHANGE_SCHEMA), ["id"]).collect()}
     assert out == {1: ("a2", "U"), 2: (None, "D"), 3: ("c1", "U")}
-
-
-def test_cdc_stream_end_to_end_with_restart(spark, tmp_path):
-    table = str(tmp_path / "snap")
-    chk = str(tmp_path / "chk")
-    feed = str(tmp_path / "feed")
-
-    # seed version 0
-    seed = spark.createDataFrame([(1, "one"), (2, "two"), (3, "three")], "id long, v string")
-    versioned_write(seed, table, op="seed")
-
-    # two change files -> two epochs under maxFilesPerTrigger=1
-    _write_changes(spark, feed, [(2, "TWO", "U", 10), (4, "four", "I", 11)])
-    _write_changes(spark, feed, [(3, None, "D", 20), (1, "ONE", "U", 21)])
-
-    def run():
-        stream = (
-            spark.readStream.schema(CHANGE_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
-        q = run_cdc_stream(stream, table, ["id"], chk)
-        q.awaitTermination(120)
-
-    run()
-    state = {r.id: r.v for r in read_version(spark, table).collect()}
-    assert state == {1: "ONE", 2: "TWO", 4: "four"}  # 3 deleted
-    n_versions = len(list_versions(table))
-    assert n_versions >= 3  # seed + >=2 cdc epochs
-
-    # restart with nothing new: no further versions
-    run()
-    assert len(list_versions(table)) == n_versions
-
-    # a third change file after restart continues from the checkpoint
-    _write_changes(spark, feed, [(4, "FOUR", "U", 30)])
-    run()
-    state = {r.id: r.v for r in read_version(spark, table).collect()}
-    assert state == {1: "ONE", 2: "TWO", 4: "FOUR"}
-
-    # time travel: the seed state is still readable
-    assert {r.id: r.v for r in read_version(spark, table, 0).collect()} == {
-        1: "one", 2: "two", 3: "three",
-    }
-
-
-def test_cdc_epoch_replay_is_noop(spark, tmp_path):
-    table = str(tmp_path / "snap2")
-    versioned_write(spark.createDataFrame([(1, "x")], "id long, v string"), table, op="seed")
-    batch = spark.createDataFrame([(1, "y", "U", 1)], CHANGE_SCHEMA)
-    assert apply_cdc_epoch(batch, 7, table, ["id"])
-    v_after = current_version(table)
-    # crash replay of the same epoch: no write, version unchanged
-    assert not apply_cdc_epoch(batch, 7, table, ["id"])
-    assert current_version(table) == v_after
-    assert {r.v for r in read_version(spark, table).collect()} == {"y"}
-
-
-def test_cdc_epoch_empty_batch_is_noop(spark, tmp_path):
-    table = str(tmp_path / "snap3")
-    versioned_write(spark.createDataFrame([(1, "x")], "id long, v string"), table, op="seed")
-    empty = spark.createDataFrame([], CHANGE_SCHEMA)
-    assert not apply_cdc_epoch(empty, 0, table, ["id"])
-    assert current_version(table) == 0

@@ -1,17 +1,9 @@
-"""Streaming MinHash-LSH near-dup filter: batch kernel semantics, the
-cross-epoch band store, and agreement with the batch LSH candidate
-criterion."""
+"""MinHash-LSH near-dup filter: batch kernel semantics, the band store,
+and agreement with the batch LSH candidate criterion."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
-from morphik_core_spark.streaming.neardup import (
-    doc_band_keys,
-    near_dup_batch,
-    near_dup_docs_stream,
-)
+from morphik_core_spark.streaming.neardup import doc_band_keys, near_dup_batch
 
 SCHEMA = "doc_id long, text string"
 
@@ -56,25 +48,3 @@ def test_matches_batch_lsh_candidate_criterion(spark, sf_dir):
     pairs = lsh_candidate_pairs(sigs, "doc_id", bands=4, rows_per_band=2).collect()
     candidate_of_smaller = {r.id_b for r in pairs}
     assert dropped <= candidate_of_smaller
-
-
-def test_stream_filters_across_epochs(spark, tmp_path):
-    src = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, SCHEMA).write.mode("append").parquet(src)
-
-    def run():
-        near_dup_docs_stream(spark, src, out, SCHEMA)
-        return sorted(r.doc_id for r in spark.read.parquet(out + "/docs").collect())
-
-    write_batch([(1, BASE), (2, NEAR), (3, OTHER)])
-    assert run() == [1, 3]
-
-    # epoch 2: near-dup of epoch-1 content dropped via the band store,
-    # fresh content passes
-    write_batch([(10, BASE + " slightly"), (11, "entirely new topic sentence with many extra words here")])
-    got = run()
-    assert 10 not in got and 11 in got
-    assert got == [1, 3, 11]
