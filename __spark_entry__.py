@@ -19,7 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from morphik_core_spark.functions.vectors import retrieval_score
+from morphik_core_spark.functions.vectors import query_score
 from morphik_core_spark.operators.analytics import POISSON1_CDF_U30
 from morphik_core_spark.operators import (
     asof,
@@ -159,7 +159,7 @@ def _q_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = emb.select(
         "vec_id",
         F.round(
-            retrieval_score(F.col("embedding").cast("array<double>"), F.lit(qv).cast("array<double>")),
+            query_score("CAST(`embedding` AS ARRAY<DOUBLE>)", qv),
             _SCORE_DECIMALS,
         ).alias("score"),
     )

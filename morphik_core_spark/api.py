@@ -1648,8 +1648,8 @@ class MorphikSpark:
         core/database/models.py:50-80); here the same numbers roll up
         LIVE from the engine tables — one aggregation per table, plus
         object-store HEADs for the raw payloads (listing-scale driver
-        work; at 100 TB this becomes a maintained summary table exactly
-        like the plans/stats manifests)."""
+        work; at 100 TB this becomes a summary table maintained at
+        write time)."""
         from morphik_core_spark.operators.scopes import access_predicate
 
         if auth is None or not auth.app_id:

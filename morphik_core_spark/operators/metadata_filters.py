@@ -1,18 +1,34 @@
-"""MongoDB-style metadata filter DSL compiled to PySpark ``Column`` predicates.
+"""MongoDB-style metadata filter DSL rendered to Spark SQL text.
 
 The reference engine (morphik-core) compiles the same DSL to PostgreSQL WHERE
 clauses over a JSONB column + a side ``metadata_types`` hint map
-(`core/database/metadata_filters.py:29` in /root/reference). Here the target
-is a Catalyst expression tree over:
+(`core/database/metadata_filters.py:29` in /root/reference). Here each
+filter is rendered to one Spark SQL boolean expression, in pure Python, and
+turned into a ``Column`` with a single ``F.expr`` call. Building the same
+tree one ``Column`` method at a time cost one py4j round trip per node
+(about 700 for a two-clause filter); the text costs three. The expression
+reads:
 
 - ``metadata``: a JSON *string* column (arbitrary user metadata), and
 - ``metadata_types``: a ``map<string,string>`` (or JSON string) column of
   declared types per top-level field.
 
-Everything compiles to built-in JVM expressions (``get_json_object``,
+Everything renders to built-in JVM expressions (``get_json_object``,
 variant functions, ``rlike`` ...) so predicates stay inside whole-stage
 codegen and — crucially for the 100 TB target — remain visible to Catalyst
 for pushdown/pruning. No Python UDFs anywhere in the filter path.
+
+Literal rendering (``plans/literal.py``), so the parsed expression equals
+the one the ``F.lit``-built tree held:
+
+- strings are quoted with ``\\`` and ``'`` backslash-escaped and ``$``
+  written as ``\\u0024`` (the parser substitutes ``${...}`` in raw text);
+- doubles are their shortest ``repr`` plus a ``D`` suffix; NaN and ±inf
+  are ``CAST('NaN' AS DOUBLE)``, ``CAST('Infinity' AS DOUBLE)`` ...;
+- decimal, date and timestamp operands are ``CAST('…' AS DECIMAL(38,12))``,
+  ``CAST('…' AS DATE)`` and ``CAST('…' AS TIMESTAMP)``;
+- identifiers are backquoted; lambda variables are ``__mf_e``, a name no
+  column of the filtered tables uses, and no lambda body reads a column.
 
 Operator semantics mirrored from the reference (file:line cites are into
 /root/reference/core/database/metadata_filters.py):
@@ -44,52 +60,63 @@ from __future__ import annotations
 
 from datetime import date, datetime
 from decimal import Decimal, InvalidOperation
-from typing import Any, Callable
+from typing import Any
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from morphik_core_spark.operators.typed_metadata import TypedMetadataError, canonical_type
+from morphik_core_spark.plans.literal import sql_and, sql_double, sql_ident, sql_or, sql_string
 
-__all__ = ["InvalidMetadataFilterError", "MetadataFilterCompiler", "compile_filters"]
+__all__ = ["InvalidMetadataFilterError", "MetadataFilterCompiler", "TextColumnFilterCompiler"]
 
 
 class InvalidMetadataFilterError(ValueError):
     """Raised when a metadata filter expression is malformed."""
 
 
-_DECIMAL_TYPE = "decimal(38,12)"
-
-# schema_of_variant() → canonical metadata type (jsonb_typeof analog).
-_NUMERIC_SCHEMA_PREFIXES = ("TINYINT", "SMALLINT", "INT", "BIGINT", "FLOAT", "DOUBLE", "DECIMAL")
+_DECIMAL_TYPE = "DECIMAL(38,12)"
+_ELEMENT = "__mf_e"  # lambda variable of every per-element predicate
 
 
-def _json_key_path(field: str) -> str:
+def _key_segment(key: str, variant: bool) -> str:
+    """Path segment addressing ``key`` literally. Variant paths take no
+    escapes, so a key holding ``'`` is written ``["key"]`` there."""
+    if variant and "'" in key and '"' not in key:
+        return f'["{key}"]'
+    escaped = key.replace("'", "\\'")
+    return f"['{escaped}']"
+
+
+def _json_key_path(field: str, variant: bool = False) -> str:
     """JSON path addressing `field` as a literal top-level key.
 
     Bracket notation keeps dots in field names literal, matching the
     reference's single-key ``->>`` access.
     """
-    escaped = field.replace("'", "\\'")
-    return f"$['{escaped}']"
+    return "$" + _key_segment(field, variant)
 
 
-def _bool_and(clauses: list[Column]) -> Column:
-    out = clauses[0]
-    for c in clauses[1:]:
-        out = out & c
-    return out
+def _not(clause: str) -> str:
+    return f"NOT ({clause})"
 
 
-def _bool_or(clauses: list[Column]) -> Column:
-    out = clauses[0]
-    for c in clauses[1:]:
-        out = out | c
-    return out
+def _combine(key: str, subs: list[str]) -> str:
+    if key == "$and":
+        return sql_and(subs)
+    if key == "$or":
+        return sql_or(subs)
+    return _not(sql_or(subs))  # $nor
+
+
+def _exists(array: str, body: str) -> str:
+    """``exists(array, e -> body)``; ``body`` reads the element as `_ELEMENT`."""
+    return f"exists({array}, {_ELEMENT} -> {body})"
 
 
 class MetadataFilterCompiler:
-    """Compile filter dicts into a single boolean ``Column``."""
+    """Render filter dicts to one boolean SQL expression; ``compile`` returns
+    it as a ``Column``."""
 
     def __init__(
         self,
@@ -106,67 +133,55 @@ class MetadataFilterCompiler:
         differs (variant text extraction NULLs objects/arrays instead of
         returning their JSON text, which only affects $regex/$contains on
         non-scalar fields)."""
-        self._meta_name = metadata_col
-        self._types_col = types_col
+        self._meta = sql_ident(metadata_col)
+        self._types = sql_ident(types_col) if types_col else None
         self._types_kind = types_kind
         self._metadata_kind = metadata_kind
+        self._variant = self._meta if metadata_kind == "variant" else f"parse_json({self._meta})"
         self._column_fields = column_fields if column_fields is not None else {"filename": "filename"}
-
-    # Column objects need an active session; build them lazily per use.
-    @property
-    def _meta(self) -> Column:
-        return F.col(self._meta_name)
-
-    @property
-    def _variant(self) -> Column:
-        if self._metadata_kind == "variant":
-            return F.col(self._meta_name)
-        return F.parse_json(F.col(self._meta_name))
 
     # ---------------------------------------------------------------- public
 
     def compile(self, filters: dict[str, Any] | None) -> Column:
         """Return a boolean Column; a None/empty filter matches everything."""
+        return F.expr(self.render(filters))
+
+    def render(self, filters: dict[str, Any] | None) -> str:
+        """The filter as Spark SQL boolean expression text."""
         if filters is None:
-            return F.lit(True)
+            return "true"
         if not isinstance(filters, dict):
             raise InvalidMetadataFilterError("Metadata filters must be provided as a JSON object.")
         if not filters:
-            return F.lit(True)
+            return "true"
         return self._expr(filters, context="metadata filter")
 
     # ------------------------------------------------------------ tree walk
 
-    def _expr(self, expression: Any, context: str) -> Column:
+    def _expr(self, expression: Any, context: str) -> str:
         if isinstance(expression, dict):
             if not expression:
                 raise InvalidMetadataFilterError(f"{context.capitalize()} cannot be empty.")
-            clauses: list[Column] = []
+            clauses: list[str] = []
             for key, value in expression.items():
                 if key in ("$and", "$or", "$nor"):
                     if not isinstance(value, list) or not value:
                         raise InvalidMetadataFilterError(f"{key} operator expects a non-empty list of conditions.")
-                    subs = [self._expr(item, context=f"{key} condition") for item in value]
-                    if key == "$and":
-                        clauses.append(_bool_and(subs))
-                    elif key == "$or":
-                        clauses.append(_bool_or(subs))
-                    else:
-                        clauses.append(~_bool_or(subs))
+                    clauses.append(_combine(key, [self._expr(item, context=f"{key} condition") for item in value]))
                 elif key == "$not":
-                    clauses.append(~self._expr(value, context='operator "$not"'))
+                    clauses.append(_not(self._expr(value, context='operator "$not"')))
                 else:
                     clauses.append(self._field_clause(key, value))
-            return _bool_and(clauses)
+            return sql_and(clauses)
 
         if isinstance(expression, list):
             if not expression:
                 raise InvalidMetadataFilterError(f"{context.capitalize()} cannot be an empty list.")
-            return _bool_or([self._expr(item, context="nested condition") for item in expression])
+            return sql_or([self._expr(item, context="nested condition") for item in expression])
 
         raise InvalidMetadataFilterError(f"{context.capitalize()} must be expressed as a JSON object.")
 
-    def _field_clause(self, field: str, value: Any) -> Column:
+    def _field_clause(self, field: str, value: Any) -> str:
         if field in self._column_fields:
             return self._column_field_clause(field, value)
         if isinstance(value, dict) and value and not any(k.startswith("$") for k in value):
@@ -177,23 +192,23 @@ class MetadataFilterCompiler:
             return self._any_of(field, value)
         return self._containment(field, value)
 
-    def _operator_block(self, field: str, operators: dict[str, Any]) -> Column:
+    def _operator_block(self, field: str, operators: dict[str, Any]) -> str:
         if not operators:
             raise InvalidMetadataFilterError(f"Operator block for field '{field}' must be a non-empty object.")
-        clauses: list[Column] = []
+        clauses: list[str] = []
         for op, operand in operators.items():
             if op in ("$eq", "$ne", "$gt", "$gte", "$lt", "$lte"):
                 cmp = self._typed_comparison(field, op, operand)
-                clauses.append(~cmp if op == "$ne" else cmp)
+                clauses.append(_not(cmp) if op == "$ne" else cmp)
             elif op in ("$in", "$nin"):
                 if not isinstance(operand, list):
                     raise InvalidMetadataFilterError(f"{op} operator for field '{field}' expects a list of values.")
                 hit = self._any_of(field, operand)
-                clauses.append(~hit if op == "$nin" else hit)
+                clauses.append(_not(hit) if op == "$nin" else hit)
             elif op == "$exists":
                 clauses.append(self._exists(field, operand))
             elif op == "$not":
-                clauses.append(~self._field_clause(field, operand))
+                clauses.append(_not(self._field_clause(field, operand)))
             elif op == "$type":
                 clauses.append(self._type_check(field, operand))
             elif op == "$regex":
@@ -202,9 +217,9 @@ class MetadataFilterCompiler:
                 clauses.append(self._contains(field, operand))
             else:
                 raise InvalidMetadataFilterError(f"Unsupported metadata filter operator '{op}' for field '{field}'.")
-        return _bool_and(clauses)
+        return sql_and(clauses)
 
-    def _any_of(self, field: str, values: list[Any]) -> Column:
+    def _any_of(self, field: str, values: list[Any]) -> str:
         if not isinstance(values, list) or not values:
             raise InvalidMetadataFilterError(f"Filter list for field '{field}' must contain at least one value.")
         clauses = []
@@ -213,78 +228,78 @@ class MetadataFilterCompiler:
                 clauses.append(self._operator_block(field, item))
             else:
                 clauses.append(self._containment(field, item))
-        return _bool_or(clauses)
+        return sql_or(clauses)
 
     # --------------------------------------------------------- JSON helpers
 
-    def _text(self, field: str) -> Column:
+    def _text(self, field: str) -> str:
         """Raw text of a top-level field (Postgres ``->>`` analog)."""
         if self._metadata_kind == "variant":
-            return F.try_variant_get(self._meta, _json_key_path(field), "string")
-        return F.get_json_object(self._meta, _json_key_path(field))
+            return f"try_variant_get({self._meta}, {sql_string(_json_key_path(field, variant=True))}, 'string')"
+        return f"get_json_object({self._meta}, {sql_string(_json_key_path(field))})"
 
-    def _field_variant(self, field: str) -> Column:
-        return F.try_variant_get(self._variant, _json_key_path(field), "variant")
+    def _variant_at(self, path: str, target: str = "variant") -> str:
+        return f"try_variant_get({self._variant}, {sql_string(path)}, '{target}')"
 
-    def _variant_at(self, path: str) -> Column:
-        return F.try_variant_get(self._variant, path, "variant")
-
-    def _typeof(self, v: Column) -> Column:
+    def _typeof(self, v: str) -> str:
         """Canonical runtime type of a variant value (jsonb_typeof analog)."""
-        schema = F.schema_of_variant(v)
+        schema = f"schema_of_variant({v})"
         return (
-            F.when(schema.isNull(), F.lit(None).cast("string"))
-            .when(schema == "VOID", F.lit("null"))
-            .when(schema == "STRING", F.lit("string"))
-            .when(schema == "BOOLEAN", F.lit("boolean"))
-            .when(schema.startswith("ARRAY"), F.lit("array"))
-            .when(schema.startswith("OBJECT"), F.lit("object"))
-            .otherwise(F.lit("number"))  # all numeric variants
+            f"CASE WHEN {schema} IS NULL THEN CAST(NULL AS STRING)"
+            f" WHEN {schema} = 'VOID' THEN 'null'"
+            f" WHEN {schema} = 'STRING' THEN 'string'"
+            f" WHEN {schema} = 'BOOLEAN' THEN 'boolean'"
+            f" WHEN startswith({schema}, 'ARRAY') THEN 'array'"
+            f" WHEN startswith({schema}, 'OBJECT') THEN 'object'"
+            " ELSE 'number' END"  # all numeric variants
         )
 
-    def _declared_type(self, field: str) -> Column:
+    def _declared_type(self, field: str) -> str:
         """Declared type hint for a field, NULL when absent."""
-        if not self._types_col:
-            return F.lit(None).cast("string")
+        if not self._types:
+            return "CAST(NULL AS STRING)"
         if self._types_kind == "map":
-            return F.col(self._types_col).getItem(field)
-        return F.get_json_object(F.col(self._types_col), _json_key_path(field))
+            return f"{self._types}[{sql_string(field)}]"
+        return f"get_json_object({self._types}, {sql_string(_json_key_path(field))})"
 
-    def _array_elements(self, field: str) -> Column:
+    def _array_elements(self, field: str) -> str:
         """Field as array<variant>, NULL when the field is not a JSON array."""
-        return F.try_variant_get(self._variant, _json_key_path(field), "array<variant>")
+        return self._variant_at(_json_key_path(field, variant=True), "array<variant>")
+
+    def _array_member(self, field: str, element_clause: str) -> str:
+        """The field is an array with an element matching ``element_clause``."""
+        arr = self._array_elements(field)
+        return sql_and([f"{arr} IS NOT NULL", _exists(arr, element_clause)])
 
     # -------------------------------------------------- containment (impl. eq)
 
-    def _containment(self, field: str, value: Any) -> Column:
+    def _containment(self, field: str, value: Any) -> str:
         """Strict JSONB-containment equality + array membership.
 
         Mirrors `@>` semantics (:352-392): the scalar/object/array pattern
         must be *contained* in the field value; a scalar also matches when
         the field is an array holding it.
         """
-        base = self._contained_at(_json_key_path(field), value)
+        base = self._contained_at(_json_key_path(field, variant=True), value)
         if value is None or isinstance(value, (str, int, float, bool)):
-            arr = self._array_elements(field)
-            member = arr.isNotNull() & F.exists(arr, lambda e: self._variant_equals(e, value))
-            return base | member
+            return sql_or([base, self._array_member(field, self._variant_equals(_ELEMENT, value))])
         return base
 
-    def _contained_at(self, path: str, value: Any) -> Column:
+    def _contained_at(self, path: str, value: Any) -> str:
         v = self._variant_at(path)
         if isinstance(value, dict):
+            is_object = f"({self._typeof(v)}) = 'object'"
             if not value:
                 # empty object pattern: matches any object (containment)
-                return self._typeof(v) == "object"
+                return is_object
             clauses = []
             for k, sub in value.items():
-                sub_path = path + f"['{str(k).replace(chr(39), chr(92) + chr(39))}']"
-                clauses.append(self._contained_at(sub_path, sub))
-            return (self._typeof(v) == "object") & _bool_and(clauses)
+                clauses.append(self._contained_at(path + _key_segment(str(k), variant=True), sub))
+            return sql_and([is_object, sql_and(clauses)])
         if isinstance(value, list):
-            arr = F.try_variant_get(self._variant, path, "array<variant>")
+            arr = self._variant_at(path, "array<variant>")
             if not value:
-                return arr.isNotNull()
+                return f"{arr} IS NOT NULL"
             elem_clauses = []
             for item in value:
                 if isinstance(item, (dict, list)):
@@ -292,26 +307,26 @@ class MetadataFilterCompiler:
                         "Nested containers inside array containment patterns are not supported; "
                         "use $contains/$regex or flatten the pattern."
                     )
-                elem_clauses.append(F.exists(arr, self._element_matcher(item)))
-            return arr.isNotNull() & _bool_and(elem_clauses)
+                elem_clauses.append(_exists(arr, self._variant_equals(_ELEMENT, item)))
+            return sql_and([f"{arr} IS NOT NULL", sql_and(elem_clauses)])
         return self._variant_equals(v, value)
 
-    def _element_matcher(self, item: Any) -> Callable[[Column], Column]:
-        """Single-arg lambda for F.exists (pyspark infers lambda arity, so
-        the captured value must NOT appear in the signature)."""
-        return lambda e: self._variant_equals(e, item)
+    def _variant_equals(self, v: str, value: Any) -> str:
+        """Strict typed equality of a variant value against a Python literal.
 
-    def _variant_equals(self, v: Column, value: Any) -> Column:
-        """Strict typed equality of a variant value against a Python literal."""
-        t = self._typeof(v)
+        The value casts are TRY_CASTs: the type test guards them, but Spark
+        may evaluate a cast before its guard (one ``$in`` of two numbers
+        failed with INVALID_VARIANT_CAST on a row whose field is a string).
+        Where the guard holds the cast cannot fail, so no row changes."""
+        t = f"({self._typeof(v)})"
         if value is None:
-            return t == "null"
+            return f"{t} = 'null'"
         if isinstance(value, bool):
-            return (t == "boolean") & (v.cast("boolean") == F.lit(value))
+            return sql_and([f"{t} = 'boolean'", f"TRY_CAST({v} AS BOOLEAN) = {'true' if value else 'false'}"])
         if isinstance(value, (int, float)):
-            return (t == "number") & (v.cast("double") == F.lit(float(value)))
+            return sql_and([f"{t} = 'number'", f"TRY_CAST({v} AS DOUBLE) = {sql_double(float(value))}"])
         if isinstance(value, str):
-            return (t == "string") & (v.cast("string") == F.lit(value))
+            return sql_and([f"{t} = 'string'", f"CAST({v} AS STRING) = {sql_string(value)}"])
         raise InvalidMetadataFilterError(
             f"Metadata filter contains a non-serializable value: {value!r}. "
             "Use explicit operators like {'$eq': value} for typed comparisons."
@@ -319,54 +334,54 @@ class MetadataFilterCompiler:
 
     # ------------------------------------------------------ typed comparison
 
-    def _typed_comparison(self, field: str, op: str, operand: Any) -> Column:
+    def _typed_comparison(self, field: str, op: str, operand: Any) -> str:
         """Per-declared-type guarded comparison; branches OR-ed (:233-269)."""
-        apply = _COMPARATORS[op]
+        sym = _COMPARATORS[op]
         text = self._text(field)
-        declared = self._declared_type(field)
-        branches: list[Column] = []
+        declared = f"({self._declared_type(field)})"
+        branches: list[str] = []
+
+        def branch(kind: str, sql_type: str, literal: str) -> str:
+            value = f"CASE WHEN {declared} = '{kind}' THEN TRY_CAST({text} AS {sql_type}) END"
+            return f"({value}) {sym} {literal}"
 
         numeric_literal = _numeric_literal(operand)
         if numeric_literal is not None:
-            num_val = F.when(declared == "number", text.try_cast("double"))
-            branches.append(apply(num_val, F.lit(numeric_literal).cast("double")))
-            dec_val = F.when(declared == "decimal", text.try_cast(_DECIMAL_TYPE))
-            branches.append(apply(dec_val, F.lit(numeric_literal).cast(_DECIMAL_TYPE)))
+            branches.append(branch("number", "DOUBLE", sql_double(float(numeric_literal))))
+            branches.append(branch("decimal", _DECIMAL_TYPE, f"CAST('{numeric_literal}' AS {_DECIMAL_TYPE})"))
 
         dt_literal = _datetime_literal(operand)
         if dt_literal is not None:
-            ts_val = F.when(declared == "datetime", text.try_cast("timestamp"))
-            branches.append(apply(ts_val, F.lit(dt_literal).cast("timestamp")))
+            branches.append(branch("datetime", "TIMESTAMP", f"CAST({sql_string(dt_literal)} AS TIMESTAMP)"))
 
         date_literal = _date_literal(operand)
         if date_literal is not None:
-            d_val = F.when(declared == "date", text.try_cast("date"))
-            branches.append(apply(d_val, F.lit(date_literal).cast("date")))
+            branches.append(branch("date", "DATE", f"CAST({sql_string(date_literal)} AS DATE)"))
 
         if op in ("$eq", "$ne") and isinstance(operand, str):
-            is_string = F.coalesce(declared, F.lit("string")) == "string"
-            branches.append(is_string & apply(text, F.lit(operand)))
+            is_string = f"coalesce({declared}, 'string') = 'string'"
+            branches.append(sql_and([is_string, f"({text}) {sym} {sql_string(operand)}"]))
 
         if not branches:
             raise InvalidMetadataFilterError(
                 f"Operator '{op}' for field '{field}' requires a numeric, decimal, "
                 "ISO8601 date/datetime, or string value."
             )
-        return _bool_or(branches)
+        return sql_or(branches)
 
     # ------------------------------------------------------- other operators
 
-    def _exists(self, field: str, operand: Any) -> Column:
+    def _exists(self, field: str, operand: Any) -> str:
         expected = _coerce_exists_flag(operand, field)
         if self._metadata_kind == "variant":
             # explicit null → schema 'VOID' (present); missing → NULL schema
-            present = F.schema_of_variant(self._field_variant(field)).isNotNull()
+            present = f"schema_of_variant({self._variant_at(_json_key_path(field, variant=True))}) IS NOT NULL"
         else:
-            present = F.array_contains(F.json_object_keys(self._meta), field)
-        present = F.coalesce(present, F.lit(False))
-        return present if expected else ~present
+            present = f"array_contains(json_object_keys({self._meta}), {sql_string(field)})"
+        present = f"coalesce({present}, false)"
+        return present if expected else _not(present)
 
-    def _type_check(self, field: str, operand: Any) -> Column:
+    def _type_check(self, field: str, operand: Any) -> str:
         if isinstance(operand, str):
             names = [operand]
         elif isinstance(operand, list) and operand and all(isinstance(x, str) for x in operand):
@@ -380,51 +395,40 @@ class MetadataFilterCompiler:
         except TypedMetadataError as exc:
             raise InvalidMetadataFilterError(str(exc)) from exc
 
-        if self._types_col:
-            declared = F.coalesce(self._declared_type(field), F.lit("string"))
-            return _bool_or([declared == t for t in canon])
+        if self._types:
+            declared = f"coalesce({self._declared_type(field)}, 'string')"
+            return sql_or([f"{declared} = {sql_string(t)}" for t in canon])
         # Fallback: runtime type of the JSON value (reference :346-360 maps
         # decimal→number, datetime/date→string under jsonb_typeof).
         runtime_map = {"decimal": "number", "datetime": "string", "date": "string"}
-        runtime = self._typeof(self._field_variant(field))
-        return _bool_or([runtime == runtime_map.get(t, t) for t in canon])
+        runtime = f"({self._typeof(self._variant_at(_json_key_path(field, variant=True)))})"
+        return sql_or([f"{runtime} = {sql_string(runtime_map.get(t, t))}" for t in canon])
 
-    def _regex(self, field: str, operand: Any) -> Column:
+    def _string_elements(self, field: str, match) -> str:
+        """``match(text)`` on the field's text OR on any string element when
+        the field is an array."""
+        element = sql_and([f"schema_of_variant({_ELEMENT}) = 'STRING'", match(f"CAST({_ELEMENT} AS STRING)")])
+        return sql_or([match(self._text(field)), self._array_member(field, element)])
+
+    def _regex(self, field: str, operand: Any) -> str:
         pattern, case_insensitive = _regex_operand(operand, field)
-        jpattern = f"(?i){pattern}" if case_insensitive else pattern
-        base = self._text(field).rlike(jpattern)
-        arr = self._array_elements(field)
-        member = arr.isNotNull() & F.exists(
-            arr,
-            lambda e: (F.schema_of_variant(e) == "STRING") & e.cast("string").rlike(jpattern),
-        )
-        return base | member
+        jpattern = sql_string(f"(?i){pattern}" if case_insensitive else pattern)
+        return self._string_elements(field, lambda text: f"({text}) RLIKE {jpattern}")
 
-    def _contains(self, field: str, operand: Any) -> Column:
+    def _contains(self, field: str, operand: Any) -> str:
         value, case_sensitive = _contains_operand(operand, field)
-
-        def hit(col: Column) -> Column:
-            if case_sensitive:
-                return col.contains(F.lit(value))
-            return F.lower(col).contains(F.lit(value.lower()))
-
-        base = hit(self._text(field))
-        arr = self._array_elements(field)
-        member = arr.isNotNull() & F.exists(
-            arr, lambda e: (F.schema_of_variant(e) == "STRING") & hit(e.cast("string"))
-        )
-        return base | member
+        return self._string_elements(field, lambda text: _contains_sql(text, value, case_sensitive))
 
     # ---------------------------------------------------------- column fields
 
-    def _column_field_clause(self, field: str, value: Any) -> Column:
+    def _column_field_clause(self, field: str, value: Any) -> str:
         column = self._column_fields[field]
         builder = TextColumnFilterCompiler(column)
         if isinstance(value, dict):
             if not value:
                 raise InvalidMetadataFilterError(f"{field} filter cannot be empty.")
             if any(k.startswith("$") for k in value):
-                return builder.compile(value)
+                return builder.render(value)
             raise InvalidMetadataFilterError(
                 f"{field} filter must use operators (e.g., {{'{field}': {{'$eq': 'example.pdf'}}}})."
             )
@@ -442,40 +446,41 @@ class TextColumnFilterCompiler:
     """
 
     def __init__(self, column: str) -> None:
-        self._col = F.col(column)
+        self._col = sql_ident(column)
 
     def compile(self, filters: dict[str, Any] | None) -> Column:
+        return F.expr(self.render(filters))
+
+    def render(self, filters: dict[str, Any] | None) -> str:
+        """The filter as Spark SQL boolean expression text."""
         if filters is None or (isinstance(filters, dict) and not filters):
-            return F.lit(True)
+            return "true"
         if not isinstance(filters, dict):
             raise InvalidMetadataFilterError("Filename filters must be provided as a JSON object.")
         return self._expr(filters, context="filename filter")
 
-    def _expr(self, expression: Any, context: str) -> Column:
+    def _expr(self, expression: Any, context: str) -> str:
         if isinstance(expression, dict):
             if not expression:
                 raise InvalidMetadataFilterError(f"{context.capitalize()} cannot be empty.")
-            clauses: list[Column] = []
+            clauses: list[str] = []
             for key, value in expression.items():
                 if key in ("$and", "$or", "$nor"):
                     if not isinstance(value, list) or not value:
                         raise InvalidMetadataFilterError(f"{key} operator expects a non-empty list of conditions.")
-                    subs = [self._expr(item, context=f"{key} condition") for item in value]
-                    clauses.append(
-                        _bool_and(subs) if key == "$and" else (_bool_or(subs) if key == "$or" else ~_bool_or(subs))
-                    )
+                    clauses.append(_combine(key, [self._expr(item, context=f"{key} condition") for item in value]))
                 elif key == "$not":
-                    clauses.append(~self._expr(value, context='operator "$not"'))
+                    clauses.append(_not(self._expr(value, context='operator "$not"')))
                 else:
                     clauses.append(self._operator(key, value))
-            return _bool_and(clauses)
+            return sql_and(clauses)
         if isinstance(expression, list):
             if not expression:
                 raise InvalidMetadataFilterError(f"{context.capitalize()} cannot be an empty list.")
-            return _bool_or([self._expr(item, context="nested condition") for item in expression])
+            return sql_or([self._expr(item, context="nested condition") for item in expression])
         raise InvalidMetadataFilterError(f"{context.capitalize()} must be expressed as a JSON object.")
 
-    def _operator(self, op: str, operand: Any) -> Column:
+    def _operator(self, op: str, operand: Any) -> str:
         if op in ("$eq", "$ne", "$gt", "$gte", "$lt", "$lte"):
             return self.comparison(op, operand)
         if op == "$in":
@@ -484,35 +489,33 @@ class TextColumnFilterCompiler:
             return self.in_clause(operand, negate=True)
         if op == "$exists":
             expected = _coerce_exists_flag(operand, "filename")
-            return self._col.isNotNull() if expected else self._col.isNull()
+            return f"{self._col} IS NOT NULL" if expected else f"{self._col} IS NULL"
         if op == "$regex":
             pattern, ci = _regex_operand(operand, "filename")
-            return self._col.rlike(f"(?i){pattern}" if ci else pattern)
+            return f"{self._col} RLIKE {sql_string(f'(?i){pattern}' if ci else pattern)}"
         if op == "$contains":
             value, case_sensitive = _contains_operand(operand, "filename")
-            if case_sensitive:
-                return self._col.contains(F.lit(value))
-            return F.lower(self._col).contains(F.lit(value.lower()))
+            return _contains_sql(self._col, value, case_sensitive)
         raise InvalidMetadataFilterError(f"Unsupported filename filter operator '{op}'.")
 
-    def comparison(self, op: str, operand: Any) -> Column:
+    def comparison(self, op: str, operand: Any) -> str:
         if op == "$eq":
             if operand is None:
-                return self._col.isNull()
+                return f"{self._col} IS NULL"
             if not isinstance(operand, str):
                 raise InvalidMetadataFilterError("Filename $eq operator expects a string value.")
-            return self._col == F.lit(operand)
+            return f"{self._col} = {sql_string(operand)}"
         if op == "$ne":
             if operand is None:
-                return self._col.isNotNull()
+                return f"{self._col} IS NOT NULL"
             if not isinstance(operand, str):
                 raise InvalidMetadataFilterError("Filename $ne operator expects a string value.")
-            return ~self._col.eqNullSafe(F.lit(operand))  # IS DISTINCT FROM
+            return _not(f"{self._col} <=> {sql_string(operand)}")  # IS DISTINCT FROM
         if operand is None or not isinstance(operand, str):
             raise InvalidMetadataFilterError(f"Filename {op} operator expects a string value.")
-        return _COMPARATORS[op](self._col, F.lit(operand))
+        return f"{self._col} {_COMPARATORS[op]} {sql_string(operand)}"
 
-    def in_clause(self, operand: Any, negate: bool) -> Column:
+    def in_clause(self, operand: Any, negate: bool) -> str:
         if not isinstance(operand, list) or not operand:
             raise InvalidMetadataFilterError("Filename $in/$nin operator expects a non-empty list of values.")
         has_null = any(item is None for item in operand)
@@ -520,40 +523,31 @@ class TextColumnFilterCompiler:
         if not all(isinstance(v, str) for v in values):
             raise InvalidMetadataFilterError("Filename $in/$nin operator expects string values.")
 
+        isin = f"{self._col} IN ({', '.join(sql_string(v) for v in values)})"
         if not negate:
             clauses = []
             if values:
-                clauses.append(self._col.isin(values))
+                clauses.append(isin)
             if has_null:
-                clauses.append(self._col.isNull())
-            return _bool_or(clauses)
+                clauses.append(f"{self._col} IS NULL")
+            return sql_or(clauses)
         if has_null:
             if values:
-                return self._col.isNotNull() & ~self._col.isin(values)
-            return self._col.isNotNull()
-        return self._col.isNull() | ~self._col.isin(values)
+                return sql_and([f"{self._col} IS NOT NULL", _not(isin)])
+            return f"{self._col} IS NOT NULL"
+        return sql_or([f"{self._col} IS NULL", _not(isin)])
 
 
 # ------------------------------------------------------------- module-level
 
-_COMPARATORS: dict[str, Callable[[Column, Column], Column]] = {
-    "$eq": lambda a, b: a == b,
-    "$ne": lambda a, b: a == b,  # caller wraps in NOT
-    "$gt": lambda a, b: a > b,
-    "$gte": lambda a, b: a >= b,
-    "$lt": lambda a, b: a < b,
-    "$lte": lambda a, b: a <= b,
-}
+# ``$ne`` renders as ``=``; the caller wraps it in NOT
+_COMPARATORS: dict[str, str] = {"$eq": "=", "$ne": "=", "$gt": ">", "$gte": ">=", "$lt": "<", "$lte": "<="}
 
 
-def compile_filters(
-    filters: dict[str, Any] | None,
-    metadata_col: str = "metadata",
-    types_col: str | None = "metadata_types",
-    types_kind: str = "map",
-) -> Column:
-    """One-shot convenience wrapper around MetadataFilterCompiler."""
-    return MetadataFilterCompiler(metadata_col, types_col, types_kind).compile(filters)
+def _contains_sql(text: str, value: str, case_sensitive: bool) -> str:
+    if case_sensitive:
+        return f"contains({text}, {sql_string(value)})"
+    return f"contains(lower({text}), {sql_string(value.lower())})"
 
 
 def _numeric_literal(operand: Any) -> str | None:

@@ -35,14 +35,10 @@ from typing import Any, Callable, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from morphik_core_spark.functions.vectors import retrieval_score
+from morphik_core_spark.functions.vectors import query_score
 from morphik_core_spark.operators.metadata_filters import MetadataFilterCompiler
-from morphik_core_spark.operators.scopes import (
-    AuthContext,
-    access_predicate,
-    status_predicate,
-    system_predicate,
-)
+from morphik_core_spark.operators.scopes import AuthContext, access_sql, status_sql, system_sql
+from morphik_core_spark.plans.literal import sql_and, sql_ident
 
 __all__ = [
     "authorized_documents",
@@ -73,16 +69,19 @@ def authorized_documents(
     """Doc ids passing auth + metadata DSL + system + status predicates.
 
     Retrieval pins status='completed' by default (document_service.py:344-349).
+    The auth, system and status predicates are joined as SQL text into one
+    ``F.expr``; the metadata filter is the compiler's own ``F.expr``.
     """
-    pred = F.lit(True)
+    scope = []
     if auth is not None:
-        pred = pred & access_predicate(auth)
+        scope.append(access_sql(auth))
+    if system_filters:
+        scope.append(system_sql(system_filters))
+    if status_filter:
+        scope.append(status_sql(list(status_filter)))
+    pred = F.expr(sql_and(scope) or "true")
     if filters:
         pred = pred & (compiler or MetadataFilterCompiler()).compile(filters)
-    if system_filters:
-        pred = pred & system_predicate(system_filters)
-    if status_filter:
-        pred = pred & status_predicate(list(status_filter))
     return documents.filter(pred).select(F.col(id_col).alias("document_id"))
 
 
@@ -107,9 +106,9 @@ def scoped_chunks(
     semi-join shuffles on ``doc_col`` and AQE stays free to re-plan from real
     runtime sizes. ``broadcast_threshold=None`` skips the probe and forces
     the broadcast (callers that know the set is tiny by construction).
-    ``auth_rows_hint`` (the authorized-document count, from persisted
-    `plans/stats` manifests or the serving snapshot) answers the gate
-    without running the probe. `MorphikSpark` passes its snapshot's
+    ``auth_rows_hint`` (an upper bound on the authorized-document count
+    that the caller already holds) answers the gate without running the
+    probe. `MorphikSpark` passes its snapshot's
     documents row count, counted once per table version (api.py,
     "Storage"), but only while it is at most `BROADCAST_ROWS`: an upper
     bound settles the small case alone, since a selective filter on a
@@ -129,9 +128,8 @@ def scoped_chunks(
 
 def score_chunks(chunks: DataFrame, query_vector: Sequence[float], embedding_col: str = "embedding") -> DataFrame:
     """Attach the reference retrieval score (1 − cos_dist/2) vs a query vector."""
-    q = F.lit(list(float(x) for x in query_vector)).cast("array<double>")
-    emb = F.col(embedding_col).cast("array<double>")
-    return chunks.withColumn("score", retrieval_score(emb, q))
+    emb = f"CAST({sql_ident(embedding_col)} AS ARRAY<DOUBLE>)"
+    return chunks.withColumn("score", query_score(emb, query_vector))
 
 
 def top_k(df: DataFrame, k: int, score_col: str = "score", tiebreak: Sequence[str] = ()) -> DataFrame:

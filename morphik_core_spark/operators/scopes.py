@@ -8,10 +8,14 @@ layers in front of the user's metadata filter
 2. system filters     — folder/user scoping incl. path-prefix + depth
 3. status filter      — ``status IN (...)``; retrieval pins 'completed'
 
-All compile to plain Column predicates on flattened columns — at 100 TB
-these are the partition-pruning columns (tables should be written
-partitioned by ``app_id`` and bucketed/sorted by ``folder_path``), so
-keeping them out of JSON and in real columns is what makes the scan prune.
+All render to Spark SQL text over flattened columns (``access_sql``,
+``system_sql``, ``status_sql``, with the literal rules of the filter DSL,
+``plans/literal.py``); each ``*_predicate`` is that text as one
+``F.expr`` Column, and ``retrieval.authorized_documents`` joins the three
+texts into one predicate. At 100 TB these are the partition-pruning
+columns (tables should be written partitioned by ``app_id`` and
+bucketed/sorted by ``folder_path``), so keeping them out of JSON and in
+real columns is what makes the scan prune.
 """
 
 from __future__ import annotations
@@ -22,7 +26,18 @@ from typing import Any
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["AuthContext", "access_predicate", "system_predicate", "status_predicate", "build_folder_scope"]
+from morphik_core_spark.plans.literal import sql_and, sql_ident, sql_literal, sql_or, sql_string
+
+__all__ = [
+    "AuthContext",
+    "access_predicate",
+    "access_sql",
+    "system_predicate",
+    "system_sql",
+    "status_predicate",
+    "status_sql",
+    "build_folder_scope",
+]
 
 # system-filter key → flattened column (reference postgres_database.py:1223+)
 _SYSTEM_COLUMNS = {
@@ -36,6 +51,8 @@ _SYSTEM_COLUMNS = {
 # columns where legacy rows stored '' instead of NULL
 _EMPTY_AS_NULL = frozenset({"folder_name", "folder_path", "end_user_id"})
 
+_FOLDER_PATH = sql_ident("folder_path")
+
 
 @dataclass(frozen=True)
 class AuthContext:
@@ -45,24 +62,28 @@ class AuthContext:
     app_id: str | None = None
 
 
-def access_predicate(auth: AuthContext) -> Column:
+def access_sql(auth: AuthContext) -> str:
     """``app_id`` match in cloud mode, else ``owner_id`` match (:1199-1218)."""
     if auth.app_id:
-        return F.col("app_id") == F.lit(auth.app_id)
-    return F.col("owner_id") == F.lit(auth.user_id)
+        return f"`app_id` = {sql_literal(auth.app_id)}"
+    return f"`owner_id` = {sql_literal(auth.user_id)}"
 
 
-def _value_clause(column: str, value: Any) -> Column:
+def access_predicate(auth: AuthContext) -> Column:
+    return F.expr(access_sql(auth))
+
+
+def _value_clause(column: str, value: Any) -> str:
+    col = sql_ident(column)
     if value is None:
-        col = F.col(column)
         if column in _EMPTY_AS_NULL:
-            return col.isNull() | (col == "")
-        return col.isNull()
-    return F.col(column) == F.lit(value)
+            return f"({col} IS NULL) OR ({col} = '')"
+        return f"{col} IS NULL"
+    return f"{col} = {sql_literal(value)}"
 
 
-def system_predicate(system_filters: dict[str, Any] | None) -> Column:
-    """Compile folder/user scoping filters (:1223-1313).
+def system_sql(system_filters: dict[str, Any] | None) -> str:
+    """Render folder/user scoping filters (:1223-1313).
 
     Keys: the flattened columns, plus
     - ``folder_path_prefix``: exact path OR any descendant (``p`` or ``p/...``)
@@ -71,9 +92,9 @@ def system_predicate(system_filters: dict[str, Any] | None) -> Column:
     Values may be scalars or lists (OR-ed). Keys AND together.
     """
     if not system_filters:
-        return F.lit(True)
+        return "true"
 
-    key_clauses: list[Column] = []
+    key_clauses: list[str] = []
     for key, value in system_filters.items():
         if key == "folder_path_prefix":
             values = value if isinstance(value, list) else [value]
@@ -82,10 +103,10 @@ def system_predicate(system_filters: dict[str, Any] | None) -> Column:
             alts = []
             for item in values:
                 if item is None:
-                    alts.append(F.col("folder_path").isNull() | (F.col("folder_path") == ""))
+                    alts.append(f"({_FOLDER_PATH} IS NULL) OR ({_FOLDER_PATH} = '')")
                 else:
                     alts.append(_prefix_clause(str(item)))
-            key_clauses.append(_any(alts))
+            key_clauses.append(sql_or(alts))
         elif key == "folder_path_prefix_depth":
             entries = value if isinstance(value, list) else [value]
             alts = []
@@ -95,45 +116,42 @@ def system_predicate(system_filters: dict[str, Any] | None) -> Column:
                 clause = _prefix_clause(str(entry["prefix"]))
                 max_depth = entry.get("max_depth")
                 if max_depth is not None:
-                    depth = F.size(F.split(F.expr("trim(BOTH '/' FROM folder_path)"), "/"))
-                    clause = clause & (depth <= F.lit(int(max_depth)))
+                    depth = f"size(split(trim(BOTH '/' FROM {_FOLDER_PATH}), '/'))"
+                    clause = f"({clause}) AND ({depth} <= {int(max_depth)})"
                 alts.append(clause)
             if alts:
-                key_clauses.append(_any(alts))
+                key_clauses.append(sql_or(alts))
         elif key in _SYSTEM_COLUMNS:
             values = value if isinstance(value, list) else [value]
             if not values:
                 continue
-            key_clauses.append(_any([_value_clause(_SYSTEM_COLUMNS[key], v) for v in values]))
+            key_clauses.append(sql_or([_value_clause(_SYSTEM_COLUMNS[key], v) for v in values]))
         # unknown keys are ignored, like the reference
 
     if not key_clauses:
-        return F.lit(True)
-    out = key_clauses[0]
-    for c in key_clauses[1:]:
-        out = out & c
-    return out
+        return "true"
+    return sql_and(key_clauses)
 
 
-def _prefix_clause(prefix: str) -> Column:
-    fp = F.col("folder_path")
-    return (fp == F.lit(prefix)) | fp.startswith(F.lit(prefix.rstrip("/") + "/"))
+def system_predicate(system_filters: dict[str, Any] | None) -> Column:
+    return F.expr(system_sql(system_filters))
 
 
-def _any(clauses: list[Column]) -> Column:
-    out = clauses[0]
-    for c in clauses[1:]:
-        out = out | c
-    return out
+def _prefix_clause(prefix: str) -> str:
+    child = sql_string(prefix.rstrip("/") + "/")
+    return f"({_FOLDER_PATH} = {sql_string(prefix)}) OR startswith({_FOLDER_PATH}, {child})"
+
+
+def status_sql(statuses: list[str | None] | None, status_col: str = "status") -> str:
+    """``status IN (...)`` with NULL-aware entries (:1146-1158)."""
+    if not statuses:
+        return "true"
+    col = sql_ident(status_col)
+    return sql_or([f"{col} IS NULL" if s is None else f"{col} = {sql_string(str(s))}" for s in statuses])
 
 
 def status_predicate(statuses: list[str | None] | None, status_col: str = "status") -> Column:
-    """``status IN (...)`` with NULL-aware entries (:1146-1158)."""
-    if not statuses:
-        return F.lit(True)
-    col = F.col(status_col)
-    alts = [col.isNull() if s is None else (col == F.lit(str(s))) for s in statuses]
-    return _any(alts)
+    return F.expr(status_sql(statuses, status_col))
 
 
 def build_folder_scope(

@@ -21,7 +21,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from morphik_core_spark.functions.vectors import dot, retrieval_score
+from morphik_core_spark.functions.vectors import dot, query_score, retrieval_score
+from morphik_core_spark.plans.literal import sql_ident
 
 __all__ = [
     "knn_brute_force",
@@ -432,8 +433,7 @@ def knn_pq(
         .orderBy(F.col("approx_dist").asc(), F.col(id_col).asc())
         .limit(n_candidates)
     )
-    q_lit = F.array(*[F.lit(float(x)) for x in query_vec])
-    score = retrieval_score(F.col(emb_col).cast("array<double>"), q_lit)
+    score = query_score(f"CAST({sql_ident(emb_col)} AS ARRAY<DOUBLE>)", query_vec)
     if decimals is not None:
         score = F.round(score, decimals)
     return (
@@ -571,10 +571,8 @@ def knn_matryoshka(
     this logic.
     """
     q = [float(x) for x in query_vector]
-    q_coarse = F.lit(q[:coarse_dims]).cast("array<double>")
-    q_full = F.lit(q).cast("array<double>")
-    prefix = F.slice(F.col(emb_col).cast("array<double>"), 1, coarse_dims)
-    coarse_score = retrieval_score(prefix, q_coarse)
+    emb = f"CAST({sql_ident(emb_col)} AS ARRAY<DOUBLE>)"
+    coarse_score = query_score(f"slice({emb}, 1, {int(coarse_dims)})", q[:coarse_dims])
     if decimals is not None:
         # cut candidates on the ROUND(decimals) value both engines carry —
         # the boundary is then engine-exact (id tiebreak settles ties)
@@ -584,10 +582,7 @@ def knn_matryoshka(
         .orderBy(F.col("coarse_score").desc(), F.col(id_col).asc())
         .limit(candidates)
     )
-    rescored = coarse.select(
-        id_col,
-        retrieval_score(F.col(emb_col).cast("array<double>"), q_full).alias("score"),
-    )
+    rescored = coarse.select(id_col, query_score(emb, q).alias("score"))
     if decimals is not None:
         rescored = rescored.withColumn("score", F.round("score", decimals))
     return rescored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
@@ -648,10 +643,9 @@ def knn_ivf_partitioned(
     files), exact-rescore the probed fraction, top-k."""
     probes = probe_list_ids(query_vector, centroids, n_probes, decimals=decimals or 6)
     df = spark.read.parquet(path).filter(F.col("ivf_cid").isin(probes))
-    q = F.lit([float(x) for x in query_vector]).cast("array<double>")
     scored = df.select(
         id_col,
-        retrieval_score(F.col(emb_col).cast("array<double>"), q).alias("score"),
+        query_score(f"CAST({sql_ident(emb_col)} AS ARRAY<DOUBLE>)", query_vector).alias("score"),
     )
     if decimals is not None:
         scored = scored.withColumn("score", F.round("score", decimals))

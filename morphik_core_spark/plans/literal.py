@@ -1,5 +1,6 @@
-"""Bounded driver-side pulls, and tiny literal DataFrames via SQL VALUES
-LocalRelations — pure JVM.
+"""Bounded driver-side pulls, tiny literal DataFrames via SQL VALUES
+LocalRelations — pure JVM — and the Spark SQL literal and identifier
+renderers that every SQL-text expression builder shares.
 
 ``bounded_collect`` is the one way an operator pulls a contract-bounded
 frame to the driver: it collects ``df.limit(bound + 1)``, so an
@@ -21,6 +22,15 @@ ride as STRINGS (arbitrary-precision decimals past int64; shortest
 round-trip ``repr`` for doubles — CAST(string AS DOUBLE) reproduces the
 bit pattern); None becomes a typed NULL; strings are quoted with
 backslash escaping (Spark's default escapedStringLiterals=false).
+
+``sql_string`` and ``sql_double`` are the one way Python values become
+SQL text. A string escapes ``\\`` and ``'`` with a backslash and writes
+``$`` as ``\\u0024``, so a user value such as ``${spark.app.name}`` is
+never rewritten by the parser's variable substitution (which runs on the
+raw text before lexing); the lexer turns the escape back into ``$``. A
+double renders as its shortest round-trip ``repr`` with a ``D`` suffix,
+which Spark parses to the same bit pattern; NaN and ±inf, which have no
+literal form, render as ``CAST('NaN' AS DOUBLE)`` and the like.
 """
 
 from __future__ import annotations
@@ -48,26 +58,69 @@ def bounded_collect(df: DataFrame, bound: int, what: str) -> list:
     return rows
 
 
+def sql_string(s: str) -> str:
+    """``s`` as a quoted Spark SQL string literal."""
+    esc = s.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
+    return f"'{esc}'"
+
+
+def _double_text(f: float) -> str:
+    if math.isnan(f):
+        return "NaN"
+    if math.isinf(f):
+        return "Infinity" if f > 0 else "-Infinity"
+    return repr(f)
+
+
+def sql_double(x: float) -> str:
+    """``x`` as a DOUBLE literal that parses to the same bits."""
+    f = float(x)
+    if math.isnan(f) or math.isinf(f):
+        return f"CAST('{_double_text(f)}' AS DOUBLE)"
+    return f"{f!r}D"
+
+
+def sql_literal(v) -> str:
+    """A Python scalar as the literal ``F.lit(v)`` would build."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        return sql_double(v)
+    return sql_string(str(v))
+
+
+def sql_ident(name: str) -> str:
+    """A column reference as ``F.col(name)`` resolves it: each dot-separated
+    part backquoted, a name already holding backquotes kept as written."""
+    if "`" in name:
+        return name
+    return ".".join(f"`{part}`" for part in name.split("."))
+
+
+def sql_and(clauses: list[str]) -> str:
+    return " AND ".join(f"({c})" for c in clauses)
+
+
+def sql_or(clauses: list[str]) -> str:
+    return " OR ".join(f"({c})" for c in clauses)
+
+
 def _cell(v, typ: str) -> str:
     if v is None:
         return f"CAST(NULL AS {typ})"
     if typ == "string":
-        esc = str(v).replace("\\", "\\\\").replace("'", "\\'")
-        return f"'{esc}'"
+        return sql_string(str(v))
     if typ == "date":
         # datetime.date (or an ISO string) — the literal is engine-exact
         return f"CAST('{v.isoformat() if hasattr(v, 'isoformat') else v}' AS DATE)"
     if typ.startswith("decimal"):
         return f"CAST('{v}' AS {typ})"
     if typ in ("double", "float"):
-        f = float(v)
-        if math.isnan(f):
-            s = "NaN"
-        elif math.isinf(f):
-            s = "Infinity" if f > 0 else "-Infinity"
-        else:
-            s = repr(f)
-        return f"CAST('{s}' AS {typ})"
+        return f"CAST('{_double_text(float(v))}' AS {typ})"
     if typ == "array<double>":
         inner = ",".join(_cell(float(x), "double") for x in v)
         return f"CAST(ARRAY({inner}) AS ARRAY<DOUBLE>)"

@@ -1,91 +1,16 @@
-"""Table statistics (ANALYZE analog): row counts, per-column min/max,
-null counts, and approximate distinct counts, persisted as a JSON
-manifest next to the table.
+"""Key-skew audit and the salted aggregation that answers it.
 
-This closes the planning loop SCALE.md promises: the broadcast gates
-(`retrieval.scoped_chunks`'s limit-probe, bench-time join choices) can
-consult persisted stats instead of probing — on a cluster the probe
-costs a scan-task launch per query, while stats are computed once per
-snapshot (e.g. right after the write that produced it) and read for
-free.
-
-The ndv estimate uses Spark's built-in HLL (`approx_count_distinct`) —
-engine-internal planning data needs no cross-engine oracle; the
-oracle-checkable HLL lives in `operators/sketches`.
+`key_skew_histogram` tells you, before a large join or aggregation runs,
+whether its key is skewed; `salted_agg` is the two-stage aggregation
+shape for a hot key.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = [
-    "compute_table_stats",
-    "write_stats",
-    "read_stats",
-    "should_broadcast",
-    "key_skew_histogram",
-    "top_heavy_keys",
-    "estimate_join_rows",
-    "salted_agg",
-]
-
-_STATS_FILE = "_stats.json"
-
-
-def compute_table_stats(df: DataFrame, cols: list[str] | None = None) -> dict:
-    """One aggregation pass → {row_count, columns: {col: {min, max,
-    null_count, approx_ndv}}}. min/max are stringified (JSON-safe across
-    types); numeric consumers parse back."""
-    cols = cols or [c for c, t in df.dtypes if not t.startswith(("array", "map", "struct", "binary"))]
-    aggs = [F.count(F.lit(1)).alias("_rows")]
-    for c in cols:
-        aggs += [
-            F.min(c).cast("string").alias(f"_min_{c}"),
-            F.max(c).cast("string").alias(f"_max_{c}"),
-            F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"_nulls_{c}"),
-            F.approx_count_distinct(c).alias(f"_ndv_{c}"),
-        ]
-    row = df.agg(*aggs).collect()[0]
-    return {
-        "row_count": row["_rows"],
-        "columns": {
-            c: {
-                "min": row[f"_min_{c}"],
-                "max": row[f"_max_{c}"],
-                "null_count": row[f"_nulls_{c}"],
-                "approx_ndv": row[f"_ndv_{c}"],
-            }
-            for c in cols
-        },
-    }
-
-
-def write_stats(table_path: str, stats: dict) -> None:
-    p = os.path.join(table_path, _STATS_FILE)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(stats, f, indent=1)
-    os.replace(tmp, p)
-
-
-def read_stats(table_path: str) -> dict | None:
-    p = os.path.join(table_path, _STATS_FILE)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
-def should_broadcast(stats: dict | None, max_rows: int) -> bool | None:
-    """Gate decision from persisted stats; None = unknown (caller falls
-    back to its probe)."""
-    if not stats or "row_count" not in stats:
-        return None
-    return stats["row_count"] <= max_rows
+__all__ = ["key_skew_histogram", "salted_agg"]
 
 
 def key_skew_histogram(df: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -121,47 +46,6 @@ def key_skew_histogram(df: DataFrame, key_cols: list[str]) -> DataFrame:
             "pct_rows"
         ),
     )
-
-
-def top_heavy_keys(df: DataFrame, key_cols: list[str], k: int = 20) -> DataFrame:
-    """The named offenders behind a skewed histogram: top-k keys by row
-    count, ties broken by key so the report is deterministic. Served by
-    TakeOrderedAndProject (per-partition heaps), never a full sort."""
-    counts = df.groupBy(*[F.col(c) for c in key_cols]).agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    return counts.orderBy(
-        F.col("cnt").desc(), *[F.col(c).asc() for c in key_cols]
-    ).limit(k)
-
-
-def estimate_join_rows(
-    stats_a: dict | None,
-    stats_b: dict | None,
-    key_a: str,
-    key_b: str | None = None,
-) -> int | None:
-    """Classic System-R equi-join cardinality estimate from persisted
-    table stats: |A ⋈ B| ≈ rows_A · rows_B / max(ndv_A, ndv_B) — the
-    containment-of-value-sets assumption every cost-based optimizer
-    ships. Returns None when either side lacks stats (callers fall back
-    to probing, exactly like `should_broadcast`).
-
-    The ndv's come from the same HLL `compute_table_stats` persists, so
-    the estimate is free at plan time. Use it to pick shuffle-partition
-    counts for the join output or to veto a join order BEFORE launching
-    a 100 TB stage; Spark's own CBO does this when ANALYZE stats exist —
-    this is the same arithmetic for tables managed outside the catalog.
-    """
-    key_b = key_b or key_a
-    if not stats_a or not stats_b:
-        return None
-    ca = stats_a.get("columns", {}).get(key_a)
-    cb = stats_b.get("columns", {}).get(key_b)
-    if not ca or not cb or not ca.get("approx_ndv") or not cb.get("approx_ndv"):
-        return None
-    ndv = max(ca["approx_ndv"], cb["approx_ndv"])
-    return int(stats_a["row_count"] * stats_b["row_count"] // ndv)
 
 
 def salted_agg(

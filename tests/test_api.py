@@ -14,6 +14,10 @@ def client(spark, tmp_path):
 
 
 AUTH = AuthContext(user_id="u1", app_id="app1")
+# py4j commands one warm filtered, folder-scoped retrieve may send: measured
+# 200-320 on a 4-core VM; a plan built one Column method at a time sent
+# 1,570-1,750
+PY4J_CALL_BOUND = 500
 
 
 def _seed(client):
@@ -102,6 +106,43 @@ def test_warm_requests_run_few_spark_jobs(spark, client):
     before = _jobs_submitted(spark)
     assert len(client.list_documents(filters={"topic": "engine"}, auth=AUTH)) == 2
     assert _jobs_submitted(spark) - before == 1
+
+
+def _py4j_calls(fn) -> int:
+    """Driver→JVM py4j commands ``fn()`` sends, counted at
+    ``ClientServerConnection.send_command``; the garbage collections
+    around it count the ``memory delete`` commands that free the JVM
+    objects ``fn`` built, and flush those of earlier calls first."""
+    import gc
+
+    from py4j.clientserver import ClientServerConnection
+
+    send = ClientServerConnection.send_command
+    calls = []
+
+    def counting_send(self, command):
+        calls.append(command[:1])
+        return send(self, command)
+
+    gc.collect()
+    ClientServerConnection.send_command = counting_send
+    try:
+        fn()
+        gc.collect()
+    finally:
+        ClientServerConnection.send_command = send
+    return len(calls)
+
+
+def test_warm_filtered_scoped_retrieve_makes_few_py4j_calls(client):
+    # the filter, scope and score expressions are each one F.expr of SQL text
+    _seed(client)
+    q = dict(k=2, auth=AUTH, filters={"topic": "engine", "priority": {"$gte": 1}}, folder_path="/corp", folder_depth=-1)
+    client.retrieve_chunks("spark shuffles data", **q)  # builds the snapshots
+    hits = []
+    calls = _py4j_calls(lambda: hits.extend(client.retrieve_chunks("spark shuffles data", **q)))
+    assert hits and {h["folder_path"] for h in hits} == {"/corp/docs"}
+    assert calls <= PY4J_CALL_BOUND, calls
 
 
 def test_writes_seen_by_this_and_a_second_client(spark, client):

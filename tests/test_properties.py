@@ -2,8 +2,12 @@
 
 from __future__ import annotations
 
+import json
+
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from morphik_core_spark.functions.chunking import split_text
 from morphik_core_spark.functions.embedder import hash_embed
@@ -60,23 +64,56 @@ def test_hash_embed_unit_norm_or_zero(text):
 
 # ---------------------------------------------- filter compiler robustness
 
-_FIELDS = st.sampled_from(["department", "priority", "tags", "score", "missing"])
-_SCALARS = st.one_of(st.integers(-5, 100), st.booleans(), st.sampled_from(["eng", "x", "3"]), st.none())
+# adversarial leaves: quotes, backslashes, LIKE and regex metacharacters,
+# `${...}` (the SQL parser's variable-substitution syntax), non-ASCII text,
+# doubles whose literal text is easy to get wrong, an int past 2^53, and
+# field names with dots and quotes
+ODD_STRINGS = ["O'Brien", "C:\\dir\\f", "50%", "a_b", "${x}", "${spark.app.name}", "café ü", "日本語", "a.b*c+(d)?", "[x]|^$"]
+ODD_NUMBERS = [0.1, 1e-7, -0.0, 2**53 + 1, 1.5]
+ODD_REGEXES = ["^e", "x$", "O'B", "\\\\", "50%", "a_b", "\\$\\{x\\}", "caf.", "[日本]", "a\\.b", "(x|y)+"]
+TYPE_NAMES = ["string", "number", "array", "object", "boolean", "null", "decimal", "date", "datetime"]
+_FIELDS = st.sampled_from(["department", "priority", "tags", "score", "missing", "a.b", "it's", "naïve"])
+_STRINGS = st.sampled_from(["eng", "x", "3", "2024-03-01", "2024-04-01T00:00:00Z", *ODD_STRINGS])
+_NUMBERS = st.one_of(st.integers(-5, 100), st.sampled_from(ODD_NUMBERS))
+_SCALARS = st.one_of(_NUMBERS, st.booleans(), _STRINGS, st.none())
 
 
 def _leaf():
     op_block = st.one_of(
         st.fixed_dictionaries({"$eq": _SCALARS.filter(lambda v: v is not None)}),
-        st.fixed_dictionaries({"$gte": st.integers(-5, 100)}),
+        st.fixed_dictionaries({"$ne": _SCALARS.filter(lambda v: v is not None)}),
+        st.fixed_dictionaries({"$gte": _NUMBERS}),
+        st.fixed_dictionaries({"$lt": st.one_of(_NUMBERS, _STRINGS)}),
         st.fixed_dictionaries({"$in": st.lists(_SCALARS, min_size=1, max_size=3)}),
+        st.fixed_dictionaries({"$nin": st.lists(_SCALARS, min_size=1, max_size=3)}),
         st.fixed_dictionaries({"$exists": st.booleans()}),
-        st.fixed_dictionaries({"$contains": st.sampled_from(["en", "x"])}),
-        st.fixed_dictionaries({"$regex": st.sampled_from(["^e", "x$"])}),
+        st.fixed_dictionaries({"$type": st.one_of(st.sampled_from(TYPE_NAMES), st.lists(st.sampled_from(TYPE_NAMES), min_size=1, max_size=2))}),
+        st.fixed_dictionaries({"$contains": st.one_of(
+            st.sampled_from(["en", "x", *ODD_STRINGS]),
+            st.fixed_dictionaries({"value": st.sampled_from(["EN", *ODD_STRINGS]), "case_sensitive": st.booleans()}),
+        )}),
+        st.fixed_dictionaries({"$regex": st.one_of(
+            st.sampled_from(ODD_REGEXES),
+            st.fixed_dictionaries({"pattern": st.sampled_from(ODD_REGEXES), "flags": st.just("i")}),
+        )}),
     )
-    return st.builds(lambda f, v: {f: v}, _FIELDS, st.one_of(_SCALARS, op_block))
+    filename_block = st.one_of(
+        st.fixed_dictionaries({"$eq": st.one_of(_STRINGS, st.none())}),
+        st.fixed_dictionaries({"$ne": st.one_of(_STRINGS, st.none())}),
+        st.fixed_dictionaries({"$gt": _STRINGS}),
+        st.fixed_dictionaries({"$in": st.lists(st.one_of(_STRINGS, st.none()), min_size=1, max_size=3)}),
+        st.fixed_dictionaries({"$nin": st.lists(st.one_of(_STRINGS, st.none()), min_size=1, max_size=3)}),
+        st.fixed_dictionaries({"$exists": st.booleans()}),
+        st.fixed_dictionaries({"$regex": st.sampled_from(ODD_REGEXES)}),
+        st.fixed_dictionaries({"$contains": st.sampled_from(["x", *ODD_STRINGS])}),
+    )
+    return st.one_of(
+        st.builds(lambda f, v: {f: v}, _FIELDS, st.one_of(_SCALARS, op_block)),
+        st.builds(lambda v: {"filename": v}, st.one_of(_STRINGS, filename_block)),
+    )
 
 
-_FILTER_TREES = st.recursive(
+FILTER_TREES = st.recursive(
     _leaf(),
     lambda children: st.one_of(
         st.builds(lambda xs: {"$and": xs}, st.lists(children, min_size=1, max_size=3)),
@@ -87,13 +124,31 @@ _FILTER_TREES = st.recursive(
     max_leaves=6,
 )
 
+_FILTER_ROWS = [
+    ("r1", {"department": "eng", "priority": 3, "tags": ["x", "O'Brien"], "a.b": 0.1}, "O'Brien.txt"),
+    ("r2", {"department": "50%", "score": 1e-7, "it's": "C:\\dir\\f", "naïve": "café ü"}, None),
+    ("r3", {"priority": 9007199254740993, "tags": "${x}", "score": -0.0}, "${x}"),
+    ("r4", {"department": None, "tags": [3, "日本語"], "a.b": {"c": 1}}, "a_b"),
+]
+
+
+@pytest.fixture(scope="module")
+def filter_rows(spark):
+    data = [(i, json.dumps(m), f) for i, m, f in _FILTER_ROWS]
+    return spark.createDataFrame(data, "id string, metadata string, filename string").withColumn(
+        "metadata_types", F.create_map(F.lit("priority"), F.lit("number"))
+    ).cache()
+
 
 @settings(max_examples=60, deadline=None)
-@given(tree=_FILTER_TREES)
-def test_random_filter_trees_compile(spark, tree):
-    """Any structurally-valid filter tree must compile to a Column without
-    raising (numeric-operand guards may legitimately reject some leaves —
-    InvalidMetadataFilterError is the only acceptable failure)."""
+@given(tree=FILTER_TREES)
+def test_random_filter_trees_compile(filter_rows, tree):
+    """Any structurally-valid filter tree must compile to a predicate that
+    Spark can analyze and run (numeric-operand guards may legitimately
+    reject some leaves — InvalidMetadataFilterError is the only acceptable
+    failure). The predicate is applied with ``collect()``: a rendering bug
+    surfaces when Spark parses and analyzes the SQL text, not when
+    ``compile()`` returns."""
     from morphik_core_spark.operators.metadata_filters import (
         InvalidMetadataFilterError,
         MetadataFilterCompiler,
@@ -103,7 +158,8 @@ def test_random_filter_trees_compile(spark, tree):
         col = MetadataFilterCompiler().compile(tree)
     except InvalidMetadataFilterError:
         return
-    assert col is not None
+    ids = [r.id for r in filter_rows.filter(col).select("id").collect()]
+    assert set(ids) <= {r[0] for r in _FILTER_ROWS}
 
 
 @settings(max_examples=100, deadline=None)

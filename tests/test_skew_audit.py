@@ -1,11 +1,9 @@
-"""Key-skew audit: bucket math on known distributions, hot-key
-detection, deterministic top-keys report, and the no-full-sort plan."""
+"""Key-skew audit: bucket math on known distributions and hot-key
+detection."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from morphik_core_spark.plans.stats import key_skew_histogram, top_heavy_keys
+from morphik_core_spark.plans.stats import key_skew_histogram
 
 
 def _frame(spark):
@@ -30,24 +28,3 @@ def test_power_of_two_boundary_is_integer_exact(spark):
     h = {r.bucket: r for r in key_skew_histogram(df, ["k"]).collect()}
     assert h[4].n_keys == 1  # 16
     assert h[3].n_keys == 1  # 15
-
-
-def test_top_heavy_keys_deterministic(spark):
-    top = top_heavy_keys(_frame(spark), ["k"], k=4).collect()
-    assert [r.k for r in top] == ["hot", "warm", "a", "b"]  # ties by key asc
-    plan = top_heavy_keys(_frame(spark), ["k"], k=4)._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
-
-
-def test_estimate_join_rows(spark, sf_dir):
-    from morphik_core_spark.plans.stats import compute_table_stats, estimate_join_rows
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    so = compute_table_stats(orders, ["o_custkey"])
-    sc = compute_table_stats(cust, ["c_custkey"])
-    est = estimate_join_rows(so, sc, "o_custkey", "c_custkey")
-    actual = orders.join(cust, orders.o_custkey == cust.c_custkey).count()
-    # every order matches one customer -> estimate ~= |orders|; HLL error bounds
-    assert est is not None and abs(est - actual) / actual < 0.15, (est, actual)
-    assert estimate_join_rows(None, sc, "x") is None
